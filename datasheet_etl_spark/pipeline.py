@@ -11,12 +11,16 @@ output/lmr51430_v04.json) is testable end to end.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datasheet_etl_spark.functions import slugify
-from datasheet_etl_spark.verify import VerifyResult, verify
+from datasheet_etl_spark.verify import (
+    DEFAULT_CONFIDENCE_THRESHOLD,
+    VerifyResult,
+    verify_tables,
+)
 
 TABLE_SCHEMA = T.StructType(
     [
@@ -100,49 +104,79 @@ def mock_rule_tables(spark: SparkSession, doc_key: str = "lmr51430.pdf") -> Data
     )
 
 
+_STATS = (("min", "Min"), ("typ", "Typ"), ("max", "Max"))
+
+
+def _row_parameters(pos: Column, row: Column) -> Column:
+    """One row's flat parameters, reference semantics (pipeline.py:345-367):
+    ``{slug}_min/typ/max`` as float (plain float() parse — unparseable
+    silently dropped) and ``{slug}_unit`` when non-empty, as
+    array<struct<pos, param, value_num, value_str>>."""
+    slug = slugify(F.coalesce(F.element_at(row, F.lit("Parameter")), F.lit("")))
+
+    def entry(suffix: str, value_num: Column, value_str: Column) -> Column:
+        return F.struct(
+            pos.alias("pos"),
+            F.concat(slug, F.lit(suffix)).alias("param"),
+            value_num.alias("value_num"),
+            value_str.alias("value_str"),
+        )
+
+    no_str = F.lit(None).cast("string")
+    entries = [
+        entry(f"_{stat}", F.element_at(row, F.lit(cell)).try_cast("double"), no_str)
+        for stat, cell in _STATS
+    ]
+    entries.append(
+        entry("_unit", F.lit(None).cast("double"), F.element_at(row, F.lit("Unit")))
+    )
+    return F.filter(
+        F.array(*entries),
+        lambda p: p["value_num"].isNotNull() | (F.coalesce(p["value_str"], F.lit("")) != ""),
+    )
+
+
+def _table_parameters(rows: Column) -> Column:
+    return F.flatten(F.transform(rows, lambda row, pos: _row_parameters(pos, row)))
+
+
+def _json_entry(pos: Column, param: Column, value_num: Column, value_str: Column) -> Column:
+    """One flat parameter as an orderable JSON member: (pos, stat_rank,
+    '"param": value'), sorting by row position then min/typ/max/unit — the
+    reference's insertion order."""
+    stat_rank = (
+        F.when(param.endswith("_min"), 1)
+        .when(param.endswith("_typ"), 2)
+        .when(param.endswith("_max"), 3)
+        .otherwise(4)
+    )
+    jval = F.when(value_num.isNotNull(), value_num.cast("string")).otherwise(
+        F.concat(F.lit('"'), value_str, F.lit('"'))
+    )
+    return F.struct(
+        pos.alias("pos"),
+        stat_rank.alias("stat_rank"),
+        F.concat(F.lit('"'), param, F.lit('": '), jval).alias("entry"),
+    )
+
+
+def _json_object(entries: Column) -> Column:
+    """``_json_entry`` structs → one JSON object string in their sort
+    order; NULL when there are none."""
+    members = F.transform(F.array_sort(entries), lambda s: s["entry"])
+    return F.nullif(
+        F.concat(F.lit("{"), F.array_join(members, ", "), F.lit("}")), F.lit("{}")
+    )
+
+
 def extract_parameters(final_tables: DataFrame, key: str = "key") -> DataFrame:
-    """A1 parameter flatten (long→wide), reference semantics
-    (pipeline.py:345-367): per row, ``{slug}_min/typ/max`` as float
-    (plain float() parse — unparseable silently dropped) and
-    ``{slug}_unit`` when non-empty.
+    """A1 parameter flatten (long→wide) of every table's rows.
 
-    Returns long form: (key, param, value_num, value_str) where exactly
-    one of value_num / value_str is non-NULL. The wide map/pivot shapes
-    are built on top (``parameters_map``, dynamic pivot S10).
+    Returns long form: (key, pos, param, value_num, value_str) where
+    exactly one of value_num / value_str is non-NULL. The wide map/pivot
+    shapes are built on top (``parameters_map``, dynamic pivot S10).
     """
-    rows = final_tables.select(key, F.posexplode("rows").alias("pos", "row_map"))
-    slug = slugify(F.coalesce(F.element_at("row_map", F.lit("Parameter")), F.lit("")))
-
-    stats = rows.select(
-        key,
-        "pos",
-        slug.alias("slug"),
-        F.expr(
-            "stack(3, 'min', row_map['Min'], 'typ', row_map['Typ'], 'max', row_map['Max'])"
-        ).alias("stat", "raw"),
-    ).select(
-        key,
-        "pos",
-        F.concat("slug", F.lit("_"), "stat").alias("param"),
-        F.col("stat"),
-        F.col("raw"),
-    )
-    nums = stats.filter(
-        (F.col("raw").isNotNull())
-        & (F.col("raw") != "")
-        & F.col("raw").try_cast("double").isNotNull()
-    ).select(
-        key, "pos", "param", F.col("raw").try_cast("double").alias("value_num"),
-        F.lit(None).cast("string").alias("value_str"),
-    )
-    units = rows.select(
-        key,
-        "pos",
-        F.concat(slug, F.lit("_unit")).alias("param"),
-        F.lit(None).cast("double").alias("value_num"),
-        F.element_at("row_map", F.lit("Unit")).alias("value_str"),
-    ).filter(F.col("value_str").isNotNull() & (F.col("value_str") != ""))
-    return nums.unionByName(units)
+    return final_tables.select(key, F.inline(_table_parameters(F.col("rows"))))
 
 
 def parameters_map(params: DataFrame, key: str = "key") -> DataFrame:
@@ -150,32 +184,9 @@ def parameters_map(params: DataFrame, key: str = "key") -> DataFrame:
     row position then min/typ/max/unit — the reference's insertion
     order). JSON because the value type is float|string (survey §1.2:
     truly-Any becomes a JSON string column)."""
-    stat_rank = (
-        F.when(F.col("param").endswith("_min"), 1)
-        .when(F.col("param").endswith("_typ"), 2)
-        .when(F.col("param").endswith("_max"), 3)
-        .otherwise(4)
-    )
-    jval = F.when(
-        F.col("value_num").isNotNull(), F.col("value_num").cast("string")
-    ).otherwise(F.concat(F.lit('"'), F.col("value_str"), F.lit('"')))
-    entry = F.concat(F.lit('"'), F.col("param"), F.lit('": '), jval)
-    ordered = params.withColumn("stat_rank", stat_rank)
-    return (
-        ordered.groupBy(key)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("pos", "stat_rank", entry.alias("entry")))
-            ).alias("entries")
-        )
-        .select(
-            key,
-            F.concat(
-                F.lit("{"),
-                F.array_join(F.transform("entries", lambda s: s["entry"]), ", "),
-                F.lit("}"),
-            ).alias("parameters_json"),
-        )
+    entry = _json_entry(F.col("pos"), F.col("param"), F.col("value_num"), F.col("value_str"))
+    return params.groupBy(key).agg(
+        _json_object(F.collect_list(entry)).alias("parameters_json")
     )
 
 
@@ -188,16 +199,16 @@ def run_pipeline(
 ) -> tuple[DataFrame, VerifyResult]:
     """Assemble the full result DataFrame: one row per document with
     metadata / verification / tables / parameters_json / conflicts —
-    parsed-equal to the reference's result JSON.
+    parsed-equal to the reference's result JSON. The result and the
+    returned ``VerifyResult`` are projections of one ``verify_tables``
+    frame.
 
     ``confidence_threshold`` routes docs below it to needs_review (the
     CLI maps Gold/Silver/Bronze accuracy tiers onto it)."""
-    from datasheet_etl_spark.verify import DEFAULT_CONFIDENCE_THRESHOLD
-
     vision = vision if vision is not None else mock_vision_tables(spark)
     rule = rule if rule is not None else mock_rule_tables(spark)
 
-    vr = verify(
+    tables = verify_tables(
         vision,
         rule,
         confidence_threshold=(
@@ -206,27 +217,23 @@ def run_pipeline(
             else confidence_threshold
         ),
     )
-    params = extract_parameters(vr.final_tables)
-    pmap = parameters_map(params)
-
-    conflicts_arr = (
-        vr.conflicts.groupBy("key")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("field"),
-                        F.col("vision_value"),
-                        F.col("rule_value"),
-                        F.lower("severity").alias("severity"),
-                        F.col("resolution"),
-                        F.col("resolved_value"),
-                    )
-                )
-            ).alias("conflicts")
+    params = F.transform(
+        _table_parameters(F.col("rows")),
+        lambda p: _json_entry(p["pos"], p["param"], p["value_num"], p["value_str"]),
+    )
+    conflicts = F.array_sort(
+        F.transform(
+            "conflicts",
+            lambda c: F.struct(
+                c["field"].alias("field"),
+                c["vision_value"].alias("vision_value"),
+                c["rule_value"].alias("rule_value"),
+                F.lower(c["severity"]).alias("severity"),
+                c["resolution"].alias("resolution"),
+                c["resolved_value"].alias("resolved_value"),
+            ),
         )
     )
-
     table_struct = F.struct(
         F.col("table_id"),
         F.col("title"),
@@ -237,38 +244,25 @@ def run_pipeline(
         F.col("model"),
         F.col("cost_usd"),
     )
-    tables = vr.final_tables.select("key", table_struct.alias("table"))
-
-    result = (
-        vr.verdicts.join(tables, "key", "left")
-        .join(pmap, "key", "left")
-        .join(conflicts_arr, "key", "left")
-        .select(
-            "key",
-            F.struct(
-                F.col("key").alias("source_file"),
-                F.lit("0.4").alias("pipeline_version"),
-                F.lit("vision_first_double_verified").alias("extraction_method"),
-                F.lit("gpt-4o-mini").alias("vision_model"),
-            ).alias("metadata"),
-            F.struct(
-                F.col("status"),
-                F.round("confidence", 3).alias("confidence"),
-                F.col("resolution_method"),
-                F.col("conflict_count"),
-            ).alias("verification"),
-            F.array(F.col("table")).alias("tables"),
-            F.col("parameters_json"),
-            F.coalesce(
-                F.col("conflicts"),
-                F.array().cast(
-                    "array<struct<field:string,vision_value:string,rule_value:string,"
-                    "severity:string,resolution:string,resolved_value:string>>"
-                ),
-            ).alias("conflicts"),
-        )
+    result = tables.select(
+        "key",
+        F.struct(
+            F.col("key").alias("source_file"),
+            F.lit("0.4").alias("pipeline_version"),
+            F.lit("vision_first_double_verified").alias("extraction_method"),
+            F.lit("gpt-4o-mini").alias("vision_model"),
+        ).alias("metadata"),
+        F.struct(
+            F.col("verdict.status").alias("status"),
+            F.round("verdict.confidence", 3).alias("confidence"),
+            F.col("verdict.resolution_method").alias("resolution_method"),
+            F.col("verdict.conflict_count").alias("conflict_count"),
+        ).alias("verification"),
+        F.array(table_struct).alias("tables"),
+        _json_object(params).alias("parameters_json"),
+        conflicts.alias("conflicts"),
     )
-    return result, vr
+    return result, VerifyResult.of(tables)
 
 
 def write_result_json(result: DataFrame, path: str) -> None:

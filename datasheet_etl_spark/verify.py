@@ -1,16 +1,21 @@
 """The double-verification dataflow (survey §2.5, V1–V15 + J1/J5).
 
 Reference semantics (behavioral spec: double_verifier.py:304-644) as one
-declarative DataFrame DAG:
+left join followed by per-table column expressions:
 
-    vision tables ─┬─ posexplode rows ─ inner join on (key, pos) ─ key-union
-    rule tables  ──┘        │
-                            ├─ cell conflicts (V4 mismatch → V5 type → V6 severity)
-                            ├─ header conflict (V7)
-                            ├─ metadata conflicts (title / table_id)
-                            ├─ arbitration (V8: unit → rule_wins else vision_wins)
-                            ├─ patch-back join (J5) → final tables
-                            └─ per-table aggregate (V10 confidence → V12 status)
+    vision tables ── left join on key ── rule tables (headers, rows, title, table_id)
+                          │
+                          │  one row per vision table; every step below is a
+                          │  transform / filter / aggregate / map_entries /
+                          │  map_from_entries over that row's arrays, with
+                          │  nothing exploded, regrouped or joined again
+                          ├─ cell conflicts per zipped row pair (V4 mismatch → V5 type → V6 severity)
+                          ├─ header conflict (V7), metadata conflicts (title / table_id)
+                          ├─ arbitration (V8: unit → rule_wins else vision_wins)
+                          ├─ confidence (V10) → large-diff (V11) → status (V12)
+                          └─ patch-back (J5): rule_wins values written into the
+                             vision rows and metadata, each row's fields in
+                             header order
 
 Input table schema (both sides):
     key: string               -- document/table grouping key
@@ -19,20 +24,27 @@ Input table schema (both sides):
     rows: array<map<string,string>>
 plus passthrough columns on the vision side (confidence, model, …).
 
-The zip truncation of ``zip(v_rows, r_rows)`` is reproduced by the inner
-join on (key, pos) — never widen it to outer (survey §7.4.2).
+Contract: at most one table per ``key`` on each side. The join pairs each
+vision table with the one rule table of its key; two rule tables under one
+key would yield the vision table twice, once against each.
 
-Scale notes: one shuffle per side on ``key`` feeds the position window,
-the conflict join, and the re-grouping — Catalyst reuses the hash
-partitioning. The conflict stream is tiny relative to the cell stream
-(it's post-filter), so the patch-back join broadcasts in practice.
+Row pairs follow the reference's ``zip(v_rows, r_rows)``: row i is compared
+only while both sides have a row i (J1 truncation — never widen it,
+survey §7.4.2), and a NULL row on either side compares nothing. Final rows
+drop NULL and empty rows; a table with no rows keeps ``[]``.
+
+Scale notes: the sort-merge join on ``key`` is the only exchange, one
+shuffle per side. Everything after it runs in the projections above the
+join, so the work grows with the cells compared, not with the number of
+stages. A table's arrays are processed in one task, which datasheet tables
+(tens of rows) fit comfortably.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datasheet_etl_spark.functions import (
@@ -45,6 +57,11 @@ from datasheet_etl_spark.functions.compare import pct_diff
 
 DEFAULT_CONFIDENCE_THRESHOLD = 0.60
 
+_UNRESOLVED_CONFLICTS = (
+    "array<struct<field:string,vision_value:string,rule_value:string,"
+    "severity:string,conflict_type:string>>"
+)
+
 
 @dataclass
 class VerifyResult:
@@ -52,16 +69,29 @@ class VerifyResult:
 
     conflicts: DataFrame  # key, field, vision_value, rule_value, severity, conflict_type, resolution, resolved_value
     verdicts: DataFrame   # key, status, confidence, resolution_method, conflict_count
-    final_tables: DataFrame  # key, table_id, title, headers, rows (patched)
+    final_tables: DataFrame  # key, table_id, title, headers, …, rows (patched)
+
+    @classmethod
+    def of(cls, tables: DataFrame, key: str = "key") -> VerifyResult:
+        """The three outputs as projections of one :func:`verify_tables` frame."""
+        return cls(
+            conflicts=tables.select(key, F.inline("conflicts")),
+            verdicts=tables.select(key, "verdict.*"),
+            final_tables=tables.drop("conflicts", "verdict"),
+        )
 
 
-def _cells(df: DataFrame, key: str) -> DataFrame:
-    return df.select(
-        key, F.posexplode_outer("rows").alias("pos", "row_map")
-    )
+def smart_resolution(conflict_type: Column) -> Column:
+    """V8 SmartArbiter (ref: double_verifier.py:206-236): unit conflicts →
+    rule_wins, everything else → vision_wins."""
+    return F.when(conflict_type == "unit", "rule_wins").otherwise("vision_wins")
 
 
-def _pyliststr(arr) -> F.Column:
+def _resolved_value(resolution: Column, vision_value: Column, rule_value: Column) -> Column:
+    return F.when(resolution == "rule_wins", rule_value).otherwise(vision_value)
+
+
+def _pyliststr(arr) -> Column:
     """Python ``str(list)`` shape for header-conflict values:
     ['a', 'b'] — matches the reference's str(headers)."""
     # str([]) == '[]' — the concat form would render "['']" for empties
@@ -70,262 +100,234 @@ def _pyliststr(arr) -> F.Column:
     )
 
 
-def find_conflicts(vision: DataFrame, rule: DataFrame, key: str = "key") -> DataFrame:
-    """All conflicts between the two extractions (ref: _find_conflicts,
-    double_verifier.py:412-475) as one unioned DataFrame."""
-    v_cells = _cells(vision, key).withColumnRenamed("row_map", "v_row")
-    r_cells = _cells(rule, key).withColumnRenamed("row_map", "r_row")
-    zipped = v_cells.join(r_cells, [key, "pos"], "inner")  # J1 zip truncation
-
-    # key union across both row dicts, then per-field compare
-    fields = zipped.select(
-        key,
-        "pos",
-        "v_row",
-        "r_row",
-        F.explode(F.array_union(F.map_keys("v_row"), F.map_keys("r_row"))).alias("fkey"),
-    ).select(
-        key,
-        "pos",
-        "fkey",
-        F.coalesce(F.element_at("v_row", F.col("fkey")), F.lit("")).alias("vision_value"),
-        F.coalesce(F.element_at("r_row", F.col("fkey")), F.lit("")).alias("rule_value"),
-        F.coalesce(F.element_at("v_row", F.lit("Parameter")), F.lit("")).alias("param_ctx"),
+def _unresolved(field, vision_value, rule_value, severity, conflict_type) -> Column:
+    return F.struct(
+        field.alias("field"),
+        vision_value.alias("vision_value"),
+        rule_value.alias("rule_value"),
+        severity.alias("severity"),
+        conflict_type.alias("conflict_type"),
     )
-    cell_conflicts = fields.filter(
-        ~values_match(F.col("vision_value"), F.col("rule_value"))
-    ).select(
-        key,
-        F.concat(F.lit("row["), F.col("pos").cast("string"), F.lit("]."), F.col("fkey")).alias(
-            "field"
+
+
+def _cell_field(pos: Column, fkey: Column) -> Column:
+    return F.concat(F.lit("row["), pos.cast("string"), F.lit("]."), fkey)
+
+
+def _cell_conflicts(pos: Column, v_row: Column, r_row: Column) -> Column:
+    """V4–V6 over one zipped row pair (ref: _find_conflicts,
+    double_verifier.py:412-475): every field of either row whose values do
+    not match, missing values read as ''. NULL when either row is NULL."""
+    param_ctx = F.coalesce(F.element_at(v_row, F.lit("Parameter")), F.lit(""))
+    cells = F.transform(
+        F.array_union(F.map_keys(v_row), F.map_keys(r_row)),
+        lambda k: F.struct(
+            k.alias("fkey"),
+            F.coalesce(F.element_at(v_row, k), F.lit("")).alias("v"),
+            F.coalesce(F.element_at(r_row, k), F.lit("")).alias("r"),
         ),
-        "vision_value",
-        "rule_value",
-        assess_severity(
-            F.col("fkey"), F.col("vision_value"), F.col("rule_value"), F.col("param_ctx")
-        ).alias("severity"),
-        classify_conflict(F.col("fkey"), F.col("vision_value")).alias("conflict_type"),
+    )
+    return F.transform(
+        F.filter(cells, lambda c: ~values_match(c["v"], c["r"])),
+        lambda c: _unresolved(
+            _cell_field(pos, c["fkey"]),
+            c["v"],
+            c["r"],
+            assess_severity(c["fkey"], c["v"], c["r"], param_ctx),
+            classify_conflict(c["fkey"], c["v"]),
+        ),
     )
 
-    # header (structure) conflict — V7
-    hdr = (
-        vision.select(key, F.col("headers").alias("v_headers"))
-        .join(rule.select(key, F.col("headers").alias("r_headers")), key, "inner")
-        .filter(F.col("v_headers") != F.col("r_headers"))
-        .select(
-            key,
-            F.lit("headers").alias("field"),
-            _pyliststr(F.col("v_headers")).alias("vision_value"),
-            _pyliststr(F.col("r_headers")).alias("rule_value"),
-            F.lit("MEDIUM").alias("severity"),
-            F.lit("structure").alias("conflict_type"),
+
+def _table_conflicts() -> Column:
+    """V7 header conflict and the title / table_id conflicts (both
+    non-empty and mismatched) of one joined table; absent ones are
+    filtered out."""
+    found = [
+        F.when(
+            F.col("headers") != F.col("__r_headers"),
+            _unresolved(
+                F.lit("headers"),
+                _pyliststr(F.col("headers")),
+                _pyliststr(F.col("__r_headers")),
+                F.lit("MEDIUM"),
+                F.lit("structure"),
+            ),
         )
-    )
-
-    # metadata conflicts (title, table_id) — both non-empty and mismatched
-    meta_parts = []
+    ]
     for fld in ("title", "table_id"):
-        v = vision.select(key, F.coalesce(F.col(fld), F.lit("")).alias("vision_value"))
-        r = rule.select(key, F.coalesce(F.col(fld), F.lit("")).alias("rule_value"))
-        meta_parts.append(
-            v.join(r, key, "inner")
-            .filter(
-                (F.col("vision_value") != "")
-                & (F.col("rule_value") != "")
-                & ~values_match(F.col("vision_value"), F.col("rule_value"))
-            )
-            .select(
-                key,
-                F.lit(fld).alias("field"),
-                "vision_value",
-                "rule_value",
-                F.lit("LOW").alias("severity"),
-                F.lit("text").alias("conflict_type"),
+        v = F.coalesce(F.col(fld), F.lit(""))
+        r = F.coalesce(F.col(f"__r_{fld}"), F.lit(""))
+        found.append(
+            F.when(
+                (v != "") & (r != "") & ~values_match(v, r),
+                _unresolved(F.lit(fld), v, r, F.lit("LOW"), F.lit("text")),
             )
         )
-
-    out = cell_conflicts
-    for part in [hdr, *meta_parts]:
-        out = out.unionByName(part)
-    return out
+    return F.filter(F.array(*found), lambda c: c.isNotNull())
 
 
-def arbitrate(conflicts: DataFrame) -> DataFrame:
-    """V8 SmartArbiter: unit conflicts → rule_wins, everything else →
-    vision_wins (ref: double_verifier.py:206-236); resolved_value follows
-    the winner."""
-    resolution = F.when(F.col("conflict_type") == "unit", "rule_wins").otherwise(
-        "vision_wins"
-    )
-    return conflicts.withColumn("resolution", resolution).withColumn(
-        "resolved_value",
-        F.when(F.col("resolution") == "rule_wins", F.col("rule_value")).otherwise(
-            F.col("vision_value")
+def _arbitrated(c: Column) -> Column:
+    resolution = smart_resolution(c["conflict_type"])
+    return F.struct(
+        c["field"].alias("field"),
+        c["vision_value"].alias("vision_value"),
+        c["rule_value"].alias("rule_value"),
+        c["severity"].alias("severity"),
+        c["conflict_type"].alias("conflict_type"),
+        resolution.alias("resolution"),
+        _resolved_value(resolution, c["vision_value"], c["rule_value"]).alias(
+            "resolved_value"
         ),
     )
 
 
-def score_and_status(
+def _patched_row(pos: Column, row: Column) -> Column:
+    """J5 for one vision row: rule_wins values overwrite their cells (a
+    fix for a field the vision row lacks adds nothing), and the fields are
+    rebuilt in header order, keys outside the headers last by name."""
+
+    def korder(k):
+        at = F.array_position(F.col("headers"), k)
+        return F.when(at > 0, at).otherwise(F.lit(1_000_000))
+
+    entries = F.transform(
+        F.map_entries(row),
+        lambda e: F.struct(
+            korder(e["key"]).alias("korder"),
+            e["key"].alias("fkey"),
+            F.coalesce(
+                F.element_at(F.col("__fixes"), _cell_field(pos, e["key"])), e["value"]
+            ).alias("val"),
+        ),
+    )
+    return F.map_from_entries(
+        F.transform(
+            F.array_sort(entries),
+            lambda s: F.struct(s["fkey"].alias("key"), s["val"].alias("value")),
+        )
+    )
+
+
+def _verdict(status: str, confidence: Column, method: str) -> Column:
+    return F.struct(
+        F.lit(status).alias("status"),
+        confidence.alias("confidence"),
+        F.lit(method).alias("resolution_method"),
+        F.size("conflicts").cast("long").alias("conflict_count"),
+    )
+
+
+def verify_tables(
     vision: DataFrame,
     rule: DataFrame,
-    resolved: DataFrame,
     key: str = "key",
     confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
 ) -> DataFrame:
-    """V10 confidence + V11 large-diff + V12 status per table.
+    """The whole verification as one row per vision table: the vision
+    columns with ``title``/``table_id``/``rows`` patched (rows last), plus
+    ``conflicts`` (array of conflict structs, row order then headers/
+    title/table_id) and ``verdict`` (struct of status, confidence,
+    resolution_method, conflict_count). :meth:`VerifyResult.of` splits it
+    into the three outputs.
 
-    Mirrors the reference decision ladder (double_verifier.py:304-398):
-    no rule table → verified @0.85 vision_only; zero conflicts →
-    verified @1.0 perfect_match; unresolved high/critical or (critical ∧
-    >10% diff) → needs_review; confidence < threshold → conflict; else
-    verified (auto_resolved).
+    The verdict follows the reference decision ladder
+    (double_verifier.py:304-398): no rule table → verified @0.85
+    vision_only; zero conflicts → verified @1.0 perfect_match; unresolved
+    high/critical or (critical ∧ >10% diff) → needs_review; confidence <
+    threshold → conflict; else verified (auto_resolved). Confidence is 1
+    less the V10 penalties, clipped to [0, 1].
     """
-    per_key = resolved.groupBy(key).agg(
-        F.count("*").alias("conflict_count"),
-        F.greatest(
-            F.lit(0.0),
-            F.least(
-                F.lit(1.0),
-                1.0
-                - F.sum(
-                    severity_penalty(F.col("severity"), F.col("resolution").isNotNull())
-                ),
-            ),
-        ).alias("confidence"),
-        F.count_if(
-            F.col("severity").isin("HIGH", "CRITICAL") & F.col("resolution").isNull()
-        ).alias("n_unresolved_high"),
-        F.count_if(F.col("severity") == "CRITICAL").alias("n_critical"),
-        F.coalesce(
-            F.max(
-                F.when(
-                    F.col("severity") == "CRITICAL",
-                    pct_diff(F.col("vision_value"), F.col("rule_value")),
-                )
-            ),
-            F.lit(0.0),
-        ).alias("max_critical_diff"),
-    )
-
-    has_rule = rule.select(key).distinct().withColumn("__has_rule", F.lit(True))
-    base = (
-        vision.select(key)
-        .distinct()
-        .join(has_rule, key, "left")
-        .join(per_key, key, "left")
-    )
-
-    needs_review = (F.col("n_unresolved_high") > 0) | (
-        (F.col("n_critical") > 0) & (F.col("max_critical_diff") > 0.10)
-    )
-    status = (
-        F.when(F.col("__has_rule").isNull(), "verified")
-        .when(F.col("conflict_count").isNull(), "verified")
-        .when(needs_review, "needs_review")
-        .when(F.col("confidence") < confidence_threshold, "conflict")
-        .otherwise("verified")
-    )
-    method = (
-        F.when(F.col("__has_rule").isNull(), "vision_only")
-        .when(F.col("conflict_count").isNull(), "perfect_match")
-        .when(needs_review, "manual_required")
-        .when(F.col("confidence") < confidence_threshold, "low_confidence")
-        .otherwise("auto_resolved")
-    )
-    confidence = (
-        F.when(F.col("__has_rule").isNull(), 0.85)
-        .when(F.col("conflict_count").isNull(), 1.0)
-        .otherwise(F.col("confidence"))
-    )
-    return base.select(
+    passthrough = [c for c in vision.columns if c not in (key, "rows")]
+    rule_side = rule.select(
         key,
-        status.alias("status"),
-        confidence.alias("confidence"),
-        method.alias("resolution_method"),
-        F.coalesce(F.col("conflict_count"), F.lit(0)).alias("conflict_count"),
+        F.lit(True).alias("__has_rule"),
+        *[F.col(c).alias(f"__r_{c}") for c in ("headers", "rows", "title", "table_id")],
     )
-
-
-def patch_final_tables(
-    vision: DataFrame, resolved: DataFrame, key: str = "key"
-) -> DataFrame:
-    """J5 patch-back: start from the vision result, overwrite the cells
-    (and metadata fields) that resolved rule_wins, and rebuild the nested
-    rows arrays with deterministic field order (header order)."""
-    rule_wins = resolved.filter(F.col("resolution") == "rule_wins")
-
-    cell_fixes = rule_wins.filter(F.col("field").rlike(r"^row\[\d+\]\..+")).select(
+    empty_rows = F.array().cast("array<map<string,string>>")
+    pairs = F.transform(
+        F.coalesce(F.col("rows"), empty_rows),
+        lambda row, i: F.struct(
+            i.alias("pos"),
+            row.alias("row"),
+            F.coalesce(
+                _cell_conflicts(i, row, F.get(F.col("__r_rows"), i)),
+                F.array().cast(_UNRESOLVED_CONFLICTS),
+            ).alias("conflicts"),
+        ),
+    )
+    # The merge hint keeps one shuffle per side: on small inputs AQE would
+    # otherwise turn the join into a broadcast after both shuffles have run,
+    # which adds a broadcast job on top of them.
+    joined = vision.join(rule_side.hint("merge"), key, "left").select(
         key,
-        # try_cast: constant folding may evaluate this on non-row fields
-        # before the rlike filter applies (ANSI would throw on '')
-        F.regexp_extract("field", r"^row\[(\d+)\]", 1).try_cast("int").alias("pos"),
-        F.regexp_extract("field", r"^row\[\d+\]\.(.+)$", 1).alias("fkey"),
-        F.col("resolved_value").alias("fix"),
+        *passthrough,
+        "__has_rule",
+        pairs.alias("__pairs"),
+        _table_conflicts().alias("__table_conflicts"),
     )
 
-    cells = (
-        _cells(vision, key)
-        .select(
-            key,
-            "pos",
-            F.explode(F.map_keys("row_map")).alias("fkey"),
-            F.col("row_map"),
-        )
-        .select(
-            key, "pos", "fkey", F.element_at("row_map", F.col("fkey")).alias("val")
-        )
+    conflicts = F.transform(
+        F.concat(
+            F.flatten(F.transform("__pairs", lambda p: p["conflicts"])),
+            F.col("__table_conflicts"),
+        ),
+        _arbitrated,
     )
-    patched = cells.join(cell_fixes, [key, "pos", "fkey"], "left").select(
-        key, "pos", "fkey", F.coalesce("fix", "val").alias("val")
+    with_conflicts = joined.select(
+        key, *passthrough, "__has_rule", "__pairs", conflicts.alias("conflicts")
     )
 
-    # deterministic field order: position in the headers array (unknown keys last)
-    with_order = patched.join(vision.select(key, "headers"), key, "left").select(
-        key,
-        "pos",
-        F.when(
-            F.array_position("headers", F.col("fkey")) > 0,
-            F.array_position("headers", F.col("fkey")),
-        )
-        .otherwise(F.lit(1_000_000))
-        .alias("korder"),
-        "fkey",
-        "val",
+    penalty = F.aggregate(
+        "conflicts",
+        F.lit(0.0),
+        lambda acc, c: acc + severity_penalty(c["severity"], c["resolution"].isNotNull()),
     )
-    # entries arrays (orderable, unlike maps) so the outer sort by pos works
-    rows_rebuilt = with_order.groupBy(key, "pos").agg(
-        F.array_sort(F.collect_list(F.struct("korder", "fkey", "val"))).alias("entries")
-    )
-    tables_rows = rows_rebuilt.groupBy(key).agg(
+    critical_diff = F.array_max(
         F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("entries")))),
-            lambda s: F.map_from_entries(
-                F.transform(
-                    s["entries"],
-                    lambda e: F.struct(e["fkey"].alias("key"), e["val"].alias("value")),
-                )
-            ),
-        ).alias("rows")
+            F.filter("conflicts", lambda c: c["severity"] == "CRITICAL"),
+            lambda c: pct_diff(c["vision_value"], c["rule_value"]),
+        )
+    )
+    needs_review = F.exists(
+        "conflicts",
+        lambda c: c["severity"].isin("HIGH", "CRITICAL") & c["resolution"].isNull(),
+    ) | (critical_diff > 0.10)
+    fixes = F.map_from_entries(
+        F.transform(
+            F.filter("conflicts", lambda c: c["resolution"] == "rule_wins"),
+            lambda c: F.struct(c["field"], c["resolved_value"]),
+        )
+    )
+    scored = with_conflicts.select(
+        "*",
+        F.greatest(F.lit(0.0), F.least(F.lit(1.0), 1.0 - penalty)).alias("__confidence"),
+        needs_review.alias("__needs_review"),
+        fixes.alias("__fixes"),
     )
 
-    # metadata patch (title / table_id) — with SmartArbiter these stay
-    # vision, but the join is general.
-    meta = vision.drop("rows")
-    for fld in ("title", "table_id"):
-        fix = (
-            rule_wins.filter(F.col("field") == fld)
-            .select(key, F.col("resolved_value").alias(f"__fix_{fld}"))
-        )
-        meta = (
-            meta.join(fix, key, "left")
-            .withColumn(fld, F.coalesce(F.col(f"__fix_{fld}"), F.col(fld)))
-            .drop(f"__fix_{fld}")
-        )
-    # row-less tables get no tables_rows entry; the reference's
-    # final_result preserves the original [] rather than null
-    return meta.join(tables_rows, key, "left").withColumn(
-        "rows",
-        F.coalesce(F.col("rows"), F.array().cast("array<map<string,string>>")),
+    confidence = F.col("__confidence")
+    verdict = (
+        F.when(F.col("__has_rule").isNull(), _verdict("verified", F.lit(0.85), "vision_only"))
+        .when(F.size("conflicts") == 0, _verdict("verified", F.lit(1.0), "perfect_match"))
+        .when(F.col("__needs_review"), _verdict("needs_review", confidence, "manual_required"))
+        .when(confidence < confidence_threshold, _verdict("conflict", confidence, "low_confidence"))
+        .otherwise(_verdict("verified", confidence, "auto_resolved"))
+    )
+    patched = {
+        fld: F.coalesce(F.element_at("__fixes", F.lit(fld)), F.col(fld)).alias(fld)
+        for fld in ("title", "table_id")
+    }
+    rows = F.transform(
+        F.filter("__pairs", lambda p: F.size(p["row"]) > 0),
+        lambda p: _patched_row(p["pos"], p["row"]),
+    )
+    return scored.select(
+        key,
+        *[patched.get(c, F.col(c)) for c in passthrough],
+        rows.alias("rows"),
+        "conflicts",
+        verdict.alias("verdict"),
     )
 
 
@@ -336,11 +338,7 @@ def verify(
     confidence_threshold: float = DEFAULT_CONFIDENCE_THRESHOLD,
 ) -> VerifyResult:
     """Run the full double-verification dataflow."""
-    conflicts = find_conflicts(vision, rule, key)
-    resolved = arbitrate(conflicts)
-    verdicts = score_and_status(vision, rule, resolved, key, confidence_threshold)
-    final_tables = patch_final_tables(vision, resolved, key)
-    return VerifyResult(conflicts=resolved, verdicts=verdicts, final_tables=final_tables)
+    return VerifyResult.of(verify_tables(vision, rule, key, confidence_threshold), key)
 
 
 def review_queue(verdicts: DataFrame) -> DataFrame:
@@ -427,9 +425,7 @@ COMPARATORS: dict = _builtin_comparators()
 
 # name → (conflicts: DataFrame) -> Column<string resolution>
 ARBITERS: dict = {
-    "smart": lambda df: F.when(
-        F.col("conflict_type") == "unit", "rule_wins"
-    ).otherwise("vision_wins"),
+    "smart": lambda df: smart_resolution(F.col("conflict_type")),
     "vision_wins": lambda df: F.lit("vision_wins"),
     "rule_wins": lambda df: F.lit("rule_wins"),
 }
@@ -457,11 +453,9 @@ def custom_match(v1, v2, comparator_names=None):
 
 
 def arbitrate_with(conflicts: DataFrame, arbiter: str = "smart") -> DataFrame:
-    """arbitrate() with a registry-selected arbiter (U2)."""
-    resolution = ARBITERS[arbiter](conflicts)
-    return conflicts.withColumn("resolution", resolution).withColumn(
+    """V8 arbitration with a registry-selected arbiter (U2): adds
+    ``resolution`` and the winner's ``resolved_value``."""
+    return conflicts.withColumn("resolution", ARBITERS[arbiter](conflicts)).withColumn(
         "resolved_value",
-        F.when(F.col("resolution") == "rule_wins", F.col("rule_value")).otherwise(
-            F.col("vision_value")
-        ),
+        _resolved_value(F.col("resolution"), F.col("vision_value"), F.col("rule_value")),
     )

@@ -22,7 +22,15 @@ import sys
 import time
 
 
-def main() -> int:
+def _key_value(text: str) -> tuple[str, str]:
+    """argparse type for KEY=VALUE options."""
+    key, sep, value = text.partition("=")
+    if not sep or not key:
+        raise argparse.ArgumentTypeError(f"expected KEY=VALUE, got {text!r}")
+    return key, value
+
+
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser()
     ap.add_argument("entries", nargs="+")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -30,20 +38,28 @@ def main() -> int:
     ap.add_argument("--action", choices=["noop", "count"], default="noop")
     ap.add_argument("--explain", default=None, help="directory for explain('formatted') dumps")
     ap.add_argument("--suffix", default="", help="filename suffix for explain dumps, e.g. _before")
-    ap.add_argument("--conf", action="append", default=[], help="extra spark conf k=v")
+    ap.add_argument(
+        "--conf", action="append", default=[], type=_key_value, help="extra spark conf k=v"
+    )
     ap.add_argument(
         "--ab-conf",
         action="append",
         default=[],
+        type=_key_value,
         help="A/B mode: runtime spark conf k=v applied only in the B arm",
     )
     ap.add_argument(
         "--ab-env",
         action="append",
         default=[],
+        type=_key_value,
         help="A/B mode: env var K=V applied only in the B arm",
     )
-    args = ap.parse_args()
+    return ap.parse_args(argv)
+
+
+def main() -> int:
+    args = parse_args()
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
@@ -52,7 +68,7 @@ def main() -> int:
     from datasheet_etl_spark.session import get_session
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    extra = dict(kv.split("=", 1) for kv in args.conf)
+    extra = dict(args.conf)
     spark = get_session(app_name="profile_entry", shuffle_partitions=cpus, extra_conf=extra)
     reg = registry()
 
@@ -84,8 +100,8 @@ def main() -> int:
             best = dt if best is None or dt < best else best
         return best
 
-    ab_conf = dict(kv.split("=", 1) for kv in args.ab_conf)
-    ab_env = dict(kv.split("=", 1) for kv in args.ab_env)
+    ab_conf = dict(args.ab_conf)
+    ab_env = dict(args.ab_env)
     ab_mode = bool(ab_conf or ab_env)
 
     def timed_run(name: str, label: str) -> tuple[float, float, float]:

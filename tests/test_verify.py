@@ -139,3 +139,41 @@ def _with_rows(df, rows, spark):
     base = df.collect()[0].asDict()
     base["rows"] = rows
     return spark.createDataFrame([tuple(base[f.name] for f in TABLE_SCHEMA)], TABLE_SCHEMA)
+
+
+def _final_plan_counts(df) -> dict[str, int]:
+    """Run ``df`` and count node kinds in its final adaptive plan."""
+    import re
+
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    assert "isFinalPlan=true" in plan.treeString()
+    names = [
+        m.group(1)
+        for line in plan.executedPlan().treeString().splitlines()
+        if (m := re.match(r"^[\s:|+\-]*(?:\*\(\d+\)\s*)?(\w+)", line))
+    ]
+    return {
+        "join": sum("Join" in n for n in names),
+        "generate": names.count("Generate"),
+        "exchange": sum(n.endswith("Exchange") for n in names),
+    }
+
+
+def test_plan_shape_one_join_no_generate(spark):
+    """The verification is one key join plus per-table expressions: over
+    two documents the final plan of the result, the verdicts and the final
+    tables holds at most one join and two exchanges, and nothing is
+    exploded."""
+    docs = ["a.pdf", "b.pdf"]
+    vision = mock_vision_tables(spark, docs[0]).unionByName(mock_vision_tables(spark, docs[1]))
+    rule = mock_rule_tables(spark, docs[0]).unionByName(mock_rule_tables(spark, docs[1]))
+    result, vr = run_pipeline(spark, vision, rule)
+    for name, df in (
+        ("result", result),
+        ("verdicts", verify(vision, rule).verdicts),
+        ("final_tables", vr.final_tables),
+    ):
+        counts = _final_plan_counts(df)
+        assert counts["join"] <= 1 and counts["generate"] == 0, (name, counts)
+        assert counts["exchange"] <= 2, (name, counts)
