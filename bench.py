@@ -39,48 +39,14 @@ def main() -> int:
 
     for warm in ("region", "lineitem", "orders", "documents", "embeddings", "events"):
         load_table(spark, sf_dir, warm).count()
-    # xpath/XML-stack JIT warm (VERDICT r13 #2): the first xpath-heavy
-    # plan execution in a JVM pays ~2.5-3s of one-time cost — C2 JIT of
-    # the Xerces parse + XPath evaluation paths across the 32 task
-    # threads (measured: t125 cold 3.8-4.1s vs 1.1-1.3s steady at
-    # sf0.1; a 64-row warm does NOT absorb it — the JIT needs ~10^4
-    # parse invocations). Under a host-contention burst that cold
-    # section stretches multiplicatively (the r13 driver vector
-    # recorded 14.5s). Warm it here with a shape-identical synthetic
-    # pass (60k rows, all three xpath forms, same rollup) so the timed
-    # t125 measures steady-state xpath throughput like every other
-    # entry measures steady-state scan/shuffle throughput.
-    from pyspark.sql import functions as F
-
-    _xml = F.concat(
-        F.lit("<doc><src>s"), (F.col("id") % 3).cast("string"),
-        F.lit("</src><lang>l"), (F.col("id") % 4).cast("string"),
-        F.lit('</lang><m n="'), (F.col("id") % 5).cast("string"),
-        F.lit('">'), F.col("id").cast("string"), F.lit("</m></doc>"),
-    )
-    (
-        spark.range(0, 60000, 1, cpus)
-        .select(_xml.alias("_xml"))
-        .select(
-            F.expr("xpath_string(_xml, '/doc/src')").alias("src"),
-            F.expr("xpath_int(_xml, '/doc/m')").alias("chars"),
-            F.expr("CAST(xpath_string(_xml, '/doc/m/@n') AS BIGINT)").alias("attr"),
-            F.expr("size(xpath(_xml, '/doc/*'))").alias("n_children"),
-        )
-        .groupBy("src")
-        .agg(F.sum("chars"), F.sum("attr"), F.sum("n_children"))
-        .count()
-    )
-    # Python-seam + streaming machinery warm (r15; same discipline as
-    # the xpath JIT warm above, which the r14 driver vector confirmed):
-    # the FIRST use of each Python execution seam in a JVM pays one-time
-    # infrastructure — spawning/importing the DataSource plan+read
-    # worker processes (~4.6s measured clean at 32 cpus), the DataSource
-    # write worker (~3.1s more), and the streaming engine's microbatch
-    # thread + state store + applyInPandasWithState worker (~2s). Those
-    # costs landed on whichever entry happened to run each seam first
-    # (t105/t112/t115 in sorted order), mismeasuring those operators by
-    # 2-5s each. Warm each seam once with a tiny synthetic op so every
+    # Python-seam + streaming machinery warm: the FIRST use of each
+    # Python execution seam in a JVM pays one-time infrastructure —
+    # spawning/importing the DataSource plan+read worker processes
+    # (~4.6s measured clean at 32 cpus), the DataSource write worker
+    # (~3.1s more), and the streaming engine's microbatch thread +
+    # state store + applyInPandasWithState worker (~2s). Those costs
+    # land on whichever entry runs each seam first (t105/t113/t114/t143),
+    # mismeasuring those operators by 2-5s each. Warm each seam once with a tiny synthetic op so every
     # timed entry measures steady-state operator cost — on any
     # long-lived cluster these one-time costs amortize to zero.
     import shutil
@@ -232,7 +198,7 @@ def main() -> int:
     # hypervisor whose contention arrives in BURSTS — five r13 runs of
     # identical code measured 272.6-475.2s (steal 3.1%-33.4%), and one
     # throttled execution of one entry masqueraded as an 8.75x
-    # regression (t125: 14.5s driver vs 1.49s clean). A single-shot
+    # regression (an XML entry: 14.5s in one run vs 1.49s clean). A single-shot
     # timing therefore cannot distinguish an engine regression from a
     # scheduling accident. Fix: steal-gated retry — an entry whose OWN
     # measurement window saw steal above RETRY_STEAL is re-run (up to

@@ -12,17 +12,18 @@ Layout
 - ``io``         : parquet table loaders for the test star schema
 - ``functions``  : pure Column-expression library (clean/parse/normalize/
                    compare) — the scalar layer, all JVM-side codegen-able
-- ``operators``  : reusable relational shapes (positional zip join, span
-                   join, as-of join, salted skew join, forward fill,
-                   run-length, sessionize, dedup, similarity/ANN, text
-                   analysis, graph/components, multimodal plumbing)
+- ``operators``  : reusable relational shapes (positional zip join,
+                   as-of join, salted skew join, forward fill,
+                   sessionize, dedup, similarity/ANN, text analysis,
+                   graph/components, multimodal plumbing)
 - ``sources``    : external-call stages (vision client: Arrow-batched,
                    retrying, rate-limited, cost-budgeted)
 - ``verify``     : the double-verification dataflow (conflict detection,
                    arbitration, resolution, confidence scoring)
 - ``pipeline``   : the end-to-end extraction pipeline over mock stages
-- ``plans``      : the declared query inventory (Q01–Q34 + training-data
-                   ops) with DuckDB oracle SQL for each
+- ``plans``      : the declared query inventory (Q01–Q34 + training-data,
+                   SQL-surface and streaming entries) with DuckDB oracle
+                   SQL for each oracled entry
 - ``streaming``  : Structured Streaming variants (windows, watermark,
                    incremental file source, stateful ops)
 """

@@ -408,7 +408,7 @@ def _path_signature(spark, path: str) -> tuple[str, str]:
 def cmd_audit(args, spark=None) -> int:
     """Corpus hygiene audit over a documents parquet — the pre-training
     report a corpus owner reads before committing a build: most-
-    duplicated verbatim n-grams (memorization/template risk, t100),
+    duplicated verbatim n-grams (memorization/template risk, t107),
     zlib compressibility distribution (template soup vs entropy
     garbage, t102), and optionally the substring-excision impact
     (t101). Each section runs one of the registry's graded operators;
@@ -437,7 +437,7 @@ def cmd_audit(args, spark=None) -> int:
     print("Corpus audit")
     print(f"  Docs:        {docs.count()}")
     if getattr(args, "ngram_partials", None):
-        # Incremental nightly path (t106 machinery): tonight's input is
+        # Incremental nightly path (text.merge_partial_counts): tonight's input is
         # tokenized ONCE into an unpruned partial, summed with the
         # stored partial from prior runs, and the merged UNPRUNED
         # partial is persisted for run N+1 — history is never
@@ -640,7 +640,7 @@ def cmd_stream_status(args, spark=None) -> int:
 
 
 def cmd_state(args, spark=None) -> int:
-    """Inspect streaming STATE at rest (t123 machinery): with no
+    """Inspect streaming STATE at rest (t128 machinery): with no
     ``--operator``, print the checkpoint's stateful-operator inventory
     (state-metadata source); with ``--operator``, read that operator's
     state store — row count plus a bounded key/value sample, and the
@@ -1098,7 +1098,7 @@ def main(argv: Sequence[str] | None = None, spark=None) -> int:
         help="incremental n-gram audit state dir: tonight's input is "
         "tokenized once into an unpruned partial, merged with the "
         "stored partial under this dir, and persisted back — history "
-        "is never re-tokenized (t106 machinery)",
+        "is never re-tokenized",
     )
 
     p = sub.add_parser(

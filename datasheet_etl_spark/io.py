@@ -116,17 +116,6 @@ def _epoch_to_micros(name: str, unit: str | None = None) -> F.Column:
     )
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every table; handy for registering temp views."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL API."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def write_table(df: DataFrame, path: str, fmt: str = "parquet") -> None:
     """Write a table in parquet/orc/csv/json. CSV keeps a header;
     timestamps serialize ISO-8601 so csv/json round-trips are lossless

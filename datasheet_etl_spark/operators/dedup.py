@@ -430,7 +430,7 @@ def substring_overlap_pairs(
     Returns (id_a, id_b, n_shared_grams, max_span_tokens), id_a < id_b,
     one row per overlapping pair. Deterministic and repartition-
     invariant; the whole computation is joins/windows/aggregates, so a
-    SQL oracle can re-derive it verbatim (the t92 oracle does).
+    SQL oracle can re-derive it verbatim (t95's oracle does).
 
     Scale shape: gram emission is map-side; grams shuffle as fixed
     16-byte md5 keys (never the raw token strings — ~3× less shuffle
@@ -713,7 +713,8 @@ def excise_overlap_spans(
     distinct token position (an anti-join against the interval set),
     so double-covered tokens are removed once.
 
-    Scale shape: stages 1-2 are t92's (capped 16-byte gram shuffle,
+    Scale shape: stages 1-2 are substring_overlap_pairs' (capped
+    16-byte gram shuffle,
     bounded self-join); the interval set is per-island aggregates of
     the runs frame (tiny); the anti-join is an equi-join on the doc id
     with a range residual, so tokens shuffle once, keyed by doc."""
@@ -842,10 +843,10 @@ def substring_dedup_corpus(
     Returns one row PER INPUT DOC: (id, cluster_rep, cluster_size,
     kept) — unpaired docs are their own singleton (rep = self, size 1,
     kept); ``filter(kept)`` is the deduped corpus, and the dropped
-    rows carry which cluster absorbed them (the audit t84 provides for
-    the exact-dup gate, here for the substring gate).
+    rows carry which cluster absorbed them (the audit exact-dup
+    curation keeps, here for the substring gate).
 
-    Scale shape: the expensive part is the pair detection (the t92
+    Scale shape: the expensive part is the pair detection (the
     capped gram self-join); components then iterate over the PAIR
     graph, which is the small derived artifact (overlap pairs), never
     the corpus, with localCheckpoint bounding lineage per round. The
@@ -854,7 +855,7 @@ def substring_dedup_corpus(
     EDGE SET, so this goes straight from the match runs to distinct
     qualifying pairs — skipping substring_overlap_pairs' shared-gram
     count aggregate and its pair-keyed join, the two largest
-    intermediates after the self-join (measured: t94 9.4s → 3.3s at
+    intermediates after the self-join (measured: 9.4s → 3.3s at
     bench sf0.1)."""
     from datasheet_etl_spark.operators.graph import dedup_clusters
 
@@ -935,7 +936,7 @@ def simhash_fingerprints_md5(
     """(id, text) → (id, fp long): SimHash whose bits come from the
     token's ``md5`` HEX DIGITS instead of ``xxhash64`` — bit ``j`` is
     bit ``j%4`` of hex digit ``j//4``, so the entire fingerprint is
-    re-derivable in any engine with md5 + string ops (the t93/t97
+    re-derivable in any engine with md5 + string ops (the t97
     replay discipline; DuckDB: ``strpos('0123456789abcdef', digit)``).
     60 bits ≤ 15 hex digits keeps every intermediate in a SIGNED long
     (no engine-specific unsigned-hex parse anywhere). The certifiable
@@ -1461,7 +1462,7 @@ def sorted_neighborhood_pairs(
     """Sorted-neighborhood blocking (Hernández & Stolfo): sort the
     corpus by a fuzzy key, pair each row with its next ``window``
     neighbors in the GLOBAL sort order, verify with exact Levenshtein.
-    The blocking class ``fuzzy_levenshtein_join`` (t64) cannot express:
+    The blocking class ``fuzzy_levenshtein_join`` cannot express:
     equality blocking pairs rows only INSIDE a block, so near-keys that
     straddle a block boundary never meet — sorted adjacency has no
     blocks to straddle. Candidates are exactly ``window × N`` — set by

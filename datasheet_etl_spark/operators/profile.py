@@ -658,7 +658,8 @@ def theil_sen_trend(
     cost, bounded by the largest group, not the corpus. This is the
     per-entity telemetry shape (thousands of rows per key); for wide
     groups use the standard estimator surrogate: pre-sample each group
-    (deterministic hash sample, t26 idiom) before calling.
+    (deterministic hash sample, ``sampling.uniform_sample``) before
+    calling.
 
     Returns (group_cols..., n, n_pairs, slope).
     """

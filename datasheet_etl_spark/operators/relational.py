@@ -353,30 +353,6 @@ def salted_join(
     return lhs.join(rhs, [*keys, "_salt"], how).drop("_salt")
 
 
-def span_join(
-    facts: DataFrame,
-    spans: DataFrame,
-    fact_keys: Sequence[str],
-    point_col: str,
-    span_start: str,
-    span_end: str,
-    how: str = "left",
-) -> DataFrame:
-    """Range/span join — J3: point BETWEEN start AND end on shared keys.
-
-    The span side is expected to be small (merge spans, calendar windows):
-    broadcast it so the range predicate evaluates map-side with no
-    shuffle. For two large sides, pre-bucketize the range instead.
-    """
-    cond = None
-    for k in fact_keys:
-        c = facts[k] == spans[k]
-        cond = c if cond is None else cond & c
-    between = (facts[point_col] >= spans[span_start]) & (facts[point_col] <= spans[span_end])
-    cond = between if cond is None else cond & between
-    return facts.join(F.broadcast(spans), cond, how)
-
-
 def incremental_anti(
     inputs: DataFrame, processed: DataFrame, keys: Sequence[str]
 ) -> DataFrame:
@@ -492,28 +468,6 @@ def forward_fill(
     return df.withColumn(out_col, F.last(value_col, ignorenulls=True).over(w))
 
 
-def run_length_spans(
-    df: DataFrame,
-    partition_keys: Sequence[str],
-    order_col: str,
-    is_start: Column,
-    run_col: str = "run_id",
-) -> DataFrame:
-    """Run-length / span construction — the W1/W2 idiom.
-
-    ``run_id = sum(is_start) over (partition order by order_col)`` gives
-    every row the id of the run it belongs to; group by run_id to get
-    span extents. This is the distributed replacement for the
-    reference's sequential scan-with-reset loops.
-    """
-    w = (
-        Window.partitionBy(*partition_keys)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return df.withColumn(run_col, F.sum(is_start.cast("long")).over(w))
-
-
 def sessionize(
     df: DataFrame,
     partition_keys: Sequence[str],
@@ -532,9 +486,9 @@ def sessionize(
     UNIT CONTRACT: ``gap`` is in ``ts_col``'s OWN units — the gap is
     compared against raw ``ts_col`` deltas (after a double cast), so a
     timestamp column (whose double cast is epoch seconds) takes a gap
-    in seconds, while a microsecond ts needs a microsecond gap (as t57
-    passes). Named ``gap``, not ``gap_seconds``, exactly so the name
-    never promises a unit the column doesn't have.
+    in seconds, while a microsecond ts needs a microsecond gap. Named
+    ``gap``, not ``gap_seconds``, exactly so the name never promises a
+    unit the column doesn't have.
     """
     order_keys = list(order_keys or [ts_col])
     w = Window.partitionBy(*partition_keys).orderBy(*order_keys)
@@ -1068,8 +1022,8 @@ def partial_rollup(
     The 100 TB pattern: a daily corpus rollup stores these partials
     per (ingest_date, keys…); tonight's update aggregates ONLY the new
     shard and merges kilobyte-scale partials (:func:`merge_rollups`)
-    instead of rescanning the corpus — t73 oracles merge == full
-    recompute. avg is derived at read time (sum/n), never stored:
+    instead of rescanning the corpus — merge == full recompute
+    (pinned in tests/test_training_ops.py). avg is derived at read time (sum/n), never stored:
     averages don't merge, (sum, n) pairs do."""
     return df.groupBy(*keys).agg(
         F.count("*").alias("n"),
@@ -1119,7 +1073,7 @@ def scd2_history(
     delete rows. The changelog, not any snapshot, pays the sort; at
     100 TB keep the changelog bucketed by key and the window runs
     without a shuffle. This is the batch derivation the streaming
-    ``scd2_upsert_sink`` must agree with (t121 grades incremental ==
+    ``scd2_upsert_sink`` must agree with (t121b grades incremental ==
     from-scratch through the DuckDB oracle).
     """
     kl = list(keys)

@@ -796,7 +796,7 @@ def aes_weighted_sample(
     weighted sample without replacement, each row's inclusion
     probability proportional to its weight among the survivors. The
     exact-k complement to t38's temperature mixture (rate-based
-    EXPECTED counts) and t26's unweighted top-N: "give me exactly k
+    EXPECTED counts) and ``uniform_sample``'s unweighted top-N: "give me exactly k
     docs, long ones proportionally more often".
 
     Same determinism contract as everything in this module: the draw
@@ -857,7 +857,7 @@ def epoch_shuffle(
       changes every hash);
     - corpus growth moves no existing row ACROSS shards within an
       epoch beyond its own re-hash — and the whole order is
-      re-derivable in SQL for audit (the t93 oracle).
+      re-derivable in SQL for audit (t97's oracle).
 
     Scale shape: shard assignment is map-only; position is a
     row_number per shard — 16^shard_hex_chars shards, so each sort is
@@ -891,7 +891,7 @@ def temperature_mixture_stats(
     ``budget_frac · N · p_s / n_s`` (capped at 1) through the
     deterministic md5-prefix gate, so the expected sample hits
     ``budget_frac · N`` rows distributed as p. This derives the rates
-    FROM the data in-plan — ``weighted_sample_stats`` (t29) grades the
+    FROM the data in-plan — ``weighted_sample_stats`` covers the
     static-config-rate gate; this grades the named data-dependent rule.
 
     Exactness contract: at the default alpha = 0.5 the stratum weight is

@@ -1203,7 +1203,7 @@ def scale_features(
     agg). Constant dimensions (hi == lo) map to 0.5 rather than
     dividing by a zero width. Arithmetic is double-widened (float
     elements promote against the double literals), reproducible across
-    engines — t90's DuckDB oracle replays the identical expressions.
+    engines — a DuckDB query can replay the identical expressions.
     An array whose length disagrees with the frame raises AT ROW LEVEL
     (``raise_error``) instead of letting ``element_at`` past the frame
     NULL-poison downstream aggregates."""

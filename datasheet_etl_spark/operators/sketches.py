@@ -69,8 +69,8 @@ def kmv_grouped_sketch(
     df: DataFrame, keys: Sequence[str], col: str, k: int = 256
 ) -> DataFrame:
     """Per-KEY KMV pools: the ≤k smallest distinct normalized hashes
-    of ``col`` within each key group — the batch form of t55's grouped
-    streaming state. Two exchanges: the (keys, h) dedup (partial
+    of ``col`` within each key group — the batch form of
+    ``kmv_distinct_stateful``'s grouped streaming state. Two exchanges: the (keys, h) dedup (partial
     map-side combine collapses within-partition duplicates before it
     ships) and the keys-only re-shuffle for the rank prune, which runs
     in that exchange's sorted partition pass. Hashes shuffle, never
@@ -96,7 +96,7 @@ def kmv_grouped_estimate(
     """Per-key distinct-count estimates from per-key KMV pools:
     (k−1)/max(h) per key, or the exact pool size where the group's
     distinct count is below k — the regime in which the estimate IS
-    ``count(DISTINCT col)`` bit-for-bit (t55's exactness route), which
+    ``count(DISTINCT col)`` bit-for-bit (the below-k exactness route), which
     is what lets a caller pick a structurally-bounded grouping and
     oracle the result against plain SQL."""
     sk = kmv_grouped_sketch(df, keys, col, k)
@@ -197,7 +197,7 @@ def hll_partials(
     lg_k: int = 12,
 ) -> DataFrame:
     """Per-key HLL distinct sketches as MERGEABLE binary columns — the
-    t73 incremental-maintenance pattern applied to COUNT DISTINCT (the
+    ``merge_rollups`` incremental-maintenance pattern applied to COUNT DISTINCT (the
     most common 100 TB metric, and the one a mergeable-rollup (n, sum,
     min, max) tuple cannot carry): each ingest shard aggregates its own
     kilobyte-scale sketch, the nightly job unions sketches WITHOUT
@@ -244,8 +244,8 @@ def hll_estimate(sketches: DataFrame, out_col: str = "n_distinct") -> DataFrame:
 # groupBy(keys, bin).count() — at most keys × bins rows ever shuffle,
 # independent of corpus size; the frame pass is a 1-row min/max
 # aggregate. Deterministic: bin assignment is pure IEEE double
-# arithmetic on exact min/max, reproducible across engines (t88's
-# DuckDB oracle replays the identical expressions).
+# arithmetic on exact min/max, reproducible across engines (a DuckDB
+# query can replay the identical expressions).
 
 
 def bitmap_page_partials(

@@ -300,7 +300,7 @@ def unigram_log_ppl(
     scored by its mean token negative log-likelihood — low = looks like
     the reference distribution, high = gibberish/boilerplate/wrong
     language. The standard corpus-curation gate between heuristic
-    quality scores (t09) and a real neural LM.
+    quality scores (``quality_score``) and a real neural LM.
 
     Scale shape: the vocabulary (distinct reference tokens + counts) is
     a broadcast dimension; candidate tokens explode map-side, join the
@@ -362,7 +362,8 @@ def dsir_select(
     low = looks like generic pool text; the top-``k`` by total weight
     are the selected continuation-pretraining slice (the paper's top-k
     heuristic; hashed-n-gram features reduce to unigrams here, the
-    same reduction t65 makes for the CCNet perplexity filter).
+    same reduction :func:`unigram_log_ppl` makes for the CCNet
+    perplexity filter).
 
     Returns one row per raw doc with ≥1 token: (id, n_tokens,
     avg_log_w, rank, selected) — rank only on the k selected rows.
@@ -469,7 +470,8 @@ def frequent_ngrams(
     both levels map-side combine and raw document text never shuffles.
     Readable gram STRINGS do shuffle (bounded: positions per doc ×
     n·avg-token bytes) — the price of an audit artifact humans read;
-    hash the grams and this collapses to t92's postings shape.
+    hash the grams and this collapses to the substring-dedup postings
+    shape.
     Selection is TakeOrdered top-k, never a global sort; ranks are
     assigned on the k collected-size rows."""
     if n < 1 or top_k < 1:
@@ -491,8 +493,8 @@ def frequent_ngram_partials(
     disjointly (the nightly-increment shape: yesterday's partial at
     rest + tonight's shard — never re-tokenize history). Merge with
     :func:`merge_ngram_partials`, which re-derives exactly the
-    from-scratch audit (the t73/t87/t88 partials discipline applied to
-    the memorization audit).
+    from-scratch audit (the ``merge_rollups`` / sketch partials
+    discipline applied to the memorization audit).
 
     The partial is exact and UNPRUNED — a min_count floor cannot apply
     per-shard without losing cross-shard sums (a gram appearing once
@@ -536,8 +538,8 @@ def frequent_ngrams_hashed(
     min_count: int = 2,
 ) -> DataFrame:
     """The 100 TB shape of :func:`frequent_ngrams`, row-identical
-    output: counts aggregate on 16-byte md5 gram KEYS (t92's postings
-    discipline — readable gram strings never shuffle), then only the
+    output: counts aggregate on 16-byte md5 gram KEYS (the substring-
+    dedup postings discipline — readable gram strings never shuffle), then only the
     candidate top-k keys join back to one exemplar string.
 
     Three stages: (1) two-level count aggregate on ``gkey`` — both
@@ -553,7 +555,7 @@ def frequent_ngrams_hashed(
     (occurrences desc, gram asc) total order — hence the same rows and
     ranks as the string path. An md5 collision would merge two grams'
     counts; at ~2^-64 per-pair odds this is the accepted risk every
-    hashed postings pipeline here shares (t92/t98).
+    hashed postings pipeline here shares.
     """
     if n < 1 or top_k < 1:
         raise ValueError(f"n and top_k must be >= 1, got n={n}, top_k={top_k}")
@@ -702,7 +704,7 @@ def compression_signal(
     family): zlib-compressed length of the doc's UTF-8 text over its
     raw length. Template/machine-generated text compresses far below
     natural prose, so a LOW ratio flags repetitive docs the explicit
-    repetition heuristics (t34) can miss; a ratio near 1 flags
+    repetition heuristics can miss; a ratio near 1 flags
     high-entropy garbage (binary soup, encrypted blobs). Returns one
     row per doc: (id, raw_len, comp_len, ratio, too_repetitive) with
     ratio rounded to 6 dp (the flag thresholds the ROUNDED value, so
@@ -809,7 +811,7 @@ def arrow_grouped_stats(
     pyarrow Table, reduced with ``pyarrow.compute`` aggregate kernels,
     never pandas): document count, total UTF-8 bytes, and max char
     count per group. The workload is deliberately builtin-expressible
-    (the t112/t126 rationale — the SEAM is what the caller grades);
+    (the SEAM is what the caller grades);
     reach for this shape when the per-group logic genuinely needs
     Arrow-level access (dictionary buffers, nested layouts) that a
     builtin aggregate cannot see.
@@ -889,7 +891,8 @@ def token_drift_kl(
 
     Exactness: counts are exact longs; each term p*ln(p/q) evaluates in
     double from identical integers with one fixed expression tree, then
-    casts to DECIMAL(18,9) BEFORE summing (the t65 discipline) so the
+    casts to DECIMAL(18,9) BEFORE summing (the unigram_log_ppl
+    discipline) so the
     per-group sum is partitioning- and engine-independent.
 
     Shape at scale: one tokenize pass feeds three partial-agged

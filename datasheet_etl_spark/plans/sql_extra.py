@@ -1,30 +1,19 @@
 """Additional SQL-surface and analytics entries.
 
-SQL breadth: CUBE (q35), RANGE window frames (q36), LATERAL top-k
-(q37), VARIANT semi-structured extraction (q38), recursive CTE (q39),
-explicit GROUPING SETS + grouping_id (q40), bag-semantics set
-ops INTERSECT ALL / EXCEPT ALL (q41), value-window trio (q42),
-six-table star-join revenue (q43, TPC-H Q5 shape), correlated
-scalar/EXISTS subqueries (q44).
-Ops/analytics: salted skew join (t51), train/val/test split (t52),
-MAD outlier gate (t53), LOCF grid resample (t54), triangle count
-(t56), session funnel (t57), cohort retention (t58), one-scan
-correlation matrix (t59), PSI drift monitor (t60), k-core (t61,
-rows-only), BM25 ranked retrieval (t62), MMR diverse selection (t63,
-rows-only), blocked fuzzy Levenshtein join (t64), unigram
-log-perplexity quality gate (t65), pairwise-similarity histogram
-(t66), Z-order clustering key (t67), CDC changelog apply (t68),
-rolling anomaly detection (t69), per-source dedup-rate report
-(t70). r6: star-join revenue (q43), correlated subqueries (q44),
-schema-evolution UNION BY NAME (q45), null-safe join (q46),
-incremental rollup maintenance (t73), linear-interpolation resample
-(t74); t75 (stream-static join) lives in streaming_entries.
+SQL breadth beyond Q01-Q34: RANGE window frames, LATERAL top-k,
+GROUPING SETS, bag-semantics set ops, value and distribution windows,
+NULL semantics, timezone parity, collation, keyset pagination, HOF
+breadth, native PIVOT, the try_* family, SQL scripting, EXECUTE
+IMMEDIATE, VARIANT leniency, transpose and pipe syntax (q36-q77).
+Ops/analytics entries: skew joins, splits, outlier gates, resampling,
+graph metrics, retrieval, sketches, lenient ingest, Python DataSource
+seams, XML, and the substring-dedup family.
 
-Registered from a module imported AFTER ``training`` on purpose: the
-driver grades the first 50 registry entries, and these land past the
-window so adding SQL-surface breadth never evicts a graded training
-entry. They are still full DuckDB-oracled entries — the pytest sweep
-(`tests/test_oracle.py`) hash-checks them like everything else.
+Registered from a module imported AFTER ``training`` on purpose: only
+the first 50 registry entries (pinned by ``WINDOW``) are graded through
+``__spark_entry__``, and these land past the window unless named there. They are still full
+DuckDB-oracled entries — the pytest sweep (`tests/test_oracle.py`)
+hash-checks them like everything else.
 """
 
 from __future__ import annotations
@@ -32,36 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datasheet_etl_spark.io import load_table, zorder_sql
+from datasheet_etl_spark.io import load_table
 from datasheet_etl_spark.plans.queries import dsum, register, sql_dsum
-
-
-@register(
-    "q35_cube",
-    f"""
-    SELECT l_returnflag, l_linestatus,
-           count(*) AS n_items,
-           {sql_dsum('l_quantity')} AS sum_qty
-    FROM lineitem
-    GROUP BY CUBE (l_returnflag, l_linestatus)
-    ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
-    """,
-)
-def q35_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE grouping sets — all four grains (both keys, each alone,
-    grand total) in ONE pass: Spark expands the grouping sets into a
-    single Expand + hash aggregate, so the table is read once where
-    four separate GROUP BYs would read it four times. Same map-side
-    partial-agg behavior as a plain groupBy."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(F.count("*").alias("n_items"), dsum(F.col("l_quantity")).alias("sum_qty"))
-        .orderBy(
-            F.col("l_returnflag").asc_nulls_first(),
-            F.col("l_linestatus").asc_nulls_first(),
-        )
-    )
 
 
 @register(
@@ -439,214 +400,6 @@ def t56_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "t57_funnel",
-    """
-    WITH ordered AS (
-      SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us,
-             lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY event_id)
-                 AS prev_us
-      FROM events
-    ), sessions AS (
-      SELECT user_id, event_id, event_type, ts_us,
-             CAST(sum(CASE WHEN prev_us IS NULL
-                           OR ts_us - prev_us > 1800000000 THEN 1
-                           ELSE 0 END)
-                  OVER (PARTITION BY user_id ORDER BY event_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS BIGINT) AS session_id
-      FROM ordered
-    ), s1 AS (
-      SELECT *, min(CASE WHEN event_type = 'view' THEN ts_us END)
-                    OVER (PARTITION BY user_id, session_id) AS t_0
-      FROM sessions
-    ), s2 AS (
-      SELECT *, min(CASE WHEN event_type = 'click' AND ts_us > t_0
-                         THEN ts_us END)
-                    OVER (PARTITION BY user_id, session_id) AS t_1
-      FROM s1
-    ), s3 AS (
-      SELECT *, min(CASE WHEN event_type = 'purchase' AND ts_us > t_1
-                         THEN ts_us END)
-                    OVER (PARTITION BY user_id, session_id) AS t_2
-      FROM s2
-    ), per_session AS (
-      SELECT user_id, session_id,
-             any_value(t_0) AS t_0, any_value(t_1) AS t_1,
-             any_value(t_2) AS t_2
-      FROM s3 GROUP BY user_id, session_id
-    )
-    SELECT count(*) AS n_sessions,
-           CAST(count(t_0) AS BIGINT) AS n_view,
-           CAST(count(t_1) AS BIGINT) AS n_view_click,
-           CAST(count(t_2) AS BIGINT) AS n_view_click_purchase
-    FROM per_session
-    """,
-)
-def t57_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session funnel: per 30-min-gap session, did view → click →
-    purchase occur IN ORDER (each stage strictly after the previous
-    one's first completion)? Emits the funnel counts. Sessionize + all
-    three chained stage windows + the final collapse share ONE
-    partitioning — one shuffle end-to-end, where the naive
-    join-per-stage funnel pays a shuffle per stage."""
-    from datasheet_etl_spark.operators.relational import funnel_stages, sessionize
-
-    e = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        "event_type",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-    )
-    # ts is in MICROSECONDS, so per sessionize's unit contract the gap
-    # is too: 1.8e9 µs = 30 min (µs keep the funnel's strict-order
-    # comparisons exact against the epoch_us oracle)
-    sess = sessionize(
-        e, ["user_id"], "ts_us", gap=1_800_000_000, order_keys=["event_id"]
-    )
-    fun = funnel_stages(
-        sess,
-        ["user_id", "session_id"],
-        "ts_us",
-        "event_type",
-        ["view", "click", "purchase"],
-    )
-    return fun.agg(
-        F.count("*").alias("n_sessions"),
-        F.count("t_0").alias("n_view"),
-        F.count("t_1").alias("n_view_click"),
-        F.count("t_2").alias("n_view_click_purchase"),
-    )
-
-
-@register(
-    "t58_cohort_retention",
-    """
-    WITH wk AS (
-        SELECT DISTINCT user_id,
-               CAST(floor((epoch_us(ts)
-                           - epoch_us(TIMESTAMP '2024-01-01 00:00:00'))
-                          / 604800000000.0) AS BIGINT) AS week
-        FROM events
-    ), c AS (
-        SELECT user_id, min(week) AS cohort FROM wk GROUP BY user_id
-    )
-    SELECT c.cohort, wk.week - c.cohort AS week_n,
-           CAST(count(*) AS BIGINT) AS n_users
-    FROM wk JOIN c USING (user_id)
-    GROUP BY 1, 2
-    ORDER BY 1, 2
-    """,
-)
-def t58_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix: users grouped by first-active week,
-    counted in each subsequent week they return — the
-    product-analytics complement of t57's funnel.
-
-    The (user, week) distinct is the only data-sized stage (pruned to
-    two columns) and it is persisted before fanning out: without the
-    persist Catalyst re-derives it from the raw scan for BOTH the
-    min-cohort aggregate and the join side (two extra table reads —
-    verified in the executed plan). One scan + the distinct's exchange
-    + the cohort/join exchanges on user_id + the small final rollup.
-
-    Week bucketing uses ``floor``, not integer ``div``: div truncates
-    toward zero, so a pre-anchor event (replayed 2023 history) would
-    collapse week −0.x into week 0 and silently merge two weeks; floor
-    keeps the bucket lattice uniform on both sides of the anchor, and
-    the quotient is a correctly-rounded double well inside 2^53."""
-    from datasheet_etl_spark.caching import scoped_persist
-
-    e = load_table(spark, sf_dir, "events")
-    week = F.floor(
-        (
-            F.unix_micros(F.col("ts"))
-            - F.unix_micros(F.lit("2024-01-01 00:00:00").cast("timestamp"))
-        )
-        / F.lit(604_800_000_000.0)
-    ).cast("long")
-    wk = scoped_persist(e.select("user_id", week.alias("week")).distinct())
-    c = wk.groupBy("user_id").agg(F.min("week").alias("cohort"))
-    return (
-        wk.join(c, "user_id")
-        .groupBy("cohort", (F.col("week") - F.col("cohort")).alias("week_n"))
-        .agg(F.count("*").alias("n_users"))
-        .orderBy("cohort", "week_n")
-    )
-
-
-_T59_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-
-
-def _t59_sql() -> str:
-    """DuckDB mirror of correlation_matrix's exact-decimal moments: the
-    same DECIMAL(14,3) value casts, (38,6)-accumulated product sums and
-    the same double arithmetic, so both engines derive identical
-    correlations bit-for-bit."""
-    cols = _T59_COLS
-    m = ["CAST(count(*) AS DOUBLE) AS n"]
-    for c in cols:
-        m.append(f"sum(CAST({c} AS DECIMAL(14,3))) AS s_{c}")
-    for i, x in enumerate(cols):
-        for y in cols[i:]:
-            m.append(
-                f"sum(CAST(CAST({x} AS DECIMAL(14,3)) * "
-                f"CAST({y} AS DECIMAL(14,3)) AS DECIMAL(38,6))) AS p_{x}_{y}"
-            )
-    selects = []
-    for i, x in enumerate(cols):
-        for y in cols[i + 1 :]:
-            num = (
-                f"(n * CAST(p_{x}_{y} AS DOUBLE)"
-                f" - CAST(s_{x} AS DOUBLE) * CAST(s_{y} AS DOUBLE))"
-            )
-            dx = (
-                f"(n * CAST(p_{x}_{x} AS DOUBLE)"
-                f" - CAST(s_{x} AS DOUBLE) * CAST(s_{x} AS DOUBLE))"
-            )
-            dy = (
-                f"(n * CAST(p_{y}_{y} AS DOUBLE)"
-                f" - CAST(s_{y} AS DOUBLE) * CAST(s_{y} AS DOUBLE))"
-            )
-            selects.append(
-                f"SELECT '{x}' AS col_x, '{y}' AS col_y, "
-                f"round({num} / nullif(sqrt({dx} * {dy}), 0.0), 6) AS corr "
-                f"FROM m"
-            )
-    return (
-        "WITH m AS (SELECT "
-        + ", ".join(m)
-        + " FROM lineitem) "
-        + " UNION ALL ".join(selects)
-        + " ORDER BY col_x, col_y"
-    )
-
-
-@register("t59_correlation_matrix", _t59_sql())
-def t59_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Pearson correlations over four lineitem measures in ONE
-    scan (all moments in a single aggregate row) — ``df.stat.corr``
-    per pair would read the table M(M-1)/2 times. Moments are exact
-    decimals, so the answer is identical under any partitioning, task
-    order, or engine — float-sum correlation is order-dependent, which
-    is why naive implementations fail reproducibility audits at scale.
-
-    COLD-START PIN (r7 verdict adjudication, re-measured r8): this is
-    the inventory's slowest bench entry ALMOST ENTIRELY by one-time
-    whole-stage-codegen/JIT of the 15-decimal-aggregate unit — ~6s cold
-    at sf0.001 (no data to speak of) vs ~2s at sf0.1 warm; the data-
-    dependent cost is a single scan + single 1-row aggregate with a
-    1.0x/10x scale ratio (COVERAGE r6 audit). r8 halved the compiled
-    expression tree by staging the decimal/double casts once
-    (``profile.correlation_matrix``); the remaining floor is janino +
-    C2, paid once per JVM, amortized to zero on any long-lived
-    cluster."""
-    from datasheet_etl_spark.operators.profile import correlation_matrix
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return correlation_matrix(li, list(_T59_COLS)).orderBy("col_x", "col_y")
-
-
-@register(
     "t60_psi_drift",
     """
     WITH o AS (
@@ -973,106 +726,6 @@ def t63b_mmr_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "t64_fuzzy_join",
-    """
-    WITH clean AS (
-        SELECT DISTINCT p_name FROM part
-    ), dirty AS (
-        SELECT DISTINCT CASE WHEN substr(md5(p_name), 1, 1) < '8'
-                             THEN substr(p_name, 2)
-                             ELSE p_name END AS dirty_name
-        FROM part
-    )
-    SELECT c.p_name, d.dirty_name,
-           levenshtein(c.p_name, d.dirty_name) AS edit_dist
-    FROM clean c JOIN dirty d
-      ON right(c.p_name, 4) = right(d.dirty_name, 4)
-    WHERE levenshtein(c.p_name, d.dirty_name) <= 2
-    ORDER BY c.p_name, d.dirty_name
-    """,
-)
-def t64_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity resolution between a clean name dictionary and a
-    deterministically-corrupted one (hash-selected names lose their
-    first character — the md5 selector keeps the corruption identical
-    in both engines): suffix-blocked candidates verified by exact
-    Levenshtein ≤ 2. Dictionaries, not rows — the 2000-row part table
-    collapses to its ~64 distinct names before any pairing, and the
-    last-4-chars block is stable under the front-of-string corruption,
-    so candidates stay per-block-sized, never a cross join."""
-    from datasheet_etl_spark.operators.relational import fuzzy_levenshtein_join
-
-    part = load_table(spark, sf_dir, "part")
-    clean = part.select("p_name").distinct()
-    dirty = part.select(
-        F.when(
-            F.substring(F.md5("p_name"), 1, 1) < "8",
-            F.expr("substr(p_name, 2)"),
-        )
-        .otherwise(F.col("p_name"))
-        .alias("dirty_name")
-    ).distinct()
-    out = fuzzy_levenshtein_join(
-        clean,
-        dirty,
-        "p_name",
-        "dirty_name",
-        F.expr("right(p_name, 4)"),
-        F.expr("right(dirty_name, 4)"),
-        max_dist=2,
-    )
-    return out.select("p_name", "dirty_name", "edit_dist").orderBy(
-        "p_name", "dirty_name"
-    )
-
-
-@register(
-    "t65_unigram_log_ppl",
-    """
-    WITH ref AS (
-        SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                                  x -> x <> '')) AS t
-        FROM documents WHERE doc_id % 2 = 0
-    ), vocab AS (
-        SELECT t, count(*) AS c FROM ref GROUP BY t
-    ), tot AS (
-        SELECT count(*) AS total, count(DISTINCT t) AS v FROM ref
-    ), dt AS (
-        SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                                  x -> x <> '')) AS t
-        FROM documents WHERE doc_id % 2 = 1
-    ), scored AS (
-        SELECT dt.doc_id,
-               CAST(-ln((coalesce(vocab.c, 0) + 1.0) / (tot.total + tot.v + 1.0))
-                    AS DECIMAL(18,9)) AS nll
-        FROM dt LEFT JOIN vocab USING (t), tot
-    )
-    SELECT doc_id, count(*) AS n_tokens,
-           round(CAST(sum(nll) / count(*) AS DOUBLE), 6) AS log_ppl
-    FROM scored
-    GROUP BY doc_id
-    ORDER BY doc_id
-    """,
-)
-def t65_unigram_log_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perplexity-style quality gate: a Laplace-smoothed unigram LM
-    trained on the even-doc_id half of the corpus scores the odd half
-    by mean token negative log-likelihood — the distributable core of
-    CCNet's KenLM filter. Vocabulary broadcasts; one per-doc shuffle;
-    DECIMAL-summed costs make the score partitioning-independent and
-    DuckDB-oracled."""
-    from datasheet_etl_spark.operators.text import unigram_log_ppl
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = unigram_log_ppl(
-        docs.filter(F.col("doc_id") % 2 == 0),
-        docs.filter(F.col("doc_id") % 2 == 1),
-    )
-    return out.orderBy("doc_id")
-
-
-@register(
     "t66_similarity_histogram",
     """
     WITH s AS (
@@ -1136,104 +789,6 @@ def t66_similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_pairs"))
         .orderBy("bucket")
     )
-
-
-@register(
-    "t67_zorder_key",
-    f"""
-    SELECT l_orderkey, l_linenumber,
-           {zorder_sql("l_partkey", "l_suppkey", 16)} AS zkey
-    FROM lineitem
-    WHERE l_orderkey < 1000
-    ORDER BY l_orderkey, l_linenumber
-    """,
-)
-def t67_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order (Morton) clustering key over (l_partkey, l_suppkey) —
-    the multi-dimension file-skipping layout lever: range-sorting by
-    this key bounds every file's min/max box in BOTH dimensions (the
-    per-file range-width contraction is pinned in
-    tests/test_io_layout.py). Pure codegen bit arithmetic; the oracle
-    recomputes the interleave with DuckDB bit operators."""
-    from datasheet_etl_spark.io import z_order_key
-
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 1000)
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        z_order_key(F.col("l_partkey"), F.col("l_suppkey")).alias("zkey"),
-    ).orderBy("l_orderkey", "l_linenumber")
-
-
-_CDC_ORACLE_SQL = """
-    WITH base AS (
-        SELECT doc_id, source, n_chars FROM documents WHERE doc_id % 2 = 0
-    ), ch AS (
-        SELECT doc_id, 1 AS seq,
-               CASE doc_id % 3 WHEN 0 THEN 'D' WHEN 1 THEN 'U'
-                               ELSE 'I' END AS op,
-               source, n_chars + 1000 AS n_chars
-        FROM documents
-        UNION ALL
-        SELECT doc_id, 2 AS seq, 'U' AS op, source, n_chars + 5000 AS n_chars
-        FROM documents WHERE doc_id % 7 = 0
-    ), latest AS (
-        SELECT * FROM (
-            SELECT ch.*,
-                   row_number() OVER (
-                       PARTITION BY doc_id
-                       ORDER BY seq DESC, CAST(op = 'D' AS INT) DESC
-                   ) AS rn
-            FROM ch
-        ) WHERE rn = 1
-    )
-    SELECT coalesce(b.doc_id, l.doc_id) AS doc_id,
-           CASE WHEN l.op IN ('I','U') THEN l.source
-                ELSE b.source END AS source,
-           CASE WHEN l.op IN ('I','U') THEN l.n_chars
-                ELSE b.n_chars END AS n_chars
-    FROM base b FULL OUTER JOIN latest l ON b.doc_id = l.doc_id
-    WHERE l.op IS NULL OR l.op <> 'D'
-    ORDER BY doc_id
-    """
-
-
-@register("t68_cdc_apply", _CDC_ORACLE_SQL)
-def t68_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC changelog apply — MERGE INTO semantics from primitives: a
-    synthesized changelog (deletes, updates, inserts, plus a second
-    later change for some keys) applied to the even-doc_id snapshot.
-    Latest change per key wins (one window pass over the CHANGELOG —
-    the snapshot never sorts), one key join; deletes drop, upserts take
-    the change payload, untouched rows pass through. Bucket base and
-    changelog by the key and the join shuffles nothing."""
-    from datasheet_etl_spark.operators.relational import apply_changes
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    base = docs.filter(F.col("doc_id") % 2 == 0)
-    op = (
-        F.when(F.col("doc_id") % 3 == 0, "D")
-        .when(F.col("doc_id") % 3 == 1, "U")
-        .otherwise("I")
-    )
-    ch = docs.select(
-        "doc_id",
-        F.lit(1).alias("seq"),
-        op.alias("op"),
-        "source",
-        (F.col("n_chars") + 1000).alias("n_chars"),
-    ).unionByName(
-        docs.filter(F.col("doc_id") % 7 == 0).select(
-            "doc_id",
-            F.lit(2).alias("seq"),
-            F.lit("U").alias("op"),
-            "source",
-            (F.col("n_chars") + 5000).alias("n_chars"),
-        )
-    )
-    return apply_changes(base, ch, ["doc_id"], "seq").orderBy("doc_id")
 
 
 @register(
@@ -1310,124 +865,6 @@ def q41_set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared = y94.intersectAll(y95).groupBy("k").agg(F.count("*").alias("n"))
     surplus = y94.exceptAll(y95).groupBy("k").agg((-F.count("*")).alias("n"))
     return shared.unionByName(surplus).orderBy("n", "k")
-
-
-@register(
-    "t69_rolling_anomaly",
-    """
-    WITH base AS (
-        SELECT event_id, user_id, epoch_us(ts) // 1000000 AS ts_sec,
-               value,
-               CAST(value AS DECIMAL(14,3)) AS dv,
-               CAST(CAST(value AS DECIMAL(14,3))
-                    * CAST(value AS DECIMAL(14,3)) AS DECIMAL(38,6)) AS dv2
-        FROM events
-    ), m AS (
-        SELECT event_id, user_id, ts_sec, value,
-               count(*) OVER w AS n,
-               CAST(sum(dv) OVER w AS DOUBLE) AS sx,
-               CAST(sum(dv2) OVER w AS DOUBLE) AS sxx
-        FROM base
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec
-                     RANGE BETWEEN 604800 PRECEDING AND 1 PRECEDING)
-    )
-    SELECT event_id, user_id, ts_sec,
-           round((value - sx / n)
-                 / sqrt((n * sxx - sx * sx) / (n * (n - 1.0))), 6) AS z
-    FROM m
-    WHERE n >= 8
-      AND (n * sxx - sx * sx) / (n * (n - 1.0)) > 0
-      AND abs((value - sx / n)
-              / sqrt((n * sxx - sx * sx) / (n * (n - 1.0)))) > 3.0
-    ORDER BY event_id
-    """,
-)
-def t69_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling anomaly detection: each event scored against the mean/
-    stddev of its user's TRAILING week (RANGE frame ending 1s before
-    the event — the event never scores against itself; the window
-    length is sized to the data's per-user event rate so the ≥8-sample
-    warmup actually fills), flagging |z| > 3. The streaming-adjacent
-    monitoring shape: one shuffle on user_id, a single sorted pass per
-    partition evaluates both moment windows.
-
-    Moments accumulate as exact decimals (the t59 discipline): mean
-    and variance derive from (n, Σx, Σx²) in double, so the flag set
-    is identical under any partitioning and engine — an order-dependent
-    anomaly detector cannot be re-checked by any oracle, or trusted
-    across reruns."""
-    e = load_table(spark, sf_dir, "events")
-    dv = F.col("value").cast("decimal(14,3)")
-    base = e.select(
-        "event_id",
-        "user_id",
-        F.col("ts").cast("long").alias("ts_sec"),
-        "value",
-        dv.alias("dv"),
-        (dv * dv).cast("decimal(38,6)").alias("dv2"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts_sec")
-        .rangeBetween(-604_800, -1)
-    )
-    m = base.select(
-        "event_id",
-        "user_id",
-        "ts_sec",
-        "value",
-        F.count("*").over(w).alias("n"),
-        F.sum("dv").over(w).cast("double").alias("sx"),
-        F.sum("dv2").over(w).cast("double").alias("sxx"),
-    )
-    var = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")) / (
-        F.col("n") * (F.col("n") - 1.0)
-    )
-    z = (F.col("value") - F.col("sx") / F.col("n")) / F.sqrt(var)
-    return (
-        m.filter((F.col("n") >= 8) & (var > 0) & (F.abs(z) > 3.0))
-        .select("event_id", "user_id", "ts_sec", F.round(z, 6).alias("z"))
-        .orderBy("event_id")
-    )
-
-
-@register(
-    "t70_dedup_rate_report",
-    """
-    SELECT source,
-           count(*) AS n_docs,
-           CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_distinct,
-           round(1.0 - count(DISTINCT md5(text)) / CAST(count(*) AS DOUBLE), 6)
-               AS dup_rate
-    FROM documents
-    GROUP BY source
-    ORDER BY source
-    """,
-)
-def t70_dedup_rate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source duplication-rate report — the corpus-health metric
-    that decides WHERE dedup effort goes (a source at 40% dup rate gets
-    the MinHash pass first): docs vs distinct content fingerprints per
-    source, one hash aggregate over map-side md5 (bodies never
-    shuffle — only 16-byte fingerprints reach the distinct)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select("source", F.md5("text").alias("fp"))
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.count_distinct("fp").alias("n_distinct"),
-        )
-        .select(
-            "source",
-            "n_docs",
-            "n_distinct",
-            F.round(
-                1.0 - F.col("n_distinct") / F.col("n_docs").cast("double"), 6
-            ).alias("dup_rate"),
-        )
-        .orderBy("source")
-    )
 
 
 @register(
@@ -1697,58 +1134,6 @@ def q46_nullsafe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "t73_incremental_rollup",
-    """
-    SELECT source, lang,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(n_chars AS DECIMAL(18,2))) AS DOUBLE) AS sum_chars,
-           min(n_chars) AS min_chars,
-           max(n_chars) AS max_chars,
-           CAST(sum(CAST(n_chars AS DECIMAL(18,2))) AS DOUBLE) / count(*)
-               AS avg_chars
-    FROM documents
-    GROUP BY source, lang
-    ORDER BY source, lang
-    """,
-)
-def t73_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental aggregate maintenance: the corpus rollup by (source,
-    lang) computed the way a nightly pipeline maintains it — persisted
-    partials of the EXISTING corpus (doc_id < 250) MERGED with the new
-    shard's partials — while the oracle recomputes from scratch over
-    everything. The two must be identical, and are by construction:
-    counts and decimal sums add exactly, min/max fold associatively,
-    and avg is derived from (sum, n) at read time (averages don't
-    merge; (sum, n) pairs do).
-
-    This is the 100 TB lever hiding in plain sight: tonight's update
-    aggregates ONLY the arriving shard and merges kilobyte-scale
-    partial rows — the existing corpus is never re-read. A double sum
-    would quietly break it (merge order ≠ scan order ⇒ different
-    float folds); the decimal discipline makes incremental == full
-    recompute bit-for-bit."""
-    from datasheet_etl_spark.operators.relational import (
-        merge_rollups,
-        partial_rollup,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    keys = ["source", "lang"]
-    old = partial_rollup(docs.filter(F.col("doc_id") < 250), keys, "n_chars")
-    shard = partial_rollup(docs.filter(F.col("doc_id") >= 250), keys, "n_chars")
-    merged = merge_rollups([old, shard], keys)
-    return merged.select(
-        "source",
-        "lang",
-        "n",
-        F.col("sum_v").cast("double").alias("sum_chars"),
-        F.col("min_v").alias("min_chars"),
-        F.col("max_v").alias("max_chars"),
-        (F.col("sum_v").cast("double") / F.col("n")).alias("avg_chars"),
-    ).orderBy("source", "lang")
-
-
-@register(
     "t74_resample_interp",
     """
     WITH e AS (
@@ -1873,83 +1258,6 @@ def t76_udtf_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("t77_streaming_cdc_apply", _CDC_ORACLE_SQL)
-def t77_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t68's CDC apply executed through the STREAMING merge sink: the
-    same synthesized changelog staged as two parquet files (seq-0 base
-    seeds + seq-1 changes, then the seq-2 late updates), drained with
-    maxFilesPerTrigger=1 into ``cdc_upsert_sink`` — two genuine
-    micro-batches, so cross-batch sequencing (tombstone watermarks,
-    the stale-change guard, snapshot versioning) is on the graded
-    path, and the final snapshot must hash-match the SAME DuckDB
-    oracle as the batch apply. Equivalence holds because the base
-    seeds enter as op='I' seq=0 rows: one-shot latest-wins over
-    (seeds ∪ changes) is exactly apply_changes(base, changes)."""
-    import os
-    import shutil
-
-    from datasheet_etl_spark.streaming.streams import (
-        cdc_upsert_sink,
-        read_cdc_snapshot,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    seeds = docs.filter(F.col("doc_id") % 2 == 0).select(
-        "doc_id", F.lit(0).alias("seq"), F.lit("I").alias("op"),
-        "source", "n_chars",
-    )
-    op = (
-        F.when(F.col("doc_id") % 3 == 0, "D")
-        .when(F.col("doc_id") % 3 == 1, "U")
-        .otherwise("I")
-    )
-    ch1 = docs.select(
-        "doc_id", F.lit(1).alias("seq"), op.alias("op"),
-        "source", (F.col("n_chars") + 1000).alias("n_chars"),
-    )
-    ch2 = docs.filter(F.col("doc_id") % 7 == 0).select(
-        "doc_id", F.lit(2).alias("seq"), F.lit("U").alias("op"),
-        "source", (F.col("n_chars") + 5000).alias("n_chars"),
-    )
-
-    # deterministic per-sf staging via the shared _staged_path
-    # disk-cache (mtime-invalidated): a re-run with an intact
-    # checkpoint sees no new files and the committed snapshot simply
-    # persists — the result stays lazy, no driver-side collect. The
-    # build wipes the whole work dir so target/ckpt restage together
-    # with the source files.
-    from datasheet_etl_spark.plans.training import _staged_path
-
-    def build(path):
-        shutil.rmtree(path, ignore_errors=True)
-        seeds.unionByName(ch1).coalesce(1).write.parquet(
-            os.path.join(path, "src")
-        )
-        ch2.coalesce(1).write.parquet(os.path.join(path, "src"), mode="append")
-
-    work = _staged_path(sf_dir, "documents.parquet", "cdc_stream_b8", build)
-    src, target, ckpt = (os.path.join(work, d) for d in ("src", "target", "ckpt"))
-    stream = (
-        spark.readStream.schema(seeds.schema)
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(src)
-    )
-    # partition-scoped mode: the second micro-batch rewrites only the
-    # buckets its changed doc_ids hash to (the 100 TB shape) — the
-    # bucketed-manifest protocol is thereby on the driver-graded path
-    cdc_upsert_sink(
-        stream, target, ckpt, keys=["doc_id"], seq_col="seq", num_buckets=8
-    )
-    return (
-        read_cdc_snapshot(spark, target)
-        .select("doc_id", "source", "n_chars")
-        .orderBy("doc_id")
-    )
-
-
 @register(
     "t79_weighted_median_udaf",
     """
@@ -1994,351 +1302,6 @@ def t79_weighted_median_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "t80_leakage_safe_split",
-    f"""
-    WITH t AS (
-      SELECT doc_id, source,
-             md5(array_to_string(list_sort(list_distinct(
-               list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                           x -> x <> ''))), ' ')) AS fp
-      FROM documents
-    ), g AS (
-      SELECT doc_id, source, min(doc_id) OVER (PARTITION BY fp) AS group_rep
-      FROM t
-    )
-    SELECT doc_id, source, group_rep,
-           {_split_case_sql("group_rep")} AS split
-    FROM g ORDER BY doc_id
-    """,
-)
-def t80_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leakage-safe train/val/test assignment: duplicate-content GROUPS
-    (content-fingerprint equivalence classes), not individual docs, are
-    the unit of split assignment — every member hashes on its group's
-    representative, so two copies of the same document can never land
-    one in train and one in test (the eval-contamination failure t52's
-    per-doc split permits: at sf0.01, 5 of the 21 multi-doc groups
-    WOULD straddle splits under per-doc hashing — pinned in
-    tests/test_sampling.py). One window shuffle on the fingerprint,
-    then the same map-side hash-threshold CASE as t52; a group's rep
-    is its min doc_id, so membership is stable under corpus growth
-    exactly like the per-doc split. At 100 TB substitute the MinHash
-    cluster id (t16) for the exact fingerprint to extend the guarantee
-    to NEAR-duplicates — same shape, one groupBy key swap."""
-    from datasheet_etl_spark.operators.sampling import assign_split
-    from datasheet_etl_spark.operators.text import fingerprint
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", fingerprint(F.col("text")).alias("fp")
-    )
-    w = Window.partitionBy("fp")
-    grouped = docs.select(
-        "doc_id", "source", F.min("doc_id").over(w).alias("group_rep")
-    )
-    return (
-        assign_split(
-            grouped, "group_rep", {"train": 0.8, "val": 0.1, "test": 0.1}
-        )
-        .select("doc_id", "source", "group_rep", "split")
-        .orderBy("doc_id")
-    )
-
-
-@register(
-    "t82_mixture_waterfill",
-    """
-    WITH a AS (
-      SELECT source,
-             CAST(sum(n_chars) AS BIGINT) AS avail,
-             CAST(1 + (CAST(regexp_extract(source, '([0-9]+)$', 1) AS BIGINT) % 4)
-                  AS BIGINT) AS weight
-      FROM documents GROUP BY source
-    ), tot AS (
-      SELECT CAST(sum(avail) AS DOUBLE) AS tot_n,
-             CAST(sum(weight) AS DOUBLE) AS tot_w,
-             CAST(sum(avail) AS DOUBLE) * 0.5 AS budget
-      FROM a
-    ), s AS (
-      SELECT a.*, tot.budget, tot.tot_w,
-             CAST(avail AS DOUBLE) / weight AS ratio,
-             CAST(SUM(avail) OVER (ORDER BY CAST(avail AS DOUBLE) / weight, source
-                                   ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS cum_n,
-             CAST(SUM(weight) OVER (ORDER BY CAST(avail AS DOUBLE) / weight, source
-                                    ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS cum_w,
-             lag(CAST(avail AS DOUBLE) / weight)
-               OVER (ORDER BY CAST(avail AS DOUBLE) / weight, source) AS prev_ratio
-      FROM a, tot
-    ), c AS (
-      SELECT s.*,
-             (budget - coalesce(lag(cum_n) OVER (ORDER BY ratio, source), 0.0))
-             / (tot_w - coalesce(lag(cum_w) OVER (ORDER BY ratio, source), 0.0))
-               AS lam_c
-      FROM s
-    ), lam AS (
-      SELECT min(lam_c) AS lam FROM c
-      WHERE lam_c < ratio AND (prev_ratio IS NULL OR lam_c >= prev_ratio)
-    )
-    SELECT source, avail, weight,
-           round(CASE WHEN lam.lam IS NULL OR ratio <= lam.lam
-                      THEN CAST(avail AS DOUBLE)
-                      ELSE greatest(0.0, lam.lam * weight) END, 6) AS allocation,
-           round(CASE WHEN lam.lam IS NULL OR ratio <= lam.lam
-                      THEN CAST(avail AS DOUBLE)
-                      ELSE greatest(0.0, lam.lam * weight) END / avail, 6) AS rate,
-           (lam.lam IS NULL OR ratio <= lam.lam) AS saturated
-    FROM c, lam
-    ORDER BY source
-    """,
-)
-def t82_mixture_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pretraining-mixture budget solver: allocate half the corpus's
-    tokens across sources at target weights (derived here from the
-    source id so the entry is self-contained), capping at availability
-    and waterfilling the shortfall to unsaturated sources — the
-    closed-form one-pass solve in ``sampling.mixture_waterfill``. The
-    oracle recomputes the same prefix-scan boundary selection
-    relationally; integer availabilities/weights make every cumulative
-    sum exact in both engines, so the only floats are the final λ
-    divisions (IEEE-identical). Runs on the per-source aggregate —
-    one row per domain — NEVER on the corpus; the resulting ``rate``
-    feeds t29's hash-threshold Bernoulli sampler unchanged."""
-    from datasheet_etl_spark.operators.sampling import mixture_waterfill
-
-    docs = load_table(spark, sf_dir, "documents")
-    avail = docs.groupBy("source").agg(
-        F.sum("n_chars").cast("long").alias("avail"),
-        (
-            1
-            + F.regexp_extract("source", r"([0-9]+)$", 1).cast("long") % 4
-        ).alias("weight"),
-    )
-    budget = avail.agg(F.sum("avail").cast("double") * 0.5).first()[0]
-    return mixture_waterfill(
-        avail, ["source"], "avail", "weight", budget
-    ).orderBy("source")
-
-
-@register(
-    "t83_ngram_novelty",
-    """
-    WITH t AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                         x -> x <> '') AS toks
-      FROM documents
-    ), g AS (
-      SELECT doc_id,
-             unnest(list_distinct(list_transform(range(1, len(toks)),
-                    i -> toks[i] || ' ' || toks[i+1]))) AS ng
-      FROM t WHERE len(toks) >= 2
-    ), dfreq AS (
-      SELECT ng, count(*) AS n_docs FROM g GROUP BY ng
-    )
-    SELECT g.doc_id,
-           CAST(count(*) AS BIGINT) AS n_grams,
-           CAST(sum(CASE WHEN dfreq.n_docs = 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_unique,
-           round(sum(CASE WHEN dfreq.n_docs = 1 THEN 1 ELSE 0 END) * 1.0
-                 / count(*), 6) AS novelty
-    FROM g JOIN dfreq USING (ng)
-    GROUP BY g.doc_id ORDER BY g.doc_id
-    """,
-)
-def t83_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document n-gram novelty: the fraction of a document's
-    distinct word bigrams that occur in NO other document — the
-    diversity-selection signal (keep high-novelty docs, down-weight
-    templated ones) complementary to t34's intra-doc repetition and
-    the dedup family's cross-doc similarity. Two hash aggregates + one
-    shuffle-bounded join on the bigram key: (doc, gram) pairs shrink
-    map-side to distinct grams, the document-frequency table is
-    keyed by gram (never wider than the vocabulary), and the join
-    back is partial-agg'd before the per-doc rollup — no pairwise
-    term anywhere, so 100 TB cost is O(total distinct grams)."""
-    from datasheet_etl_spark.caching import scoped_persist
-    from datasheet_etl_spark.operators.dedup import word_shingles
-    from datasheet_etl_spark.operators.text import tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    # grams feeds BOTH the document-frequency agg and the join back —
-    # persist it so the corpus-wide tokenize/shingle/explode runs once
-    grams = scoped_persist(
-        docs.select(
-            "doc_id",
-            F.explode(word_shingles(tokens(F.col("text")), n=2)).alias("ng"),
-        )
-    )
-    dfreq = grams.groupBy("ng").agg(F.count("*").alias("n_docs"))
-    unique = F.sum((F.col("n_docs") == 1).cast("int"))
-    return (
-        grams.join(dfreq, "ng")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_grams"),
-            unique.cast("long").alias("n_unique"),
-            F.round(unique / F.count("*"), 6).alias("novelty"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-@register(
-    "t84_curation_audit",
-    r"""
-    WITH t AS (
-      SELECT doc_id,
-             length(text) AS n_chars,
-             list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                         x -> x <> '') AS toks,
-             length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS n_punct
-      FROM documents
-    ), scored AS (
-      SELECT doc_id, n_chars,
-             CASE WHEN len(toks) >= 20 THEN 0.25 ELSE 0.0 END
-               + CASE WHEN (CASE WHEN len(toks) > 0
-                            THEN length(array_to_string(toks, '')) / len(toks)
-                            ELSE 0.0 END) BETWEEN 3 AND 10 THEN 0.25 ELSE 0.0 END
-               + CASE WHEN len(list_intersect(list_distinct(toks),
-                       ['the','and','of','to','in','is','that','for'])) >= 1
-                      THEN 0.25 ELSE 0.0 END
-               + CASE WHEN (CASE WHEN n_chars > 0 THEN n_punct / n_chars
-                            ELSE 0.0 END) <= 0.1 THEN 0.25 ELSE 0.0 END
-               AS quality,
-             md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp
-      FROM t
-    ), gated AS (
-      SELECT *, n_chars < 100 AS fail_length,
-             quality < 0.75 AS fail_quality
-      FROM scored
-    ), rep AS (
-      SELECT fp, min(doc_id) AS rep_id FROM gated
-      WHERE NOT fail_length AND NOT fail_quality GROUP BY fp
-    )
-    SELECT g.doc_id, g.n_chars, CAST(round(g.quality, 6) AS DOUBLE) AS quality,
-           g.fail_length, g.fail_quality,
-           (NOT g.fail_length AND NOT g.fail_quality
-            AND g.doc_id <> rep.rep_id) AS is_dup,
-           CASE WHEN g.fail_length THEN 'length'
-                WHEN g.fail_quality THEN 'quality'
-                WHEN g.doc_id <> rep.rep_id THEN 'duplicate'
-                ELSE NULL END AS dropped_by,
-           (NOT g.fail_length AND NOT g.fail_quality
-            AND g.doc_id = rep.rep_id) AS kept
-    FROM gated g LEFT JOIN rep USING (fp)
-    ORDER BY g.doc_id
-    """,
-)
-def t84_curation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curation decision PROVENANCE — the data-governance complement to
-    t19's aggregate curation: per document, which gate (length →
-    quality → exact-dup, in pipeline order) removed it and whether it
-    survived, so a data audit can answer 'why is doc X not in the
-    training set' without re-running the pipeline. Same gate
-    definitions as t19/t33 (thresholds 100 chars / 0.75 quality /
-    min-doc_id representative); one aggregate on the fingerprint key +
-    one join back — the audit costs one extra corpus pass, not one per
-    gate. ``dropped_by`` is NULL exactly when ``kept``."""
-    from datasheet_etl_spark.operators.text import fingerprint, quality_score
-
-    docs = load_table(spark, sf_dir, "documents")
-    gated = docs.select(
-        "doc_id",
-        F.length("text").alias("n_chars"),
-        quality_score(F.col("text")).alias("quality"),
-        fingerprint(F.col("text")).alias("fp"),
-    ).select(
-        "*",
-        (F.col("n_chars") < 100).alias("fail_length"),
-        (F.col("quality") < 0.75).alias("fail_quality"),
-    )
-    rep = (
-        gated.filter(~F.col("fail_length") & ~F.col("fail_quality"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("rep_id"))
-    )
-    eligible = ~F.col("fail_length") & ~F.col("fail_quality")
-    return (
-        gated.join(rep, "fp", "left")
-        .select(
-            "doc_id",
-            "n_chars",
-            F.round("quality", 6).alias("quality"),
-            "fail_length",
-            "fail_quality",
-            (eligible & (F.col("doc_id") != F.col("rep_id"))).alias("is_dup"),
-            F.when(F.col("fail_length"), "length")
-            .when(F.col("fail_quality"), "quality")
-            .when(F.col("doc_id") != F.col("rep_id"), "duplicate")
-            .alias("dropped_by"),
-            (eligible & (F.col("doc_id") == F.col("rep_id"))).alias("kept"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-@register(
-    "t86_csv_lenient_ingest",
-    """
-    SELECT * FROM (
-      SELECT event_type AS kind, CAST(count(*) AS BIGINT) AS n
-      FROM events WHERE event_id % 53 <> 0 GROUP BY event_type
-      UNION ALL
-      SELECT '_corrupt' AS kind, CAST(count(*) AS BIGINT) AS n
-      FROM events WHERE event_id % 53 = 0
-    ) ORDER BY kind
-    """,
-)
-def t86_csv_lenient_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lenient delimited ingest (S10's inverse — raw CSV/TSV logs into
-    the engine): the events table is staged as headerless CSV with a
-    deterministic 1-in-53 slice made unparseable (non-numeric id), then
-    read back through ``io.read_csv_lenient`` — PERMISSIVE parse, the
-    malformed lines quarantined verbatim rather than dropped
-    (DROPMALFORMED silently shrinks a 100 TB ingest) or fatal
-    (FAILFAST kills it). The oracle recomputes both populations from
-    the clean events view, so the graded claim is exactly 'every clean
-    line parsed, every corrupted line quarantined, nothing lost'."""
-    import os
-
-    from datasheet_etl_spark.io import read_csv_lenient, split_corrupt
-    from datasheet_etl_spark.plans.training import _staged_path
-
-    e = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type"
-    )
-    ok_line = F.concat_ws(",", "event_id", "user_id", "event_type")
-    bad_line = F.concat_ws(
-        ",", F.concat(F.lit("X"), F.col("event_id")), "user_id", "event_type"
-    )
-
-    def build(path):
-        e.select(
-            F.when(F.col("event_id") % 53 == 0, bad_line)
-            .otherwise(ok_line)
-            .alias("value")
-        ).coalesce(1).write.mode("overwrite").text(os.path.join(path, "csv"))
-
-    work = _staged_path(sf_dir, "events.parquet", "csv_lenient", build)
-    df = read_csv_lenient(
-        spark,
-        os.path.join(work, "csv"),
-        "event_id bigint, user_id bigint, event_type string",
-    )
-    clean, bad = split_corrupt(df)
-    per_type = clean.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n")
-    )
-    quarantined = bad.agg(F.count("*").cast("long").alias("n")).select(
-        F.lit("_corrupt").alias("kind"), "n"
-    )
-    return (
-        per_type.select(F.col("event_type").alias("kind"), "n")
-        .unionByName(quarantined)
-        .orderBy("kind")
-    )
-
-
 @register("t87_incremental_distinct_hll")  # sketch binaries are engine-specific → rows-only
 def t87_incremental_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incrementally-maintained COUNT DISTINCT: per-source distinct-user
@@ -2374,84 +1337,6 @@ def t87_incremental_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merged = hll_merge(shard_a, shard_b, keys=["event_type"])
     return hll_estimate(merged).orderBy("event_type")
-
-
-@register(
-    "t88_mergeable_quantile_hist",
-    """
-    WITH frame AS (
-      SELECT min(value) AS lo, max(value) AS hi
-      FROM events WHERE value IS NOT NULL
-    ), binned AS (
-      SELECT e.event_type,
-             CAST(greatest(least(
-               floor((e.value - f.lo) / ((f.hi - f.lo) / 64.0)), 63.0), 0.0)
-               AS BIGINT) AS bin
-      FROM events e, frame f WHERE e.value IS NOT NULL
-    ), counts AS (
-      SELECT event_type, bin, CAST(count(*) AS BIGINT) AS n
-      FROM binned GROUP BY 1, 2
-    ), cum AS (
-      SELECT event_type, bin,
-             sum(n) OVER (PARTITION BY event_type ORDER BY bin) AS cum,
-             sum(n) OVER (PARTITION BY event_type) AS total
-      FROM counts
-    ), qs AS (SELECT CAST(unnest([0.5, 0.9, 0.99]) AS DOUBLE) AS q),
-    pick AS (
-      SELECT event_type, q, min(bin) AS bin
-      FROM cum, qs WHERE cum >= q * total GROUP BY 1, 2
-    )
-    SELECT p.event_type, p.q,
-           CAST(round(f.lo + p.bin * ((f.hi - f.lo) / 64.0), 6) AS DOUBLE)
-             AS est
-    FROM pick p, frame f
-    ORDER BY p.event_type, p.q
-    """,
-)
-def t88_mergeable_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incrementally-maintained QUANTILES — the t87 shard-sketch
-    lifecycle for the other metric mergeable (n, sum, min, max)
-    partials can't carry: per-event-type p50/p90/p99 of ``value``
-    assembled by SUMMING two independently-built equi-width histogram
-    shards (events split by event_id parity — in production,
-    yesterday's stored bin vector + today's shard) through
-    ``sketches.hist_partials`` / ``hist_merge`` / ``hist_quantiles``.
-    Unlike t-digest/KLL the merged state is EXACTLY the one-pass
-    state (bin counts are additive integers), so — unlike t87's HLL —
-    a cross-engine DuckDB oracle exists: bin assignment is pure IEEE
-    double arithmetic on the exact global min/max, replayed verbatim
-    in the oracle SQL. Resolution is one bin width (frame fixed up
-    front — the tradeoff that buys exact mergeability); at most
-    keys × 64 rows ever shuffle, independent of corpus size.
-    Merge-invariance and accuracy-vs-exact are pinned in
-    tests/test_sketches.py."""
-    from datasheet_etl_spark.operators.sketches import (
-        hist_frame,
-        hist_merge,
-        hist_partials,
-        hist_quantiles,
-    )
-
-    e = load_table(spark, sf_dir, "events").select(
-        "event_type", "value", "event_id"
-    )
-    lo, hi = hist_frame(e, "value")
-    shard_a = hist_partials(
-        e.filter(F.col("event_id") % 2 == 0), ["event_type"], "value", lo, hi
-    )
-    shard_b = hist_partials(
-        e.filter(F.col("event_id") % 2 == 1), ["event_type"], "value", lo, hi
-    )
-    merged = hist_merge(shard_a, shard_b, keys=["event_type"])
-    return (
-        hist_quantiles(merged, ["event_type"], [0.5, 0.9, 0.99], lo, hi)
-        .select(
-            "event_type",
-            "q",
-            F.round("est", 6).cast("double").alias("est"),
-        )
-        .orderBy("event_type", "q")
-    )
 
 
 @register(
@@ -2519,69 +1404,6 @@ def t89_schema_evolution_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "t90_feature_scale",
-    """
-    WITH el AS (
-      SELECT vec_id, label, unnest(embedding) AS x,
-             CAST(unnest(range(len(embedding))) AS BIGINT) AS dim
-      FROM embeddings
-    ), stats AS (
-      SELECT dim, min(x) AS lo, max(x) AS hi FROM el GROUP BY dim
-    ), scaled AS (
-      SELECT e.vec_id, e.label,
-             CASE WHEN s.hi = s.lo THEN 0.5
-                  ELSE (CAST(e.x AS DOUBLE) - CAST(s.lo AS DOUBLE))
-                       / (CAST(s.hi AS DOUBLE) - CAST(s.lo AS DOUBLE))
-             END AS sx
-      FROM el e JOIN stats s USING (dim)
-    )
-    SELECT vec_id, label,
-           CAST(round(CAST(sum(CAST(sx AS DECIMAL(18,9))) AS DOUBLE)
-                      / count(*), 6) AS DOUBLE) AS mean_scaled,
-           CAST(round(min(sx), 6) AS DOUBLE) AS min_scaled,
-           CAST(round(max(sx), 6) AS DOUBLE) AS max_scaled
-    FROM scaled GROUP BY vec_id, label ORDER BY vec_id
-    """,
-)
-def t90_feature_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension min-max feature scaling — the train-prep
-    normalization step upstream of t35's quantization (quantize wants
-    bounded inputs) and any distance-based op: a one-shuffle stats
-    pass fixes the per-dim frame (``similarity.feature_frame``), then
-    the corpus pass is MAP-ONLY — the frame rides along as array
-    literals and the per-element rescale is a JVM higher-order
-    ``transform`` (``scale_features``), so scaling 100 TB of vectors
-    adds zero shuffles and no Python. Per-vector audit stats come off
-    the scaled array in the same pass (decimal-exact mean, the t65
-    summation pattern, so the result is partitioning-independent);
-    the oracle replays the identical double arithmetic over unnested
-    rows. Constant dims map to 0.5 (no zero-width division, ANSI-safe).
-    """
-    from datasheet_etl_spark.operators.similarity import (
-        feature_frame,
-        scale_features,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    lo, hi = feature_frame(emb, "embedding")
-    scaled = scale_features(emb, "embedding", lo, hi)
-    dec_sum = F.aggregate(
-        F.col("scaled"),
-        F.lit(0).cast("decimal(18,9)"),
-        lambda a, x: (a + x.cast("decimal(18,9)")).cast("decimal(18,9)"),
-    )
-    return scaled.select(
-        "vec_id",
-        "label",
-        F.round(dec_sum.cast("double") / F.size("scaled"), 6).alias(
-            "mean_scaled"
-        ),
-        F.round(F.array_min("scaled"), 6).alias("min_scaled"),
-        F.round(F.array_max("scaled"), 6).alias("max_scaled"),
-    ).orderBy("vec_id")
-
-
-@register(
     "t91_weighted_sample",
     """
     WITH scored AS (
@@ -2623,181 +1445,6 @@ def t91_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", "doc_id", "rank")
         .orderBy("source", "rank")
     )
-
-
-@register(
-    "t92_substring_overlap",
-    """
-    WITH t AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                         x -> x <> '') AS toks
-      FROM documents
-    ), p AS (
-      SELECT doc_id, unnest(range(1, len(toks) - 6)) AS pos, toks
-      FROM t WHERE len(toks) >= 8
-    ), g0 AS (
-      SELECT doc_id, pos, md5(array_to_string(toks[pos:pos+7], ' ')) AS gkey
-      FROM p
-    ), g AS (
-      SELECT * FROM g0 QUALIFY count(*) OVER (PARTITION BY gkey) <= 64
-    ), pr AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.gkey AS gkey,
-             a.pos AS pa, b.pos AS pb
-      FROM g a JOIN g b ON a.gkey = b.gkey AND a.doc_id < b.doc_id
-    ), runs AS (
-      SELECT id_a, id_b, pa - pb AS diag,
-             pa - row_number() OVER (PARTITION BY id_a, id_b, pa - pb
-                                     ORDER BY pa) AS island
-      FROM pr
-    ), spans AS (
-      SELECT id_a, id_b, count(*) + 7 AS span
-      FROM runs GROUP BY id_a, id_b, diag, island
-    ), agg AS (
-      SELECT id_a, id_b, count(DISTINCT gkey) AS n_shared_grams
-      FROM pr GROUP BY 1, 2
-    ), best AS (
-      SELECT id_a, id_b, max(span) AS max_span_tokens
-      FROM spans GROUP BY 1, 2
-    )
-    SELECT id_a, id_b,
-           CAST(n_shared_grams AS BIGINT) AS n_shared_grams,
-           CAST(max_span_tokens AS BIGINT) AS max_span_tokens
-    FROM agg JOIN best USING (id_a, id_b)
-    ORDER BY id_a, id_b
-    """,
-)
-def t92_substring_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact substring-overlap dedup (``dedup.substring_overlap_pairs``;
-    the Lee et al. 2022 modality): doc pairs sharing a verbatim span of
-    ≥ 8 word tokens, with the longest shared span measured EXACTLY via
-    gaps-and-islands runs of matched k-gram positions on one alignment
-    diagonal. The dedup modality set-similarity misses — a copied
-    paragraph inside two otherwise-unrelated docs — and the one major
-    family the inventory lacked (VERDICT r7 #2). Grams shuffle as
-    16-byte md5 keys with a 64-occurrence boilerplate cap
-    (``cap_buckets``) in front of the self-join; the DuckDB oracle
-    re-derives the whole thing — candidates, runs, span arithmetic —
-    verbatim in SQL."""
-    from datasheet_etl_spark.operators.dedup import substring_overlap_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    return substring_overlap_pairs(
-        docs, "doc_id", "text", k=8, max_gram_rows=64
-    ).orderBy("id_a", "id_b")
-
-
-@register(
-    "t93_epoch_shuffle",
-    """
-    WITH h AS (
-      SELECT doc_id,
-             md5(CAST(doc_id AS VARCHAR) || ':3') AS eh
-      FROM documents WHERE doc_id IS NOT NULL
-    )
-    SELECT doc_id,
-           substr(eh, 1, 2) AS shard,
-           row_number() OVER (PARTITION BY substr(eh, 1, 2)
-                              ORDER BY eh, doc_id) AS pos
-    FROM h ORDER BY shard, pos, doc_id
-    """,
-)
-def t93_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-epoch training-order shuffle (``sampling.
-    epoch_shuffle``): every doc gets a (shard, position) from the md5
-    of ``key:epoch`` — the order a trainer reads shard-by-shard. What
-    ``orderBy(rand())`` cannot give a 100 TB training loop: the same
-    epoch yields the identical order on any cluster/retry (resume
-    mid-epoch consistently), a different epoch is a fresh uncorrelated
-    permutation, and the whole order is re-derived VERBATIM by this
-    DuckDB oracle. Scale shape: shard assignment is map-only; each
-    position sort is 1/256th of the corpus (2 hex chars → 256 shards;
-    widen the prefix until shards are executor-sized)."""
-    from datasheet_etl_spark.operators.sampling import epoch_shuffle
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return epoch_shuffle(docs, "doc_id", epoch=3, shard_hex_chars=2).orderBy(
-        "shard", "pos", "doc_id"
-    )
-
-
-@register(
-    "t94_substring_dedup_corpus",
-    """
-    WITH RECURSIVE t AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                         x -> x <> '') AS toks
-      FROM documents
-    ), p AS (
-      SELECT doc_id, unnest(range(1, len(toks) - 6)) AS pos, toks
-      FROM t WHERE len(toks) >= 8
-    ), g0 AS (
-      SELECT doc_id, pos, md5(array_to_string(toks[pos:pos+7], ' ')) AS gkey
-      FROM p
-    ), g AS (
-      SELECT * FROM g0 QUALIFY count(*) OVER (PARTITION BY gkey) <= 64
-    ), pr AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.pos AS pa, b.pos AS pb
-      FROM g a JOIN g b ON a.gkey = b.gkey AND a.doc_id < b.doc_id
-    ), runs AS (
-      SELECT id_a, id_b, pa - pb AS diag,
-             pa - row_number() OVER (PARTITION BY id_a, id_b, pa - pb
-                                     ORDER BY pa) AS island
-      FROM pr
-    ), spans AS (
-      SELECT id_a, id_b, count(*) + 7 AS span
-      FROM runs GROUP BY id_a, id_b, diag, island
-    ), pairs AS (
-      SELECT DISTINCT id_a, id_b FROM spans WHERE span >= 20
-    ), sym AS (
-      SELECT id_a AS src, id_b AS dst FROM pairs
-      UNION ALL
-      SELECT id_b AS src, id_a AS dst FROM pairs
-    ), reach(id, peer) AS (
-      SELECT src, dst FROM sym
-      UNION
-      SELECT r.id, s.dst FROM reach r JOIN sym s ON r.peer = s.src
-    ), comp AS (
-      SELECT id, least(id, min(peer)) AS component
-      FROM reach GROUP BY id
-    ), sizes AS (
-      SELECT component, count(*) AS cluster_size FROM comp GROUP BY component
-    )
-    SELECT d.doc_id,
-           coalesce(c.component, d.doc_id) AS cluster_rep,
-           CAST(coalesce(s.cluster_size, 1) AS BIGINT) AS cluster_size,
-           (c.id IS NULL OR c.component = d.doc_id) AS kept
-    FROM documents d
-    LEFT JOIN comp c ON d.doc_id = c.id
-    LEFT JOIN sizes s ON c.component = s.component
-    ORDER BY d.doc_id
-    """,
-)
-def t94_substring_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shippable deduped corpus t92's pair detection feeds
-    (``dedup.substring_dedup_corpus``; VERDICT r8 #3): pairs whose
-    longest verbatim span reaches 20 tokens become duplicate edges,
-    transitively-connected docs form one overlap cluster
-    (``graph.connected_components`` — the t16/t49 min-label machinery),
-    and each cluster keeps exactly its min-id representative. One row
-    per corpus doc: (doc_id, cluster_rep, cluster_size, kept);
-    ``filter(kept)`` IS the training set, dropped rows carry which
-    cluster absorbed them. The DuckDB oracle re-derives everything —
-    t92's capped gram self-join and span arithmetic, then the
-    transitive closure as a recursive CTE (component = min reachable
-    id, exactly the min-label fixpoint) — so cluster membership,
-    representative choice, and every keep/drop bit are hash-graded.
-    Scale shape: components iterate over the PAIR graph (the small
-    derived artifact), never the corpus; the decision join back to
-    docs broadcasts."""
-    from datasheet_etl_spark.operators.dedup import substring_dedup_corpus
-
-    docs = load_table(spark, sf_dir, "documents")
-    return substring_dedup_corpus(
-        docs, "doc_id", "text", k=8, max_gram_rows=64, min_span_tokens=20
-    ).orderBy("doc_id")
 
 
 # Shared oracle body for the excision family — t95 (per-doc excision)
@@ -3195,24 +1842,6 @@ _FREQ_NGRAM_ORACLE = """
     """
 
 
-@register("t100_frequent_ngrams", _FREQ_NGRAM_ORACLE)
-def t100_frequent_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memorization/boilerplate audit (``text.frequent_ngrams``) — the
-    Lee et al. 2022 §5 "most duplicated n-grams" table: the corpus'
-    top-50 most-repeated verbatim word 5-grams, with total occurrences
-    and document frequency. The artifact a pretraining build publishes
-    to catch template chrome and memorization risks BEFORE training;
-    occurrences-desc + gram-asc is a total order, so the top-50 cut is
-    engine-exact and the oracle re-derives every row including rank.
-    Scale shape: one tokenize pass, map-side gram explode, two-level
-    partial aggregate ((gram, doc) then gram), TakeOrdered top-50 —
-    no self-join, no global sort."""
-    from datasheet_etl_spark.operators.text import frequent_ngrams
-
-    docs = load_table(spark, sf_dir, "documents")
-    return frequent_ngrams(docs, "doc_id", "text", n=5, top_k=50, min_count=2)
-
-
 @register(
     "t101_excision_impact_report",
     _EXCISION_ORACLE_CTES
@@ -3436,30 +2065,6 @@ def _stage_corrupted_jsonl(spark: SparkSession, sf_dir: str) -> str:
 
     work = _staged_path(sf_dir, "documents.parquet", "jsonl_lenient", build)
     return os.path.join(work, "jsonl")
-
-
-@register("t103_jsonl_lenient_ingest", _JSONL_INGEST_ORACLE)
-def t103_jsonl_lenient_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t86's JSON sibling — raw crawl JSONL into the engine: the
-    documents table's metadata is staged as JSON lines with a
-    deterministic 1-in-41 slice truncated mid-object (the closing
-    brace cut — the classic interrupted-writer breakage), then read
-    back through ``io.read_json_lenient`` (PERMISSIVE text+from_json —
-    see that docstring for why the NATIVE json source can't do this
-    job), malformed lines quarantined verbatim. The oracle recomputes
-    both populations from the clean documents view, so the graded
-    claim is exactly 'every intact line parsed with its values, every
-    truncated line quarantined, nothing lost'. Scale shape: one text
-    scan, map-side parse, one aggregate."""
-    from datasheet_etl_spark.io import read_json_lenient, split_corrupt
-
-    df = read_json_lenient(
-        spark,
-        _stage_corrupted_jsonl(spark, sf_dir),
-        "doc_id bigint, source string, n_chars bigint",
-    )
-    clean, bad = split_corrupt(df)
-    return _jsonl_ingest_rollup(clean, bad)
 
 
 @register(
@@ -3692,57 +2297,6 @@ def q64_ignore_nulls_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AS DOUBLE) AS second_nn
         FROM d ORDER BY user_id, event_id
         """
-    )
-
-
-@register(
-    "t125_xpath_extract",
-    """
-    SELECT source AS src, lang,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS total_chars,
-           CAST(sum(doc_id % 5) AS BIGINT) AS attr_sum
-    FROM documents GROUP BY source, lang ORDER BY src, lang
-    """,
-)
-def t125_xpath_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """XML field extraction via Spark's BUILTIN xpath family (no
-    external spark-xml jar — xpath_string / xpath_int / the
-    node-list form all ship in the engine), graded with t110's
-    known-decomposition discipline: each doc synthesizes an XML
-    record from its own columns, Spark must take it apart again
-    (element text, attribute, node-list size as a cross-check), and
-    the oracle rebuilds the rollup directly from the generator
-    columns — any extraction drift breaks the hash. Scale shape: one
-    map-side parse per row (the xpath UDFs evaluate per-row JVM-side,
-    no Python), one partial-agged rollup — the crawl-XML ingest shape
-    at 100 TB."""
-    d = load_table(spark, sf_dir, "documents")
-    xml = F.concat(
-        F.lit("<doc><src>"), F.col("source"),
-        F.lit("</src><lang>"), F.col("lang"),
-        F.lit('</lang><m n="'), (F.col("doc_id") % 5).cast("string"),
-        F.lit('">'), F.col("n_chars").cast("string"),
-        F.lit("</m></doc>"),
-    )
-    parsed = d.withColumn("_xml", xml).select(
-        F.expr("xpath_string(_xml, '/doc/src')").alias("src"),
-        F.expr("xpath_string(_xml, '/doc/lang')").alias("lang"),
-        F.expr("xpath_int(_xml, '/doc/m')").alias("chars"),
-        F.expr("CAST(xpath_string(_xml, '/doc/m/@n') AS BIGINT)").alias(
-            "attr"
-        ),
-        F.expr("size(xpath(_xml, '/doc/*'))").alias("n_children"),
-    )
-    return (
-        parsed.filter(F.col("n_children") == 3)  # structural cross-check
-        .groupBy("src", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("chars").alias("total_chars"),
-            F.sum("attr").alias("attr_sum"),
-        )
-        .orderBy("src", "lang")
     )
 
 
@@ -4288,44 +2842,6 @@ def q51_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("t106_incremental_ngram_audit", _FREQ_NGRAM_ORACLE)
-def t106_incremental_ngram_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t100's nightly-increment form (the t73/t87/t88 mergeable-
-    partials discipline applied to the memorization audit): the even-id
-    half of the corpus is "yesterday" — its exact (gram, n_occurrences,
-    n_docs) partial sits AT REST as parquet (staged once per sf) — and
-    the odd-id half arrives as tonight's shard, whose partial is
-    computed live and MERGED with the stored one
-    (``text.frequent_ngram_partials`` / ``merge_ngram_partials``).
-    History is never re-tokenized; counts sum across the doc-disjoint
-    shards; the merged table is graded with t100's OWN oracle, so the
-    incremental path must equal the from-scratch audit bit-for-bit.
-    Scale shape: tonight's pass is one shard, the merge shuffles two
-    gram tables (each far below text bytes), the tail is the shared
-    TakeOrdered top-k."""
-    import os
-
-    from datasheet_etl_spark.operators.text import (
-        frequent_ngram_partials,
-        merge_ngram_partials,
-    )
-    from datasheet_etl_spark.plans.training import _staged_path
-
-    docs = load_table(spark, sf_dir, "documents")
-
-    def build(path):
-        frequent_ngram_partials(
-            docs.filter(F.col("doc_id") % 2 == 0), n=5
-        ).write.mode("overwrite").parquet(os.path.join(path, "partial"))
-
-    work = _staged_path(sf_dir, "documents.parquet", "ngram_partial", build)
-    yesterday = spark.read.parquet(os.path.join(work, "partial"))
-    tonight = frequent_ngram_partials(
-        docs.filter(F.col("doc_id") % 2 == 1), n=5
-    )
-    return merge_ngram_partials([yesterday, tonight], top_k=50, min_count=2)
-
-
 @register("t107_frequent_ngrams_hashed", _FREQ_NGRAM_ORACLE)
 def t107_frequent_ngrams_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t100's 100 TB execution shape
@@ -4345,112 +2861,6 @@ def t107_frequent_ngrams_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return frequent_ngrams_hashed(
         docs, "doc_id", "text", n=5, top_k=50, min_count=2
-    )
-
-
-@register(
-    "t109_keyword_extract",
-    """
-    WITH t AS (
-      SELECT doc_id,
-             unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                                x -> x <> '')) AS term
-      FROM documents
-    ), tf AS (
-      SELECT doc_id, term, count(*) AS tf FROM t GROUP BY doc_id, term
-    ), df AS (
-      SELECT term, count(*) AS df FROM tf GROUP BY term
-    ), s AS (
-      SELECT tf.doc_id, tf.term, tf.tf, df.df,
-             CAST(tf.tf AS DOUBLE) / df.df AS score
-      FROM tf JOIN df USING (term)
-    ), r AS (
-      SELECT *, row_number() OVER (PARTITION BY doc_id
-                                   ORDER BY score DESC, term) AS rank
-      FROM s
-    )
-    SELECT doc_id, CAST(rank AS INT) AS rank, term,
-           CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df,
-           round(score, 6) AS score
-    FROM r WHERE rank <= 3 ORDER BY doc_id, rank
-    """,
-)
-def t109_keyword_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document salient-term extraction (``text.keyword_extract``)
-    — the tf-idf family with a RATIONAL tf/df score so the per-doc
-    top-3 ranking is engine-exact (integer tf and df, one IEEE
-    division; libm log-idf would not be — the t63 lesson). The
-    keyword table a curation pipeline publishes for topic routing and
-    near-template detection. Scale shape: tokenize once, map-side tf
-    partials, a vocab-sized df aggregate joined back on term, one
-    per-doc ranking window — no self-join, no global sort (the
-    trailing orderBy is compare presentation)."""
-    from datasheet_etl_spark.operators.text import keyword_extract
-
-    docs = load_table(spark, sf_dir, "documents")
-    return keyword_extract(docs, "doc_id", "text", top_k=3).orderBy(
-        "doc_id", "rank"
-    )
-
-
-@register(
-    "t110_url_parse_rollup",
-    """
-    WITH u AS (
-      SELECT doc_id,
-             source || '.example.com' AS host,
-             '/' || lang || '/doc' || doc_id AS path,
-             doc_id % 7 AS page,
-             'r' || (doc_id % 3) AS ref
-      FROM documents
-    )
-    SELECT host, ref,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(count(DISTINCT path) AS BIGINT) AS n_paths,
-           CAST(sum(page) AS BIGINT) AS page_sum
-    FROM u GROUP BY host, ref ORDER BY host, ref
-    """,
-)
-def t110_url_parse_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-style URL decomposition + per-host rollup, grading
-    Spark's ``parse_url`` (HOST / PATH / QUERY-parameter extraction)
-    against a KNOWN decomposition: each doc gets a deterministic URL
-    synthesized from its own columns, Spark must take it apart with
-    parse_url, and the oracle rebuilds the parts directly from the
-    generator — any parse drift (delimiter handling, query-param
-    lookup) breaks the hash. The per-host/ref rollup is the shape a
-    crawl-frequency or robots-policy audit runs over 100 TB of fetch
-    records: one map-side parse, one partial-agged groupBy; distinct
-    paths count via the same two-level shuffle every count-distinct
-    plans as."""
-    d = load_table(spark, sf_dir, "documents")
-    url = F.concat(
-        F.lit("https://"),
-        F.col("source"),
-        F.lit(".example.com/"),
-        F.col("lang"),
-        F.lit("/doc"),
-        F.col("doc_id").cast("string"),
-        F.lit("?page="),
-        (F.col("doc_id") % 7).cast("string"),
-        F.lit("&ref=r"),
-        (F.col("doc_id") % 3).cast("string"),
-    )
-    u = d.select(F.col("doc_id"), url.alias("url")).select(
-        "doc_id",
-        F.expr("parse_url(url, 'HOST')").alias("host"),
-        F.expr("parse_url(url, 'PATH')").alias("path"),
-        F.expr("parse_url(url, 'QUERY', 'page')").cast("bigint").alias("page"),
-        F.expr("parse_url(url, 'QUERY', 'ref')").alias("ref"),
-    )
-    return (
-        u.groupBy("host", "ref")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count_distinct("path").alias("n_paths"),
-            F.sum("page").alias("page_sum"),
-        )
-        .orderBy("host", "ref")
     )
 
 
@@ -4485,97 +2895,6 @@ def q52_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("q52_orders")
     return spark.sql(
         _Q52_BODY.format(dsum=sql_dsum("o_totalprice"), table="q52_orders")
-    )
-
-
-@register(
-    "t111_pack_efficiency_report",
-    _T97_PLAN_CTES
-    + """
-    SELECT shard,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS total_cost,
-           CAST(greatest(1, (sum(n_chars) - 1) // 4096 + 1) AS BIGINT)
-             AS n_bins,
-           round(CAST(sum(n_chars) AS DOUBLE)
-                 / (greatest(1, (sum(n_chars) - 1) // 4096 + 1) * 4096), 6)
-             AS fill_rate
-    FROM packed GROUP BY shard ORDER BY shard
-    """,
-)
-def t111_pack_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-shard packing-efficiency rollup over t97's OWN training
-    plan (``sampling.pack_efficiency``) — the nightly build number a
-    training team actually watches: how many bins each shard's
-    concatenate-then-chunk stream occupies and how full they run.
-    Shares t97's derivation CTEs verbatim (_T97_PLAN_CTES — one
-    definition, two oracles, the t95/t101 precedent); everything is
-    integer arithmetic except the one display division, so the oracle
-    re-derives every row. Scale shape: t97's two bounded window
-    passes plus ONE partial-agged groupBy on the 16 shards — the
-    report adds a shard-count-sized aggregate to the plan it audits."""
-    from datasheet_etl_spark.operators.sampling import (
-        epoch_shuffle,
-        pack_efficiency,
-        pack_in_order,
-        stratified_sample_by_counts,
-        temperature_mixture_counts,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    counts = temperature_mixture_counts(docs, ["source"], scale=2.0)
-    sel = stratified_sample_by_counts(
-        docs, "doc_id", ["source"], counts, rank_col=None
-    ).select("doc_id", "source", "n_chars")
-    shuf = epoch_shuffle(sel, "doc_id", epoch=1, shard_hex_chars=1)
-    plan = pack_in_order(shuf, "n_chars", 4096)
-    return pack_efficiency(plan, "n_chars", 4096).orderBy("shard")
-
-
-@register(
-    "t112_python_datasource",
-    """
-    WITH r AS (
-      SELECT range AS event_id, CAST(range % 10 AS INT) AS bucket,
-             (range % 97) / 4.0 AS value
-      FROM range(5000)
-    )
-    SELECT bucket,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(event_id) AS BIGINT) AS id_sum,
-           round(sum(value), 6) AS value_sum
-    FROM r GROUP BY bucket ORDER BY bucket
-    """,
-)
-def t112_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Python DataSource API seam (Spark 4) run end-to-end: a
-    CUSTOM registered format (``sources/pyds.py`` — deterministic
-    partition-parallel generator, each planner task generating its own
-    id slice from its InputPartition alone) read like any built-in
-    source and aggregated; the DuckDB range() oracle re-derives every
-    row, so the source's partitioning independence is hash-graded.
-    value is exact quarters (n/4 — IEEE-exact), so sums match
-    bit-for-bit. The template for wrapping external keyed fetches as
-    schedulable sources instead of driver loops."""
-    from datasheet_etl_spark.sources.pyds import register_synth_events
-
-    register_synth_events(spark)
-    df = (
-        spark.read.format("synth_events")
-        .option("numRows", "5000")
-        .option("numPartitions", "8")
-        .load()
-    )
-    return (
-        df.groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("event_id").alias("id_sum"),
-            F.round(F.sum("value"), 6).alias("value_sum"),
-        )
-        .orderBy("bucket")
     )
 
 
@@ -4706,69 +3025,6 @@ def t114_python_source_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("event_id").alias("id_sum"),
         F.round(F.sum("value"), 6).alias("value_sum"),
     )
-
-
-@register(
-    "t115_python_source_writer",
-    """
-    WITH r AS (
-      SELECT range AS event_id, CAST(range % 10 AS INT) AS bucket,
-             (range % 97) / 4.0 AS value
-      FROM range(800)
-    )
-    SELECT bucket,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(event_id) AS BIGINT) AS id_sum
-    FROM r GROUP BY bucket ORDER BY bucket
-    """,
-)
-def t115_python_source_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The WRITE half of the Python DataSource seam run e2e: the
-    deterministic feed flows through the custom transactional writer
-    (per-task uuid stagings → driver _MANIFEST commit naming exactly
-    the committed files), is read back through the manifest-resolving
-    reader, and aggregated — the oracle hash-grades that the commit
-    protocol preserved every row exactly once (a lost task file or a
-    double-committed retry each break id_sum). The abort path (planted
-    task failure ⇒ no manifest ⇒ committed read sees nothing) is
-    pinned in tests/test_pyds.py."""
-    import shutil
-    import tempfile
-
-    from datasheet_etl_spark.sources.pyds import (
-        read_jsonl_manifest,
-        register_jsonl_manifest,
-        register_synth_events,
-    )
-
-    register_synth_events(spark)
-    register_jsonl_manifest(spark)
-    work = tempfile.mkdtemp(prefix="t115_")
-    try:
-        src = (
-            spark.read.format("synth_events")
-            .option("numRows", "800")
-            .option("numPartitions", "8")
-            .load()
-        )
-        src.write.format("jsonl_manifest").option("path", work).mode(
-            "append"
-        ).save()
-        back = read_jsonl_manifest(spark, work)
-        agg = (
-            back.groupBy(F.col("bucket").cast("int").alias("bucket"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("event_id").alias("id_sum"),
-            )
-            .orderBy("bucket")
-        )
-        # bounded collect-then-recreate (10 buckets) before the temp
-        # sink is torn down
-        rows = agg.collect()
-        return spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _Q53_BODY = """
@@ -5067,8 +3323,8 @@ def q58_pagination_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q59_pagination_keyset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyset (seek-method) pagination — the scale-safe form q58's own
-    docstring names (VERDICT r11 #3): ``WHERE (date, key) > last_seen
+    """Keyset (seek-method) pagination — the scale-safe form of LIMIT/
+    OFFSET paging: ``WHERE (date, key) > last_seen
     ORDER BY date, key LIMIT n``. The cursor is the LAST ROW OF THE
     PREVIOUS PAGE — client state, held between requests — so the page
     query itself carries literal bounds: the filter reaches the
@@ -5079,8 +3335,8 @@ def q59_pagination_keyset(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition top-25, no prefix is sorted or skipped. The one-row
     cursor collect stands in for the client's held cursor and is the
     pattern's point, not a driver-side loop. Page equivalence against
-    q58's OFFSET page is pytest-pinned (identical rows); the total
-    (date, key) order makes both pages engine-deterministic."""
+    the OFFSET 50 page is pytest-pinned (identical rows); the total
+    (date, key) order makes the page engine-deterministic."""
     orders = load_table(spark, sf_dir, "orders")
     # the previous page's last row — at a real API boundary this
     # arrives FROM the client; deriving it here keeps the entry
@@ -6506,3 +4762,31 @@ def t158_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "user_id", "event_id", "ts_sec", "n", "cp_k", "cp_magnitude"
     ).orderBy("user_id")
+
+
+@register(
+    "q35_cube",
+    f"""
+    SELECT l_returnflag, l_linestatus,
+           count(*) AS n_items,
+           {sql_dsum('l_quantity')} AS sum_qty
+    FROM lineitem
+    GROUP BY CUBE (l_returnflag, l_linestatus)
+    ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
+    """,
+)
+def q35_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUBE grouping sets — all four grains (both keys, each alone,
+    grand total) in ONE pass: Spark expands the grouping sets into a
+    single Expand + hash aggregate, so the table is read once where
+    four separate GROUP BYs would read it four times. Same map-side
+    partial-agg behavior as a plain groupBy."""
+    li = load_table(spark, sf_dir, "lineitem")
+    return (
+        li.cube("l_returnflag", "l_linestatus")
+        .agg(F.count("*").alias("n_items"), dsum(F.col("l_quantity")).alias("sum_qty"))
+        .orderBy(
+            F.col("l_returnflag").asc_nulls_first(),
+            F.col("l_linestatus").asc_nulls_first(),
+        )
+    )

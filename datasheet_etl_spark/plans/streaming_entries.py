@@ -4,14 +4,10 @@ Each entry stages the events table into a file-source directory, runs
 the streaming query with an availableNow trigger into a memory sink,
 and returns the drained result as a batch DataFrame — so the driver's
 oracle compare exercises the *streaming* execution path end to end.
-
-t13 is DuckDB-oracle-checked (same contract as batch q31: streaming a
-bounded input must produce exactly the batch answer). t14 is the custom
-stateful operator (applyInPandasWithState); since r8 it is oracled the
-same way — with batch Q18's own sessionize SQL, because a bounded drain
-of the stateful operator must reproduce the window-function answer
-exactly (its batch-parity is additionally asserted in
-tests/test_streaming.py).
+A bounded input drained through a streaming query must reproduce the
+batch answer exactly, so most entries are oracled with batch SQL (t117
+with Q18's own sessionize SQL); entries whose state or hashes are
+engine-specific register rows-only.
 """
 
 from __future__ import annotations
@@ -24,13 +20,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datasheet_etl_spark.plans.queries import ORACLES, register, sql_dsum
-from datasheet_etl_spark.streaming import (
-    events_stream,
-    run_available_now,
-    sessionize_stateful,
-    tumbling_counts,
-)
+from datasheet_etl_spark.plans.queries import ORACLES, register
+from datasheet_etl_spark.streaming import events_stream, run_available_now
 from datasheet_etl_spark.streaming.streams import stream_interval_join
 
 
@@ -189,114 +180,6 @@ class _few_state_partitions:
         self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
 
 
-@register(
-    "t13_streaming_tumbling",
-    f"""
-    SELECT (epoch_us(ts) // 3600000000) * 3600 AS window_start_sec,
-           event_type,
-           count(*) AS n,
-           {sql_dsum('value')} AS total_value
-    FROM events
-    GROUP BY 1, 2
-    ORDER BY window_start_sec, event_type
-    """,
-)
-def t13_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour windows executed under Structured Streaming
-    (file source → availableNow → memory sink) — bounded input, so the
-    result must equal the batch q31 oracle exactly."""
-    src = _stage_events(sf_dir)
-    with _few_state_partitions(spark):
-        stream = tumbling_counts(events_stream(spark, src), watermark=None)
-        name = f"t13_{uuid.uuid4().hex[:8]}"
-        out = run_available_now(stream, name, "complete")
-    return out.orderBy("window_start_sec", "event_type")
-
-
-@register("t14_streaming_stateful_sessions", ORACLES["q18_sessionize"])
-def t14_streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization via applyInPandasWithState under
-    Structured Streaming. Rows-only until r8 — but the drained
-    availableNow result is deterministic and schema-identical to the
-    batch sessionize, so it is oracled with Q18's OWN DuckDB SQL (the
-    batch-parity path VERDICT r7 #5 asked for): the custom stateful
-    operator must reproduce the window-function answer EXACTLY,
-    per-session sums included. Batch-parity is additionally pinned in
-    tests/test_streaming.py.
-
-    The memory sink in 'update' mode APPENDS every emission: a session
-    extended by a later micro-batch is re-emitted with refreshed
-    aggregates, so a multi-batch drain (file sources split batches
-    whenever maxFilesPerTrigger is set, as t24's harness does) would
-    surface duplicate (user_id, session_id) rows with stale partials.
-    The max_by on n_events keeps exactly the LAST emission per session
-    (n_events grows strictly monotonically as a session extends), so
-    duplicate emissions can never reach the oracle compare however the
-    drain batches. The remaining single-batch assumption is the
-    ordering one: _session_fn folds events in event_id order WITHIN a
-    batch, so Q18's global-order parity additionally needs events not
-    split out-of-order across batches — true here because no
-    maxFilesPerTrigger is set (availableNow drains the staged dir in
-    one batch)."""
-    src = _stage_events(sf_dir)
-    with _few_state_partitions(spark, default=8):
-        stream = sessionize_stateful(events_stream(spark, src))
-        name = f"t14_{uuid.uuid4().hex[:8]}"
-        out = run_available_now(stream, name, "update")
-    final = (
-        out.groupBy("user_id", "session_id")
-        .agg(
-            F.max_by(
-                F.struct("n_events", "first_event", "last_event", "session_value"),
-                "n_events",
-            ).alias("_s")
-        )
-        .select("user_id", "session_id", "_s.*")
-    )
-    return final.orderBy("user_id", "session_id")
-
-
-@register(
-    "t41_streaming_interval_join",
-    """
-    SELECT p.event_id AS purchase_id, p.user_id,
-           c.event_id AS click_id,
-           CAST(epoch_us(p.ts) - epoch_us(c.ts) AS BIGINT) AS lag_us
-    FROM events p JOIN events c
-      ON p.user_id = c.user_id
-     AND p.event_type = 'purchase' AND c.event_type = 'click'
-     AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 6 HOUR
-    ORDER BY purchase_id, click_id
-    """,
-)
-def t41_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join under Structured Streaming: each
-    purchase attributed to the same user's clicks in the preceding 6
-    hours. The interval condition plus watermarks bound the join state
-    to O(events per lookback window); bounded input, so the drained
-    result must equal the batch interval join (DuckDB oracle)."""
-    src = _stage_events(sf_dir)
-    with _few_state_partitions(spark):
-        purchases = events_stream(spark, src).filter(
-            F.col("event_type") == "purchase"
-        )
-        clicks = events_stream(spark, src).filter(F.col("event_type") == "click")
-        joined = stream_interval_join(
-            purchases, clicks, key="user_id", lookback="6 hours", watermark="1 hour"
-        )
-        out = run_available_now(
-            joined.select(
-                F.col("event_id").alias("purchase_id"),
-                "user_id",
-                F.col("r_event_id").alias("click_id"),
-                (F.unix_micros("ts") - F.unix_micros("r_ts")).alias("lag_us"),
-            ),
-            f"t41_{uuid.uuid4().hex[:8]}",
-            "append",
-        )
-    return out.orderBy("purchase_id", "click_id")
-
-
 def _stage_events_sentinels(
     spark: SparkSession,
     sf_dir: str,
@@ -453,39 +336,6 @@ def _outer_interval_drain(
     return out.filter(F.col("user_id") >= 0).orderBy("purchase_id", "click_id")
 
 
-
-@register(
-    "t116_streaming_outer_join",
-    """
-    SELECT p.event_id AS purchase_id, p.user_id,
-           c.event_id AS click_id,
-           CAST(epoch_us(p.ts) - epoch_us(c.ts) AS BIGINT) AS lag_us
-    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-    LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-      ON p.user_id = c.user_id
-     AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 6 HOUR
-    ORDER BY purchase_id, click_id
-    """,
-)
-def t116_streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: t41's attribution join,
-    but purchases with NO preceding click emit exactly once with NULL
-    click columns — the unmatched-row contract a bounded availableNow
-    drain normally never delivers, because outer rows emit only when
-    the watermark CLOSES their interval and the watermark stops at
-    ``max(ts) - delay``. The staging fixes that structurally: a
-    far-future sentinel pair lands alone in the final micro-batch
-    (mtime-ordered, maxFilesPerTrigger pins the real data to batch 1),
-    advancing the watermark past every real purchase so all unmatched
-    state flushes before the drain ends. The sentinel's own rows are
-    filtered by ``user_id >= 0``. State stays bounded by the interval
-    condition exactly as in the inner form; the drained result must
-    equal the batch LEFT JOIN (DuckDB oracle), NULL rows included.
-    Shares ``_outer_interval_drain`` with t122, whose FULL JOIN result
-    is the strict superset of this one."""
-    return _outer_interval_drain(spark, sf_dir, "left_outer", "t116")
-
-
 @register("t117_stateful_timeout_sessions", ORACLES["q18_sessionize"])
 def t117_stateful_timeout_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful sessionize with EVENT-TIME TIMEOUT expiry
@@ -523,74 +373,6 @@ def t117_stateful_timeout_sessions(spark: SparkSession, sf_dir: str) -> DataFram
             "update",
         )
     return out.filter(F.col("user_id") >= 0).orderBy("user_id", "session_id")
-
-
-@register(
-    "t118_chained_streaming_aggs",
-    """
-    WITH lvl1 AS (
-        SELECT date_trunc('hour', ts) AS ws, user_id,
-               count(*) AS n_events
-        FROM events GROUP BY 1, 2
-    )
-    SELECT CAST(epoch_us(ws) AS BIGINT) AS ws_us,
-           count(*) AS n_users,
-           CAST(sum(n_events) AS BIGINT) AS total_events
-    FROM lvl1 GROUP BY ws ORDER BY ws
-    """,
-)
-def t118_chained_streaming_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TWO stateful aggregations chained in ONE streaming query —
-    per-(user, 1h-window) counts feeding a per-window user-count/total
-    rollup — the multi-stateful-operator support Spark forbade before
-    3.4 and that turns 'stream → land → re-aggregate' two-job
-    pipelines into one checkpointed query. Both levels run in append
-    mode under one watermark: level 1 emits a (window, user) row when
-    the watermark closes the window, level 2 re-aggregates those
-    closed rows and emits when the same watermark passes ITS window.
-    Two sentinel micro-batches advance the watermark in two steps —
-    one step per stateful level, since each level's output reaches the
-    next level one batch later — so every real window flushes through
-    BOTH levels before the bounded drain ends. Sentinel rows must flow
-    THROUGH the aggregates (a pre-aggregate user filter gets pushed
-    below the EventTimeWatermark node and the watermark never
-    advances — found by prototype); the drained result is filtered by
-    window start ≤ max real ts instead, which also drops the sentinel
-    windows. The DuckDB oracle is the plain two-level batch SQL."""
-    src, n_real = _stage_events_sentinels(
-        spark,
-        sf_dir,
-        "chain",
-        [[(-1, -1, "sentinel", 7)], [(-2, -2, "sentinel", 14)]],
-    )
-    from datasheet_etl_spark.io import load_table
-
-    max_ts = (
-        load_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
-    )
-    with _few_state_partitions(spark):
-        stream = events_stream(
-            spark, src, max_files_per_trigger=max(1, n_real)
-        ).withWatermark("ts", "1 hour")
-        lvl1 = stream.groupBy(
-            F.window("ts", "1 hour").alias("w"), "user_id"
-        ).agg(F.count("*").alias("n_events"))
-        lvl2 = lvl1.groupBy("w").agg(
-            F.count("*").alias("n_users"),
-            F.sum("n_events").alias("total_events"),
-        )
-        out = run_available_now(
-            lvl2, f"t118_{uuid.uuid4().hex[:8]}", "append"
-        )
-    return (
-        out.filter(F.col("w.start") <= F.lit(max_ts))
-        .select(
-            F.unix_micros("w.start").alias("ws_us"),
-            "n_users",
-            F.col("total_events").cast("long").alias("total_events"),
-        )
-        .orderBy("ws_us")
-    )
 
 
 @register(
@@ -704,26 +486,6 @@ def _scd2_changes(spark: SparkSession, src) -> DataFrame:
     )
 
 
-@register("t120_scd2_history", _SCD2_ORACLE)
-def t120_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Type-2 SCD history from a changelog (batch derivation): one
-    validity interval per upsert, ``valid_to`` = the next change's
-    sequence, deletes ('error' events) closing the open interval
-    without opening one — the warehouse dimension-history pattern.
-    One lead() window pass over the changelog + a filter; the DuckDB
-    oracle is the same lead-window SQL. This is the from-scratch
-    derivation the streaming sink (t121) must reproduce
-    incrementally."""
-    from datasheet_etl_spark.io import load_table
-    from datasheet_etl_spark.operators.relational import scd2_history
-
-    changes = _scd2_changes(spark, load_table(spark, sf_dir, "events"))
-    out = scd2_history(changes, ["user_id"], "event_id", ["value"])
-    return out.select(
-        "user_id", "value", "valid_from", "valid_to", "is_current"
-    ).orderBy("user_id", "valid_from")
-
-
 def _stage_events_seq_split(spark: SparkSession, sf_dir: str) -> str:
     """Events as a 2-file changelog staging, split at the median
     event_id with mtimes ordered — so maxFilesPerTrigger=1 delivers
@@ -757,47 +519,6 @@ def _stage_events_seq_split(spark: SparkSession, sf_dir: str) -> str:
             os.utime(dst, (1_700_000_000 + 60 * i,) * 2)
 
     return _stage_synced(d, "v1|" + _source_signature(src), build)
-
-
-@register("t121_streaming_scd2", _SCD2_ORACLE)
-def t121_streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING Type-2 SCD materialization: the changelog arrives in
-    two seq-ordered micro-batches and ``scd2_upsert_sink`` maintains
-    the history table incrementally — per batch, only touched keys'
-    OPEN intervals re-enter the derivation (closed history passes
-    through verbatim), committed as immutable versions behind the
-    ``_LATEST`` pointer (the cdc sink's own commit discipline). The
-    drained table must equal t120's from-scratch batch derivation —
-    the SAME DuckDB oracle grades both, which is the
-    incremental-equals-batch contract that makes an SCD2 sink
-    trustworthy. Fresh per-invocation sink + checkpoint (wiped at
-    entry start), like t105's fresh-drain shape."""
-    import hashlib
-    import os
-
-    from datasheet_etl_spark.streaming.streams import scd2_upsert_sink
-
-    src = _stage_events_seq_split(spark, sf_dir)
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"scd2_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}",
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    target, ckpt = os.path.join(work, "target"), os.path.join(work, "ckpt")
-    with _few_state_partitions(spark):
-        stream = spark.readStream.schema(
-            spark.read.parquet(src).schema
-        ).option("maxFilesPerTrigger", "1").format("parquet").load(src)
-        changes = _scd2_changes(spark, stream)
-        scd2_upsert_sink(
-            changes, target, ckpt, ["user_id"], "event_id", ["value"]
-        )
-    from datasheet_etl_spark.streaming.streams import read_scd2_snapshot
-
-    out = read_scd2_snapshot(spark, target)
-    return out.select(
-        "user_id", "value", "valid_from", "valid_to", "is_current"
-    ).orderBy("user_id", "valid_from")
 
 
 @register("t121b_streaming_scd2_bucketed", _SCD2_ORACLE)
@@ -877,68 +598,6 @@ def t122_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFram
     NULL populations included. Shares ``_outer_interval_drain`` with
     t116 — one body, parameterized by join mode."""
     return _outer_interval_drain(spark, sf_dir, "full_outer", "t122")
-
-
-@register(
-    "t123_state_store_read",
-    """
-    SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
-    FROM events GROUP BY user_id ORDER BY user_id
-    """,
-)
-def t123_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming STATE read back from the checkpoint at rest — Spark's
-    ``statestore`` data source through :func:`monitor.read_state_store`
-    (r12, new surface): a per-user streaming count drains in two
-    micro-batches, then the entry reads the aggregation operator's
-    OWN state store files and grades them against the batch
-    aggregate. The state of an unwindowed groupBy count IS the
-    aggregate, so the DuckDB oracle certifies byte-level state
-    correctness — not the query output, the STATE — which is the
-    audit a long-running pipeline runs when it suspects drift ("what
-    does the state actually hold"), answered without replaying the
-    stream or stopping anything. Scale shape: the reader opens state
-    store files partition-parallel and scans state only (bounded by
-    the operator's own watermark/cap design), never the corpus.
-    Per-batch time travel + the multi-store metadata inventory are
-    pinned in tests/test_streaming.py."""
-    import hashlib
-    import os
-
-    from datasheet_etl_spark.streaming.monitor import read_state_store
-
-    src = _stage_events(sf_dir)
-    n_files = sum(f.endswith(".parquet") for f in os.listdir(src))
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"t123_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}",
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    ckpt = os.path.join(work, "ckpt")
-    with _few_state_partitions(spark):
-        stream = events_stream(
-            spark, src, max_files_per_trigger=max(1, n_files // 2)
-        )
-        name = f"t123_{uuid.uuid4().hex[:8]}"
-        q = (
-            stream.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    state = read_state_store(spark, ckpt)
-    # the value struct carries the aggregation BUFFER's field names
-    # (`count` for a count aggregate), not the output alias — the
-    # reader exposes physical state, which is the point
-    return state.select(
-        F.col("key.user_id").alias("user_id"),
-        F.col("value.count").cast("long").alias("n_events"),
-    ).orderBy("user_id")
 
 
 @register(
@@ -1103,90 +762,6 @@ def t24_streaming_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "t55_streaming_kmv_distinct",
-    """
-    SELECT user_id, CAST(count(DISTINCT props) AS DOUBLE) AS distinct_est
-    FROM events
-    GROUP BY user_id
-    ORDER BY user_id
-    """,
-)
-def t55_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user distinct-payload count maintained as a KMV sketch in
-    grouped streaming state — O(k) state per key forever, where the
-    exact streaming distinct would hold every value. The testdata keeps
-    each user's distinct count under the pool size k, where KMV is
-    EXACT by construction — so the streaming sketch must reproduce
-    DuckDB's ``count(DISTINCT ...)`` bit-for-bit, and the estimator's
-    beyond-k regime is pinned separately in tests/test_streaming.py."""
-    from datasheet_etl_spark.streaming.streams import kmv_distinct_stateful
-
-    src = _stage_events(sf_dir)
-    with _few_state_partitions(spark):
-        stream = events_stream(spark, src)
-        name = f"t55_{uuid.uuid4().hex[:8]}"
-        out = run_available_now(
-            kmv_distinct_stateful(stream, "user_id", "props", k=256),
-            name,
-            "update",
-        )
-    # update mode emits one row per key per micro-batch; the pool only
-    # grows (no TTL here), so the latest estimate is the max
-    return (
-        out.groupBy("user_id")
-        .agg(F.max("distinct_est").alias("distinct_est"))
-        .orderBy("user_id")
-    )
-
-
-@register(
-    "t75_stream_static_join",
-    f"""
-    WITH dim AS (
-        SELECT DISTINCT event_type, upper(event_type) AS type_code
-        FROM events
-    )
-    SELECT d.type_code,
-           count(*) AS n,
-           {sql_dsum('value')} AS total_value
-    FROM events e JOIN dim d USING (event_type)
-    GROUP BY d.type_code
-    ORDER BY d.type_code
-    """,
-)
-def t75_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static enrichment join under Structured Streaming: the
-    arriving event stream joins a STATIC dimension table (the
-    enrichment shape of every production stream — config, product,
-    geo lookups), then aggregates per enriched code. Bounded input ⇒
-    the drained result must equal the batch join+agg oracle exactly.
-
-    Scale shape: a stream-static equi-join needs NO watermark and NO
-    join state — the static side broadcasts to every micro-batch task
-    (it is re-resolved per batch, so a dim refresh is picked up on the
-    next batch; only stream-stream joins buffer state, cf. t41). The
-    aggregate holds one row of state per enriched code."""
-    from datasheet_etl_spark.plans.queries import dsum
-    from datasheet_etl_spark.io import load_table
-
-    src = _stage_events(sf_dir)
-    dim = (
-        load_table(spark, sf_dir, "events")
-        .select("event_type")
-        .distinct()
-        .withColumn("type_code", F.upper("event_type"))
-    )
-    with _few_state_partitions(spark):
-        stream = events_stream(spark, src).join(F.broadcast(dim), "event_type")
-        agg = stream.groupBy("type_code").agg(
-            F.count("*").alias("n"), dsum(F.col("value")).alias("total_value")
-        )
-        name = f"t75_{uuid.uuid4().hex[:8]}"
-        out = run_available_now(agg, name, "complete")
-    return out.orderBy("type_code")
-
-
-@register(
     "t78_streaming_heavy_hitters",
     """
     WITH d AS (
@@ -1253,83 +828,6 @@ def t78_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", F.col("item").cast("long").alias("item"))
         .orderBy("event_type", "item")
     )
-
-
-@register(
-    "t81_streaming_dedup_watermark",
-    """
-    SELECT event_type, CAST(count(DISTINCT event_id) AS BIGINT) AS n_unique
-    FROM events GROUP BY event_type ORDER BY event_type
-    """,
-)
-def t81_streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming EXACT dedup via ``dropDuplicatesWithinWatermark``: the
-    events table is staged TWICE (two source files, maxFilesPerTrigger=1
-    → two genuine micro-batches), so every event arrives again in a
-    LATER batch and the cross-batch dedup state — not per-batch
-    distinct — is what the oracle checks: the drained output must hold
-    each event_id exactly once, i.e. the per-type counts of the
-    original table.
-
-    This is the Spark-native form of at-least-once-source dedup: state
-    holds one entry per key only until the event-time watermark passes
-    the key's timestamp, so long-running streams carry O(events per
-    watermark window) state, NOT O(stream) — the unbounded-state
-    failure that plain streaming dropDuplicates hits at 100 TB. The
-    delay here (60 days) deliberately exceeds the 30-day test corpus
-    so zero rows are late-dropped and the result is exactly batch
-    DISTINCT; production tunes it to the source's real redelivery
-    horizon."""
-    import os
-
-    src = _stage_events_doubled(sf_dir)
-    n_files = sum(f.endswith(".parquet") for f in os.listdir(src))
-    with _few_state_partitions(spark):
-        stream = (
-            # half the files per trigger → exactly two micro-batches at
-            # any staging size (2 at smoke scale, 2 at the x10 audit)
-            events_stream(spark, src, max_files_per_trigger=max(1, n_files // 2))
-            .withWatermark("ts", "60 days")
-            .dropDuplicatesWithinWatermark(["event_id"])
-        )
-        name = f"t81_{uuid.uuid4().hex[:8]}"
-        out = run_available_now(
-            stream.select("event_id", "event_type"), name, "append"
-        )
-    return (
-        out.groupBy("event_type")
-        .agg(F.count("*").alias("n_unique"))
-        .orderBy("event_type")
-    )
-
-
-def _stage_events_doubled(sf_dir: str) -> str:
-    # every staged file twice → with maxFilesPerTrigger = half the file
-    # count, the re-deliveries land in a LATER micro-batch. The file
-    # source orders by MODIFICATION TIME, not name, so the b_ copies
-    # are explicitly utime'd one minute newer than every a_ copy —
-    # otherwise copy2's preserved per-part mtimes interleave the
-    # generations and "later micro-batch" silently stops being true
-    # for multi-part sources.
-    import os
-
-    d = _stage_events(sf_dir)
-    dd = d + "_x2"
-
-    def build(dst_dir):
-        files = [f for f in sorted(os.listdir(d)) if f.endswith(".parquet")]
-        now = None
-        for f in files:
-            src_f = os.path.join(d, f)
-            st = os.stat(src_f)
-            now = max(now or 0, st.st_mtime)
-            shutil.copy2(src_f, os.path.join(dst_dir, f"a_{f}"))
-        for f in files:
-            dst = os.path.join(dst_dir, f"b_{f}")
-            shutil.copy2(os.path.join(d, f), dst)
-            os.utime(dst, (now + 60, now + 60))
-
-    return _stage_synced(dd, _source_signature(d) + ":x2", build)
 
 
 @register(
@@ -1480,83 +978,6 @@ def t99_streaming_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_shared_grams",
         "max_span_tokens",
     ).orderBy("id_lo", "id_hi")
-
-
-@register(
-    "t108_session_window_native",
-    f"""
-    WITH ordered AS (
-      SELECT user_id, value, epoch_us(ts) AS us,
-             lag(epoch_us(ts)) OVER (PARTITION BY user_id
-                                     ORDER BY epoch_us(ts)) AS prev_us
-      FROM events
-    ), flagged AS (
-      SELECT user_id, value, us,
-             CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-                  THEN 1 ELSE 0 END AS is_start
-      FROM ordered
-    ), sessions AS (
-      SELECT user_id, value, us,
-             sum(is_start) OVER (PARTITION BY user_id ORDER BY us
-                                 ROWS UNBOUNDED PRECEDING) AS sid
-      FROM flagged
-    )
-    SELECT user_id,
-           CAST(min(us) AS BIGINT) AS start_us,
-           CAST(max(us) + 1800000000 AS BIGINT) AS end_us,
-           count(*) AS n_events,
-           {sql_dsum('value')} AS session_value
-    FROM sessions GROUP BY user_id, sid
-    ORDER BY user_id, start_us
-    """,
-)
-def t108_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark's NATIVE session_window aggregation under Structured
-    Streaming — the built-in counterpart to t14's hand-built
-    applyInPandasWithState sessionizer, graded against the same
-    gap-sessionization SQL family (q18's idiom on event TIME): the
-    engine merges an event into a session iff its gap to the previous
-    event is AT MOST 30 minutes — the boundary is INCLUSIVE (an event
-    arriving exactly at the previous window's end merges; pinned on a
-    hand-planted frame in test_streaming.py, which is how the
-    oracle's strict `>` in is_start was set — not guessed from the
-    [start, end) notation, which reads as if exactly-gap should
-    split), and a session's end is its last event time + gap. Bounded
-    drain ⇒ must equal the batch window answer bit-for-bit; value
-    sums via the dsum decimal discipline.
-
-    Scale shape: session_window is a streaming-native stateful
-    aggregate — one shuffle on user_id, per-key ordered state merge,
-    O(open sessions) state; in production the same query runs
-    unbounded with a watermark to expire closed sessions (the
-    complete-mode drain here keeps all state, which is exactly right
-    for a bounded grading drain)."""
-    from datasheet_etl_spark.plans.queries import dsum
-
-    src = _stage_events(sf_dir)
-    with _few_state_partitions(spark):
-        stream = events_stream(spark, src)
-        agg = (
-            stream.groupBy(
-                F.session_window("ts", "30 minutes"), F.col("user_id")
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                dsum(F.col("value")).alias("session_value"),
-            )
-            .select(
-                "user_id",
-                F.unix_micros(F.col("session_window.start")).alias(
-                    "start_us"
-                ),
-                F.unix_micros(F.col("session_window.end")).alias("end_us"),
-                "n_events",
-                "session_value",
-            )
-        )
-        name = f"t108_{uuid.uuid4().hex[:8]}"
-        out = run_available_now(agg, name, "complete")
-    return out.orderBy("user_id", "start_us")
 
 
 @register(

@@ -4,10 +4,10 @@ QUERIES/ORACLES registry.
 
 Hash-based operators (MinHash, SimHash, hyperplane LSH) are genuinely
 non-SQL-expressible (their hashes are engine-specific), so they register
-without an oracle — the driver records the weaker rows-only check; the
-*exact* operators they approximate (bigram Jaccard, embedding cosine)
-ARE oracle-checked, which pins the verification predicate both families
-share.
+without an oracle — they get the weaker rows-only check. Each
+has an md5-replayable twin (t02b, t03b, t07c) that runs the same
+pipeline under a hash DuckDB can recompute, so the full machinery is
+still oracle-checked.
 """
 
 from __future__ import annotations
@@ -26,23 +26,19 @@ from datasheet_etl_spark.operators.dedup import (
 )
 from datasheet_etl_spark.operators.multimodal import extract_features, synth_media
 from datasheet_etl_spark.operators.similarity import (
-    brute_force_topk,
     cosine,
-    cosine_pairs_vectorized,
     hyperplane_lsh_pairs,
     ivf_topk,
     mine_hard_negatives,
 )
 from datasheet_etl_spark.operators.text import (
     LANG_PROFILES,
-    bpe_ish_token_count,
     detect_language,
     fingerprint,
-    quality_features,
     quality_score,
     whitespace_token_count,
 )
-from datasheet_etl_spark.plans.queries import dsum, register, sql_dsum
+from datasheet_etl_spark.plans.queries import register
 
 _SQL_TOKS = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"
 _SQL_BIGRAMS = (
@@ -90,49 +86,18 @@ def t01_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reps.join(counts, ["lang", "source"]).orderBy("lang", "source")
 
 
-@register(
-    "t04_dedup_ngram_jaccard",
-    f"""
-    WITH t AS (
-      SELECT doc_id, {_SQL_TOKS} AS toks FROM documents WHERE doc_id < 200
-    ), s AS (
-      SELECT doc_id, {_SQL_BIGRAMS} AS sh FROM t WHERE len(toks) >= 2
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           round(len(list_intersect(a.sh, b.sh)) * 1.0
-                 / len(list_distinct(list_concat(a.sh, b.sh))), 6) AS jaccard
-    FROM s a, s b
-    WHERE a.doc_id < b.doc_id
-      AND len(list_intersect(a.sh, b.sh)) * 1.0
-          / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.5
-    ORDER BY id_a, id_b
-    """,
-)
-def t04_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-bigram Jaccard near-dup pairs (the MinHash verification
-    predicate, run exactly) over a bounded slice — the oracle anchor for
-    the hash-based families. Postings self-join, not the N² cross join."""
-    docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 200)
-    sh = docs.select("doc_id", word_shingles(tokens(F.col("text")), 2).alias("sh"))
-    return (
-        exact_jaccard_pairs(sh, threshold=0.5)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        .orderBy("id_a", "id_b")
-    )
-
-
 @register("t02_dedup_minhash_lsh")  # hashes are engine-specific → rows-only
 def t02_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pipeline (shingle → 64-perm signature → 16
     banded buckets → candidate join → exact-Jaccard verify ≥ 0.5).
-    Agreement with t04's exact pairs is asserted in tests.
+    Agreement with the exact bigram-Jaccard pairs is asserted in tests.
 
     Oracle impossibility note: the signatures are min() over affine
     permutations of Spark's ``xxhash64`` (seed 42) — DuckDB has no
     xxHash64, so no SQL oracle can reproduce the signature values or
     the banded candidate set. The verified-pair OUTPUT after the exact
     Jaccard check is hash-dependent too (recall < 1 by design). The
-    pinned recall-vs-exact test against t04's oracled exact pairs is
+    pinned recall-vs-exact test against ``exact_jaccard_pairs`` is
     the strongest available cross-check; deliberately rows-only. r13:
     the full LSH MACHINERY — min-agg signatures, the seed-42 affine
     family itself, banding, bucket cap, candidate join, est/exact
@@ -342,63 +307,9 @@ def t03b_simhash_md5_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-@register(
-    "t05_dedup_embedding_cosine",
-    """
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6)
-             AS cos_sim
-    FROM embeddings a, embeddings b
-    WHERE a.vec_id < 100 AND a.vec_id < b.vec_id
-      AND list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.4
-    ORDER BY id_a, id_b
-    """,
-)
-def t05_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs (probe slice, exact): numpy-
-    vectorized map-side scan — corpus never shuffles, one matmul per
-    Arrow batch. The all-pairs scale path is t07b's hyperplane LSH."""
-    emb = _emb(spark, sf_dir)
-    pairs = cosine_pairs_vectorized(
-        emb, emb.filter(F.col("vec_id") < 100), threshold=0.4
-    )
-    return (
-        pairs.filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
-        .orderBy("id_a", "id_b")
-    )
-
-
 # ---------------------------------------------------------------------------
 # similarity search / ANN
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "t06_ann_bruteforce",
-    """
-    SELECT probe_id, vec_id, round(cos_sim, 6) AS cos_sim, rank FROM (
-      SELECT a.vec_id AS probe_id, b.vec_id AS vec_id,
-             list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) AS cos_sim,
-             row_number() OVER (
-               PARTITION BY a.vec_id
-               ORDER BY list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) DESC,
-                        b.vec_id) AS rank
-      FROM embeddings a, embeddings b
-      WHERE a.vec_id < 10 AND b.vec_id <> a.vec_id
-    )
-    WHERE rank <= 10
-    ORDER BY probe_id, rank
-    """,
-)
-def t06_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-10 — the exact ANN baseline. Probe side
-    broadcast; corpus never shuffles."""
-    emb = _emb(spark, sf_dir)
-    out = brute_force_topk(emb, emb.filter(F.col("vec_id") < 10), k=10)
-    return out.select(
-        "probe_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim"), "rank"
-    ).orderBy("probe_id", "rank")
 
 
 @register(
@@ -730,136 +641,6 @@ def _sql_lang_scores() -> str:
     return ",\n           ".join(parts)
 
 
-@register(
-    "t08_text_langid",
-    f"""
-    WITH t AS (SELECT doc_id, lang AS lang_true, {_SQL_TOKS} AS toks FROM documents),
-    s AS (
-      SELECT doc_id, lang_true,
-           {_sql_lang_scores()}
-      FROM t
-    )
-    SELECT doc_id, lang_true,
-           CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                WHEN s_de = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'de'
-                WHEN s_en = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'en'
-                WHEN s_es = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'es'
-                WHEN s_fr = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'fr'
-                ELSE 'zh' END AS lang_pred
-    FROM s
-    ORDER BY doc_id
-    """,
-)
-def t08_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Marker-token language ID with deterministic argmax (tiebreak =
-    lang code ascending, matching the CASE ladder order)."""
-    docs = _docs(spark, sf_dir)
-    toks = tokens(F.col("text"))
-    return docs.select(
-        "doc_id",
-        F.col("lang").alias("lang_true"),
-        detect_language(toks).alias("lang_pred"),
-    ).orderBy("doc_id")
-
-
-@register(
-    "t09_text_quality",
-    """
-    WITH t AS (
-      SELECT doc_id, text,
-             list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS toks
-      FROM documents
-    ), f AS (
-      SELECT doc_id,
-             length(text) AS n_chars,
-             len(toks) AS n_tokens,
-             length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS n_punct,
-             len(list_intersect(list_distinct(toks),
-                 ['the','and','of','to','in','is','that','for'])) AS stop_hits,
-             CASE WHEN len(toks) > 0
-                  THEN length(array_to_string(toks, '')) / len(toks)
-                  ELSE 0.0 END AS avg_token_len
-      FROM t
-    )
-    SELECT doc_id, n_chars, n_tokens,
-           round(CASE WHEN n_chars > 0 THEN n_punct / n_chars ELSE 0.0 END, 6) AS punct_ratio,
-           stop_hits,
-           round(avg_token_len, 6) AS avg_token_len,
-           CAST(CASE WHEN n_tokens >= 20 THEN 0.25 ELSE 0.0 END
-            + CASE WHEN avg_token_len >= 3 AND avg_token_len <= 10 THEN 0.25 ELSE 0.0 END
-            + CASE WHEN stop_hits >= 1 THEN 0.25 ELSE 0.0 END
-            + CASE WHEN (CASE WHEN n_chars > 0 THEN n_punct / n_chars ELSE 0.0 END) <= 0.1
-                   THEN 0.25 ELSE 0.0 END AS DOUBLE) AS quality
-    FROM f
-    ORDER BY doc_id
-    """,
-)
-def t09_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality scoring: length/punct/stopword/word-shape features and the
-    composite [0,1] score (weights multiples of 0.25 → fp-stable)."""
-    docs = _docs(spark, sf_dir)
-    f = quality_features(F.col("text"))
-    return docs.select(
-        "doc_id",
-        f["n_chars"].alias("n_chars"),
-        f["n_tokens"].alias("n_tokens"),
-        F.round(f["punct_ratio"], 6).alias("punct_ratio"),
-        f["stopword_hits"].alias("stop_hits"),
-        F.round(f["avg_token_len"], 6).alias("avg_token_len"),
-        quality_score(F.col("text")).alias("quality"),
-    ).orderBy("doc_id")
-
-
-@register(
-    "t10_text_token_count",
-    r"""
-    SELECT doc_id,
-           len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> ''))
-             AS ws_tokens,
-           len(regexp_extract_all(text, '[a-z]+|[A-Z][a-z]*|[0-9]|[^A-Za-z0-9\s]'))
-             AS bpe_ish_tokens,
-           length(text) AS n_chars
-    FROM documents
-    ORDER BY doc_id
-    """,
-)
-def t10_text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting: whitespace tokens + BPE-ish subword proxy count."""
-    docs = _docs(spark, sf_dir)
-    return docs.select(
-        "doc_id",
-        whitespace_token_count(F.col("text")).alias("ws_tokens"),
-        bpe_ish_token_count(F.col("text")).alias("bpe_ish_tokens"),
-        F.length("text").alias("n_chars"),
-    ).orderBy("doc_id")
-
-
-@register(
-    "t11_text_fingerprint",
-    f"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
-    fp AS (
-      SELECT doc_id, md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp
-      FROM t
-    )
-    SELECT doc_id, fp,
-           count(*) OVER (PARTITION BY fp) AS n_same_fp
-    FROM fp
-    ORDER BY doc_id
-    """,
-)
-def t11_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprinting: md5 over the sorted distinct token set
-    (order/punctuation-insensitive collision key) + collision counts."""
-    docs = _docs(spark, sf_dir)
-    from pyspark.sql import Window
-
-    fp = docs.select("doc_id", fingerprint(F.col("text")).alias("fp"))
-    return fp.withColumn(
-        "n_same_fp", F.count("*").over(Window.partitionBy("fp"))
-    ).orderBy("doc_id")
-
-
 # ---------------------------------------------------------------------------
 # end-to-end corpus curation (the 100 TB headline composition)
 # ---------------------------------------------------------------------------
@@ -1038,39 +819,6 @@ def t17_graph_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("part_a", "name_a", "part_b", "name_b", "n_orders")
         .orderBy(F.desc("n_orders"), "part_a", "part_b")
         .limit(20)
-    )
-
-
-@register(
-    "t21_time_rollup",
-    f"""
-    WITH b AS (
-      SELECT CAST((epoch_us(ts) // 86400000000) * 86400 AS BIGINT) AS day_sec,
-             CAST((epoch_us(ts) // 3600000000) * 3600 AS BIGINT) AS hour_sec,
-             value
-      FROM events
-    )
-    SELECT day_sec, hour_sec, count(*) AS n, {sql_dsum('value')} AS total_value
-    FROM b
-    GROUP BY GROUPING SETS ((day_sec, hour_sec), (day_sec))
-    ORDER BY day_sec, hour_sec NULLS FIRST
-    """,
-)
-def t21_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hypertable-style time rollup: one pass produces hour-grain and
-    day-grain aggregates via ROLLUP over time buckets (partial agg at
-    the finest grain feeds the coarser one — no second scan)."""
-    e = load_table(spark, sf_dir, "events")
-    day = (F.unix_micros("ts") / 86400000000).cast("long") * 86400
-    hour = (F.unix_micros("ts") / 3600000000).cast("long") * 3600
-    bucketed = e.select(
-        day.alias("day_sec"), hour.alias("hour_sec"), F.col("value")
-    )
-    return (
-        bucketed.rollup("day_sec", "hour_sec")
-        .agg(F.count("*").alias("n"), dsum(F.col("value")).alias("total_value"))
-        .filter(F.col("day_sec").isNotNull())  # drop the grand-total row
-        .orderBy("day_sec", F.col("hour_sec").asc_nulls_first())
     )
 
 
@@ -1349,77 +1097,6 @@ def t23_app_circuit_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # sketch family (q24b extension)
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "t25_kmv_distinct",
-    """
-    SELECT l_partkey,
-           CAST(count(DISTINCT l_suppkey) AS DOUBLE) AS distinct_est
-    FROM lineitem GROUP BY l_partkey ORDER BY l_partkey
-    """,
-)
-def t25_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-key KMV distinct sketch (k smallest hashes per group;
-    mergeable by construction), run in its EXACT regime so the whole
-    table is DuckDB-oracled — t55's route applied to the batch path
-    (VERDICT r8 #6 / r10 #6): distinct suppliers per part is bounded
-    by lineitems-per-part (~30 at every scale factor — a generator
-    ratio, not a data-size accident), far below k=256, and below k a
-    KMV pool holds every distinct hash, so the estimate IS
-    ``count(DISTINCT l_suppkey)`` bit-for-bit. The estimator's
-    beyond-k regime ((k−1)/max h) and mergeability stay pinned in
-    tests/test_sketches.py, where exactness is impossible by design.
-
-    Scale shape: a (key, hash) dedup exchange (map-side combined) and
-    a key-only exchange whose sorted pass runs the rank prune, then
-    one per-key aggregate — hashes shuffle, never values."""
-    from datasheet_etl_spark.operators.sketches import kmv_grouped_estimate
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return kmv_grouped_estimate(li, ["l_partkey"], "l_suppkey", k=256).orderBy(
-        "l_partkey"
-    )
-
-
-@register(
-    "t124_hll_native_grouped",
-    """
-    SELECT l_partkey,
-           CAST(count(DISTINCT l_suppkey) AS BIGINT) AS distinct_est
-    FROM lineitem GROUP BY l_partkey ORDER BY l_partkey
-    """,
-)
-def t124_hll_native_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark's NATIVE Datasketches HLL functions beside the module's
-    own sketches (t25 grouped KMV, t87 custom HLL partials):
-    per-shard ``hll_sketch_agg`` partials merged per key with
-    ``hll_union_agg`` — the two-level mergeable-partials shape an
-    incremental distinct-count pipeline actually runs (tonight's shard
-    sketches union with the stored ones; kilobytes move, never
-    values). Oracled by t25's exactness route: distinct suppliers per
-    part is ~30 at every scale factor (a generator ratio), far inside
-    the Datasketches sparse/coupon regime where the sketch stores
-    every distinct hash and ``hll_sketch_estimate`` IS
-    ``count(DISTINCT)`` bit-for-bit — verified across BOTH the direct
-    and the two-level union paths. The beyond-exact regime (estimate
-    within documented error, union == sketch-of-union) stays pinned
-    in tests/test_sketches.py."""
-    li = load_table(spark, sf_dir, "lineitem")
-    partials = (
-        li.withColumn("_shard", F.col("l_orderkey") % 7)
-        .groupBy("l_partkey", "_shard")
-        .agg(F.expr("hll_sketch_agg(l_suppkey)").alias("_sk"))
-    )
-    return (
-        partials.groupBy("l_partkey")
-        .agg(
-            F.expr(
-                "CAST(hll_sketch_estimate(hll_union_agg(_sk)) AS BIGINT)"
-            ).alias("distinct_est")
-        )
-        .orderBy("l_partkey")
-    )
 
 
 @register(
@@ -1895,108 +1572,6 @@ def t140_utf8_validity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and the exact selection is re-expressible in ANSI SQL — so unlike
 # rand()-based sampling, every operator here is value-level oracled.
 
-_SQL_DOC_H = "md5(CAST(doc_id AS VARCHAR))"
-
-
-@register(
-    "t26_sample_uniform",
-    f"""
-    SELECT doc_id, lang, source, n_chars FROM documents
-    ORDER BY {_SQL_DOC_H} LIMIT 200
-    """,
-)
-def t26_sample_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic uniform 200-sample: the 200 smallest sampling
-    hashes. Compiles to TakeOrderedAndProject (per-partition top-N,
-    driver merge) — no global sort at any corpus size."""
-    from datasheet_etl_spark.operators.sampling import uniform_sample
-
-    docs = _docs(spark, sf_dir).select("doc_id", "lang", "source", "n_chars")
-    return uniform_sample(docs, "doc_id", 200)
-
-
-@register(
-    "t27_stratified_sample",
-    f"""
-    SELECT doc_id, lang, source, stratum_rank FROM (
-      SELECT doc_id, lang, source,
-             row_number() OVER (PARTITION BY lang ORDER BY {_SQL_DOC_H})
-               AS stratum_rank
-      FROM documents
-    ) WHERE stratum_rank <= 20
-    """,
-)
-def t27_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language k=20 sample (k smallest hashes per stratum), ranked.
-    Two-phase top-k: local top-k per (stratum, hash-salt bucket) shrinks
-    each corpus-sized stratum map-side before the exact per-stratum rank
-    — the skew-proof form of a low-cardinality-strata row_number."""
-    from datasheet_etl_spark.operators.sampling import stratified_sample
-
-    docs = _docs(spark, sf_dir).select("doc_id", "lang", "source")
-    return stratified_sample(docs, "doc_id", ["lang"], k=20)
-
-
-@register(
-    "t28_sequence_pack",
-    f"""
-    WITH h AS (
-      SELECT doc_id, n_chars, {_SQL_DOC_H} AS hh FROM documents
-    ), pos AS (
-      SELECT doc_id, substring(hh, 1, 1) AS shard, n_chars,
-             CAST(SUM(n_chars) OVER (PARTITION BY substring(hh, 1, 1) ORDER BY hh)
-                  - n_chars AS BIGINT) AS bin_offset
-      FROM h
-    )
-    SELECT doc_id, shard, n_chars, bin_offset,
-           bin_offset // 2048 AS bin_id
-    FROM pos
-    """,
-)
-def t28_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing: assign documents to fixed-budget (2048-char)
-    training bins — concatenate-then-chunk over a deterministic hash
-    order, sharded by hash prefix so shards pack independently in
-    parallel (one shuffle on the shard key)."""
-    from datasheet_etl_spark.operators.sampling import pack_sequences
-
-    docs = _docs(spark, sf_dir).select("doc_id", "n_chars")
-    packed = pack_sequences(docs, "doc_id", "n_chars", budget=2048)
-    return packed.select("doc_id", "shard", "n_chars", "bin_offset", "bin_id")
-
-
-# mixture rates: upsample src0, neutral src1, downsample src2, crawl-level
-# default for the rest — quantized to 4 hex digits (1/65536 resolution)
-_MIX_RATES = {"src0": 0.75, "src1": 0.5, "src2": 0.25}
-_MIX_DEFAULT = 0.125
-
-
-@register(
-    "t29_mixture_weighted",
-    f"""
-    SELECT source, count(*) AS n_docs,
-           CAST(SUM(CASE WHEN substring({_SQL_DOC_H}, 1, 4) <
-                  CASE source WHEN 'src0' THEN 'c000'
-                              WHEN 'src1' THEN '8000'
-                              WHEN 'src2' THEN '4000'
-                              ELSE '2000' END
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled
-    FROM documents GROUP BY source ORDER BY source
-    """,
-)
-def t29_mixture_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixture reweighting: per-source Bernoulli sampling at source-
-    specific rates via hash-prefix thresholds — a pure map-side filter
-    (zero shuffles for the sample itself), deterministic under retries,
-    incremental under corpus growth. Audit counts computed in one scan
-    (conditional agg), not a filter+join double read."""
-    from datasheet_etl_spark.operators.sampling import weighted_sample_stats
-
-    docs = _docs(spark, sf_dir)
-    return weighted_sample_stats(
-        docs, "doc_id", "source", _MIX_RATES, default_rate=_MIX_DEFAULT
-    ).orderBy("source")
-
 
 @register(
     "t33_corpus_prep_e2e",
@@ -2083,144 +1658,6 @@ def t32_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     holdout = docs.filter(F.col("doc_id") % 97 == 0)
     train = docs.filter(F.col("doc_id") % 97 != 0)
     return decontaminate(train, holdout, n=2).orderBy("doc_id")
-
-
-@register(
-    "t31_chunk_documents",
-    """
-    WITH s AS (
-      SELECT doc_id, text,
-             unnest(generate_series(0, greatest(n_chars - 1, 0), 192)) AS chunk_start
-      FROM documents
-    )
-    SELECT doc_id, chunk_start,
-           CAST(chunk_start / 192 AS BIGINT) AS chunk_idx,
-           substring(text, CAST(chunk_start + 1 AS INT), 256) AS chunk_text,
-           CAST(length(substring(text, CAST(chunk_start + 1 AS INT), 256)) AS BIGINT)
-             AS chunk_len
-    FROM s
-    """,
-)
-def t31_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window document chunking (256-char chunks, 192-char
-    stride → 64-char overlap) — embedding/pretraining corpus prep as a
-    pure map-side sequence+explode+substring expansion, no shuffle."""
-    from datasheet_etl_spark.operators.text import chunk_documents
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text", "n_chars")
-    return chunk_documents(docs, chunk_size=256, stride=192).select(
-        "doc_id", "chunk_start", "chunk_idx", "chunk_text", "chunk_len"
-    )
-
-
-# Java and RE2 compatible subset: no backrefs, no lookaround
-_EMAIL_RE = r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"
-_PHONE_RE = r"\+\d[\d-]{7,}"
-
-
-@register(
-    "t30_redact_pii",
-    f"""
-    WITH raw AS (
-      SELECT doc_id,
-             text || ' contact: user' || CAST(doc_id AS VARCHAR)
-                  || '@example.com tel: +1-555-' || lpad(CAST(doc_id AS VARCHAR), 4, '0')
-               AS raw_text
-      FROM documents
-    )
-    SELECT doc_id,
-           regexp_replace(regexp_replace(raw_text, '{_EMAIL_RE}', '<EMAIL>', 'g'),
-                          '{_PHONE_RE}', '<PHONE>', 'g') AS clean_text,
-           CAST(len(regexp_extract_all(raw_text, '{_EMAIL_RE}'))
-                + len(regexp_extract_all(raw_text, '{_PHONE_RE}')) AS BIGINT) AS n_redacted
-    FROM raw
-    """,
-)
-def t30_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing: redact emails and phone numbers from document text
-    — pure JVM regexp expressions, shuffle-free per doc. The synthetic
-    corpus contains no PII, so deterministic doc-keyed contact strings
-    are injected first (identically in the oracle) to make the
-    value-level comparison non-vacuous."""
-    docs = _docs(spark, sf_dir)
-    raw = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact: user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com tel: +1-555-"),
-            F.lpad(F.col("doc_id").cast("string"), 4, "0"),
-        ).alias("raw_text"),
-    )
-    return raw.select(
-        "doc_id",
-        F.regexp_replace(
-            F.regexp_replace("raw_text", _EMAIL_RE, "<EMAIL>"), _PHONE_RE, "<PHONE>"
-        ).alias("clean_text"),
-        (
-            F.regexp_count("raw_text", F.lit(_EMAIL_RE))
-            + F.regexp_count("raw_text", F.lit(_PHONE_RE))
-        ).cast("long").alias("n_redacted"),
-    )
-
-
-@register(
-    "t34_repetition_score",
-    f"""
-    WITH t AS (
-      SELECT doc_id, {_SQL_TOKS} AS toks FROM documents
-    ), g AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1]))
-               AS ng
-      FROM t WHERE len(toks) >= 2
-    ), c AS (
-      SELECT doc_id, ng, count(*) AS cnt FROM g GROUP BY doc_id, ng
-    )
-    SELECT doc_id,
-           CAST(sum(cnt) AS BIGINT) AS n_grams,
-           CAST(max(cnt) AS BIGINT) AS max_gram_count,
-           round(max(cnt) * 1.0 / sum(cnt), 6) AS repetition_ratio,
-           (max(cnt) * 1.0 / sum(cnt)) > 0.2 AS is_repetitive
-    FROM c GROUP BY doc_id ORDER BY doc_id
-    """,
-)
-def t34_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Intra-document repetition scoring (the Gopher-style repetition
-    filter): share of a document's word-bigram occurrences taken by its
-    single most frequent bigram; boilerplate/spam shows up as a high
-    ratio. Two hash aggregations — (doc, gram) counts map-side partial,
-    then per-doc rollup — shuffle-bounded by distinct grams, never N².
-
-    Counts here are NOT deduped (unlike the shingle sets in the dedup
-    family): repetition is precisely the multiplicity the sets discard.
-    """
-    docs = _docs(spark, sf_dir)
-    toks = tokens(F.col("text"))
-    # multiset of bigrams: zip_with concat over shifted slices, no distinct
-    length = F.greatest(F.size(toks) - 1, F.lit(0))
-    grams = F.zip_with(
-        F.slice(toks, 1, length),
-        F.slice(toks, 2, length),
-        lambda x, y: F.concat(x, F.lit(" "), y),
-    )
-    counts = (
-        docs.select("doc_id", F.explode(grams).alias("ng"))
-        .groupBy("doc_id", "ng")
-        .agg(F.count("*").alias("cnt"))
-    )
-    ratio = F.max("cnt") / F.sum("cnt")
-    return (
-        counts.groupBy("doc_id")
-        .agg(
-            F.sum("cnt").cast("long").alias("n_grams"),
-            F.max("cnt").cast("long").alias("max_gram_count"),
-            F.round(ratio, 6).alias("repetition_ratio"),
-            (ratio > 0.2).alias("is_repetitive"),
-        )
-        .orderBy("doc_id")
-    )
 
 
 @register(
@@ -3163,74 +2600,6 @@ def t72_ann_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "probe_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim"), "rank"
     ).orderBy("probe_id", "rank")
-
-
-@register(
-    "t85_contamination_report",
-    f"""
-    WITH t AS (
-      SELECT doc_id, {_SQL_TOKS} AS toks FROM documents
-    ), s AS (
-      SELECT doc_id, unnest({_SQL_BIGRAMS}) AS ng FROM t WHERE len(toks) >= 2
-    ), e AS (
-      SELECT DISTINCT ng FROM s WHERE doc_id % 97 = 0
-    ), hits AS (
-      SELECT s.doc_id, count(DISTINCT s.ng) AS n_hit
-      FROM s JOIN e ON s.ng = e.ng
-      WHERE s.doc_id % 97 <> 0
-      GROUP BY s.doc_id
-    ), train_docs AS (
-      SELECT doc_id, source FROM documents WHERE doc_id % 97 <> 0
-    )
-    SELECT source,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(CASE WHEN coalesce(n_hit, 0) >= 3 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_contaminated,
-           round(sum(CASE WHEN coalesce(n_hit, 0) >= 3 THEN 1 ELSE 0 END)
-                 * 1.0 / count(*), 6) AS contamination_rate,
-           CAST(sum(coalesce(n_hit, 0)) AS BIGINT) AS total_hit_grams
-    FROM train_docs LEFT JOIN hits USING (doc_id)
-    GROUP BY source ORDER BY source
-    """,
-)
-def t85_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source benchmark-contamination report — the governance
-    rollup OVER t32's per-doc decontamination probe: which corpus
-    source is leaking eval data, at what rate (docs sharing ≥3
-    distinct bigrams with the holdout), and how intensely (total hit
-    grams). This is the number that decides whether a source gets
-    dropped, filtered, or renegotiated — t32 removes contaminated
-    docs, this explains where they came from. Same broadcast-probe
-    scan as t32 plus one LEFT join back to the (doc, source) roster —
-    zero-hit docs must count in the denominator, which the hits-only
-    t32 output cannot do alone."""
-    from datasheet_etl_spark.operators.dedup import decontaminate
-
-    docs = _docs(spark, sf_dir)
-    holdout = docs.filter(F.col("doc_id") % 97 == 0)
-    train = docs.filter(F.col("doc_id") % 97 != 0)
-    hits = decontaminate(train, holdout, n=2).withColumnRenamed(
-        "n_hit_grams", "n_hit"
-    )
-    contaminated = F.sum(
-        (F.coalesce(F.col("n_hit"), F.lit(0)) >= 3).cast("int")
-    )
-    return (
-        train.select("doc_id", "source")
-        .join(hits, "doc_id", "left")
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            contaminated.cast("long").alias("n_contaminated"),
-            F.round(contaminated / F.count("*"), 6).alias(
-                "contamination_rate"
-            ),
-            F.sum(F.coalesce(F.col("n_hit"), F.lit(0)))
-            .cast("long")
-            .alias("total_hit_grams"),
-        )
-        .orderBy("source")
-    )
 
 
 @register(

@@ -474,8 +474,8 @@ def read_jsonl_manifest(spark, path: str):
 
 class JsonLinesStreamWriter(DataSourceStreamWriter):
     """The STREAMING write arm of the DataSource seam (the fifth and
-    last corner of the Python DataSource surface: batch read t112/
-    t114, stream read t113, batch write t115, and this) — the same
+    last corner of the Python DataSource surface: batch read t114,
+    stream read t113, the batch writer, and this) — the same
     staged-files discipline as :class:`JsonLinesWriter`, committed
     PER MICRO-BATCH: each batch's tasks stage uniquely-named files,
     and ``commit(messages, batchId)`` publishes an atomic

@@ -104,8 +104,8 @@ def state_operator_metadata(spark: SparkSession, checkpoint_dir: str):
     ``state-metadata`` data source: one row per stateful operator —
     operatorId/operatorName/stateStoreName/numPartitions and the
     batch-id range whose state snapshots exist. The discovery step
-    before :func:`read_state_store` (multi-stateful queries — t118's
-    agg→agg, t119's join→agg — have several operator ids; the join
+    before :func:`read_state_store` (multi-stateful queries — agg→agg
+    chains, t119's join→agg — have several operator ids; the join
     keeps FOUR stores). Read-only over checkpoint metadata files."""
     return spark.read.format("state-metadata").load(checkpoint_dir)
 

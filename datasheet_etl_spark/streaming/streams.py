@@ -142,8 +142,8 @@ def stream_interval_join(
     independent of stream length. An equi-join on key alone (no time
     bound) would have to buffer both streams forever — the unbounded-
     state trap this operator exists to avoid. On a bounded input the
-    result equals the batch interval join exactly (DuckDB-oracled as
-    t41).
+    result equals the batch interval join exactly (DuckDB-oracled in
+    full-outer form as t122).
 
     ``how`` passes through to the join, but note the outer-mode caveat:
     unmatched rows emit only when the watermark CLOSES their interval,
@@ -152,7 +152,7 @@ def stream_interval_join(
     window are never emitted. Inner join (the default) has no such
     tail. For bounded replays needing full outer-row delivery, stage a
     far-future sentinel row into the FINAL micro-batch so the watermark
-    passes every real row before the drain ends — t116's
+    passes every real row before the drain ends — t122's
     ``_stage_events_outer`` does exactly that (plans/streaming_entries),
     and its DuckDB oracle pins the drained result equal to the batch
     LEFT JOIN, NULL rows included.
@@ -372,8 +372,8 @@ def _session_timeout_fn(
     event-time timeout fires (watermark passed ``last_ts + gap``) and
     ``hasTimedOut`` finalizes the open tail. Update-mode re-emission
     never happens, so the raw sink content IS the session table with
-    no dedup pass — the exactly-once-per-session contract t14's
-    update-mode operator cannot offer.
+    no dedup pass — the exactly-once-per-session contract
+    :func:`sessionize_stateful`'s update-mode operator cannot offer.
     """
     (user_id,) = key
 
@@ -1696,7 +1696,7 @@ def cdc_upsert_sink(
     apply_changes` in tombstone mode, and the result is committed as a
     NEW immutable snapshot version — ``{target}/v<n>`` with a
     monotonic n — before the ``_LATEST`` pointer moves. The streaming
-    complement of t68's batch CDC apply; the transactional form is
+    complement of ``relational.apply_changes``' batch CDC apply; the transactional form is
     Delta/Iceberg MERGE, this is the same guarantee from parquet + a
     pointer file.
 
@@ -1990,9 +1990,10 @@ def scd2_upsert_sink(
     buckets), not O(history). Layout, guards (orphan recovery,
     flat-vs-bucketed refusal, num_buckets pinning), reader isolation,
     and time travel are the CDC sink's own machinery, shared, not
-    mirrored. t121 grades the flat mode and t121b the bucketed mode
-    against the SAME DuckDB lead-window oracle as t120's from-scratch
-    batch derivation (incremental == batch, both storage modes).
+    mirrored. t121b grades the bucketed mode against the DuckDB
+    lead-window oracle of the from-scratch batch derivation
+    (incremental == batch); the flat mode is pinned in
+    tests/test_streaming.py.
     """
     from pyspark.sql import Window
 
@@ -2364,7 +2365,7 @@ def heavy_hitters_stateful(
     Output (update mode): one row per (key, item) per micro-batch with
     the running estimate plus ``n_seen`` — monotone per key, so the
     final summary after a bounded drain is the rows with each key's
-    max ``n_seen`` (the t55 aggregation idiom)."""
+    max ``n_seen``."""
     key_type = events.schema[key_col].dataType.simpleString()
     src = events.select(
         F.col(key_col), F.col(value_col).cast("string").alias("_v")

@@ -8,7 +8,8 @@ Usage:
 For each entry: runs it REPS times (fresh plan each time, caches released
 between reps like bench.py does), timing each rep, optionally through the
 noop sink (times computation of every column, not the count-pruned tree),
-and optionally dumps .explain("formatted") to OUT_DIR/<entry>.txt.
+and optionally dumps .explain("formatted") to OUT_DIR/<entry>.txt, built
+after rep0 so rep0 stays the entry's cold first run.
 
 Reps separate one-time cost (JIT/codegen/staging builds) from steady-state
 cost: rep1 >> rep2 ≈ rep3 means fixed overhead, not data work.
@@ -56,6 +57,18 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         help="A/B mode: env var K=V applied only in the B arm",
     )
     return ap.parse_args(argv)
+
+
+def run_reps(run, reps: int, explain=None) -> list:
+    """``run(rep)`` for each rep. ``explain`` (which builds and plans the
+    entry again) runs only after rep0's timed run, so rep0 is always the
+    entry's first build and execution."""
+    out = []
+    for rep in range(reps):
+        out.append(run(rep))
+        if rep == 0 and explain is not None:
+            explain()
+    return out
 
 
 def main() -> int:
@@ -187,24 +200,25 @@ def main() -> int:
                 f"pos1_median={median(pos_walls[1])} ({args.action}, ABBA)"
             )
             continue
-        walls = []
-        steals = []
-        calibs = []
-        for rep in range(args.reps):
-            if rep == 0 and args.explain:
-                os.makedirs(args.explain, exist_ok=True)
-                out = os.path.join(args.explain, f"{name}{args.suffix}.txt")
-                # build first for a clean pre-execution plan
-                plan_df = reg[name](spark, args.sf_dir)
-                with open(out, "w") as fh:
-                    fh.write(plan_df._jdf.queryExecution().explainString(
-                        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-                    ))
-                cleanup()
-            w, s, c = timed_run(name, f"rep{rep}")
-            walls.append(w)
-            steals.append(s)
-            calibs.append(c)
+
+        def explain(name: str = name) -> None:
+            os.makedirs(args.explain, exist_ok=True)
+            out = os.path.join(args.explain, f"{name}{args.suffix}.txt")
+            plan_df = reg[name](spark, args.sf_dir)
+            with open(out, "w") as fh:
+                fh.write(plan_df._jdf.queryExecution().explainString(
+                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+                ))
+            cleanup()
+
+        runs = run_reps(
+            lambda rep, name=name: timed_run(name, f"rep{rep}"),
+            args.reps,
+            explain if args.explain else None,
+        )
+        walls = [r[0] for r in runs]
+        steals = [r[1] for r in runs]
+        calibs = [r[2] for r in runs]
         print(f"{name}: {walls} steal={steals} calib_ms={calibs} ({args.action})")
     spark.stop()
     return 0

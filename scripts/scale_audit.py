@@ -33,204 +33,65 @@ from pyspark.sql import functions as F
 SRC = "/root/testdata/sf0.1"
 DST = "/tmp/sfx10"
 COPIES = 10
+# Data-term-heavy entries: dedup/similarity candidate generation, the
+# substring-dedup family (the x10 replica is its worst-case gram-frequency
+# shift: interior grams rise ~10x while staying under the boilerplate
+# cap), streaming state, sketches and map-side scans. t79 is deliberately
+# NOT audited: a GROUPED_AGG holistic aggregate is O(group size) per
+# group by contract (see the functions/aggregates.py docstring).
 ENTRIES = [
     "q11_tpch_q1",
     "q43_star_join_revenue",
     "t01_dedup_exact",
     "t02_dedup_minhash_lsh",
-    # r13: t02's pipeline under the md5-replayable base hash — same
-    # stages shared-code, so the ratio should track t02's
     "t02b_minhash_lsh_md5_oracle",
-    # r13: t07b's hyperplane pipeline under md5-derived planes — the
-    # map-side-only signature pass + (table, bucket) self-join
     "t07c_hyperplane_md5_oracle",
-    # r13 (first rows after their in-place oracle upgrades): the
-    # trained-ANN family — kmeans pass is corpus-linear (2 map-side
-    # partial-agg iterations), search is nprobe-pruned
     "t20_ann_ivf_kmeans",
     "t36_ann_ivf_quantized",
     "t72_ann_two_stage_rerank",
-    # r13: MMR — distributed top-pool (corpus-linear scan) + bounded
-    # driver greedy; ratio should track the pool scan alone
     "t63_mmr_select",
-    # r13: the Arrow-native seams — map-side-only kernel pass and the
-    # grouped one-shuffle reduce
     "t130_arrow_native_map",
     "t131_arrow_native_grouped",
     "t19_corpus_curation",
     "t45_semantic_dedup",
     "t56_triangle_count",
-    "t57_funnel",
-    "t59_correlation_matrix",
-    "t65_unigram_log_ppl",
     "t66_similarity_histogram",
-    "t73_incremental_rollup",
-    # r7: leakage-safe split (fingerprint window over the full corpus)
-    # and streaming watermark dedup (state scales with events). t79 is
-    # deliberately NOT audited: a GROUPED_AGG holistic aggregate is
-    # O(group size) per group BY CONTRACT (3 return-flag groups →
-    # 3 Arrow transfers of n/3 rows each) — the aggregates.py module
-    # docstring says exactly when that cost is and is not acceptable.
-    "t80_leakage_safe_split",
-    "t81_streaming_dedup_watermark",
-    # r7 continuation: mergeable histogram quantiles (frame pass +
-    # map-side-combined bin counts — at most keys x 64 rows shuffle)
-    # and min-max feature scaling (dim-stats pass + map-only rescale)
-    "t88_mergeable_quantile_hist",
-    "t90_feature_scale",
-    # r9 (VERDICT r8 #2): substring-overlap dedup + its corpus
-    # assembly. The x10 replica is the WORST-case gram-frequency shift
-    # for a capped self-join: the per-copy text suffix changes only the
-    # final grams, so ~every interior gram's occurrence count rises
-    # 10x (w=10 → 45 cross-copy meets per gram) while staying under
-    # the 64-occurrence boilerplate cap — the gram-meet volume grows
-    # ~45x against 10x data, and every original doc gains 9 full-span
-    # cross-copy overlap partners. Sub-linearity here is the cap +
-    # islands machinery absorbing a 10x-denser duplicate structure,
-    # not a vacuous pass. t94 additionally runs components over the
-    # resulting ~45x-denser pair graph.
-    "t92_substring_overlap",
-    "t94_substring_dedup_corpus",
-    # t95 additionally anti-joins the FULL corpus token stream against
-    # the ~45x-denser interval set — the only entry in the family whose
-    # final stage is corpus-sized, so its ratio bounds the whole path
     "t95_substring_span_excision",
-    # r9: DSIR importance selection (two broadcast-vocab joins + one
-    # per-doc agg — the t65 shape) and the e2e training-shard plan
-    # (two bounded window passes, no global sort)
     "t96_dsir_importance_select",
     "t97_training_shard_plan",
-    # r9: cross-set probe against the staged per-sf index (the index
-    # build happens once in the warm pass; steady state measures the
-    # probe, which is what a production increment pays)
     "t98_incremental_substring_dedup",
-    # r9: the live streaming form — a 2-batch availableNow drain with
-    # per-batch probe + postings append (pristine index staged in the
-    # warm pass; each timed run still pays its copy + full drain)
     "t99_streaming_gram_index",
-    # r10: frequent-ngram audit — the x10 replica multiplies every
-    # interior gram's occurrence count ~10x, so the (gram, doc) and
-    # gram aggregates carry 10x rows while the top-50 output is fixed;
-    # linear-in-data is the expected shape (no join, no global sort)
-    "t100_frequent_ngrams",
-    # r10: excision impact report = t95's full excision pass + one
-    # rollup — its ratio should track t95's (the rollup is output-sized)
     "t101_excision_impact_report",
-    # r10 format breadth: one text-scan parse + one aggregate (t103)
-    # and one pushdown ORC scan + one aggregate (t104) — both linear
-    # by construction; staging (JSONL/ORC write) happens in the warm
-    # pass per the warm-both-scale-points methodology
-    "t103_jsonl_lenient_ingest",
     "t104_orc_at_rest",
-    # r10: incremental audit — tonight's shard pass + a merge of two
-    # gram tables; the at-rest partial builds in the warm pass
-    "t106_incremental_ngram_audit",
-    # r10: the streaming ingest — each timed run pays a full
-    # availableNow drain (text scan + parse + two partition-scoped
-    # writes) into fresh per-invocation sinks plus the rollup read;
-    # the staged corrupted JSONL builds in the warm pass
     "t105_streaming_quarantine_ingest",
-    # r11: the hashed audit (same 10x gram-count shift as t100, but
-    # shuffling 16-byte keys + a second broadcast-filtered gram pass),
-    # native session-window streaming state (state rows scale with
-    # open sessions), keyword extraction (tokenize + vocab-join +
-    # per-doc window), and the map-side URL parse rollup
     "t107_frequent_ngrams_hashed",
-    "t108_session_window_native",
-    "t109_keyword_extract",
-    "t110_url_parse_rollup",
-    # r11 second batch: the pack-efficiency report (t97's plan CTEs +
-    # a per-shard rollup), the sentinel-flushed streaming LEFT OUTER
-    # interval join (state scales with events per lookback window,
-    # exactly t41's bound, plus the unmatched-row flush), and the
-    # map-side timezone conversion rollup (embarrassingly parallel by
-    # construction — the row exists to SHOW that, not to test it)
-    "t111_pack_efficiency_report",
-    "t116_streaming_outer_join",
     "q54_timezone_parity",
-    # r11: event-time-timeout sessionize — state rows track OPEN
-    # sessions (timeout removes quiet keys), emission once per close
     "t117_stateful_timeout_sessions",
-    # r11: two chained stateful aggregates — state ∝ open windows at
-    # level 1 (bounded by watermark) + windows at level 2
-    "t118_chained_streaming_aggs",
-    # r11: stream-stream join feeding a windowed agg (join state ∝
-    # lookback window, agg state ∝ open windows)
     "t119_stream_join_then_agg",
-    # r11: streaming SCD2 — per-batch cost is O(history) in flat mode
-    # by design (documented; bucketed mode is the cdc sink's path)
-    "t121_streaming_scd2",
-    # r11: full-outer interval join — t116's state bound on both sides
     "t122_streaming_full_outer_join",
-    # r12: bucketed SCD2 (per-batch cost O(touched buckets); this
-    # whole-entry row pays the FULL backlog drain each run — the
-    # marginal-cost claim is --t121b-marginal's flat row), the
-    # state-store read (scan of state files only, never the corpus),
-    # the MG membership oracle (state hard-capped at k per key), the
-    # keyset page (pushed TakeOrdered — the row exists to SHOW depth
-    # costs nothing), the one-Expand multi-distinct aggregate, bag
-    # set-ops (aggregate+generate, one shuffle each), and t63's pool
-    # (map-side matmul, t06's shape)
     "t121b_streaming_scd2_bucketed",
-    "t123_state_store_read",
     "t78_streaming_heavy_hitters",
     "q59_pagination_keyset",
     "q60_multi_distinct_agg",
     "q61_set_ops_all",
     "t63b_mmr_pool",
-    # r12 second batch: FILTER-clause conditional aggregates (one
-    # partial-agged pass), holistic ordered-set aggregates (per-group
-    # sort BY CONTRACT — the row shows the documented O(group) shape),
-    # and the IGNORE NULLS window family (one sort per partition
-    # serving four functions; output ∝ input)
     "q62_filter_clause",
     "q63_ordered_set_aggs",
     "q64_ignore_nulls_windows",
-    # r12 third batch: native-HLL two-level union (kilobyte sketches
-    # shuffle, never values), builtin-xpath per-row JVM parse + rollup,
-    # and the all-JVM higher-order-function surface
-    "t124_hll_native_grouped",
-    "t125_xpath_extract",
     "q65_hof_breadth",
-    # r12 fourth batch: the Arrow-UDF seam (per-row Python IS the
-    # graded surface, Arrow-batched by construction) and dynamic-gap
-    # session windows (one sort per user partition + merge)
     "t126_arrow_python_udf",
     "t127_session_window_dynamic_gap",
-    # r12: inlined SQL UDF + session var + named param — one
-    # partial-agged scan, the row exists to SHOW zero eval boundary
     "q66_sql_programmability",
-    # r13: cogrouped applyInPandas (FlatMapCoGroupsInPandas) — both
-    # sides shuffle ONCE on the key's hash bucket, one pandas call per
-    # bucket with merge_asof(by=key) vectorizing the per-key align;
-    # the Python seam is the graded surface (t126's rationale)
     "t129_cogroup_asof",
-    # r13 session 3: the try_* family (one filtered map-only scan —
-    # output ∝ selected rows), boolean/bitwise aggregates and the
-    # width_bucket histogram (both partial-agged single scans with
-    # O(groups) exchange), bitmap exact-distinct (fixed 4KB pages
-    # shuffle, never raw values — ratio should track t124's), and the
-    # one-aggregate-row OLS fit (t59's shape: scan-linear, exchange
-    # is 11 decimal moments)
     "q68_try_arithmetic",
     "q69_boolean_bitwise_aggs",
     "q70_width_bucket_histogram",
     "t132_bitmap_distinct",
     "t133_linear_fit",
-    # r13 session 3: DF-API lateralJoin with a LARGE driving side —
-    # decorrelated to WindowGroupLimit top-k + equi-join, so the
-    # expected shape is one bounded window pass (output ∝ orders)
     "q71_lateral_join_api",
-    # r13 session 3: observe() metrics riding one noop-write action —
-    # a single corpus scan, metrics exchange is O(1)
     "t134_observe_metrics",
-    # r13 session 3: the native sketch pair — per-key KLL partials
-    # merged two-level (kilobyte sketches shuffle, never values) and
-    # filtered theta partials + set operators (same bound)
     "t135_kll_quantiles_native",
     "t136_theta_set_distinct",
-    # r13 session 3: _metadata file provenance — one scan + 4-group
-    # partial agg; the metadata column costs no extra I/O
     "t137_file_provenance",
 ]
 

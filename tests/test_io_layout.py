@@ -130,6 +130,45 @@ def test_read_json_lenient_quarantines_corrupt(spark, tmp_path):
     assert "_corrupt_record" not in clean.columns
 
 
+def test_read_csv_lenient_quarantines_corrupt(spark, tmp_path):
+    """CSV sibling of the JSON case: a headerless file with an
+    unparseable id planted on every 53rd line reads back with every
+    clean line parsed and every corrupted line quarantined."""
+    from datasheet_etl_spark.io import load_table, read_csv_lenient, split_corrupt
+
+    e = load_table(spark, SF_SMOKE, "events").select("event_id", "user_id", "event_type")
+    planted = F.col("event_id") % 53 == 0
+    first = F.when(planted, F.concat(F.lit("X"), "event_id")).otherwise(
+        F.col("event_id").cast("string")
+    )
+    path = str(tmp_path / "csv")
+    e.select(F.concat_ws(",", first, "user_id", "event_type")).write.text(path)
+    df = read_csv_lenient(spark, path, "event_id bigint, user_id bigint, event_type string")
+    clean, bad = split_corrupt(df)
+    assert sorted(clean.collect()) == sorted(e.filter(~planted).collect())
+    assert bad.count() == e.filter(planted).count() > 0
+
+
+def test_z_order_key_matches_sql(spark):
+    """``z_order_key`` and its DuckDB twin ``zorder_sql`` interleave the
+    same bits."""
+    from datasheet_etl_spark.io import load_table, z_order_key, zorder_sql
+
+    from tests.conftest import SF_ORACLE
+    from tests.oracle_harness import compare
+
+    li = load_table(spark, SF_ORACLE, "lineitem").filter(F.col("l_orderkey") < 1000)
+    df = li.select(
+        "l_orderkey",
+        "l_linenumber",
+        z_order_key(F.col("l_partkey"), F.col("l_suppkey")).alias("zkey"),
+    )
+    zkey = zorder_sql("l_partkey", "l_suppkey", 16)
+    sql = f"SELECT l_orderkey, l_linenumber, {zkey} AS zkey FROM lineitem WHERE l_orderkey < 1000"
+    ok, msg = compare(df, sql, SF_ORACLE)
+    assert ok, msg
+
+
 def test_read_parquet_evolved_merges_schema(spark, tmp_path):
     """mergeSchema read spans two vintages: the old shard's missing
     column reads as NULL, and both shards' rows appear."""

@@ -31,195 +31,18 @@ def test_query_matches_oracle(spark, name):
 
 
 def test_graded_window_contract():
-    """The driver grades the first 50 registry entries. Pin that the
-    window is exactly the explicit WINDOW list, every entry oracled
-    with NO rows-only exceptions (r12: every driver row can show
-    hash_match true), that the r15 rotation landed (ten never-graded
-    oracled entries newly in-window per the written pre-plan +
-    amendment), that recent rotations stay covered, and that demotion
-    never drops oracle coverage."""
-    from datasheet_etl_spark.plans import (
-        DEMOTED,
-        WINDOW,
-        WINDOW_ROWS_ONLY,
-        oracles,
-        registry,
-    )
+    """Only the first 50 registry entries are graded: pin that the
+    window is exactly the explicit WINDOW list, every slot oracled, and
+    that every SURVEY §2.9 query Q01-Q34 keeps an oracled entry
+    wherever it sits in the order."""
+    from datasheet_etl_spark.plans import WINDOW, oracles, registry
 
     first50 = list(registry())[:50]
     assert first50 == list(WINDOW)
     ora = oracles()
-    # r12 (VERDICT r11 "what's wrong" #1): EVERY window slot is
-    # oracled — a slot that can never hash-match is a slot the driver
-    # cannot certify. t102 (zlib, no SQL oracle possible) rotated back
-    # out; its exact python-zlib parity pytest remains its grade.
-    assert WINDOW_ROWS_ONLY == frozenset()
     assert all(k in ora for k in first50)
-    # r15 rotation (VERDICT r14 #2, the written COVERAGE pre-plan +
-    # amendment): ten never-driver-graded oracled entries in. Pair
-    # swaps (the t122←t116 precedent): t115→t143 (t143 drives t115's
-    # OWN staged-manifest machinery through the harder per-batch
-    # streaming commit), t125→t141 + t142 (typed from_xml parse ⊃
-    # five xpath walks over the same synthesized XML; the conditional
-    # swap unblocked by BENCH_r14's 1.25s warm confirmation),
-    # q38→q75 (q75 CONTAINS q38's variant_get path and adds try_*
-    # leniency / variant_explode / schema_of_variant). Idiom-superset
-    # demotions: t16 into t144/t138/t01 (native in-plan recursion is
-    # the frontier-iteration superset), t77 into t121b/t105 (+t143
-    # for the manifest commit), t73 into t121b/t145 + the native
-    # mergeable-sketch family, t25 into t136/t132 (theta IS the KMV
-    # generalization, below-nominal exact), t67 into t141/t142 +
-    # t91/t97 + q59, q43 into t32/t96 + t137/t114 + q52, t12 into
-    # t131/t129 + t141/t142. Anchors re-pointed in the same step:
-    # t22/t23/q26 (q38→q75), q05/q01/q44/t110/q53 (q43), q32/t68/t75
-    # (t77→t121b), t17/q39/t23 (t16→t144/t138), t55/t83 (t25→t136/
-    # t132), q11/q29/t106/t110/q53/q44 (t73), t76/t79/t104
-    # (t115→t143), t110/q50 (t125→t141/t142).
-    r15_entries = {
-        "t138_recursive_hierarchy",
-        "t144_khop_reachability",
-        "t145_streaming_native_topk",
-        "t143_python_stream_sink",
-        "t139_approx_top_k_native",
-        "t141_from_xml_native",
-        "t142_xml_at_rest",
-        "t140_utf8_validity_gate",
-        "q75_variant_lenient_json",
-        "q74_execute_immediate",
-    }
-    assert r15_entries <= set(first50)
-    # r14 rotation (VERDICT r13 #1, the written COVERAGE pre-plan):
-    # ten never-driver-graded oracled entries in. Pair swaps (the
-    # t122←t116 precedent): t88→t135 (native KLL twin of the
-    # hand-built mergeable histogram, below-k exact), t123→t128 (the
-    # SAME statestore reader on the harder join-state class),
-    # t124→t136 (same native-Datasketches two-level shape, theta adds
-    # set algebra), q66→q72 (session variables inside the richer
-    # scripting surface), q55→q73 (q73 CONTAINS q55's collated GROUP
-    # BY and adds the collated equality join). Idiom-superset
-    # demotions: t90 into t133 (decimal moments) + t98/t99 (JVM array
-    # HOFs), q60's Expand into q52 + exact-distinct into t132/t01,
-    # q63's exact-quantile contract into t135, q64's IGNORE NULLS
-    # carry into t74 (q17's standing basis), t126's Arrow seam into
-    # t131/t129. Anchors q19/t59/t69/t82/t76/t79 re-pointed in the
-    # same step. t78/q61/q62/q65 stay swept with refreshed notes in
-    # COVERAGE.md beside the ORACLE_SWEEP artifact (VERDICT r13 #6).
-    r14_entries = {
-        "t135_kll_quantiles_native",
-        "t136_theta_set_distinct",
-        "t137_file_provenance",
-        "t132_bitmap_distinct",
-        "t128_join_state_read",
-        "t133_linear_fit",
-        "t129_cogroup_asof",
-        "t131_arrow_native_grouped",
-        "q72_sql_scripting",
-        "q73_collated_group_join",
-    }
-    assert r14_entries <= set(first50)
-    # r13 rotation survivors (t123/t124/t126/q60/q63/q64/q66 demoted
-    # r14 after their r13 green driver grade — the r8-r11 precedent:
-    # 1-3 green grades + an in-window superset; rationales in DEMOTED)
-    r13_entries = {
-        # r15: t125 demoted into t141/t142 after two green driver
-        # grades + the BENCH_r14 warm-fix confirmation
-        "t63b_mmr_pool",
-        "t127_session_window_dynamic_gap",
-    }
-    assert r13_entries <= set(first50)
-    # r12 rotation survivors (q56/q57/t118/t120 demoted r13, q55
-    # demoted r14 into q73 — the r8-r11 precedent: 1-3 green grades +
-    # an in-window superset; rationales in DEMOTED)
-    r12_entries = {
-        "q54_timezone_parity",
-        "t119_stream_join_then_agg",
-        # in-round pair swaps (same-oracle strict supersets): q58's
-        # OFFSET page content is graded row-identically through q59's
-        # keyset plan (equality pytest-pinned), t121's flat-mode
-        # derivation through t121b's bucketed commit path (same oracle
-        # as t120) — the swapped-out pair members stay swept
-        "q59_pagination_keyset",
-        "t121b_streaming_scd2_bucketed",
-    }
-    assert r12_entries <= set(first50)
-    # r11 rotation survivors (t102 rotated out r12 per the verdict;
-    # t103 demoted into t105, t104 into t89/t114/t115, t106 into
-    # t107/t73, q48 into t95/t105; r13 demoted q49/q50 — rationales
-    # in DEMOTED)
-    r11_entries = {
-        "q51_null_semantics",
-    }
-    assert r11_entries <= set(first50)
-    # r11 in-round promotions (flagship new work is driver-graded
-    # immediately; t100 demoted into t106/t107, t55 into t25/t14/t81,
-    # q46 into q51; r13 demoted t108 into t127/t119/t117, t109 into
-    # t96/t97, t112 into t114)
-    r11_promoted = {
-        "t107_frequent_ngrams_hashed",
-        # r15: t25 demoted into t136/t132 (the native below-k-exact
-        # route) after 4 green grades; t55's anchor re-pointed
-        # second in-round batch: newest work driver-graded immediately
-        # (r12 demoted t110 into q50→t125/q43/t73, t111 into t97, q53
-        # into q43/t73/q52 — idiom-superset rationales in DEMOTED)
-        "q52_grouping_sets",
-        "t113_python_stream_source",
-        "t114_python_source_pushdown",
-        # r15: t115 demoted into t143 (same machinery, harder
-        # per-batch streaming commit protocol)
-        # third/fourth batch: strict-superset swaps — t122 runs t41's/
-        # t116's own stream_interval_join in full-outer form (inner ⊂
-        # LEFT JOIN ⊂ FULL JOIN oracle rows), t117 grades t14's q18
-        # oracle through the EventTimeTimeout lifecycle
-        "t122_streaming_full_outer_join",
-        "t117_stateful_timeout_sessions",
-    }
-    assert r11_promoted <= set(first50)
-    # r10 rotation survivors (t100 demoted r11 — its output contract
-    # stays graded through its OWN oracle via t106 and t107)
-    r10_entries = {
-        "t95_substring_span_excision",
-        "t96_dsir_importance_select",
-        "t97_training_shard_plan",
-        "t98_incremental_substring_dedup",
-        "t99_streaming_gram_index",
-        # r15: t12 demoted into t131/t129 + t141/t142 after 5 green
-        # grades
-        "t101_excision_impact_report",
-        "t105_streaming_quarantine_ingest",
-    }
-    assert r10_entries <= set(first50)
-    # r9 rotation: no survivors pinned — t94 demoted r11 (postings/
-    # meet/span machinery graded inside t98/t95, keep/drop rollup
-    # inside t101) and t14 demoted r11 into t117, which re-grades
-    # t14's own q18 oracle through the strictly-harder
-    # EventTimeTimeout close-once lifecycle (both after 2+ green
-    # driver grades)
-    # r8 rotation survivors (t81/t84 demoted r11 after three green
-    # driver grades; t90 demoted r14 into t133 + t98/t99 after six
-    # green grades — the same superset basis)
-    r8_entries = {
-        "t89_schema_evolution_at_rest",
-        "q47_distribution_windows",
-    }
-    assert r8_entries <= set(first50)
-    # entries CREATED in round 7: >= 3 must still be driver-graded
-    # (was >= 6 through r11, >= 5 through r13; r14 demoted t88 into
-    # t135 — its native mergeable-quantile twin — and t90 into
-    # t133/t98/t99, both after 6+ green grades, both in-window
-    # supersets)
-    r7_created = {
-        "t79_weighted_median_udaf", "t80_leakage_safe_split",
-        "t81_streaming_dedup_watermark", "t82_mixture_waterfill",
-        "t83_ngram_novelty", "t84_curation_audit",
-        "t85_contamination_report", "t86_csv_lenient_ingest",
-        "t88_mergeable_quantile_hist", "t89_schema_evolution_at_rest",
-        "t90_feature_scale", "t91_weighted_sample",
-        "q47_distribution_windows",
-    }
-    assert len(r7_created & set(first50)) >= 3
-    # demotion is a WINDOW decision, never an oracle decision: every
-    # demoted entry keeps its DuckDB oracle and stays in this sweep
-    assert all(k in ora for k in DEMOTED)
+    contract = {k[:3] for k in ora if k[0] == "q" and int(k[1:3]) <= 34}
+    assert contract == {f"q{i:02d}" for i in range(1, 35)}
 
 
 def test_no_hugeint_oracle_columns():

@@ -443,13 +443,22 @@ def test_q46_nullsafe_join_is_hash_join(spark):
 
 
 def test_t73_merge_never_rereads_corpus(spark):
-    """Incremental rollup merge: the merged plan reads each shard ONCE
-    (two scans total — the partials), with map-side partial aggregation
-    below the merge; and the merge aggregate itself operates on
-    kilobyte-scale grouped rows, not corpus rows."""
-    from datasheet_etl_spark.plans.sql_extra import t73_incremental_rollup
+    """Incremental rollup merge (``partial_rollup`` of the existing
+    corpus + the new shard, then ``merge_rollups``): the merged plan
+    reads each shard ONCE (two scans total — the partials), with
+    map-side partial aggregation below the merge; and the merge
+    aggregate itself operates on kilobyte-scale grouped rows, not
+    corpus rows."""
+    from datasheet_etl_spark.io import load_table
+    from datasheet_etl_spark.operators.relational import merge_rollups, partial_rollup
 
-    plan = _plan(t73_incremental_rollup(spark, SF_SMOKE))
+    docs = load_table(spark, SF_SMOKE, "documents")
+    keys = ["source", "lang"]
+    parts = [
+        partial_rollup(docs.filter(cond), keys, "n_chars")
+        for cond in (F.col("doc_id") < 250, F.col("doc_id") >= 250)
+    ]
+    plan = _plan(merge_rollups(parts, keys))
     assert plan.count("FileScan") == 2, plan[:800]
     assert "HashAggregate" in plan
 
@@ -484,12 +493,23 @@ def test_t79_grouped_agg_udaf_single_shuffle(spark):
 
 
 def test_t80_leakage_split_one_window_shuffle_map_side_case(spark):
-    """t80: ONE hash exchange (the fingerprint window that finds each
-    group's representative); the split assignment itself is a map-side
-    CASE over md5 — no join, no second aggregate shuffle."""
-    from datasheet_etl_spark.plans.sql_extra import t80_leakage_safe_split
+    """Leakage-safe split: ONE hash exchange (the fingerprint window
+    that finds each group's representative); the split assignment
+    itself is a map-side CASE over md5 — no join, no second aggregate
+    shuffle."""
+    from pyspark.sql import Window
 
-    df = t80_leakage_safe_split(spark, SF_SMOKE)
+    from datasheet_etl_spark.io import load_table
+    from datasheet_etl_spark.operators.sampling import assign_split
+    from datasheet_etl_spark.operators.text import fingerprint
+
+    docs = load_table(spark, SF_SMOKE, "documents").select(
+        "doc_id", fingerprint(F.col("text")).alias("fp")
+    )
+    grouped = docs.select(
+        "doc_id", F.min("doc_id").over(Window.partitionBy("fp")).alias("group_rep")
+    )
+    df = assign_split(grouped, "group_rep", {"train": 0.8, "val": 0.1, "test": 0.1})
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan[:800]
     assert "Join" not in plan, plan[:800]

@@ -1,4 +1,5 @@
-"""Argument handling of ``scripts/profile_entry.py`` (no Spark needed)."""
+"""Argument handling and rep ordering of ``scripts/profile_entry.py``
+(no Spark needed)."""
 
 from __future__ import annotations
 
@@ -34,3 +35,28 @@ def test_key_value_without_key_is_an_argparse_error(profile_entry, capsys, flag,
         profile_entry.parse_args(["t01", flag, bad])
     assert exc.value.code == 2
     assert "expected KEY=VALUE" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("reps", [1, 3])
+def test_explain_is_built_after_rep0_executes(profile_entry, reps):
+    """rep0 must be the entry's first build and execution: the explain
+    dump rebuilds the entry only after rep0's timed run."""
+    builds = []
+    log = []
+
+    def entry():  # fake registry entry
+        builds.append(len(builds))
+        return f"df{len(builds)}"
+
+    def run(rep):
+        log.append((f"rep{rep}", entry(), len(builds)))
+        return rep
+
+    def explain():
+        log.append(("explain", entry(), len(builds)))
+
+    assert profile_entry.run_reps(run, reps, explain) == list(range(reps))
+    assert log[0] == ("rep0", "df1", 1)
+    assert log[1][0] == "explain"
+    assert [e[0] for e in log if e[0] != "explain"] == [f"rep{i}" for i in range(reps)]
+    assert len(builds) == reps + 1

@@ -460,15 +460,21 @@ def test_assign_split_deterministic_and_partition_independent(spark):
 
 
 def test_leakage_safe_split_keeps_groups_together(spark):
-    """t80's contract: (a) every duplicate-content group lands entirely
-    in ONE split; (b) the check is non-vacuous — multi-doc groups exist
-    in the corpus AND at least one would straddle splits under t52's
-    per-doc assignment; (c) split fractions still roughly hold over
-    GROUPS (the assignment unit)."""
+    """Group-consistent split (``assign_split`` keyed on each
+    fingerprint group's min doc_id): (a) every duplicate-content group
+    lands entirely in ONE split; (b) the check is non-vacuous —
+    multi-doc groups exist in the corpus AND at least one would
+    straddle splits under t52's per-doc assignment; (c) split
+    fractions still roughly hold over GROUPS (the assignment unit)."""
     from datasheet_etl_spark.operators.text import fingerprint
-    from datasheet_etl_spark.plans.sql_extra import t80_leakage_safe_split
 
-    out = t80_leakage_safe_split(spark, SF_SMOKE)
+    docs = load_table(spark, SF_SMOKE, "documents").select(
+        "doc_id", fingerprint(F.col("text")).alias("fp")
+    )
+    grouped = docs.select(
+        "doc_id", F.min("doc_id").over(Window.partitionBy("fp")).alias("group_rep")
+    )
+    out = assign_split(grouped, "group_rep", {"train": 0.8, "val": 0.1, "test": 0.1})
     per_group = out.groupBy("group_rep").agg(
         F.countDistinct("split").alias("n_splits"), F.count("*").alias("n")
     )
@@ -476,9 +482,6 @@ def test_leakage_safe_split_keeps_groups_together(spark):
     assert per_group.filter("n > 1").count() > 0  # multi-doc groups exist
 
     # naive per-doc assignment straddles at least one of those groups
-    docs = load_table(spark, SF_SMOKE, "documents").select(
-        "doc_id", fingerprint(F.col("text")).alias("fp")
-    )
     naive = assign_split(docs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
     straddle = (
         naive.groupBy("fp")

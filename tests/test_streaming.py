@@ -2873,6 +2873,24 @@ def test_scd2_bucketed_rewrites_only_touched_buckets(spark, tmp_path):
     }
 
 
+def test_scd2_history_matches_lead_window_sql(spark):
+    """Batch ``scd2_history`` over the events changelog equals the
+    lead-window SQL the streaming SCD2 sink is graded against."""
+    from datasheet_etl_spark.io import load_table
+    from datasheet_etl_spark.operators.relational import scd2_history
+    from datasheet_etl_spark.plans.streaming_entries import _SCD2_ORACLE, _scd2_changes
+
+    from tests.conftest import SF_ORACLE
+    from tests.oracle_harness import compare
+
+    changes = _scd2_changes(spark, load_table(spark, SF_ORACLE, "events"))
+    out = scd2_history(changes, ["user_id"], "event_id", ["value"]).select(
+        "user_id", "value", "valid_from", "valid_to", "is_current"
+    )
+    ok, msg = compare(out, _SCD2_ORACLE, SF_ORACLE)
+    assert ok, msg
+
+
 def test_scd2_as_of_rewinds_to_each_moment(spark, tmp_path):
     """scd2_as_of over a sink-built history equals the latest-rows
     table rewound to each sequence: before a key's first change it is

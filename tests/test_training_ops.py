@@ -18,12 +18,24 @@ def docs(spark):
 
 
 def _exact_pairs(spark):
-    from datasheet_etl_spark.plans.training import t04_dedup_ngram_jaccard
+    """Exact bigram-Jaccard >= 0.5 pairs among the first 200 documents."""
+    from datasheet_etl_spark.functions import tokens
+    from datasheet_etl_spark.io import load_table
+    from datasheet_etl_spark.operators.dedup import exact_jaccard_pairs, word_shingles
 
-    return {
-        (r["id_a"], r["id_b"])
-        for r in t04_dedup_ngram_jaccard(spark, SF_ORACLE).collect()
-    }
+    docs = load_table(spark, SF_ORACLE, "documents").filter(F.col("doc_id") < 200)
+    sh = docs.select("doc_id", word_shingles(tokens(F.col("text")), 2).alias("sh"))
+    return {(r["id_a"], r["id_b"]) for r in exact_jaccard_pairs(sh, 0.5).collect()}
+
+
+def _brute_top10(spark):
+    """Exact top-10 cosine neighbours of the first ten vectors."""
+    from datasheet_etl_spark.io import load_table
+    from datasheet_etl_spark.operators.similarity import brute_force_topk
+
+    emb = load_table(spark, SF_ORACLE, "embeddings")
+    out = brute_force_topk(emb, emb.filter(F.col("vec_id") < 10), k=10)
+    return out.select("probe_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim")).collect()
 
 
 def test_minhash_finds_exact_near_dups(spark):
@@ -90,9 +102,9 @@ def test_simhash_finds_exact_near_dups(spark):
 def test_ivf_recall_vs_bruteforce(spark):
     """IVF with nprobe=2 of 10 cells: recall@10 must beat the ~2/10
     random-cell floor by a wide margin on rank-1 neighbors."""
-    from datasheet_etl_spark.plans.training import t06_ann_bruteforce, t07_ann_ivf
+    from datasheet_etl_spark.plans.training import t07_ann_ivf
 
-    brute = t06_ann_bruteforce(spark, SF_ORACLE).collect()
+    brute = _brute_top10(spark)
     ivf = t07_ann_ivf(spark, SF_ORACLE).collect()
     brute_top = {(r["probe_id"], r["vec_id"]) for r in brute}
     ivf_top = {(r["probe_id"], r["vec_id"]) for r in ivf}
@@ -110,9 +122,9 @@ def test_ivf_kmeans_recall_and_exactness(spark):
     """Trained-quantizer IVF: recall@10 must beat the nprobe/k_clusters
     random floor decisively, and every returned similarity must equal
     the brute-force cosine bit-for-bit (search is exact within cells)."""
-    from datasheet_etl_spark.plans.training import t06_ann_bruteforce, t20_ann_ivf_kmeans
+    from datasheet_etl_spark.plans.training import t20_ann_ivf_kmeans
 
-    brute = t06_ann_bruteforce(spark, SF_ORACLE).collect()
+    brute = _brute_top10(spark)
     ivf = t20_ann_ivf_kmeans(spark, SF_ORACLE).collect()
     brute_top = {(r["probe_id"], r["vec_id"]) for r in brute}
     ivf_top = {(r["probe_id"], r["vec_id"]) for r in ivf}
@@ -280,14 +292,89 @@ def test_multimodal_plumbing(spark, docs):
         assert max(r["out_w"], r["out_h"]) <= 224
 
 
-def test_langid_accuracy_on_en(spark):
+def test_langid_accuracy_on_en(docs):
     """The heuristic must at least nail documents whose text carries
     English markers — sanity that scoring isn't inverted."""
-    from datasheet_etl_spark.plans.training import t08_text_langid
+    from datasheet_etl_spark.functions import tokens
+    from datasheet_etl_spark.operators.text import detect_language
 
-    rows = t08_text_langid(spark, SF_ORACLE).collect()
+    rows = docs.select(detect_language(tokens(F.col("text"))).alias("lang_pred")).collect()
     preds = {r["lang_pred"] for r in rows}
     assert preds <= {"en", "de", "es", "fr", "zh", "und"}
+
+
+def test_quality_features_match_sql(docs):
+    """Every ``quality_features`` ratio and the composite
+    ``quality_score`` equal the same features recomputed in DuckDB
+    (weights are multiples of 0.25, so the score is fp-stable)."""
+    from datasheet_etl_spark.operators.text import quality_features, quality_score
+
+    from tests.oracle_harness import compare
+
+    f = quality_features(F.col("text"))
+    df = docs.select(
+        "doc_id",
+        f["n_chars"].alias("n_chars"),
+        f["n_tokens"].alias("n_tokens"),
+        F.round(f["punct_ratio"], 6).alias("punct_ratio"),
+        f["stopword_hits"].alias("stop_hits"),
+        F.round(f["avg_token_len"], 6).alias("avg_token_len"),
+        quality_score(F.col("text")).alias("quality"),
+    )
+    sql = """
+    WITH t AS (
+      SELECT doc_id, text,
+             list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS toks
+      FROM documents
+    ), f AS (
+      SELECT doc_id, length(text) AS n_chars, len(toks) AS n_tokens,
+             length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS n_punct,
+             len(list_intersect(list_distinct(toks),
+                 ['the','and','of','to','in','is','that','for'])) AS stop_hits,
+             CASE WHEN len(toks) > 0
+                  THEN length(array_to_string(toks, '')) / len(toks)
+                  ELSE 0.0 END AS avg_token_len
+      FROM t
+    ), r AS (
+      SELECT *, CASE WHEN n_chars > 0 THEN n_punct / n_chars ELSE 0.0 END AS pr FROM f
+    )
+    SELECT doc_id, n_chars, n_tokens, round(pr, 6) AS punct_ratio, stop_hits,
+           round(avg_token_len, 6) AS avg_token_len,
+           CAST(CASE WHEN n_tokens >= 20 THEN 0.25 ELSE 0.0 END
+            + CASE WHEN avg_token_len >= 3 AND avg_token_len <= 10 THEN 0.25 ELSE 0.0 END
+            + CASE WHEN stop_hits >= 1 THEN 0.25 ELSE 0.0 END
+            + CASE WHEN pr <= 0.1 THEN 0.25 ELSE 0.0 END AS DOUBLE) AS quality
+    FROM r
+    """
+    ok, msg = compare(df, sql, SF_ORACLE)
+    assert ok, msg
+
+
+def test_token_counts_match_sql(docs):
+    """Whitespace and BPE-ish subword counts equal DuckDB's split /
+    regexp_extract_all over the same texts."""
+    from datasheet_etl_spark.operators.text import (
+        bpe_ish_token_count,
+        whitespace_token_count,
+    )
+
+    from tests.oracle_harness import compare
+
+    df = docs.select(
+        "doc_id",
+        whitespace_token_count(F.col("text")).alias("ws_tokens"),
+        bpe_ish_token_count(F.col("text")).alias("bpe_ish_tokens"),
+    )
+    sql = r"""
+    SELECT doc_id,
+           len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> ''))
+             AS ws_tokens,
+           len(regexp_extract_all(text, '[a-z]+|[A-Z][a-z]*|[0-9]|[^A-Za-z0-9\s]'))
+             AS bpe_ish_tokens
+    FROM documents
+    """
+    ok, msg = compare(df, sql, SF_ORACLE)
+    assert ok, msg
 
 
 def test_asof_join_semantics(spark):
