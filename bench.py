@@ -1,12 +1,21 @@
 #!/usr/bin/env python
-"""Headline benchmark: runs the declared query inventory at
+"""Headline benchmark: runs every registry entry once at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-``value`` is total wall-clock over all benched queries (each executed to
-completion via a count/collect action).
+Each entry is built and executed to completion (``count()``) exactly
+once, after a warm-up of the session's one-time costs; nothing is
+retried. ``queries`` holds those single-shot walls and ``value`` is the
+wall of the whole timed loop. ``BENCH_TIMES.json`` records the same
+walls plus, per entry, the process-tree CPU (this process, the JVM and
+its Python workers) scaled by the share of busy host time the
+hypervisor stole meanwhile (``env.cpu_s_per_entry``). That figure
+spreads far less between runs on a shared host than wall does, so it is
+the number to compare across runs (``scripts/bench_diff.py``). Entries whose
+window saw more than 0.5% steal are listed in
+``env.steal_frac_per_entry``.
 """
 
 from __future__ import annotations
@@ -16,27 +25,98 @@ import os
 import sys
 import time
 
+from perfbench.procstat import host_steal_busy, steal_share, tree_cpu_s
 
-def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # 16g is ample for sf0.1 and measurably faster than a huge heap:
-    # with 48g, G1 ergonomics tax every short task (~2-3x on sub-second
-    # stages, measured on the minhash pipeline)
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+METRIC = "query_inventory_wall_sec"
+# an entry whose window saw more steal than this is named in the record
+STEAL_NOTE = 0.005
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from datasheet_etl_spark.plans import registry
-    from datasheet_etl_spark.session import get_session
 
-    spark = get_session(app_name="datasheet_etl_spark_bench", shuffle_partitions=cpus)
+def time_entry(run) -> dict:
+    """Call ``run()`` once. Returns its result as ``rows`` with the wall,
+    the process-tree CPU scaled down by the host's steal share (as
+    ``perfbench/run.py`` scales it) and that share."""
+    cpu0, stolen0, t0 = tree_cpu_s(), host_steal_busy(), time.perf_counter()
+    rows = run()
+    wall = time.perf_counter() - t0
+    steal = steal_share(stolen0)
+    cpu = (tree_cpu_s() - cpu0) * (1 - steal)
+    return {
+        "wall": round(wall, 3),
+        "cpu_s": round(cpu, 3),
+        "steal": round(steal, 3),
+        "rows": rows,
+    }
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    reg = registry()
-    # session/JIT/page-cache warmup so the first timed queries measure
-    # steady-state query speed, not JVM startup + cold parquet footers
+
+def run_entries(entries: dict, timer, reset) -> tuple[dict, dict]:
+    """Time each of ``entries`` (name → zero-argument callable) once with
+    ``timer`` and call ``reset()`` after each. One broken entry must not
+    cost the run its other numbers: its error is recorded and the loop
+    goes on. Returns (records, errors)."""
+    records: dict[str, dict] = {}
+    errors: dict[str, str] = {}
+    for name, run in entries.items():
+        try:
+            rec = records[name] = timer(run)
+            print(
+                f"# {name}: {rec['wall']:.3f}s cpu={rec['cpu_s']:.3f}s "
+                f"steal={rec['steal']:.3f} rows={rec['rows']}",
+                file=sys.stderr,
+            )
+        except Exception as exc:  # noqa: BLE001
+            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+            print(f"# {name}: ERROR {type(exc).__name__}", file=sys.stderr)
+        reset()
+    return records, errors
+
+
+def vectors(
+    total: float, sf, records: dict, errors: dict, steal_sec: float, steal_frac: float
+) -> tuple[dict, dict]:
+    """The ``BENCH_TIMES.json`` document and the stdout line of one run."""
+    queries = {k: r["wall"] for k, r in records.items()}
+    stolen = {k: r["steal"] for k, r in records.items() if r["steal"] > STEAL_NOTE}
+    env = {
+        "steal_sec": steal_sec,
+        "steal_frac": steal_frac,
+        "cpu_s_per_entry": {k: r["cpu_s"] for k, r in records.items()},
+    }
+    if stolen:
+        env["steal_frac_per_entry"] = stolen
+    times = {
+        "metric": METRIC,
+        "value": total,
+        "unit": "sec",
+        "sf": sf,
+        "queries": queries,
+        "errors": errors,
+        "env": env,
+    }
+    # the stdout line stays short enough for a tail capture: walls only,
+    # with per-entry CPU, steal and error texts left to BENCH_TIMES.json
+    line = {
+        "metric": METRIC,
+        "value": total,
+        "unit": "sec",
+        "queries": queries,
+        "sf": sf,
+        "n_queries": len(queries),
+        "n_errors": len(errors),
+        "error_entries": sorted(errors),
+        "steal_sec": steal_sec,
+        "steal_frac": steal_frac,
+        "n_entries_steal_polluted": len(stolen),
+    }
+    return times, line
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Pay the session's one-time costs before the timed loop."""
     from datasheet_etl_spark.io import load_table
 
+    # session/JIT/page-cache warmup so the first timed queries measure
+    # steady-state query speed, not JVM startup + cold parquet footers
     for warm in ("region", "lineitem", "orders", "documents", "embeddings", "events"):
         load_table(spark, sf_dir, warm).count()
     # Python-seam + streaming machinery warm: the FIRST use of each
@@ -109,7 +189,7 @@ def main() -> int:
         spark.catalog.dropTempView("_bench_warm_state")
     finally:
         shutil.rmtree(_warm_dir, ignore_errors=True)
-    # Python UDTF seam warm (r16): the FIRST UDTF execution in a JVM pays
+    # Python UDTF seam warm: the FIRST UDTF execution in a JVM pays
     # one-time infrastructure — the analyze-time Python runner (polymorphic
     # UDTFs resolve their schema in a separate Python process at plan
     # time) plus the SQL_TABLE_UDF eval worker spawn. Measured clean
@@ -150,365 +230,47 @@ def main() -> int:
         )
     finally:
         spark.catalog.dropTempView("_bench_warm_rows")
-    from datasheet_etl_spark.caching import release_caches
 
-    def cpu_ticks() -> dict[str, int] | None:
-        # host-contention audit: on an oversubscribed hypervisor, steal
-        # time (ticks the VM was runnable but not scheduled) inflates
-        # wall-clock timings through no fault of the plans being timed.
-        # Recording the delta lets a reader separate engine regressions
-        # from environment noise (observed: same-commit entry timings
-        # varying 5-20x between back-to-back runs with steal present).
-        try:
-            with open("/proc/stat") as fh:
-                parts = fh.readline().split()
-            return {
-                "user": int(parts[1]),
-                "system": int(parts[3]),
-                "idle": int(parts[4]),
-                "steal": int(parts[8]),
-            }
-        except Exception:  # noqa: BLE001
-            return None
 
-    def calib() -> float:
-        # CPU-speed calibration probe (r15 opt round): this host's
-        # contention is only PARTLY visible as steal ticks — a measured
-        # run recorded entries 8-20x their clean wall while the entry's
-        # own /proc/stat window read steal 0.007-0.016 (SMT-sibling /
-        # frequency contention is charged as normal "user" time, not
-        # steal). A fixed single-thread pure-Python spin takes constant
-        # work, so its wall directly measures how fast this vCPU
-        # currently executes; the minimum over the run approximates the
-        # uncontended speed, and an attempt whose probe runs slow was
-        # measured on a degraded CPU no matter what steal says. Min of
-        # 3 samples so a GC pause or scheduler blip cannot flag a clean
-        # window (~40 ms per entry, noise next to any timed query).
-        best = None
-        for _ in range(3):
-            t0 = time.perf_counter()
-            n = 400_000
-            while n:
-                n -= 1
-            dt = time.perf_counter() - t0
-            best = dt if best is None or dt < best else best
-        return best
+def main() -> int:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # 16g is ample for sf0.1 and measurably faster than a huge heap:
+    # with 48g, G1 ergonomics tax every short task (~2-3x on sub-second
+    # stages, measured on the minhash pipeline)
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
 
-    # Dispersion hardening (VERDICT r13 #3): this host is a shared
-    # hypervisor whose contention arrives in BURSTS — five r13 runs of
-    # identical code measured 272.6-475.2s (steal 3.1%-33.4%), and one
-    # throttled execution of one entry masqueraded as an 8.75x
-    # regression (an XML entry: 14.5s in one run vs 1.49s clean). A single-shot
-    # timing therefore cannot distinguish an engine regression from a
-    # scheduling accident. Fix: steal-gated retry — an entry whose OWN
-    # measurement window saw steal above RETRY_STEAL is re-run (up to
-    # MAX_RETRIES, bounded by the wall-clock guard below so a whole-run
-    # throttle can't blow up the wall), and the MINIMUM wall across attempts is
-    # recorded: contention only ever ADDS wall-clock, so min is the
-    # estimator closest to the uncontended cost. Every retry is
-    # recorded in env.bench_retries (attempt walls + steal fracs), so
-    # the artifact shows exactly which numbers were re-measured.
-    retry_steal = float(os.environ.get("SPARK_GRAFT_BENCH_RETRY_STEAL", "0.02"))
-    max_retries = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_RETRIES", "2"))
-    # r15 (VERDICT r14 #3): the fixed global retry COUNT budget (40)
-    # saturated on the r14 driver run (9.9% steal), leaving 97 entries
-    # polluted because the budget ran out, not because contention
-    # persisted. The bound is now wall-clock, scaling with observed
-    # contention: retries are allowed while the cumulative retry wall
-    # stays under RETRY_WALL_FRAC of the elapsed run wall (default 0.5
-    # — a fully-contended run costs at most ~1.5x its clean wall), and
-    # an end-of-run re-pass sweeps every still-polluted entry once
-    # more under the same guard (a burst that covered an entry's slot
-    # has often passed by the end of the run). Pollution left in the
-    # artifact therefore means "the host was contended every time we
-    # looked", never "we stopped looking"; env.retry_guard_hits says
-    # whether the wall guard ever stopped a retry.
-    retry_wall_frac = float(
-        os.environ.get("SPARK_GRAFT_BENCH_RETRY_WALL_FRAC", "0.5")
-    )
-    # calibration gate (r15 opt round, see calib()): an attempt whose
-    # calibration probe ran > this factor slower than the run's fastest
-    # probe was measured on a degraded CPU and is retried exactly like
-    # a steal-flagged attempt. 1.3 sits far above probe noise (clean
-    # same-run samples vary < 5%) and far below the observed pollution
-    # (probe ratios 2-8x during the bursts that motivated it).
-    calib_gate = float(os.environ.get("SPARK_GRAFT_BENCH_CALIB_GATE", "1.3"))
+    from datasheet_etl_spark.caching import reset_session
+    from datasheet_etl_spark.plans import registry
+    from datasheet_etl_spark.session import get_session
 
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    entry_steal: dict[str, float] = {}
-    entry_calib: dict[str, float] = {}
-    retries: dict[str, list[dict[str, float]]] = {}
-    calib_min = calib()
-    ticks0 = cpu_ticks()
+    spark = get_session(app_name="datasheet_etl_spark_bench", shuffle_partitions=cpus)
+    reg = registry()
+    warm_up(spark, sf_dir)
+
+    entries = {
+        name: (lambda fn=reg[name]: fn(spark, sf_dir).count()) for name in sorted(reg)
+    }
+    stolen0 = host_steal_busy()
     t_all = time.perf_counter()
-    retry_wall_spent = 0.0
-    retry_guard_hits = 0
-
-    def retry_allowed() -> bool:
-        elapsed = time.perf_counter() - t_all
-        return retry_wall_spent < retry_wall_frac * max(elapsed, 1.0)
-
-    def cleanup() -> None:
-        # per-query isolation: operators may persist() intermediates and
-        # streaming entries register memory-sink views; left in place they
-        # pile up executor memory and skew later timings with GC pressure
-        release_caches()
-        spark.catalog.clearCache()
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                spark.catalog.dropTempView(t.name)
-
-    def attempt(name: str) -> tuple[float, int, float | None, float]:
-        """One timed execution; returns (wall, rows, steal_frac, calib_sec)."""
-        nonlocal calib_min
-        e0 = cpu_ticks()
-        t0 = time.perf_counter()
-        n = reg[name](spark, sf_dir).count()
-        wall = round(time.perf_counter() - t0, 3)
-        e1 = cpu_ticks()
-        frac = None
-        if e0 and e1:
-            busy = sum(e1[k] - e0[k] for k in ("user", "system", "steal"))
-            if busy > 0:
-                frac = (e1["steal"] - e0["steal"]) / busy
-        cal = calib()
-        calib_min = min(calib_min, cal)
-        return wall, n, frac, cal
-
-    def polluted(frac: float | None, cal: float) -> bool:
-        return (frac is not None and frac > retry_steal) or (
-            cal > calib_gate * calib_min
-        )
-
-    for name in sorted(reg):
-        # one broken entry must not destroy the whole run's perf signal:
-        # record the error, keep timing the rest, always emit the JSON line
-        try:
-            wall, n, frac, cal = attempt(name)
-            attempts = [
-                {
-                    "wall": wall,
-                    "steal": round(frac or 0.0, 3),
-                    "calib_ms": round(cal * 1000, 1),
-                }
-            ]
-            while polluted(frac, cal) and len(attempts) <= max_retries:
-                if not retry_allowed():
-                    retry_guard_hits += 1
-                    break
-                cleanup()
-                # a FAILED retry must not discard the successful
-                # measurement already in hand (review-found r14: an
-                # executor hiccup under the very contention burst that
-                # triggered the retry would otherwise convert a valid
-                # first-attempt wall into a spurious bench error)
-                try:
-                    wall2, n, frac, cal = attempt(name)
-                except Exception as exc:  # noqa: BLE001
-                    print(
-                        f"# {name}: retry failed "
-                        f"({type(exc).__name__}), keeping prior attempt",
-                        file=sys.stderr,
-                    )
-                    break
-                retry_wall_spent += wall2
-                attempts.append(
-                    {
-                        "wall": wall2,
-                        "steal": round(frac or 0.0, 3),
-                        "calib_ms": round(cal * 1000, 1),
-                    }
-                )
-                wall = min(wall, wall2)
-            timings[name] = wall
-            if len(attempts) > 1:
-                retries[name] = attempts
-            # per-entry steal attribution (VERDICT r8 #7): a run-level
-            # steal number can't say WHICH entry's timing it polluted —
-            # e.g. r8's 6.1% made every sub-second diff ambiguous.
-            # One /proc/stat read per entry pins the contention to the
-            # entries that ran under it, so a cross-round per-entry
-            # diff can discard exactly the polluted measurements. The
-            # annotated frac is the one from the RECORDED (fastest)
-            # attempt's window.
-            best = min(attempts, key=lambda a: a["wall"])
-            if len(attempts) > 1:
-                # mark which attempt was kept: "recorded": 1 on a LATER
-                # attempt means the recorded number came from a WARM
-                # re-run — one-time work attempt 1 paid (signature-cached
-                # staging builds, JIT) was skipped, so retried entries
-                # are measured best-of-N-warm while single-shot entries
-                # stay cold; read cross-entry comparisons of retried
-                # entries with that bias in mind (ADVICE r14 #2)
-                best["recorded"] = 1
-            if best["steal"] > 0.005:  # keep the artifact sparse
-                entry_steal[name] = best["steal"]
-            entry_calib[name] = best["calib_ms"] / 1000.0
-            print(
-                f"# {name}: {timings[name]:.3f}s rows={n}"
-                + (f" (best of {len(attempts)})" if len(attempts) > 1 else ""),
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# {name}: ERROR {type(exc).__name__}", file=sys.stderr)
-        cleanup()
-    # end-of-run re-pass (VERDICT r14 #3): every entry whose RECORDED
-    # attempt still saw steal above the retry gate gets one more look
-    # now — a contention burst that covered an entry's slot mid-run has
-    # often passed by the end. Same wall-clock guard; the re-pass can
-    # only improve (min-wall merge), and its attempts are recorded so
-    # the artifact shows pollution survived repeated looks, not a
-    # spent budget.
-    repass_done = 0
-    _flagged = {k for k, v in entry_steal.items() if v > retry_steal} | {
-        k for k, v in entry_calib.items() if v > calib_gate * calib_min
-    }
-    for name in sorted(_flagged):
-        if not retry_allowed():
-            retry_guard_hits += 1
-            break
-        try:
-            wall2, n, frac, cal = attempt(name)
-        except Exception as exc:  # noqa: BLE001
-            print(
-                f"# {name}: re-pass failed ({type(exc).__name__}),"
-                " keeping prior attempt",
-                file=sys.stderr,
-            )
-            cleanup()
-            continue
-        retry_wall_spent += wall2
-        repass_done += 1
-        rec = retries.setdefault(
-            name,
-            [
-                {
-                    "wall": timings[name],
-                    "steal": entry_steal.get(name, 0.0),
-                    "calib_ms": round(entry_calib.get(name, 0.0) * 1000, 1),
-                }
-            ],
-        )
-        rec.append(
-            {
-                "wall": wall2,
-                "steal": round(frac or 0.0, 3),
-                "calib_ms": round(cal * 1000, 1),
-                "repass": 1,
-            }
-        )
-        for a in rec:
-            a.pop("recorded", None)
-        best = min(rec, key=lambda a: a["wall"])
-        best["recorded"] = 1
-        timings[name] = best["wall"]
-        if best["steal"] > 0.005:
-            entry_steal[name] = best["steal"]
-        else:
-            entry_steal.pop(name, None)
-        entry_calib[name] = best.get("calib_ms", 0.0) / 1000.0
-        print(
-            f"# {name}: re-pass {wall2:.3f}s"
-            f" (recorded {timings[name]:.3f}s)",
-            file=sys.stderr,
-        )
-        cleanup()
+    records, errors = run_entries(entries, time_entry, lambda: reset_session(spark))
     total = round(time.perf_counter() - t_all, 3)
-    ticks1 = cpu_ticks()
-    env: dict[str, float] = {}
-    if ticks0 and ticks1:
-        hz = float(os.sysconf("SC_CLK_TCK"))
-        for k in ("user", "system", "steal"):
-            env[f"{k}_sec"] = round((ticks1[k] - ticks0[k]) / hz, 1)
-        busy = env["user_sec"] + env["system_sec"] + env["steal_sec"]
-        if busy > 0:
-            # fraction of the run's CPU demand the hypervisor withheld
-            env["steal_frac"] = round(env["steal_sec"] / busy, 3)
-    if entry_steal:
-        # entries whose RECORDED attempt's window still saw >0.5% steal
-        # (i.e. the retry could not find a clean window) — diff these
-        # with suspicion (or not at all) across rounds
-        env["steal_frac_per_entry"] = entry_steal
-    # calibration-probe audit (see calib()): the run's fastest probe
-    # wall, plus each entry whose RECORDED attempt ran with a probe
-    # >15% above it — CPU-degradation pollution that steal accounting
-    # cannot see; diff those entries with the same suspicion as
-    # steal-flagged ones
-    env["calib_min_ms"] = round(calib_min * 1000, 2)
-    _cal_ratios = {
-        k: round(v / calib_min, 2)
-        for k, v in entry_calib.items()
-        if v / calib_min > 1.15
-    }
-    if _cal_ratios:
-        env["calib_ratio_per_entry"] = _cal_ratios
-    if retries:
-        env["bench_retries"] = retries
-    env["retry_wall_sec"] = round(retry_wall_spent, 1)
-    # >0 means the wall-clock guard stopped at least one retry/re-pass —
-    # the only way pollution can remain "because we stopped looking"
-    env["retry_guard_hits"] = retry_guard_hits
-    if repass_done:
-        env["repass_entries"] = repass_done
+    steal_sec = round((host_steal_busy()[0] - stolen0[0]) / os.sysconf("SC_CLK_TCK"), 1)
+    steal_frac = round(steal_share(stolen0), 3)
 
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Durable per-entry artifact (VERDICT r7 #7): the stdout detail line
-    # gets front-truncated by tail-capture, so judges could only diff
-    # slowest10 ∪ tail across rounds. BENCH_TIMES.json in the repo root
-    # always carries the FULL per-entry vector of the latest run.
+    times, line = vectors(total, sf_val, records, errors, steal_sec, steal_frac)
     try:
         with open(
             os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_TIMES.json"),
             "w",
         ) as fh:
-            json.dump(
-                {
-                    "metric": "query_inventory_wall_sec",
-                    "value": total,
-                    "unit": "sec",
-                    "sf": sf_val,
-                    "queries": timings,
-                    "errors": errors,
-                    "env": env,
-                },
-                fh,
-                indent=1,
-                sort_keys=True,
-            )
+            json.dump(times, fh, indent=1, sort_keys=True)
             fh.write("\n")
     except OSError as exc:  # read-only checkout must not kill the run
         print(f"# BENCH_TIMES.json not written: {exc}", file=sys.stderr)
-    # ONE JSON line, per the declared contract — INCLUDING the per-query
-    # map (r16, VERDICT r15 #1: the r7-r15 two-line format put `queries`
-    # only on a first, enormous detail line whose front the driver's
-    # tail-capture truncated away, so PERF had per-query data for NO
-    # round; the parsed final line carried only totals). The line is
-    # kept capturable by construction: minified separators, recorded
-    # walls only, and NONE of the bulky audit payloads — per-attempt
-    # retries, per-entry steal/calib annotations and error texts live in
-    # BENCH_TIMES.json (written above), which always carries the full
-    # detail of the latest run. Scalar contamination summaries stay so a
-    # polluted run is still self-describing.
-    print(
-        json.dumps(
-            {
-                "metric": "query_inventory_wall_sec",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf_val,
-                "n_queries": len(timings),
-                "n_errors": len(errors),
-                "error_entries": sorted(errors),
-                "steal_sec": env.get("steal_sec"),
-                "steal_frac": env.get("steal_frac"),
-                "n_entries_steal_polluted": len(entry_steal),
-            },
-            separators=(",", ":"),
-        )
-    )
+    print(json.dumps(line, separators=(",", ":")))
     spark.stop()
     return 0
 

@@ -7,14 +7,17 @@ Spark's CacheManager and is NEVER evicted automatically, so a long-lived
 session leaks cache across queries.
 
 ``scoped_persist`` is a drop-in replacement that records the persisted
-frame; ``release_caches()`` unpersists everything recorded.  ``bench.py``
-and the pytest suite call it after each query; a service embedding these
-operators should call it at request end.
+frame; ``release_caches()`` unpersists everything recorded.
+``reset_session`` also clears Spark's own cache and drops the temp views
+(streaming memory sinks register one each). ``bench.py`` and the scripts
+call it after every entry, so no entry's wall or CPU pays the memory
+pressure of frames and views an earlier entry left behind. A service
+embedding these operators should call one of them at request end.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 # strong references on purpose: the persisted frame must stay reachable
 # until release_caches() explicitly unpersists it (the operator's own
@@ -44,3 +47,12 @@ def release_caches() -> int:
             pass  # session stopped / already unpersisted
     _LIVE = []
     return released
+
+
+def reset_session(spark: SparkSession) -> None:
+    """Release scoped caches, clear Spark's cache and drop every temp view."""
+    release_caches()
+    spark.catalog.clearCache()
+    for t in spark.catalog.listTables():
+        if t.isTemporary:
+            spark.catalog.dropTempView(t.name)

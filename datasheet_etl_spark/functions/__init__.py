@@ -24,7 +24,6 @@ from datasheet_etl_spark.functions.scalar import (
 from datasheet_etl_spark.functions.units import (
     UNIT_ALIASES,
     unit_alias_rows,
-    unit_aliases_df,
     normalize_unit,
 )
 from datasheet_etl_spark.functions.compare import (
@@ -55,7 +54,6 @@ __all__ = [
     "is_category_header",
     "UNIT_ALIASES",
     "unit_alias_rows",
-    "unit_aliases_df",
     "normalize_unit",
     "numbers_match",
     "units_match",

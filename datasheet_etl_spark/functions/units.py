@@ -2,9 +2,9 @@
 
 The reference normalizes unit strings through a canonical-alias table with
 case-insensitive reverse lookup and trim-fallback (ref:
-double_verifier.py:121-176). Here the table is a ~90-row dimension that
-broadcast-joins (J2 in the survey), plus an expression form for use inside
-pure Column pipelines.
+double_verifier.py:121-176). Here the table is data (``UNIT_ALIASES``),
+looked up by one expression, so normalization stays inside pure Column
+pipelines (J2/P14 in the survey).
 
 Unicode note: both MICRO SIGN µ (U+00B5) and GREEK SMALL MU μ (U+03BC)
 appear in the wild; both alias to the canonical µ-form (ref survey §7.4).
@@ -12,7 +12,7 @@ appear in the wild; both alias to the canonical µ-form (ref survey §7.4).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # canonical → aliases (semantics per reference double_verifier.py:121-152;
@@ -61,16 +61,10 @@ def unit_alias_rows() -> list[tuple[str, str]]:
     return sorted(rows.items())
 
 
-def unit_aliases_df(spark: SparkSession) -> DataFrame:
-    """The alias dimension as a DataFrame (broadcast side of J2)."""
-    return spark.createDataFrame(unit_alias_rows(), "alias_lower string, canonical string")
-
-
 def normalize_unit(unit: Column) -> Column:
     """Expression form: alias → canonical, unknown → trimmed input,
     NULL/empty → ''. Uses a literal map (element_at) so it stays a pure
-    expression — fine for the ~90-entry dim; the join form is
-    :func:`join_normalize_unit` for when the dim is user-extensible."""
+    expression — fine for the ~90-entry dim."""
     pairs: list[Column] = []
     for alias_lower, canonical in unit_alias_rows():
         pairs.append(F.lit(alias_lower))
@@ -80,25 +74,3 @@ def normalize_unit(unit: Column) -> Column:
     return F.when(cleaned == "", "").otherwise(
         F.coalesce(F.element_at(lookup, F.lower(cleaned)), cleaned)
     )
-
-
-def join_normalize_unit(
-    df: DataFrame, unit_col: str, out_col: str, aliases: DataFrame
-) -> DataFrame:
-    """Broadcast-join form of unit normalization (J2).
-
-    At 100 TB the alias dim is tiny and user-extensible; a broadcast hash
-    join keeps normalization shuffle-free.
-    """
-    cleaned = F.trim(F.coalesce(F.col(unit_col).cast("string"), F.lit("")))
-    keyed = df.withColumn("__unit_key", F.lower(cleaned))
-    joined = keyed.join(
-        F.broadcast(aliases.withColumnRenamed("alias_lower", "__unit_key")),
-        on="__unit_key",
-        how="left",
-    )
-    result = joined.withColumn(
-        out_col,
-        F.when(cleaned == "", "").otherwise(F.coalesce(F.col("canonical"), cleaned)),
-    )
-    return result.drop("__unit_key", "canonical")

@@ -51,7 +51,7 @@ def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
     from datasheet_etl_spark.plans import registry, oracles
     from datasheet_etl_spark.session import get_session
-    from datasheet_etl_spark.caching import release_caches
+    from datasheet_etl_spark.caching import reset_session
     from tests.oracle_harness import compare_counted
 
     spark = get_session(app_name="oracle_sweep")
@@ -84,11 +84,7 @@ def main() -> int:
         entries[name] = rec
         status = "ok" if rec["pass"] else "FAIL"
         print(f"# {name}: {status} ({rec['sec']}s)", file=sys.stderr)
-        release_caches()
-        spark.catalog.clearCache()
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                spark.catalog.dropTempView(t.name)
+        reset_session(spark)
 
     n_oracled = sum(1 for r in entries.values() if r["oracled"])
     n_pass = sum(1 for r in entries.values() if r["oracled"] and r["pass"])

@@ -61,6 +61,7 @@ def main() -> int:
     # with parallelism from the repo's SPARK_GRAFT_* convention — a plan
     # captured under a bare default session certifies a different plan
     # than the one the bench executes.
+    from datasheet_etl_spark.caching import reset_session
     from datasheet_etl_spark.session import get_session
 
     spark = get_session(app_name="plan_audit")
@@ -88,11 +89,8 @@ def main() -> int:
             + json.dumps(audit[name]),
             file=sys.stderr,
         )
-        # keep the session lean across 240+ entries
-        spark.catalog.clearCache()
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                spark.catalog.dropTempView(t.name)
+        # keep the session lean across the whole registry
+        reset_session(spark)
 
     # ADVICE r15 #4: a pre-execution explain renders a Python UDTF as a
     # Generate subtree with NO BatchEvalPython node, so the headline

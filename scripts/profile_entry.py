@@ -5,11 +5,13 @@ Usage:
     python scripts/profile_entry.py ENTRY [ENTRY ...] \
         [--sf-dir DIR] [--reps N] [--action noop|count] [--explain OUT_DIR]
 
-For each entry: runs it REPS times (fresh plan each time, caches released
-between reps like bench.py does), timing each rep, optionally through the
-noop sink (times computation of every column, not the count-pruned tree),
-and optionally dumps .explain("formatted") to OUT_DIR/<entry>.txt, built
-after rep0 so rep0 stays the entry's cold first run.
+For each entry: runs it REPS times (fresh plan each time, the session
+reset between reps like bench.py does), timing each rep with bench.py's
+``time_entry`` (wall, steal-scaled process-tree CPU, steal share),
+optionally through the noop sink (times computation of every column, not
+the count-pruned tree), and optionally dumps .explain("formatted") to
+OUT_DIR/<entry>.txt, built after rep0 so rep0 stays the entry's cold
+first run.
 
 Reps separate one-time cost (JIT/codegen/staging builds) from steady-state
 cost: rep1 >> rep2 ≈ rep3 means fixed overhead, not data work.
@@ -19,8 +21,8 @@ from __future__ import annotations
 
 import argparse
 import os
+import statistics
 import sys
-import time
 
 
 def _key_value(text: str) -> tuple[str, str]:
@@ -76,7 +78,8 @@ def main() -> int:
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
-    from datasheet_etl_spark.caching import release_caches
+    from bench import time_entry
+    from datasheet_etl_spark.caching import reset_session
     from datasheet_etl_spark.plans import registry
     from datasheet_etl_spark.session import get_session
 
@@ -85,54 +88,23 @@ def main() -> int:
     spark = get_session(app_name="profile_entry", shuffle_partitions=cpus, extra_conf=extra)
     reg = registry()
 
-    def cleanup() -> None:
-        release_caches()
-        spark.catalog.clearCache()
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                spark.catalog.dropTempView(t.name)
-
-    def ticks():
-        p = open("/proc/stat").readline().split()
-        return int(p[1]), int(p[3]), int(p[8])
-
-    def calib():
-        # fixed single-thread spin: measures current CPU execution speed
-        # directly, catching contention that steal accounting cannot see
-        # (SMT-sibling/frequency degradation — observed 8-20x entry
-        # pollution at steal 0.007 on this host); compare reps via the
-        # printed ms — a rep whose probe ran >1.3x the session minimum
-        # was measured on a degraded CPU
-        best = None
-        for _ in range(3):
-            t0 = time.perf_counter()
-            n = 400_000
-            while n:
-                n -= 1
-            dt = time.perf_counter() - t0
-            best = dt if best is None or dt < best else best
-        return best
-
     ab_conf = dict(args.ab_conf)
     ab_env = dict(args.ab_env)
     ab_mode = bool(ab_conf or ab_env)
 
-    def timed_run(name: str, label: str) -> tuple[float, float, float]:
+    def timed_run(name: str, label: str) -> dict:
         spark.sparkContext.setJobDescription(f"{name} {label}")
-        k0 = ticks()
-        t0 = time.perf_counter()
-        df = reg[name](spark, args.sf_dir)
-        if args.action == "noop":
-            df.write.format("noop").mode("overwrite").save()
-        else:
-            df.count()
-        wall = round(time.perf_counter() - t0, 3)
-        k1 = ticks()
-        busy = sum(b - a for a, b in zip(k0, k1))
-        steal = round((k1[2] - k0[2]) / busy, 3) if busy else 0.0
-        cal = round(calib() * 1000, 1)
-        cleanup()
-        return wall, steal, cal
+
+        def run() -> None:
+            df = reg[name](spark, args.sf_dir)
+            if args.action == "noop":
+                df.write.format("noop").mode("overwrite").save()
+            else:
+                df.count()
+
+        rec = time_entry(run)
+        reset_session(spark)
+        return rec
 
     class _b_arm:
         """Apply the B-arm conf/env overrides for one run, restore after."""
@@ -160,11 +132,6 @@ def main() -> int:
                 else:
                     os.environ[k] = v
 
-    def median(xs):
-        s = sorted(xs)
-        n = len(s)
-        return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
-
     for name in args.entries:
         if name not in reg:
             print(f"!! unknown entry {name}", file=sys.stderr)
@@ -182,22 +149,22 @@ def main() -> int:
                 for pos, arm in enumerate(order):
                     if arm == "B":
                         with _b_arm():
-                            w, s, c = timed_run(name, f"ab pair{pair} {arm}")
+                            rec = timed_run(name, f"ab pair{pair} {arm}")
                     else:
-                        w, s, c = timed_run(name, f"ab pair{pair} {arm}")
-                    arm_walls[arm].append(w)
-                    pos_walls[pos].append(w)
+                        rec = timed_run(name, f"ab pair{pair} {arm}")
+                    arm_walls[arm].append(rec["wall"])
+                    pos_walls[pos].append(rec["wall"])
                     print(
-                        f"  {name} pair{pair} pos{pos} arm={arm}: {w}s "
-                        f"steal={s} calib_ms={c}",
+                        f"  {name} pair{pair} pos{pos} arm={arm}: {rec['wall']}s "
+                        f"steal={rec['steal']} cpu_s={rec['cpu_s']}",
                         file=sys.stderr,
                     )
-            ma, mb = median(arm_walls["A"]), median(arm_walls["B"])
+            ma, mb = statistics.median(arm_walls["A"]), statistics.median(arm_walls["B"])
             print(
                 f"{name}: A={arm_walls['A']} B={arm_walls['B']} "
                 f"medianA={ma} medianB={mb} B/A={mb / ma:.3f} "
-                f"pos0_median={median(pos_walls[0])} "
-                f"pos1_median={median(pos_walls[1])} ({args.action}, ABBA)"
+                f"pos0_median={statistics.median(pos_walls[0])} "
+                f"pos1_median={statistics.median(pos_walls[1])} ({args.action}, ABBA)"
             )
             continue
 
@@ -209,17 +176,17 @@ def main() -> int:
                 fh.write(plan_df._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
                 ))
-            cleanup()
+            reset_session(spark)
 
         runs = run_reps(
             lambda rep, name=name: timed_run(name, f"rep{rep}"),
             args.reps,
             explain if args.explain else None,
         )
-        walls = [r[0] for r in runs]
-        steals = [r[1] for r in runs]
-        calibs = [r[2] for r in runs]
-        print(f"{name}: {walls} steal={steals} calib_ms={calibs} ({args.action})")
+        walls = [r["wall"] for r in runs]
+        steals = [r["steal"] for r in runs]
+        cpus_s = [r["cpu_s"] for r in runs]
+        print(f"{name}: {walls} steal={steals} cpu_s={cpus_s} ({args.action})")
     spark.stop()
     return 0
 

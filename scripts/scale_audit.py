@@ -16,9 +16,16 @@ buckets, bigger within-cell dup groups). That they remain sub-linear
 under it strengthens, not weakens, the bounded-candidates claim; the
 bucket caps and cell partitioning are precisely what absorbs it.
 
-Run:  python scripts/scale_audit.py
-Output: one line per entry — sf0.1 secs, x10 secs, ratio — plus a
-summary; results are recorded in COVERAGE.md's scaling-audit section.
+The audit runs under the session bench.py builds (``session.get_session``
+with the bench's driver memory, parallelism from ``SPARK_GRAFT_CPUS``) and
+resets it with ``caching.reset_session`` after every run. Each entry is
+warmed once at both scale points, then timed once at each with bench.py's
+``time_entry``: a single-shot wall plus the process-tree CPU scaled by
+the host's steal share, which spreads far less between runs than wall.
+
+Run:  python scripts/scale_audit.py [ENTRY ...]
+Output: one line per entry — sf0.1 and x10 wall, their ratio, sf0.1 and
+x10 CPU, their ratio — plus the worst wall ratio.
 """
 
 import os
@@ -27,7 +34,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 SRC = "/root/testdata/sf0.1"
@@ -463,7 +469,7 @@ def asymptote(spark, only=None):
     - t56: degree-oriented triangle wall vs ORIENTED WEDGE volume
       Σ C(outdeg, 2) — the shuffle that dominates the plan.
     """
-    from datasheet_etl_spark.caching import release_caches, scoped_persist
+    from datasheet_etl_spark.caching import reset_session, scoped_persist
     from datasheet_etl_spark.io import load_table
     from datasheet_etl_spark.operators.dedup import (
         lsh_candidate_pairs,
@@ -482,17 +488,13 @@ def asymptote(spark, only=None):
 
     q = ep.queries()
 
-    def _clear():
-        release_caches()
-        spark.catalog.clearCache()
-
     def timed(fn, src):
         fn(spark, src).count()  # warm (codegen + any staging)
-        _clear()
+        reset_session(spark)
         t0 = time.time()
         fn(spark, src).count()
         dt = time.time() - t0
-        _clear()
+        reset_session(spark)
         return dt
 
     def _sigs(spark, d):
@@ -698,9 +700,9 @@ def asymptote(spark, only=None):
         w100 = timed(fn, x100)
         if term_fn is not None:
             c10 = term_fn(spark, x10).collect()[0][0]
-            _clear()
+            reset_session(spark)
             c100 = term_fn(spark, x100).collect()[0][0]
-            _clear()
+            reset_session(spark)
         else:
             c10 = c100 = None
         rows.append((name, w10, w100, c10, c100, term_name))
@@ -720,13 +722,13 @@ def asymptote(spark, only=None):
 
 
 def main():
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("AUDIT_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
+    from bench import time_entry
+    from datasheet_etl_spark.caching import reset_session
+    from datasheet_etl_spark.session import get_session
+
+    # audit under the conf bench.py runs
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+    spark = get_session(app_name="scale_audit")
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as ep
 
@@ -750,22 +752,21 @@ def main():
     selected = sys.argv[1:] or ENTRIES
     unknown = [n for n in selected if n not in q]
     assert not unknown, f"unknown entries: {unknown}"
-    print(f"{'entry':34s} {'sf0.1':>8s} {'x10':>8s} {'ratio':>6s}")
+    print(
+        f"{'entry':34s} {'sf0.1':>8s} {'x10':>8s} {'ratio':>6s} "
+        f"{'cpu sf0.1':>9s} {'cpu x10':>8s} {'ratio':>6s}"
+    )
     ratios = []
-    from datasheet_etl_spark.caching import release_caches
 
     def timed(fn, src):
-        # release AFTER each invocation (outside the timed span): a
+        # reset AFTER each invocation (outside the timed span): a
         # scoped_persist left live from a previous entry — t96's
         # exploded token frame, t9x gram postings, at the x10 corpus —
         # would otherwise pin memory across every later measurement
         # and distort exactly the ratios this audit exists to measure
-        t0 = time.time()
-        fn(spark, src).count()
-        dt = time.time() - t0
-        release_caches()
-        spark.catalog.clearCache()
-        return dt
+        rec = time_entry(lambda: fn(spark, src).count())
+        reset_session(spark)
+        return rec["wall"], rec["cpu_s"]
 
     for name in selected:
         fn = q[name]
@@ -774,14 +775,19 @@ def main():
         # warming only SRC would put the x10 staging inside the timed
         # window and make the ratio compare different work)
         fn(spark, SRC).count()
-        release_caches(); spark.catalog.clearCache()
+        reset_session(spark)
         fn(spark, DST).count()
-        release_caches(); spark.catalog.clearCache()
-        base = timed(fn, SRC)
-        big = timed(fn, DST)
+        reset_session(spark)
+        base, base_cpu = timed(fn, SRC)
+        big, big_cpu = timed(fn, DST)
         r = big / base if base > 0 else float("inf")
+        r_cpu = big_cpu / base_cpu if base_cpu > 0 else float("inf")
         ratios.append((name, base, big, r))
-        print(f"{name:34s} {base:8.2f} {big:8.2f} {r:6.2f}", flush=True)
+        print(
+            f"{name:34s} {base:8.2f} {big:8.2f} {r:6.2f} "
+            f"{base_cpu:9.2f} {big_cpu:8.2f} {r_cpu:6.2f}",
+            flush=True,
+        )
     worst = max(ratios, key=lambda x: x[3])
     print(f"\nworst ratio under 10x data: {worst[0]} at {worst[3]:.2f}x")
 

@@ -1,0 +1,84 @@
+"""The per-entry loop and the output records of ``bench.py`` (no Spark
+needed): every entry is timed exactly once, a raising entry is recorded
+and the loop goes on, the session is reset after every entry, and the
+stdout line keeps its key set."""
+
+from __future__ import annotations
+
+import importlib.util
+import os
+
+import pytest
+
+_PATH = os.path.join(os.path.dirname(os.path.dirname(__file__)), "bench.py")
+
+STDOUT_KEYS = {
+    "metric",
+    "value",
+    "unit",
+    "queries",
+    "sf",
+    "n_queries",
+    "n_errors",
+    "error_entries",
+    "steal_sec",
+    "steal_frac",
+    "n_entries_steal_polluted",
+}
+
+
+@pytest.fixture(scope="module")
+def bench():
+    spec = importlib.util.spec_from_file_location("bench", _PATH)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+def test_each_entry_runs_once_with_a_reset_after_each(bench):
+    log = []
+
+    def entry(name, rows):
+        def run():
+            log.append(name)
+            return rows
+
+        return run
+
+    def broken():
+        log.append("b")
+        raise ValueError("boom")
+
+    entries = {"a": entry("a", 3), "b": broken, "c": entry("c", 5)}
+    records, errors = bench.run_entries(
+        entries, bench.time_entry, lambda: log.append("reset")
+    )
+
+    assert log == ["a", "reset", "b", "reset", "c", "reset"]
+    assert errors == {"b": "ValueError: boom"}
+    assert sorted(records) == ["a", "c"]
+    assert [records[k]["rows"] for k in ("a", "c")] == [3, 5]
+    for rec in records.values():
+        assert rec["wall"] >= 0
+        assert rec["cpu_s"] >= 0
+        assert 0 <= rec["steal"] <= 1
+
+
+def test_records_and_stdout_line(bench):
+    records = {
+        "a": {"wall": 1.25, "cpu_s": 2.5, "steal": 0.02, "rows": 1},
+        "c": {"wall": 0.5, "cpu_s": 0.75, "steal": 0.0, "rows": 2},
+    }
+    times, line = bench.vectors(2.0, 0.1, records, {"b": "ValueError: boom"}, 1.5, 0.01)
+
+    assert set(line) == STDOUT_KEYS
+    assert line["queries"] == times["queries"] == {"a": 1.25, "c": 0.5}
+    assert (line["value"], line["n_queries"], line["n_errors"]) == (2.0, 2, 1)
+    assert line["error_entries"] == ["b"]
+    assert line["n_entries_steal_polluted"] == 1
+    assert times["env"] == {
+        "steal_sec": 1.5,
+        "steal_frac": 0.01,
+        "cpu_s_per_entry": {"a": 2.5, "c": 0.75},
+        "steal_frac_per_entry": {"a": 0.02},
+    }

@@ -1,0 +1,68 @@
+"""``scripts/bench_diff.py`` on tiny synthetic vectors (no Spark needed):
+CPU-carrying vectors get the per-entry CPU headline, older wall-only
+vectors keep the clean-entry wall headline."""
+
+from __future__ import annotations
+
+import importlib.util
+import json
+import os
+
+import pytest
+
+_PATH = os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts", "bench_diff.py")
+
+
+@pytest.fixture(scope="module")
+def bench_diff():
+    spec = importlib.util.spec_from_file_location("bench_diff", _PATH)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+def _write(tmp_path, name, queries, env):
+    path = tmp_path / name
+    vector = {"sf": 0.1, "value": sum(queries.values()), "queries": queries, "env": env}
+    path.write_text(json.dumps(vector))
+    return str(path)
+
+
+def test_cpu_vectors_headline_the_median_cpu_ratio(bench_diff, tmp_path, capsys):
+    old = _write(
+        tmp_path, "old.json", {"a": 1.0, "b": 1.0, "c": 1.0, "e": 1.0},
+        {
+            "cpu_s_per_entry": {"a": 2.0, "b": 4.0, "c": 1.0, "e": 1.0},
+            "steal_frac_per_entry": {"a": 0.3},
+        },
+    )
+    new = _write(
+        tmp_path, "new.json", {"a": 9.0, "b": 1.0, "c": 1.0, "d": 1.0, "e": 1.0},
+        {"cpu_s_per_entry": {"a": 3.0, "b": 2.0, "c": 1.0, "d": 5.0, "e": -0.1}},
+    )
+    assert bench_diff.main([old, new]) == 0
+    out = capsys.readouterr().out
+    # ratios 1.5, 0.5, 1.0 over every common entry, the steal-noted one
+    # included; e's negative reading has no ratio
+    assert "HEADLINE median per-entry CPU ratio: 1.000" in out
+    assert "common 4 | CPU ratios 3" in out
+    assert "clean-in-both" not in out
+    assert "added: d" in out
+
+
+def test_wall_vectors_keep_the_clean_entry_headline(bench_diff, tmp_path, capsys):
+    old = _write(
+        tmp_path, "old.json", {"a": 1.0, "b": 1.0, "c": 2.0},
+        {"steal_frac_per_entry": {"a": 0.3}},
+    )
+    new = _write(
+        tmp_path, "new.json", {"a": 9.0, "b": 2.0, "c": 2.0},
+        # one side alone carrying CPU is not enough for the CPU headline
+        {"cpu_s_per_entry": {"a": 1.0, "b": 1.0, "c": 1.0}},
+    )
+    assert bench_diff.main([old, new]) == 0
+    out = capsys.readouterr().out
+    # a is steal-polluted in the old vector; b and c give 2.0 and 1.0
+    assert "clean-in-both 2 | steal-polluted 1" in out
+    assert "HEADLINE median clean-entry ratio: 1.500" in out
+    assert "per-entry CPU" not in out

@@ -47,3 +47,17 @@ def test_release_caches_is_idempotent(spark):
 
     assert release_caches() == 0
     assert release_caches() == 0
+
+
+def test_reset_session_leaves_no_cache_and_no_temp_views(spark):
+    from datasheet_etl_spark.caching import reset_session, scoped_persist
+
+    scoped_persist(spark.range(10)).count()
+    spark.range(5).cache().count()
+    spark.range(3).createOrReplaceTempView("_reset_probe")
+    assert _n_cached(spark) >= 2
+
+    reset_session(spark)
+
+    assert _n_cached(spark) == 0
+    assert not spark.catalog.tableExists("_reset_probe")

@@ -3,7 +3,8 @@
 Every backticked ``module.name`` must resolve to an attribute of an
 importable engine module, and every cited registry id (``q07``,
 ``t18``, ``Q28`` …) must name a registered entry. A row that cites a
-retired entry or a deleted function fails here.
+retired entry or a deleted function fails here, and so does a row whose
+function nothing calls.
 """
 
 from __future__ import annotations
@@ -72,3 +73,30 @@ def test_cited_entries_are_registered():
             if not any(k == eid or k.startswith(eid + "_") for k in keys):
                 missing.add(eid)
     assert not missing, f"COVERAGE cites unregistered entries: {sorted(missing)}"
+
+
+_REPO = COVERAGE.parent
+_EXPORTS = _REPO / "datasheet_etl_spark" / "functions" / "__init__.py"
+
+
+def _is_referenced(name: str, lines: list[str]) -> bool:
+    """Whether a line mentions ``name`` without defining it."""
+    use = re.compile(rf"\b{re.escape(name)}\b")
+    definition = re.compile(
+        rf"^\s*(?:def|class)\s+{re.escape(name)}\b|^{re.escape(name)}\s*[:=]"
+    )
+    return any(use.search(line) and not definition.match(line) for line in lines)
+
+
+def test_cited_functions_are_reached():
+    """A function a §2 row cites is called by an entry, the CLI, a script
+    or a test, so the row's "verified by" has something to verify. The
+    ``functions`` export list does not count as a caller."""
+    lines = [
+        line
+        for path in _REPO.rglob("*.py")
+        if path != _EXPORTS
+        for line in path.read_text().splitlines()
+    ]
+    unreached = [f"{m}.{n}" for m, n in _dotted_claims() if not _is_referenced(n, lines)]
+    assert not unreached, f"COVERAGE cites functions nothing calls: {unreached}"

@@ -14,9 +14,14 @@ from pyspark.sql import functions as F
 from datasheet_etl_spark.functions import (
     canonical_header,
     clean_cell,
+    detect_table_title,
+    extract_manufacturer,
+    extract_mpn,
     extract_number,
     has_standard_headers,
+    infer_category,
     manufacturer_from_mpn_prefix,
+    mpn_from_filename,
     normalize_text,
     normalize_unit,
     numbers_match,
@@ -129,6 +134,81 @@ def test_manufacturer_prefixes(spark):
     for mpn, want in cases.items():
         assert _eval(spark, manufacturer_from_mpn_prefix(F.lit(mpn))) == want
 
+
+# (page text, table index, title): the first title pattern in the
+# reference's order wins, title-cased; no match falls back to "Table i+1"
+TITLE_CASES = [
+    ("ELECTRICAL CHARACTERISTICS over operating range", 0, "Electrical Characteristics"),
+    ("7.3 Recommended Operating Conditions", 2, "Recommended Operating Conditions"),
+    ("Absolute Maximum Ratings then Electrical Characteristics", 0, "Electrical Characteristics"),
+    ("pin functions", 1, "Pin Functions"),
+    ("Typical Characteristics", 3, "Table 4"),
+    ("", 0, "Table 1"),
+]
+
+# the MPN patterns are tried LMR, TPS, LM (pattern order, not text
+# position), case-sensitively; no match is 'Unknown'
+MPN_CASES = [
+    ("LMR51430 SIMPLE SWITCHER", "LMR51430"),
+    ("TPS54331 3-A step-down converter", "TPS54331"),
+    ("LM5164-Q1 100-V input", "LM5164"),
+    ("LM2596S replaces TPS5430", "TPS5430"),
+    ("lmr51430 in lower case", "Unknown"),
+    ("no part number here", "Unknown"),
+]
+
+MANUFACTURER_CASES = [
+    ("Texas Instruments Incorporated", "Texas Instruments"),
+    ("(c) 2023 ANALOG DEVICES, INC.", "Analog Devices"),
+    ("onsemi NCP1117 regulator", "onsemi"),
+    ("Analog Devices part, Texas Instruments pinout", "Texas Instruments"),
+    ("www.example.com", "Unknown"),
+]
+
+# flat-parameter map -> category: switching frequency, then efficiency,
+# then a typical quiescent current under 100
+CATEGORY_CASES = [
+    ({"switching_frequency_typ": 500.0}, "Buck Converter"),
+    ({"efficiency_typ": 92.0}, "DC-DC Converter"),
+    ({"quiescent_current_typ": 25.0}, "LDO"),
+    ({"quiescent_current_typ": 150.0}, "Unknown"),
+    ({"switching_frequency_typ": 500.0, "quiescent_current_typ": 25.0}, "Buck Converter"),
+    ({}, "Unknown"),
+]
+
+FILENAME_CASES = [
+    ("/data/LMR51430_v04.json", "LMR51430"),
+    ("tps54331_datasheet.pdf", "TPS54331"),
+    ("out/lm5164_extracted", "LM5164"),
+    ("docs/lmr33630_extracted_v04.json", "LMR33630"),
+]
+
+
+@pytest.mark.parametrize("text,idx,expected", TITLE_CASES)
+def test_detect_table_title(spark, text, idx, expected):
+    assert _eval(spark, detect_table_title(F.lit(text), F.lit(idx))) == expected
+
+
+@pytest.mark.parametrize("text,expected", MPN_CASES)
+def test_extract_mpn(spark, text, expected):
+    assert _eval(spark, extract_mpn(F.lit(text))) == expected
+
+
+@pytest.mark.parametrize("text,expected", MANUFACTURER_CASES)
+def test_extract_manufacturer(spark, text, expected):
+    assert _eval(spark, extract_manufacturer(F.lit(text))) == expected
+
+
+@pytest.mark.parametrize("params,expected", CATEGORY_CASES)
+def test_infer_category(spark, params, expected):
+    pairs = [c for k, v in params.items() for c in (F.lit(k), F.lit(v))]
+    flat = F.create_map(*pairs).cast("map<string,double>")
+    assert _eval(spark, infer_category(flat)) == expected
+
+
+@pytest.mark.parametrize("path,expected", FILENAME_CASES)
+def test_mpn_from_filename(spark, path, expected):
+    assert _eval(spark, mpn_from_filename(F.lit(path))) == expected
 
 def test_register_aggregate_seam_and_weighted_median(spark):
     """The GROUPED_AGG extension point (SURVEY §2.8): a user-registered
