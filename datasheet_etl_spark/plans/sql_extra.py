@@ -279,86 +279,6 @@ def t54_resample_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q38_variant_extract",
-    """
-    SELECT event_type, count(*) AS n,
-           CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))
-                AS BIGINT) AS sum_k
-    FROM events
-    GROUP BY event_type
-    ORDER BY event_type
-    """,
-)
-def q38_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured columns via Spark 4's VARIANT type: the JSON
-    payload is parsed ONCE into variant's binary encoding
-    (``try_parse_json`` — malformed rows yield NULL instead of killing
-    the scan, the lenient-ingest posture of ``io.read_json_lenient``),
-    then fields are extracted in-plan with ``try_variant_get``.
-
-    At 100 TB this is the difference between re-tokenizing a JSON
-    string per accessed field (``get_json_object`` × N fields = N
-    parses) and one parse feeding arbitrarily many typed extractions —
-    and parquet stores the variant binary, so downstream reads skip
-    string parsing entirely (proven by tests/test_io_layout.py::
-    test_variant_at_rest_round_trip: same aggregate from the stored
-    variant with no parse_json in the read-side plan)."""
-    e = load_table(spark, sf_dir, "events")
-    k = F.try_variant_get(F.try_parse_json("props"), "$.k", "bigint")
-    return (
-        e.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n"), F.sum("k").alias("sum_k"))
-        .orderBy("event_type")
-    )
-
-
-@register(
-    "q39_recursive_cte",
-    """
-    WITH RECURSIVE anc AS (
-        SELECT p_partkey AS node, p_partkey AS root, 0 AS depth
-        FROM part WHERE p_partkey <= 10
-        UNION ALL
-        SELECT c.p_partkey, a.root, a.depth + 1
-        FROM part c JOIN anc a
-          ON c.p_partkey // 10 = a.node AND c.p_partkey > 10
-    )
-    SELECT root, depth, count(*) AS n
-    FROM anc GROUP BY root, depth ORDER BY root, depth
-    """,
-)
-def q39_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recursive CTE (Spark 4): hierarchy traversal — every part keyed
-    into a decimal-digit tree (parent = key div 10), walked from the
-    ≤10 roots with per-level depth, aggregated per (root, depth). The
-    BOM-explosion / org-chart shape SQL users expect from an engine.
-
-    Scale note: each recursion level is one distributed self-join, and
-    the engine materializes level frontiers — right for BOUNDED-depth
-    hierarchies (depth here ≈ log10(keys); the level limit is
-    ``spark.sql.cteRecursionLevelLimit``). For unbounded/deep graphs
-    use the iterative operators with explicit lineage truncation
-    instead (t16 connected components, t44 PageRank — localCheckpoint
-    per iteration), which is why both live in this inventory."""
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("q39_part")
-    return spark.sql(
-        """
-        WITH RECURSIVE anc AS (
-            SELECT p_partkey AS node, p_partkey AS root, 0 AS depth
-            FROM q39_part WHERE p_partkey <= 10
-            UNION ALL
-            SELECT c.p_partkey, a.root, a.depth + 1
-            FROM q39_part c JOIN anc a
-              ON c.p_partkey div 10 = a.node AND c.p_partkey > 10
-        )
-        SELECT root, depth, count(*) AS n
-        FROM anc GROUP BY root, depth ORDER BY root, depth
-        """
-    )
-
-
-@register(
     "t56_triangle_count",
     """
     WITH pairs AS (
@@ -708,7 +628,7 @@ def t63b_mmr_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the same parameters (self excluded, ties on corpus id). With
     this green, t63's remaining uncertified surface is only the
     bounded driver-side greedy loop, which its python-model parity
-    pytest covers. Scale shape is t06's: probes broadcast in the
+    pytest covers. Scale shape is the scanner's: probes broadcast in the
     scanner closure, the corpus streams map-side (one matmul per Arrow
     batch), per-partition top-k then one small merge — no corpus
     shuffle at any size."""
@@ -806,7 +726,7 @@ def t66_similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q40_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS — the caller-chosen grain list (here the
     ROLLUP grains minus nothing, written explicitly), completing the
-    grouping family next to q13 ROLLUP and q35 CUBE: ONE Expand + hash
+    grouping family next to q13 ROLLUP and CUBE: ONE Expand + hash
     aggregate pass whatever the set list, vs one scan per grain for
     separate GROUP BYs. ``grouping_id`` distinguishes a NULL-valued key
     from a rolled-up one — both engines compute it natively, so the
@@ -904,236 +824,6 @@ def q42_value_window_trio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q43_star_join_revenue",
-    f"""
-    SELECT n_name,
-           {sql_dsum('l_extendedprice * (1 - l_discount)', 4)} AS revenue,
-           count(*) AS n_items
-    FROM customer
-    JOIN orders   ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
-    JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-    JOIN nation   ON s_nationkey = n_nationkey
-    JOIN region   ON n_regionkey = r_regionkey
-    WHERE r_name = 'ASIA'
-      AND o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o_orderdate <  TIMESTAMP '1997-01-01'
-    GROUP BY n_name
-    ORDER BY revenue DESC, n_name
-    """,
-)
-def q43_star_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape (reference seed: the 3-table q05 join,
-    queries.py:186): local-supplier revenue by nation — a genuine
-    SIX-table star join (lineitem ⋈ orders ⋈ customer ⋈ supplier ⋈
-    nation ⋈ region) with selective date + region filters, the single
-    most common real-analytics plan shape.
-
-    100 TB plan shape (plan-pinned in tests/test_plans.py):
-    region/nation/supplier/customer are dimensions — region+nation
-    broadcast outright, and the customer/supplier sides stay tiny
-    relative to the facts, so Spark's size estimation (+ AQE at
-    runtime) broadcasts every dimension ⇒ the two FACT tables
-    (lineitem, orders) are the only sides that shuffle, one exchange
-    each for their o_orderkey join. The selective o_orderdate range
-    filter is pushed INTO the orders scan (PushedFilters) and shrinks
-    the orders side ~6× before any join; the c_nationkey = s_nationkey
-    local-supplier predicate rides the broadcast joins as a post-join
-    filter. Decimal-exact revenue keeps the answer identical on 1 core
-    or 1000 executors."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    joined = (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(
-            s,
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-    )
-    return (
-        joined.groupBy("n_name")
-        .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-                "revenue"
-            ),
-            F.count("*").alias("n_items"),
-        )
-        .orderBy(F.col("revenue").desc(), "n_name")
-    )
-
-
-@register(
-    "q44_correlated_subqueries",
-    """
-    SELECT c_custkey, c_name, max_order, nation_avg
-    FROM (
-        SELECT c.c_custkey, c.c_name,
-               (SELECT max(o.o_totalprice) FROM orders o
-                 WHERE o.o_custkey = c.c_custkey) AS max_order,
-               (SELECT CAST(sum(CAST(o2.o_totalprice AS DECIMAL(18,2)))
-                            AS DOUBLE) / count(*)
-                  FROM orders o2 JOIN customer c2
-                    ON o2.o_custkey = c2.c_custkey
-                 WHERE c2.c_nationkey = c.c_nationkey) AS nation_avg
-        FROM customer c
-        WHERE EXISTS (SELECT 1 FROM orders o3
-                       WHERE o3.o_custkey = c.c_custkey
-                         AND o3.o_orderstatus = 'O')
-    )
-    WHERE max_order > 2 * nation_avg
-    ORDER BY c_custkey
-    """,
-)
-def q44_correlated_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated-subquery family, run through spark.sql as real
-    correlated SQL (not hand-decorelated DataFrame ops): a correlated
-    SCALAR subquery (each customer's max order), a second correlated
-    scalar at a different correlation level (their nation's average
-    order value), and a correlated EXISTS gate — customers with an
-    open order whose largest order is >2× their nation's average.
-
-    Catalyst DECORRELATES all three (the rewrite q37's LATERAL does
-    not exercise): each scalar subquery becomes a grouped aggregate on
-    the correlation key joined back (left outer), and EXISTS becomes a
-    left-semi join — so the plan is 3 aggregates + 3 joins on grouped
-    (small) sides, never a per-row re-execution of the subquery. At
-    100 TB that rewrite is the entire difference between O(N) and
-    O(N²): a nested-loop evaluation of the nation-average subquery
-    would re-scan orders once per customer. The nation-level aggregate
-    is ~25 rows ⇒ broadcast; the per-customer aggregates join on the
-    same key the aggregate produced (shuffle reuse). nation_avg is the
-    exact DECIMAL sum cast to double, divided by the count — identical
-    IEEE ops in both engines (Spark's avg(DECIMAL) returns a
-    HALF_UP-rounded DECIMAL(22,6) while DuckDB's returns DOUBLE, so a
-    literal avg() would let the >2× threshold diverge near rounding
-    boundaries)."""
-    for t in ("customer", "orders"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"_q44_{t}")
-    return spark.sql(
-        """
-        SELECT c_custkey, c_name, max_order, nation_avg
-        FROM (
-            SELECT c.c_custkey, c.c_name,
-                   (SELECT max(o.o_totalprice) FROM _q44_orders o
-                     WHERE o.o_custkey = c.c_custkey) AS max_order,
-                   (SELECT CAST(sum(CAST(o2.o_totalprice AS DECIMAL(18,2)))
-                                AS DOUBLE) / count(*)
-                      FROM _q44_orders o2 JOIN _q44_customer c2
-                        ON o2.o_custkey = c2.c_custkey
-                     WHERE c2.c_nationkey = c.c_nationkey) AS nation_avg
-            FROM _q44_customer c
-            WHERE EXISTS (SELECT 1 FROM _q44_orders o3
-                           WHERE o3.o_custkey = c.c_custkey
-                             AND o3.o_orderstatus = 'O')
-        )
-        WHERE max_order > 2 * nation_avg
-        ORDER BY c_custkey
-        """
-    )
-
-
-@register(
-    "q45_union_by_name",
-    """
-    WITH v1 AS (
-        SELECT o_orderkey, o_orderstatus, o_totalprice
-        FROM orders WHERE o_orderkey % 3 = 0
-    ), v2 AS (
-        SELECT o_orderpriority, o_orderkey, o_custkey
-        FROM orders WHERE o_orderkey % 3 = 1
-    )
-    SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderpriority, o_custkey
-    FROM (
-        SELECT * FROM v1
-        UNION ALL BY NAME
-        SELECT * FROM v2
-    )
-    ORDER BY o_orderkey
-    """,
-)
-def q45_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-evolution union: two shard vintages with DIFFERENT column
-    sets and orders combined by NAME (missing columns NULL-filled) —
-    ``unionByName(allowMissingColumns=True)``, DuckDB's UNION ALL BY
-    NAME. The ingest reality at 100 TB: producers add/drop columns
-    mid-stream, and a positional UNION would silently misalign columns
-    of the same type (the worst kind of corruption — no error, wrong
-    data). Pure map-side projection + concat; no shuffle at all beyond
-    the final presentation sort."""
-    o = load_table(spark, sf_dir, "orders")
-    v1 = o.filter(F.col("o_orderkey") % 3 == 0).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    v2 = o.filter(F.col("o_orderkey") % 3 == 1).select(
-        "o_orderpriority", "o_orderkey", "o_custkey"
-    )
-    return (
-        v1.unionByName(v2, allowMissingColumns=True)
-        .select(
-            "o_orderkey", "o_orderstatus", "o_totalprice",
-            "o_orderpriority", "o_custkey",
-        )
-        .orderBy("o_orderkey")
-    )
-
-
-@register(
-    "q46_nullsafe_join",
-    """
-    WITH e AS (
-        SELECT event_id, user_id,
-               nullif(user_id % 7, 0) AS cohort_key
-        FROM events WHERE event_type = 'error'
-    ), d AS (
-        SELECT cohort_key AS _dk, count(*) AS n_in_cohort
-        FROM e GROUP BY 1
-    )
-    SELECT e.event_id, e.user_id, e.cohort_key, d.n_in_cohort
-    FROM e JOIN d ON e.cohort_key IS NOT DISTINCT FROM d._dk
-    ORDER BY e.event_id
-    """,
-)
-def q46_nullsafe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Null-safe equi-join (``<=>`` / IS NOT DISTINCT FROM): rows whose
-    join key is NULL still pair with the NULL group instead of silently
-    dropping — the semantics dimension enrichments over OPTIONAL keys
-    need (a plain equi-join deletes every NULL-keyed row, understating
-    whatever is counted downstream). The cohort key is built with
-    nullif so a NONEMPTY slice of rows (user_id % 7 == 0, ~1/7 of the
-    corpus) genuinely carries NULL — the null-safe path is exercised,
-    not vacuously satisfied. Spark plans ``<=>`` as a regular hash
-    join (NULL hashes like any value under null-safe equality), so the
-    scale shape is identical to q05 — no nested-loop penalty."""
-    e = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "error")
-        .select(
-            "event_id",
-            "user_id",
-            F.nullif(F.col("user_id") % 7, F.lit(0)).alias("cohort_key"),
-        )
-    )
-    d = e.groupBy(F.col("cohort_key").alias("_dk")).agg(
-        F.count("*").alias("n_in_cohort")
-    )
-    return (
-        e.join(d, F.col("cohort_key").eqNullSafe(F.col("_dk")))
-        .select("event_id", "user_id", "cohort_key", "n_in_cohort")
-        .orderBy("event_id")
-    )
-
-
-@register(
     "t74_resample_interp",
     """
     WITH e AS (
@@ -1222,7 +912,7 @@ def t76_udtf_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale stance: a UDTF is the interpreted Python path — correct for
     logic that genuinely needs Python, but THIS particular split has a
     pure-codegen equivalent (split + posexplode + trim/filter, the
-    q25/t31 idiom) that should win the hot path at 100 TB. The entry
+    q25 idiom) that should win the hot path at 100 TB. The entry
     exists to prove the surface works and is oracle-checkable, and its
     docstring is the signpost to the codegen form. Deterministic
     output ⇒ full DuckDB oracle (split on '.', space-trim, drop
@@ -1308,10 +998,11 @@ def t87_incremental_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimates assembled by UNIONING two independently-built shard
     sketches (events split by event_id parity — in production,
     yesterday's stored sketch + today's shard) through
-    ``sketches.hll_partials`` / ``hll_merge`` — the t73 mergeable-
-    partials pattern for the metric its (n, sum, min, max) tuples
-    can't carry. The corpus is never re-read at merge time; sketch
-    state is ~4 KB/key at any corpus size.
+    ``sketches.hll_partials`` / ``hll_merge`` — the
+    ``relational.partial_rollup`` mergeable-partials pattern for the
+    metric its (n, sum, min, max) tuples can't carry. The corpus is
+    never re-read at merge time; sketch state is ~4 KB/key at any corpus
+    size.
 
     Oracle impossibility note: the estimate is Apache DataSketches HLL
     register state — DuckB's approx_count_distinct uses a different
@@ -1355,7 +1046,7 @@ def t87_incremental_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t89_schema_evolution_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AT-REST schema evolution — q45's UNION BY NAME concern pushed
+    """AT-REST schema evolution — the UNION BY NAME concern pushed
     down to the parquet scan, where a 100 TB table actually evolves: an
     old partition written before a column existed (``event_id, value``)
     and a new partition written after (``+ event_type``) are read as
@@ -1426,13 +1117,14 @@ def t91_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-k WEIGHTED sampling without replacement (Efraimidis–
     Spirakis A-ES), stratified per source: 50 docs per source with
     inclusion probability proportional to length — the exact-count
-    complement to t38's rate-based temperature mixture and t26's
-    unweighted top-N. The draw is md5-derived (``sampling.
-    hash_uniform``: 13 hex digits = a double's full mantissa), so the
-    selection is retry-safe, partitioning-independent, and re-derived
-    VERBATIM by the DuckDB oracle — the graded claim is the exact
-    membership and rank of every sampled row. Scoring is map-only;
-    selection is one per-stratum top-k window (the q16 machinery)."""
+    complement to t38's rate-based temperature mixture and
+    ``sampling.uniform_sample``'s unweighted top-N. The draw is
+    md5-derived (``sampling.hash_uniform``: 13 hex digits = a double's
+    full mantissa), so the selection is retry-safe,
+    partitioning-independent, and re-derived VERBATIM by the DuckDB
+    oracle — the graded claim is the exact membership and rank of every
+    sampled row. Scoring is map-only; selection is one per-stratum top-k
+    window (the q16 machinery)."""
     from datasheet_etl_spark.operators.sampling import aes_weighted_sample
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -1512,16 +1204,16 @@ _EXCISION_ORACLE_CTES = """
 def t95_substring_span_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span EXCISION (``dedup.excise_overlap_spans``) — Lee et al.'s
     primary dedup mode, completing the substring family alongside
-    t94's whole-doc clustering: every ≥ 20-token verbatim run a doc
-    shares with a LOWER-id doc is cut out of the higher-id copy
-    (content survives exactly once, both documents survive). One row
-    per corpus doc: (n_tokens, n_removed, text_excised) with the kept
-    tokens in order. The DuckDB oracle re-derives t92's capped gram
-    self-join and islands, each island's token interval, and the
-    position-anti-join text reconstruction verbatim — the excised
-    TEXT itself is hash-graded, not just counts. Scale shape:
-    intervals are per-island aggregates of the runs frame; the
-    removal anti-join is doc-keyed with a range residual, so corpus
+    ``dedup.substring_dedup_corpus``'s whole-doc clustering: every ≥
+    20-token verbatim run a doc shares with a LOWER-id doc is cut out of
+    the higher-id copy (content survives exactly once, both documents
+    survive). One row per corpus doc: (n_tokens, n_removed,
+    text_excised) with the kept tokens in order. The DuckDB oracle
+    re-derives the capped gram self-join and islands, each island's
+    token interval, and the position-anti-join text reconstruction
+    verbatim — the excised TEXT itself is hash-graded, not just counts.
+    Scale shape: intervals are per-island aggregates of the runs frame;
+    the removal anti-join is doc-keyed with a range residual, so corpus
     tokens shuffle once."""
     from datasheet_etl_spark.operators.dedup import excise_overlap_spans
 
@@ -1575,7 +1267,8 @@ def t95_substring_span_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t96_dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style data selection (``text.dsir_select``; arXiv:
-    2302.03169 reduced to unigram features, the t65 reduction): docs
+    2302.03169 reduced to unigram features, as in
+    ``text.unigram_log_ppl``): docs
     from the src1/src2 'target domain' train the target LM, the
     remaining pool trains the raw LM, and every pool doc is scored by
     its mean per-token log importance weight ln p_t − ln p_r; the
@@ -1595,9 +1288,7 @@ def t96_dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("doc_id")
 
 
-# shared by t97 (the full plan) and t111 (the efficiency rollup over
-# the same plan) — one derivation, two oracles, the
-# _EXCISION_ORACLE_CTES precedent
+# the full t97 plan as oracle CTEs: counts, selection, shards, bins
 _T97_PLAN_CTES = """
     WITH d AS (
       SELECT doc_id, source, n_chars FROM documents
@@ -1646,19 +1337,19 @@ def t97_training_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end TRAINING-ORDER plan — the composition a 100 TB run
     executes nightly, every stage an already-graded primitive:
     temperature mixture counts (t38's ceil(2·√n) per source, capped)
-    → per-source smallest-md5 selection (t27/t91's hash-order family,
-    skew-proof two-phase) → epoch shuffle into 16 shards (t93's
-    md5(key:epoch) order) → fixed-budget sequence packing of THAT
-    stream (t28's concatenate-then-chunk arithmetic via
-    ``sampling.pack_in_order``, integer div). One row per selected doc:
-    (doc_id, source, shard, pos, bin_id, bin_offset) — the exact
-    shard/bin/offset a trainer reads. Everything is md5-derived and
-    integer-arithmetic, so the oracle re-derives the ENTIRE plan —
-    membership, order, and every bin boundary. Scale shape: two
-    bounded window passes (per-source two-phase rank, per-shard
-    order), zero rand(), and no global sort in the derivation itself
-    (the trailing orderBy is the compare-presentation sort every
-    oracled entry carries)."""
+    → per-source smallest-md5 selection (t91's hash-order family,
+    skew-proof two-phase) → epoch shuffle into 16 shards
+    (``sampling.epoch_shuffle``'s md5(key:epoch) order) → fixed-budget
+    sequence packing of THAT stream (``sampling.pack_sequences``'
+    concatenate-then-chunk arithmetic via ``sampling.pack_in_order``,
+    integer div). One row per selected doc: (doc_id, source, shard, pos,
+    bin_id, bin_offset) — the exact shard/bin/offset a trainer reads.
+    Everything is md5-derived and integer-arithmetic, so the oracle
+    re-derives the ENTIRE plan — membership, order, and every bin
+    boundary. Scale shape: two bounded window passes (per-source
+    two-phase rank, per-shard order), zero rand(), and no global sort in
+    the derivation itself (the trailing orderBy is the
+    compare-presentation sort every oracled entry carries)."""
     from datasheet_etl_spark.operators.sampling import (
         epoch_shuffle,
         pack_in_order,
@@ -1812,9 +1503,8 @@ def q47_distribution_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("c_nationkey", "c_custkey")
 
 
-# one oracle for the from-scratch (t100) and incrementally-merged
-# (t106) memorization audits: the merged partials must re-derive
-# exactly the from-scratch table
+# the from-scratch string-gram memorization audit: t107's hashed path
+# must re-derive exactly this table
 _FREQ_NGRAM_ORACLE = """
     WITH t AS (
       SELECT doc_id,
@@ -1865,18 +1555,17 @@ _FREQ_NGRAM_ORACLE = """
 def t101_excision_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The "what did dedup cost me" audit every production corpus build
     ships next to its t95 excision run: per source — docs touched,
-    tokens removed, and the removal fraction. Closes the loop the
-    curation-governance family (t84/t85) opened for the exact and
-    contamination modalities: a corpus owner reads THIS table to decide
-    whether a source is template-heavy enough to drop outright. The
-    oracle re-derives the full excision machinery (shared CTE body with
-    t95 — one definition, two oracles) plus the rollup, so every count
-    and the 6-dp fraction are hash-graded. Scale shape: the rollup is
-    ONE aggregate over t95's per-doc artifact joined to the (doc_id,
-    source) projection — the corpus text itself is touched only by the
-    excision pass it audits. The rollup itself is
-    ``dedup.excision_impact`` — the same single definition the audit
-    CLI prints."""
+    tokens removed, and the removal fraction. It is the excision
+    counterpart of the exact-dedup and contamination audits: a corpus
+    owner reads THIS table to decide whether a source is template-heavy
+    enough to drop outright. The oracle re-derives the full excision
+    machinery (shared CTE body with t95 — one definition, two oracles)
+    plus the rollup, so every count and the 6-dp fraction are
+    hash-graded. Scale shape: the rollup is ONE aggregate over t95's
+    per-doc artifact joined to the (doc_id, source) projection — the
+    corpus text itself is touched only by the excision pass it audits.
+    The rollup itself is ``dedup.excision_impact`` — the same single
+    definition the audit CLI prints."""
     from datasheet_etl_spark.operators.dedup import excision_impact
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1884,48 +1573,6 @@ def t101_excision_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "doc_id", "text", "source",
         k=8, max_gram_rows=64, min_span_tokens=20,
     ).orderBy("source")
-
-
-@register(
-    "q48_map_roundtrip",
-    """
-    SELECT source, lang, CAST(count(*) * 100 AS BIGINT) AS scaled
-    FROM documents GROUP BY source, lang HAVING count(*) >= 2
-    ORDER BY source, lang
-    """,
-)
-def q48_map_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MapType SQL surface the inventory lacked, graded end-to-end
-    against a plain relational oracle: per-source language histograms
-    built as MAPS (sort_array(collect_list(struct)) → map_from_entries
-    — the sort makes map KEY ORDER deterministic before any map op),
-    pruned with map_filter (count >= 2), rescaled with
-    transform_values (×100), and exploded back to rows. The oracle is
-    deliberately map-free — it grades that the whole map roundtrip is
-    semantically transparent. Scale shape: counts partial-aggregate
-    map-side; the per-source collect_list is bounded by the language
-    domain (a dim, not the corpus); maps never shuffle as keys (Spark
-    cannot hash-partition a MapType — the groupBy keys stay scalar,
-    which is the pattern's POINT at 100 TB)."""
-    docs = load_table(spark, sf_dir, "documents")
-    counts = docs.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("c"))
-    m = counts.groupBy("source").agg(
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("lang", "c")))
-        ).alias("m")
-    )
-    m = m.withColumn("m", F.map_filter("m", lambda k, v: v >= 2)).withColumn(
-        "m", F.transform_values("m", lambda k, v: v * 100)
-    )
-    return (
-        m.select("source", F.explode("m"))
-        .select(
-            "source",
-            F.col("key").alias("lang"),
-            F.col("value").cast("long").alias("scaled"),
-        )
-        .orderBy("source", "lang")
-    )
 
 
 @register("t102_compression_quality")  # rows-only: no SQL engine exposes
@@ -1937,7 +1584,7 @@ def t102_compression_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gopher/MassiveText filter family): zlib ratio of each doc's UTF-8
     bytes — low = template/repetitive (flagged too_repetitive on the
     6-dp-rounded ratio), near-1 = high-entropy garbage. Complements the
-    explicit repetition heuristics (t34) with a model-free signal.
+    explicit repetition heuristics with a model-free signal.
     Rows-only by genuine impossibility (see the register note); the
     flag and both lengths are pinned by the parity pytest. Scale shape:
     one Arrow-batched pandas_udf projection, map-only, zero shuffle."""
@@ -1947,66 +1594,10 @@ def t102_compression_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compression_signal(docs).orderBy("doc_id")
 
 
-@register(
-    "q49_calendar_arithmetic",
-    """
-    WITH o AS (
-      SELECT CAST(o_orderdate AS DATE) AS d FROM orders
-    ), m AS (
-      SELECT CAST(date_trunc('month', d) AS DATE) AS month_start,
-             count(*) AS n_orders
-      FROM o GROUP BY 1
-    )
-    SELECT month_start,
-           last_day(month_start) AS month_end,
-           CAST(date_diff('day', month_start, last_day(month_start)) + 1
-                AS INT) AS days_in_month,
-           CAST(date_trunc('quarter', month_start) AS DATE) AS quarter_start,
-           CAST(month_start + INTERVAL 1 MONTH AS DATE) AS next_month_start,
-           CAST(date_diff('day', DATE '1995-01-01', month_start) AS BIGINT)
-             AS days_since_anchor,
-           CAST(n_orders AS BIGINT) AS n_orders
-    FROM m ORDER BY month_start
-    """,
-)
-def q49_calendar_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar/date SQL surface the inventory lacked, graded
-    cross-engine: month bucketing (trunc), month-end (last_day),
-    calendar month lengths (datediff — leap Februaries come out of the
-    arithmetic, not a lookup), quarter alignment, add_months, and a
-    fixed-anchor day offset — the date functions every partition-by-
-    month retention layout leans on. Chosen deliberately from the
-    subset with IDENTICAL Spark/DuckDB semantics (DATE-typed outputs,
-    integer day diffs); week-of-year and day-of-week are excluded —
-    their ISO-vs-locale conventions genuinely differ across engines
-    and a hash-graded entry must not depend on convention. Scale
-    shape: one partial-agged groupBy on the month key; everything
-    after is map-only arithmetic on ~tens of month rows."""
-    o = load_table(spark, sf_dir, "orders").select(
-        F.to_date("o_orderdate").alias("d")
-    )
-    m = o.groupBy(F.trunc("d", "month").alias("month_start")).agg(
-        F.count(F.lit(1)).alias("n_orders")
-    )
-    return m.select(
-        "month_start",
-        F.last_day("month_start").alias("month_end"),
-        (F.datediff(F.last_day("month_start"), F.col("month_start")) + 1)
-        .cast("int")
-        .alias("days_in_month"),
-        F.trunc("month_start", "quarter").alias("quarter_start"),
-        F.add_months("month_start", 1).alias("next_month_start"),
-        F.datediff("month_start", F.lit("1995-01-01").cast("date"))
-        .cast("long")
-        .alias("days_since_anchor"),
-        F.col("n_orders").cast("long").alias("n_orders"),
-    ).orderBy("month_start")
-
-
-# one oracle for the batch (t103) and streaming (t105) lenient-JSONL
-# ingests: both must produce exactly these populations from the same
-# staged corrupted JSONL — every intact line parsed, every truncated
-# line quarantined, nothing lost, nothing duplicated
+# the lenient-JSONL ingest oracle: t105's streaming drain must produce
+# exactly these populations from the staged corrupted JSONL — every
+# intact line parsed, every truncated line quarantined, nothing lost,
+# nothing duplicated
 _JSONL_INGEST_ORACLE = """
     SELECT * FROM (
       SELECT source AS kind, CAST(count(*) AS BIGINT) AS n,
@@ -2021,9 +1612,8 @@ _JSONL_INGEST_ORACLE = """
 
 
 def _jsonl_ingest_rollup(clean: DataFrame, bad: DataFrame) -> DataFrame:
-    """The (kind, n, chars) populations both JSONL-ingest entries are
-    graded on — ONE definition next to the shared oracle, so t103 and
-    t105 can never drift apart from each other (or from it)."""
+    """The (kind, n, chars) populations t105 is graded on — defined
+    next to the oracle it must equal."""
     per_source = clean.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("n_chars").cast("long").alias("chars"),
@@ -2041,7 +1631,7 @@ def _jsonl_ingest_rollup(clean: DataFrame, bad: DataFrame) -> DataFrame:
 
 
 def _stage_corrupted_jsonl(spark: SparkSession, sf_dir: str) -> str:
-    """The shared t103/t105 fixture: documents metadata as JSON lines
+    """The t105 fixture: documents metadata as JSON lines
     with the deterministic 1-in-41 slice truncated mid-object (closing
     brace cut). Staged once per sf via ``_staged_path``."""
     import os
@@ -2065,46 +1655,6 @@ def _stage_corrupted_jsonl(spark: SparkSession, sf_dir: str) -> str:
 
     work = _staged_path(sf_dir, "documents.parquet", "jsonl_lenient", build)
     return os.path.join(work, "jsonl")
-
-
-@register(
-    "q60_multi_distinct_agg",
-    """
-    SELECT l_returnflag,
-           CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
-           CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_supps,
-           CAST(sum(DISTINCT CAST(l_quantity AS BIGINT)) AS BIGINT)
-               AS sum_dist_qty,
-           CAST(count(*) AS BIGINT) AS n_rows
-    FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-    """,
-)
-def q60_multi_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MULTIPLE distinct aggregates over different columns in one
-    GROUP BY — the plan shape q52's GROUPING SETS machinery serves a
-    second master with: Catalyst rewrites N distinct aggregates into
-    ONE Expand (each input row replicated once per distinct group with
-    the others' columns nulled) feeding a two-level aggregate, instead
-    of N self-joined subqueries (plan-pinned: one Expand, no Join, in
-    tests/test_plans.py). The mixed regular aggregate (count(*)) rides
-    the same pass. At 100 TB this is the difference between one
-    shuffle of (group, gid, value) partials and N full scans — the
-    multi-distinct report every dedup/audit rollup eventually writes.
-    sum(DISTINCT) runs on a bigint cast so both engines sum exact
-    integers."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.countDistinct("l_partkey").alias("n_parts"),
-            F.countDistinct("l_suppkey").alias("n_supps"),
-            F.sum_distinct(F.col("l_quantity").cast("long")).alias(
-                "sum_dist_qty"
-            ),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .orderBy("l_returnflag")
-    )
 
 
 @register(
@@ -2183,124 +1733,6 @@ def q62_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q63_ordered_set_aggs",
-    """
-    SELECT o_orderpriority,
-           round(CAST(percentile_cont(0.5)
-                 WITHIN GROUP (ORDER BY o_totalprice) AS DOUBLE), 4)
-               AS median_price,
-           CAST(percentile_disc(0.25)
-                WITHIN GROUP (ORDER BY o_totalprice) AS DOUBLE)
-               AS p25_disc,
-           string_agg(DISTINCT o_orderstatus, ',' ORDER BY o_orderstatus)
-               AS statuses
-    FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """,
-)
-def q63_ordered_set_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORDERED-SET aggregates (ANSI ``WITHIN GROUP``): interpolated
-    ``percentile_cont``, exact-row ``percentile_disc``, and ordered
-    ``listagg DISTINCT`` (DuckDB spells it ``string_agg ... ORDER
-    BY``) in one grouping pass. percentile_disc picks an ACTUAL value
-    (no interpolation — both engines must select the same row under
-    the same ordering); listagg's determinism comes from ordering by
-    the aggregated value itself, so equal values are interchangeable
-    in the output string. These are holistic aggregates — per-group
-    cost is O(group) by contract (the sort runs inside the aggregate);
-    the mergeable-sketch path for 100 TB quantiles is t88's histogram,
-    which this entry's exact contract anchors."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "q63_orders"
-    )
-    return spark.sql(
-        """
-        SELECT o_orderpriority,
-               round(CAST(percentile_cont(0.5)
-                     WITHIN GROUP (ORDER BY o_totalprice) AS DOUBLE), 4)
-                   AS median_price,
-               CAST(percentile_disc(0.25)
-                    WITHIN GROUP (ORDER BY o_totalprice) AS DOUBLE)
-                   AS p25_disc,
-               listagg(DISTINCT o_orderstatus, ',')
-                   WITHIN GROUP (ORDER BY o_orderstatus) AS statuses
-        FROM q63_orders GROUP BY o_orderpriority ORDER BY o_orderpriority
-        """
-    )
-
-
-@register(
-    "q64_ignore_nulls_windows",
-    """
-    WITH d AS (
-      SELECT user_id, event_id,
-             CASE WHEN event_id % 3 = 0 THEN NULL
-                  ELSE CAST(value AS DECIMAL(18,4)) END AS v
-      FROM events
-    )
-    SELECT user_id, event_id,
-           CAST(lag(v IGNORE NULLS)
-                OVER (PARTITION BY user_id ORDER BY event_id)
-                AS DOUBLE) AS prev_v,
-           CAST(lead(v IGNORE NULLS)
-                OVER (PARTITION BY user_id ORDER BY event_id)
-                AS DOUBLE) AS next_v,
-           CAST(last_value(v IGNORE NULLS)
-                OVER (PARTITION BY user_id ORDER BY event_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS DOUBLE) AS locf,
-           CAST(nth_value(v, 2 IGNORE NULLS)
-                OVER (PARTITION BY user_id ORDER BY event_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND UNBOUNDED FOLLOWING)
-                AS DOUBLE) AS second_nn
-    FROM d ORDER BY user_id, event_id
-    """,
-)
-def q64_ignore_nulls_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IGNORE NULLS across the whole window-function family — lag,
-    lead, last_value (the LOCF carry q17/t74 build on), nth_value —
-    with deterministically planted NULLs (event_id % 3). The two
-    engines spell it differently (Spark: ``lag(v) IGNORE NULLS``;
-    DuckDB: ``lag(v IGNORE NULLS)``) but must agree on every value:
-    null-skipping changes WHICH row each function reads, not just its
-    output, so a drift here corrupts gap-filling and sessionization
-    silently. Decimal-typed values so the carried numbers are
-    bit-identical. One sort per partition serves all four functions
-    (shared WindowExec — q47's discipline)."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "q64_events"
-    )
-    return spark.sql(
-        """
-        WITH d AS (
-          SELECT user_id, event_id,
-                 CASE WHEN event_id % 3 = 0 THEN NULL
-                      ELSE CAST(value AS DECIMAL(18,4)) END AS v
-          FROM q64_events
-        )
-        SELECT user_id, event_id,
-               CAST(lag(v) IGNORE NULLS
-                    OVER (PARTITION BY user_id ORDER BY event_id)
-                    AS DOUBLE) AS prev_v,
-               CAST(lead(v) IGNORE NULLS
-                    OVER (PARTITION BY user_id ORDER BY event_id)
-                    AS DOUBLE) AS next_v,
-               CAST(last_value(v) IGNORE NULLS
-                    OVER (PARTITION BY user_id ORDER BY event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW)
-                    AS DOUBLE) AS locf,
-               CAST(nth_value(v, 2) IGNORE NULLS
-                    OVER (PARTITION BY user_id ORDER BY event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND UNBOUNDED FOLLOWING)
-                    AS DOUBLE) AS second_nn
-        FROM d ORDER BY user_id, event_id
-        """
-    )
-
-
-@register(
     "q65_hof_breadth",
     """
     WITH d AS (
@@ -2353,51 +1785,6 @@ def q65_hof_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "t126_arrow_python_udf",
-    """
-    SELECT source,
-           CAST(sum(length(regexp_replace(lower(text), '[^aeiou]', '', 'g'))
-                    ) AS BIGINT) AS total_vowels,
-           CAST(count(*) AS BIGINT) AS n_docs
-    FROM documents GROUP BY source ORDER BY source
-    """,
-)
-def t126_arrow_python_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ARROW-OPTIMIZED scalar Python UDF (``useArrow=True``) — the
-    fourth corner of the Python-evaluation square the registry grades
-    (pandas_udf GROUPED_AGG t79, UDTF t76, DataSource t112-t115): the
-    same ``@udf`` signature, but batches cross the JVM boundary as
-    Arrow instead of pickled rows (plan shows ArrowEvalPython,
-    plan-pinned in tests/test_plans.py). The vowel-count body is
-    deliberately builtin-expressible — the SEAM is what this entry
-    grades (t112's rationale); the module-wide rule stands: hot paths
-    use JVM expressions, and when Python is genuinely needed it rides
-    Arrow, never per-row pickling."""
-    from pyspark.sql.types import LongType
-
-    @F.udf(returnType=LongType(), useArrow=True)
-    def vowels(s: str) -> int:
-        # NULL in -> NULL out, matching the oracle's SQL NULL
-        # semantics (regexp over NULL is NULL and sum skips it) —
-        # mapping NULL to 0 here would grade 0 vs NULL for a source
-        # whose texts are all NULL (review-found r12, third pass)
-        if s is None:
-            return None
-        return sum(1 for c in s.lower() if c in "aeiou")
-
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.select("source", vowels("text").alias("nv"))
-        .groupBy("source")
-        .agg(
-            F.sum("nv").alias("total_vowels"),
-            F.count(F.lit(1)).alias("n_docs"),
-        )
-        .orderBy("source")
-    )
-
-
-@register(
     "t130_arrow_native_map",
     """
     SELECT doc_id,
@@ -2445,11 +1832,10 @@ def t131_arrow_native_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow aggregate kernels, never pandas; FlatMapGroupsInArrow in
     the plan, pinned in tests/test_plans.py): per-source doc count,
     total UTF-8 bytes, max char count. Workload deliberately
-    builtin-expressible — the SEAM is the graded surface (t126's
-    rationale), and the oracle's GROUP BY is its exact semantics.
-    Same shuffle-and-fit contract as applyInPandas minus the pandas
-    copy; sum/max kernels skip Arrow nulls exactly as SQL aggregates
-    skip SQL NULLs. Operator:
+    builtin-expressible — the SEAM is the graded surface, and the
+    oracle's GROUP BY is its exact semantics. Same shuffle-and-fit
+    contract as applyInPandas minus the pandas copy; sum/max kernels
+    skip Arrow nulls exactly as SQL aggregates skip SQL NULLs. Operator:
     ``operators/text.py:arrow_grouped_stats``.
 
     r14 driver hash-mismatch ROOT CAUSE (values were oracle-identical
@@ -2507,8 +1893,8 @@ def t131_arrow_native_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t127_session_window_dynamic_gap(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Native ``session_window`` with a DYNAMIC, per-event gap (t108's
-    fixed-gap sibling): each event proposes the interval
+    """Native ``session_window`` with a DYNAMIC, per-event gap (the
+    generalisation of a fixed gap): each event proposes the interval
     [ts, ts + gap(event)) — event-type-dependent inactivity budgets
     are the production use — and Spark merges overlapping proposals.
     The semantics were probed, not assumed, and the oracle models
@@ -2518,8 +1904,8 @@ def t127_session_window_dynamic_gap(
     a large gap can out-extend every later member. The oracle is the
     classic interval-merge sweep (running-max window → boundary flags
     → islands), decimal-exact values. Batch form here (session_window
-    works in plain groupBy); the streaming path with this operator is
-    t108's, state ∝ open sessions either way."""
+    works in plain groupBy); a streaming ``session_window`` keeps
+    state ∝ open sessions either way."""
     e = load_table(spark, sf_dir, "events")
     gap = F.expr(
         "make_interval(0, 0, 0, 0, 0,"
@@ -2543,55 +1929,6 @@ def t127_session_window_dynamic_gap(
 
 
 @register(
-    "q66_sql_programmability",
-    """
-    SELECT l_returnflag,
-           CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
-                         * (1 - CAST(l_discount AS DECIMAL(18,2)))
-                         AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-           CAST(count(*) AS BIGINT) AS n_rows
-    FROM lineitem
-    WHERE l_quantity >= 25 AND l_quantity < 45
-    GROUP BY l_returnflag ORDER BY l_returnflag
-    """,
-)
-def q66_sql_programmability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SQL-programmability surface in one query: a SQL-defined
-    scalar function (``CREATE FUNCTION ... RETURN expr`` — Catalyst
-    INLINES the body, so unlike every Python seam there is no
-    evaluation boundary at all; plan-pinned in tests/test_plans.py), a
-    session VARIABLE (``DECLARE``/``SET VAR``) carrying the quantity
-    floor, and a NAMED PARAMETER (``spark.sql(..., args=...)`` — the
-    injection-safe binding) carrying the ceiling. The oracle inlines
-    all three by hand: the abstractions must be semantically
-    transparent. Decimal(18,4) keeps p*(1-d) exact (2dp x 2dp), so no
-    engine rounding is ever exercised."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "q66_lineitem"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION q66_disc("
-        "p DECIMAL(18,2), d DECIMAL(18,2)) RETURNS DECIMAL(18,4) "
-        "RETURN CAST(p * (1 - d) AS DECIMAL(18,4))"
-    )
-    spark.sql("DECLARE OR REPLACE VARIABLE q66_minqty INT DEFAULT 0")
-    spark.sql("SET VAR q66_minqty = 25")
-    return spark.sql(
-        """
-        SELECT l_returnflag,
-               CAST(sum(q66_disc(CAST(l_extendedprice AS DECIMAL(18,2)),
-                                 CAST(l_discount AS DECIMAL(18,2))))
-                    AS DOUBLE) AS revenue,
-               CAST(count(*) AS BIGINT) AS n_rows
-        FROM q66_lineitem
-        WHERE l_quantity >= q66_minqty AND l_quantity < :maxq
-        GROUP BY l_returnflag ORDER BY l_returnflag
-        """,
-        args={"maxq": 45},
-    )
-
-
-@register(
     "q67_native_pivot",
     """
     SELECT o_orderpriority,
@@ -2610,7 +1947,7 @@ def q66_sql_programmability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q67_native_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NATIVE ``PIVOT`` SQL syntax — q56's UNPIVOT sibling, the one
+    """NATIVE ``PIVOT`` SQL syntax — the UNPIVOT sibling, the one
     remaining relational-parser arm the registry had not exercised:
     multi-aggregate pivot (sum + count per status) over a static IN
     list, which Catalyst compiles to ONE hash aggregate with
@@ -2638,57 +1975,15 @@ def q67_native_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "t104_orc_at_rest",
-    """
-    SELECT source,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS total_chars
-    FROM documents WHERE n_chars >= 200
-    GROUP BY source ORDER BY source
-    """,
-)
-def t104_orc_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Second columnar format at rest: the documents table staged as
-    ORC (Spark-native, zero extra packages) and read back through a
-    filtered aggregate — format parity graded against the
-    parquet-derived truth. The point at 100 TB: the engine's operators
-    are FORMAT-INDIFFERENT above the scan (same plan shape, and ORC
-    carries the same pushdown/pruning levers — the n_chars predicate
-    reaches the ORC scan as PushedFilters exactly like parquet,
-    plan-pinned in tests/test_plans.py). Scale shape: one pushdown
-    scan, one partial-agged groupBy."""
-    import os
-
-    from datasheet_etl_spark.plans.training import _staged_path
-
-    def build(path):
-        load_table(spark, sf_dir, "documents").write.mode(
-            "overwrite"
-        ).orc(os.path.join(path, "orc"))
-
-    work = _staged_path(sf_dir, "documents.parquet", "orc_at_rest", build)
-    d = spark.read.orc(os.path.join(work, "orc"))
-    return (
-        d.filter(F.col("n_chars") >= 200)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("total_chars"),
-        )
-        .orderBy("source")
-    )
-
-
 @register("t105_streaming_quarantine_ingest", _JSONL_INGEST_ORACLE)
 def t105_streaming_quarantine_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """LIVE t103 — the same staged corrupted JSONL drained through
-    ``streams.quarantine_ingest`` (availableNow) into clean/quarantine
-    parquet sinks, then the t103 rollup computed over the CLEAN SINK
-    AT REST plus the quarantine count — graded with t103's own oracle
-    (shared ``_JSONL_INGEST_ORACLE``), so the streaming path must
+    """Streaming lenient JSONL ingest — the staged corrupted JSONL drained
+    through ``streams.quarantine_ingest`` (availableNow) into
+    clean/quarantine parquet sinks, then the ingest rollup computed over
+    the CLEAN SINK AT REST plus the quarantine count — graded with the
+    batch-parse oracle (``_JSONL_INGEST_ORACLE``), so the streaming path must
     lose, duplicate, and mis-route exactly nothing relative to the
     batch parse. Exactly-once is structural: each micro-batch
     OVERWRITES its own ``batch=<id>`` partition in both sinks, so a
@@ -2741,43 +2036,6 @@ def t105_streaming_quarantine_ingest(
 
 
 @register(
-    "q50_string_functions",
-    """
-    SELECT p_partkey,
-           split_part(p_name, ' ', 2) AS second_word,
-           lpad(CAST(p_partkey AS VARCHAR), 8, '0') AS padded,
-           translate(p_name, 'aeiou', 'AEIOU') AS devoweled,
-           reverse(p_name) AS rev,
-           repeat(left(p_name, 3), 2) AS stutter,
-           right(p_name, 4) AS tail
-    FROM part ORDER BY p_partkey
-    """,
-)
-def q50_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String-function SQL surface, graded cross-engine on the
-    convention-stable subset: split_part (1-based, empty on a missing
-    field in BOTH engines), lpad, translate, reverse, repeat, and
-    left/right slicing. Locale-sensitive functions (initcap, soundex,
-    upper/lower beyond ASCII) are deliberately excluded — their
-    Unicode/locale conventions differ between engines and a
-    hash-graded entry must not depend on convention (the q49 rule).
-    All map-only codegen expressions — one projection, zero
-    shuffles beyond the presentation sort."""
-    p = load_table(spark, sf_dir, "part")
-    return p.select(
-        "p_partkey",
-        F.split_part(F.col("p_name"), F.lit(" "), F.lit(2)).alias(
-            "second_word"
-        ),
-        F.lpad(F.col("p_partkey").cast("string"), 8, "0").alias("padded"),
-        F.translate("p_name", "aeiou", "AEIOU").alias("devoweled"),
-        F.reverse("p_name").alias("rev"),
-        F.repeat(F.expr("left(p_name, 3)"), 2).alias("stutter"),
-        F.expr("right(p_name, 4)").alias("tail"),
-    ).orderBy("p_partkey")
-
-
-@register(
     "q51_null_semantics",
     """
     WITH c AS (
@@ -2810,9 +2068,9 @@ def q51_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     the conjunction never becomes TRUE), graded as a hard 0 rather
     than avoided. NULL ORDERING is the one convention that genuinely
     differs (Spark sorts NULLS FIRST asc, DuckDB NULLS LAST), which
-    the order-insensitive compare makes irrelevant — the q49 rule
-    applied to sorts. Scale shape: one projection, one partial-agged
-    groupBy, one broadcastable uncorrelated scalar subquery."""
+    the order-insensitive compare makes irrelevant. Scale shape: one
+    projection, one partial-agged groupBy, one broadcastable
+    uncorrelated scalar subquery."""
     load_table(spark, sf_dir, "customer").createOrReplaceTempView(
         "q51_customer"
     )
@@ -2844,18 +2102,18 @@ def q51_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("t107_frequent_ngrams_hashed", _FREQ_NGRAM_ORACLE)
 def t107_frequent_ngrams_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t100's 100 TB execution shape
-    (``text.frequent_ngrams_hashed``), graded with t100's OWN oracle —
-    the two paths must agree row-for-row including rank: counts
-    aggregate on 16-byte md5 gram keys so readable strings never
-    shuffle (t92's postings discipline), a value-derived k-th-count
-    threshold keeps boundary ties alive, and only the ≤ top_k + ties
-    candidate keys join back to one exemplar string for the final
-    (occurrences desc, gram asc) rank (AQE runtime-broadcasts the tiny
-    candidate frame; a pathological tie plateau degrades to a gkey
-    shuffle join instead of a forced-broadcast failure). The plan pin
-    lives in test_plans: every Exchange partitions on gkey, none on
-    gram."""
+    """The 100 TB execution shape of the frequent n-gram audit
+    (``text.frequent_ngrams_hashed``), graded with the from-scratch
+    string-gram oracle — the two paths must agree row-for-row including
+    rank: counts aggregate on 16-byte md5 gram keys so readable strings
+    never shuffle (the substring family's postings discipline), a
+    value-derived k-th-count threshold keeps boundary ties alive, and
+    only the ≤ top_k + ties candidate keys join back to one exemplar
+    string for the final (occurrences desc, gram asc) rank (AQE
+    runtime-broadcasts the tiny candidate frame; a pathological tie
+    plateau degrades to a gkey shuffle join instead of a
+    forced-broadcast failure). The plan pin lives in test_plans: every
+    Exchange partitions on gkey, none on gram."""
     from datasheet_etl_spark.operators.text import frequent_ngrams_hashed
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2883,7 +2141,7 @@ _Q52_BODY = """
 )
 def q52_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit ASYMMETRIC GROUPING SETS with grouping() markers — the
-    grouping-sets surface q35's CUBE and q13's ROLLUP cannot reach:
+    grouping-sets surface CUBE and q13's ROLLUP cannot reach:
     an arbitrary set list (here both single-column grains, the pair,
     and the grand total) plus the ``grouping(col)`` indicator that
     disambiguates a data NULL from a rollup NULL — the only correct
@@ -3027,48 +2285,6 @@ def t114_python_source_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q53_BODY = """
-    SELECT l_returnflag, l_linestatus,
-           date_trunc('month', CAST(l_shipdate AS DATE)) AS ship_month,
-           count(*) AS n,
-           {dsum} AS sum_qty
-    FROM {table}
-    WHERE l_shipdate >= '1995-01-01' AND l_shipdate < '1995-07-01'
-    GROUP BY ALL
-    ORDER BY ALL
-"""
-
-
-@register(
-    "q53_group_by_all",
-    _Q53_BODY.format(dsum=sql_dsum("l_quantity"), table="lineitem")
-    # DuckDB date_trunc returns DATE for date inputs; Spark returns
-    # TIMESTAMP — cast both to DATE for the compare (the q49 rule)
-    .replace("date_trunc('month', CAST(l_shipdate AS DATE))",
-             "CAST(date_trunc('month', CAST(l_shipdate AS DATE)) AS DATE)"),
-)
-def q53_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUP BY ALL / ORDER BY ALL — the analyst-ergonomics syntax
-    both engines resolve by the same rule (every non-aggregate select
-    item becomes a grouping/sort key, in select order), graded
-    cross-engine INCLUDING a computed grouping expression
-    (month-truncated ship date, cast to DATE on both sides per the
-    q49 trunc-vs-date_trunc type rule). Resolution happening in the
-    analyzer means the plan is identical to the explicit GROUP BY —
-    one scan, partial-agged aggregate; the syntax surface is what is
-    graded."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "q53_lineitem"
-    )
-    return spark.sql(
-        _Q53_BODY.format(dsum=sql_dsum("l_quantity"), table="q53_lineitem")
-        .replace(
-            "date_trunc('month', CAST(l_shipdate AS DATE))",
-            "CAST(date_trunc('month', CAST(l_shipdate AS DATE)) AS DATE)",
-        )
-    )
-
-
 @register(
     "q54_timezone_parity",
     """
@@ -3126,182 +2342,6 @@ def q54_timezone_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("event_id").cast("long").alias("first_event"),
         )
         .orderBy("ny_date", "ny_hour")
-    )
-
-
-@register(
-    "q55_collation",
-    """
-    WITH mangled AS (
-        SELECT CASE WHEN substr(md5(p_name), 1, 1) < '8'
-                    THEN upper(p_name) ELSE p_name END AS name
-        FROM part
-    )
-    SELECT lower(name) AS key_lower,
-           count(*) AS n,
-           min(name) AS rep_min
-    FROM mangled
-    GROUP BY 1
-    ORDER BY 1
-    """,
-)
-def q55_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String COLLATION grouping (Spark 4 collation support): part
-    names are deterministically case-mangled (the t64 md5-selector
-    trick, identical in both engines), then grouped under the
-    ``UTF8_LCASE`` collation — upper/lower variants of one name land
-    in ONE group with no normalizing projection in the plan; the
-    aggregation itself is collation-aware. The grouping KEY value an
-    engine returns is an arbitrary group member, so the output exposes
-    only deterministic derivations: ``lower(key)`` (identical for
-    every member) and the binary-min representative. The DuckDB oracle
-    groups by ``lower(name)`` — for this ASCII data the UTF8_LCASE
-    equivalence relation and lower()-equality coincide, which is
-    exactly the contract graded."""
-    part = load_table(spark, sf_dir, "part")
-    mangled = part.select(
-        F.when(
-            F.substring(F.md5("p_name"), 1, 1) < "8", F.upper("p_name")
-        )
-        .otherwise(F.col("p_name"))
-        .alias("name")
-    )
-    return (
-        mangled.groupBy(F.collate("name", "UTF8_LCASE").alias("k"))
-        .agg(
-            F.count("*").alias("n"),
-            F.min("name").alias("rep_min"),  # "name" is plain UTF8_BINARY
-        )
-        .select(
-            F.lower("k").cast("string").alias("key_lower"),
-            "n",
-            "rep_min",
-        )
-        .orderBy("key_lower")
-    )
-
-
-_Q56_BODY = """
-    WITH agg AS (
-        SELECT l_returnflag AS flag,
-               {dsum_qty} AS sum_qty,
-               {dsum_price} AS sum_price,
-               CAST(count(*) AS DOUBLE) AS n_rows
-        FROM {table}
-        GROUP BY l_returnflag
-    )
-    SELECT flag, metric, val
-    FROM agg UNPIVOT (val FOR metric IN (sum_qty, sum_price, n_rows))
-    ORDER BY flag, metric
-"""
-
-
-@register(
-    "q56_native_unpivot",
-    _Q56_BODY.format(
-        dsum_qty=sql_dsum("l_quantity"),
-        dsum_price=sql_dsum("l_extendedprice"),
-        table="lineitem",
-    ),
-)
-def q56_native_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NATIVE ``UNPIVOT`` SQL syntax (Spark 3.4+), graded against
-    DuckDB's identical standard form — distinct from q15's ``stack()``
-    expression route: here the wide→long reshape is the relational
-    UNPIVOT operator both parsers resolve natively, over a
-    decimal-exact measure aggregate (all three measures pre-cast to
-    DOUBLE so the long ``val`` column needs no engine-specific type
-    unification). The plan is still one scan + one partial-agged
-    aggregate + one Expand — reshape is free at 100 TB because it
-    happens on the aggregate's few output rows, never the fact rows."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "q56_lineitem"
-    )
-    return spark.sql(
-        _Q56_BODY.format(
-            dsum_qty=sql_dsum("l_quantity"),
-            dsum_price=sql_dsum("l_extendedprice"),
-            table="q56_lineitem",
-        )
-    )
-
-
-@register(
-    "q57_interval_range_frame",
-    """
-    SELECT event_id, user_id,
-           count(*) OVER w AS n_1h,
-           CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE)
-               AS sum_value_1h
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts
-                 RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-    ORDER BY event_id
-    """,
-)
-def q57_interval_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERVAL-typed RANGE frame ordered by a raw TIMESTAMP — the
-    calendar-aware twin of q36's numeric range frame, and a different
-    execution path: the frame bound is a TimeAdd over the ordering
-    expression, no epoch projection in the plan. Trailing-hour counts
-    and decimal-exact sums per user; both engines evaluate the frame
-    in one sorted pass per partition. Ties on ts cannot occur in this
-    data (µs event times are unique per user), so the frame content
-    is engine-deterministic."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "q57_events"
-    )
-    # interval frame bounds are SQL-literal surface (the DataFrame
-    # rangeBetween API takes numeric bounds only)
-    return spark.sql(
-        """
-        SELECT event_id, user_id,
-               count(*) OVER w AS n_1h,
-               CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE)
-                   AS sum_value_1h
-        FROM q57_events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts
-                     RANGE BETWEEN INTERVAL 1 HOUR PRECEDING
-                               AND CURRENT ROW)
-        ORDER BY event_id
-        """
-    )
-
-
-@register(
-    "q58_pagination_offset",
-    """
-    SELECT o_orderkey, o_custkey, o_orderdate,
-           CAST(o_totalprice AS DOUBLE) AS total
-    FROM orders
-    ORDER BY o_orderdate, o_orderkey
-    LIMIT 25 OFFSET 50
-    """,
-)
-def q58_pagination_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LIMIT/OFFSET pagination (OFFSET is Spark 3.4+ SQL surface):
-    page 3 of a keyset-ordered scan. Deterministic only because the
-    ORDER BY is a TOTAL order (date, key) — offset pagination over a
-    partial order is engine-lottery, the bug this entry exists to
-    document. Note the 100 TB caveat carried in the plan itself:
-    OFFSET still sorts/skips the prefix (GlobalLimit(75) then a local
-    skip), so deep pagination degrades linearly — keyset pagination
-    (WHERE (date, key) > last_seen ORDER BY ... LIMIT n, i.e. q23's
-    pushed-sort shape) is the scalable form, graded beside this entry
-    by q59_pagination_keyset with a page-equivalence pin; this entry
-    grades the OFFSET operator's existence and exactness, not its use
-    at depth."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "q58_orders"
-    )
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_custkey, o_orderdate,
-               CAST(o_totalprice AS DOUBLE) AS total
-        FROM q58_orders
-        ORDER BY o_orderdate, o_orderkey
-        LIMIT 25 OFFSET 50
-        """
     )
 
 
@@ -3388,10 +2428,10 @@ def q59_pagination_keyset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t129_cogroup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COGROUPED ``applyInPandas`` — the FIFTH and last corner of the
-    Python-evaluation surface the registry grades (Arrow scalar UDF
-    t126, GROUPED_AGG pandas_udf t79, UDTF t76, Python DataSource
-    t112–t115): two DataFrames grouped on the same key, each key's
+    """COGROUPED ``applyInPandas`` — the two-input corner of the
+    Python-evaluation surface the registry grades (GROUPED_AGG
+    pandas_udf t79, UDTF t76, grouped Arrow t131, Python DataSource
+    t113/t114/t143): two DataFrames grouped on the same key, each key's
     two Arrow batches handed to ONE Python function
     (``FlatMapCoGroupsInPandas`` in the plan, pinned in
     tests/test_plans.py). The body is the canonical cogroup workload —
@@ -3411,7 +2451,8 @@ def t129_cogroup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape, stated plainly: cogroup shuffles BOTH sides on
     user_id and sorts each group — the same exchange a join would pay
     — and per-group cost after the sort is linear in the two group
-    sizes. As with t126/t112, the SEAM is what this entry grades; the
+    sizes. As with t131 and the DataSource entries, the SEAM is what
+    this entry grades; the
     all-JVM asof composition (t18's merge-ordered union + forward
     fill, `operators/relational.py:57`) is the production path when
     the per-key logic doesn't genuinely need pandas.
@@ -3627,7 +2668,7 @@ _T133_XS = ("l_quantity", "l_discount", "l_tax")
 
 def _t133_sql() -> str:
     """DuckDB mirror of linear_fit's exact-decimal moments and double
-    derivation — the t59 discipline: identical DECIMAL(14,3) casts,
+    derivation: identical DECIMAL(14,3) casts,
     (38,6)-accumulated product sums, and the same double expression
     tree, so both engines derive identical fits bit-for-bit."""
     y = "l_extendedprice"
@@ -3682,20 +2723,21 @@ def _t133_sql() -> str:
 @register("t133_linear_fit", _t133_sql())
 def t133_linear_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-feature OLS fits (slope, intercept, R²) of price against
-    three lineitem measures in ONE scan — t59's exact-decimal-moment
-    discipline applied to Spark's ``regr_*`` aggregate family: the
-    native ``regr_slope``/``regr_intercept``/``regr_r2`` accumulate in
-    float (summation-order-dependent — two runs of the same drift
-    regression can disagree in the low digits at scale, and a DuckDB
-    hash-compare would be flaky by construction), so the registry
-    entry derives the SAME statistics from exact decimal moments and
-    the native family is pinned against it within 1e-6 in
-    tests/test_plans.py — semantics graded, reproducibility kept.
-    The training-pipeline use is t60's sibling: fit quality-vs-length
-    (or loss-vs-mixture-weight) slopes per corpus version and alarm on
-    sign flips. Scale shape: one scan, ONE aggregate row (11 decimal
-    moments), fits derived driver-side-free via explode — versus one
-    full scan per feature for the naive ``regr_*`` loop."""
+    three lineitem measures in ONE scan — the exact-decimal-moment
+    discipline of ``profile.correlation_matrix`` applied to Spark's
+    ``regr_*`` aggregate family: the native
+    ``regr_slope``/``regr_intercept``/``regr_r2`` accumulate in float
+    (summation-order-dependent — two runs of the same drift regression
+    can disagree in the low digits at scale, and a DuckDB hash-compare
+    would be flaky by construction), so the registry entry derives the
+    SAME statistics from exact decimal moments and the native family is
+    pinned against it within 1e-6 in tests/test_plans.py — semantics
+    graded, reproducibility kept. The training-pipeline use is t60's
+    sibling: fit quality-vs-length (or loss-vs-mixture-weight) slopes
+    per corpus version and alarm on sign flips. Scale shape: one scan,
+    ONE aggregate row (11 decimal moments), fits derived
+    driver-side-free via explode — versus one full scan per feature for
+    the naive ``regr_*`` loop."""
     from datasheet_etl_spark.operators.profile import linear_fit
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -3891,19 +2933,19 @@ def q72_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q73_collated_group_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 collated JOIN — q55 grades the collated GROUP BY; this
-    entry adds the arm q55 cannot reach: EQUALITY JOIN on a
+    """Spark 4 collated GROUP BY and JOIN: the collated grouping plus
+    an EQUALITY JOIN on a
     ``UTF8_LCASE`` key, case-insensitive comparison as a property of
     the KEY's type with no lower()/upper() normalization in any join
     key (the oracle re-derives the same matches via lower(); the
-    ASCII-manufactured case keeps the two definitions identical, per
-    q55's contract note, and the case-merge/non-merge semantics are
-    pinned in pytest including a non-ASCII agreeing pair).
+    ASCII-manufactured case keeps the two definitions identical, and the
+    case-merge/non-merge semantics are pinned in pytest including a
+    non-ASCII agreeing pair).
 
     The case variance is manufactured deterministically: the first
     token of each document is uppercased iff doc_id is even, then the
-    mixed-case union is grouped by the collated key (q55's machinery,
-    re-used as the probe side) and joined to the all-upper even-side
+    mixed-case union is grouped by the collated key (the probe
+    side) and joined to the all-upper even-side
     and all-lower odd-side counts on collated equality — matches exist
     ONLY through the collation. Plan reality this entry exists to
     certify (no other entry exercises it): collated keys do NOT
@@ -3960,13 +3002,12 @@ def q74_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``EXECUTE IMMEDIATE`` — dynamic SQL from a session variable
     with positional ``USING`` parameter binding (Spark 4.0), closing
     the SQL-programmability square beside q72's scripting (BEGIN/END
-    control flow), q66's demoted CREATE FUNCTION + named-parameter
-    arms, and the session-variable discipline both grade: the
+    control flow) and the session-variable discipline it grades: the
     statement TEXT lives in a variable (the metadata-driven-job
     pattern — a rollup template instantiated per table), the
     parameters bind injection-safely at execution, and the result is
     the statement's result. The oracle inlines both; the abstraction
-    must be semantically transparent (q66's standing contract).
+    must be semantically transparent.
     Decimal-exact revenue per the q11 discipline. Plan shape: the
     executed statement compiles to the ordinary partial-agged
     pushdown scan — EXECUTE IMMEDIATE is a binding surface, not an
@@ -4002,10 +3043,8 @@ def q74_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t141_from_xml_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCHEMA-BASED XML parse — ``from_xml`` with an explicit schema
-    (builtin since Spark 4.0, NO spark-xml jar: the gate note that
-    kept XML extraction on t125's xpath path-expressions is now half
-    obsolete, and this entry grades the half that opened). The
-    structured sibling of t125: the same known-decomposition
+    (builtin since Spark 4.0, NO spark-xml jar). The typed
+    counterpart of xpath path-expressions: a known-decomposition
     discipline (each doc synthesizes an XML record from its own
     columns; any parse drift breaks the hash), but through one typed
     parse per row — nested element text (``_VALUE``), a typed
@@ -4076,7 +3115,7 @@ def t141_from_xml_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q75_variant_lenient_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VARIANT leniency + introspection — the three Spark 4 variant
-    arms q38's extraction entry does not reach: ``try_parse_json``
+    arms beyond typed ``variant_get`` extraction: ``try_parse_json``
     (NULL-on-error ingest — q68/t140's try_* discipline applied to
     JSON: one planted malformed payload per 11 docs, and the graded
     populations prove broken rows null out while clean rows carry
@@ -4169,7 +3208,7 @@ def q75_variant_lenient_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q76_transpose_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``DataFrame.transpose`` (Spark 4.0) — the REPORT-SHAPE reshape
     completing the A1/A2 pivot family's API square (q67 native SQL
-    PIVOT, q56's demoted UNPIVOT, q14's demoted dynamic pivot): rows
+    PIVOT, UNPIVOT, the dynamic pivot): rows
     become columns with column names taken from the index column's
     VALUES, the metrics-as-rows layout a dashboard export writes.
     Two semantics the entry pins: transpose collects the index
@@ -4212,8 +3251,8 @@ def t142_xml_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     note recorded XML as jar-gated with builtin xpath as the
     workaround — re-probed this round, the DATA SOURCE itself now
     ships, and this entry retires that half of the gate; t141 grades
-    the scalar from_xml arm, t125 the path-expression arm). t104's
-    ORC discipline applied to the THIRD at-rest format: the documents
+    the scalar from_xml arm). The at-rest discipline applied to
+    a third format: the documents
     table staged as XML (rowTag=doc), read back with an explicit
     schema (schema inference over 100 TB of XML is a planning-time
     full scan — always pass one), and graded through a filtered
@@ -4228,8 +3267,8 @@ def t142_xml_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin (tests/test_plans.py pins both modes). Scale shape: XML scans
     split per file (no intra-file split like parquet row groups) and
     push no filters — stated plainly; the at-rest XML role is ingest
-    interchange, with parquet as the working format (t104's
-    format-indifference contract above the scan)."""
+    interchange, with parquet as the working format (the contract
+    above the scan is format-indifferent)."""
     import os
 
     from datasheet_etl_spark.plans.training import _staged_path
@@ -4414,14 +3453,15 @@ def t147_polymorphic_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t149_python_source_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Python DataSource reader's ARROW-BATCH path — the sixth arm
-    of the seam square (batch tuples t112/t114, stream read t113,
-    batch write t115, stream write t143): ``read`` yields pyarrow
+    of the seam square (batch tuples t114, stream read t113, batch
+    write, stream write t143): ``read`` yields pyarrow
     RecordBatches, so one Arrow batch crosses the Python boundary per
     chunk instead of one pickled tuple per row — the 10-100x
     scale path for wrapping columnar upstreams (Arrow Flight, parquet
     fragments, vector stores) as schedulable sources. Same
-    deterministic generator contract as t112, so the same DuckDB
-    range() oracle re-derives every row at 12x t112's volume; an
+    deterministic generator contract as t114, so the same DuckDB
+    range() oracle re-derives every row at 12x the tuple reader's
+    volume; an
     arrowBatchSize that does NOT divide the partition span (4096 vs
     7500-row slices) puts ragged chunk boundaries on the graded path,
     and tuple-vs-arrow row parity plus the batch-type contract are
@@ -4487,14 +3527,14 @@ def t151_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hampel despiking gate over per-user event series: each value vs
     the exact median/MAD of its centered 15-row frame, flagging
     |x - med| > 3 x 1.4826 x mad. The ROLLING-robust complement to t53's
-    global-stratum MAD gate and t69's trailing mean/std z-score — a
+    global-stratum MAD gate and a trailing mean/std z-score — a
     spike riding a drifting baseline fools both, not this.
 
     Value-oracled EXACTLY (not approx-compared): median and MAD are
     sum-free sorted-array picks, so Spark and DuckDB derive
     bit-identical meds/mads/flags from the same frames — the oracle
     re-derives the same sorted-list decomposition rather than trusting
-    an engine mad() built-in (known-decomposition discipline, q50/t110).
+    an engine mad() built-in (known-decomposition discipline).
     One shuffle on user_id; per-row state is the 15-double frame.
     """
     from datasheet_etl_spark.operators.profile import hampel_filter
@@ -4563,16 +3603,17 @@ def t151_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t153_ccnet_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet's head/middle/tail perplexity bucketing, per language: the
-    odd-half corpus scored by the even-half unigram LM (t65's exact
-    machinery), then ntile(3) WITHIN each language on the score — the
-    step t65 stops short of, and the reason CCNet buckets per language
-    at all: one global threshold would just rank languages by their
-    distance to the reference LM, not rank documents within a language.
-    head = lowest-perplexity third (kept), tail = dropped; the bucket
-    boundary values and an id_sum membership fingerprint are the graded
-    surface, so a one-document bucket flip fails the oracle.
+    odd-half corpus scored by the even-half unigram LM
+    (``text.unigram_log_ppl``), then ntile(3) WITHIN each language on
+    the score — the step a global score stops short of, and the reason
+    CCNet buckets per language at all: one global threshold would just
+    rank languages by their distance to the reference LM, not rank
+    documents within a language. head = lowest-perplexity third (kept),
+    tail = dropped; the bucket boundary values and an id_sum membership
+    fingerprint are the graded surface, so a one-document bucket flip
+    fails the oracle.
 
-    Shape: broadcast vocab + one per-doc aggregate (t65), then ONE
+    Shape: broadcast vocab + one per-doc aggregate, then ONE
     shuffle on lang for the ntile window and a partial-agged rollup —
     the window state is a rank counter, never the text. Tiebreak on
     (lp, doc_id) makes the ntile assignment a total order both engines
@@ -4762,31 +3803,3 @@ def t158_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "user_id", "event_id", "ts_sec", "n", "cp_k", "cp_magnitude"
     ).orderBy("user_id")
-
-
-@register(
-    "q35_cube",
-    f"""
-    SELECT l_returnflag, l_linestatus,
-           count(*) AS n_items,
-           {sql_dsum('l_quantity')} AS sum_qty
-    FROM lineitem
-    GROUP BY CUBE (l_returnflag, l_linestatus)
-    ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
-    """,
-)
-def q35_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE grouping sets — all four grains (both keys, each alone,
-    grand total) in ONE pass: Spark expands the grouping sets into a
-    single Expand + hash aggregate, so the table is read once where
-    four separate GROUP BYs would read it four times. Same map-side
-    partial-agg behavior as a plain groupBy."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(F.count("*").alias("n_items"), dsum(F.col("l_quantity")).alias("sum_qty"))
-        .orderBy(
-            F.col("l_returnflag").asc_nulls_first(),
-            F.col("l_linestatus").asc_nulls_first(),
-        )
-    )

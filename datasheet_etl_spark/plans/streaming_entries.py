@@ -139,14 +139,14 @@ class _few_state_partitions:
       HDFS-backed store-commit floor (~0.1 s of fsync-bound file IO
       per partition × micro-batch × store; a stream-stream join keeps
       4 stores per partition), so halving partitions halves the
-      dominant term — ABBA medians 0.83-0.87× on t41/t116 with the
-      faster arm winning EVERY pair in BOTH positions, and the t119
+      dominant term — ABBA medians 0.83-0.87× on the interval joins with
+      the faster arm winning EVERY pair in BOTH positions, and the t119
       decomposition (source floor ~2.4 s + join-state ~5.5 s +
       agg-state ~0.8 s at 8 partitions) puts the commit term at >60%
       of the entry. Per-partition state stays far below memory at any
       bench SF, and a bounded drain (backfill/replay) has the same
       commit-floor shape on a real cluster.
-    - Python-stateful drains (``applyInPandasWithState``: t14, t117,
+    - Python-stateful drains (``applyInPandasWithState``: t117,
       t24) keep **8**: state partitions are also their Python worker
       parallelism, and r15 measured 1.10-1.21× REGRESSION at 4 in its
       cleanest pairs (this round's re-check ran at steal 0.35-0.66 —
@@ -285,8 +285,8 @@ def _stage_events_sentinels(
 
 
 def _stage_events_outer(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
-    """t116 staging: one sentinel file with a purchase+click pair for
-    ``user_id = -1`` at +7 days (clears the 6h lookback + 1h
+    """Outer-join staging: one sentinel file with a purchase+click pair
+    for ``user_id = -1`` at +7 days (clears the 6h lookback + 1h
     watermark; the pair self-matches and the entry filters it out)."""
     return _stage_events_sentinels(
         spark,
@@ -299,14 +299,13 @@ def _stage_events_outer(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
 def _outer_interval_drain(
     spark: SparkSession, sf_dir: str, how: str, tag: str
 ) -> DataFrame:
-    """Shared drain for the outer interval-join entries (t116 left,
-    t122 full): sentinel-staged events, watermarked purchase/click
-    streams, one stream_interval_join in ``how`` mode, availableNow
-    into a memory sink, sentinel rows filtered post-drain. The user
-    key is COALESCED across sides — identity for left-outer (left rows
-    always carry it), required for full-outer (a right-only row holds
-    NULLs in every left column including the left's copy of the join
-    key)."""
+    """Drain for the outer interval-join entry (t122, full outer):
+    sentinel-staged events, watermarked purchase/click streams, one
+    stream_interval_join in ``how`` mode, availableNow into a memory
+    sink, sentinel rows filtered post-drain. The user key is COALESCED
+    across sides — identity for left-outer (left rows always carry it),
+    required for full-outer (a right-only row holds NULLs in every left
+    column including the left's copy of the join key)."""
     src, n_real = _stage_events_outer(spark, sf_dir)
     with _few_state_partitions(spark):
         purchases = events_stream(
@@ -343,7 +342,7 @@ def t117_stateful_timeout_sessions(spark: SparkSession, sf_dir: str) -> DataFram
     once, when CLOSED — by the next event's gap in-stream, or by the
     watermark passing ``last_event + gap`` via the timeout branch
     (``hasTimedOut`` → finalize → ``state.remove()``). This is the
-    state-lifecycle contract t14's NoTimeout operator never exercises:
+    state-lifecycle contract a NoTimeout operator never exercises:
     quiet keys finalize and their state is removed, so state tracks
     OPEN sessions only. Trailing no-data batches already fire timeouts
     up to the final data watermark (``max(ts) − delay``; pinned in
@@ -393,7 +392,7 @@ def t117_stateful_timeout_sessions(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def t119_stream_join_then_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The OTHER multi-stateful combination (t118 chains agg→agg):
+    """The OTHER multi-stateful combination (chained agg→agg aside):
     a stream-stream interval JOIN feeding a windowed AGGREGATE in one
     streaming query — enrich-then-rollup, the shape that otherwise
     forces a land-and-relaunch pipeline. The inner join emits matched
@@ -525,16 +524,16 @@ def _stage_events_seq_split(spark: SparkSession, sf_dir: str) -> str:
 def t121b_streaming_scd2_bucketed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """t121's streaming Type-2 SCD through the BUCKETED manifest
+    """Streaming Type-2 SCD through the BUCKETED manifest
     storage mode (VERDICT r11 #4): ``scd2_upsert_sink(num_buckets=8)``
     puts the history on the cdc sink's partition-scoped layout —
     per micro-batch, only the buckets the batch's keys hash into are
     read and rewritten (O(touched buckets), not O(history); untouched
     buckets' dirs are re-pointed by the manifest, never re-written —
     pinned in tests/test_streaming.py). The SAME DuckDB lead-window
-    oracle grades t120 (batch), t121 (incremental, flat) and this
-    entry (incremental, bucketed): one contract, three execution
-    shapes — the storage mode must be invisible in the result."""
+    oracle grades this entry (incremental, bucketed) and, in pytest,
+    the batch history derivation: one contract, two execution shapes —
+    the storage mode must be invisible in the result."""
     import hashlib
     import os
 
@@ -586,7 +585,7 @@ def t121b_streaming_scd2_bucketed(
 )
 def t122_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER stream-stream interval join, completing the join
-    family (t41 inner — demoted into t116; t116 left outer): BOTH
+    family beyond inner and left outer: BOTH
     sides' unmatched rows emit exactly once with NULL columns from the
     other side — purchases with no preceding click AND clicks that
     preceded no purchase. The user key must be COALESCED across sides
@@ -595,8 +594,8 @@ def t122_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFram
     One sentinel pair advances both streams' watermarks (it passes
     both event-type filters), closing every real row's interval; the
     drained result equals the batch FULL JOIN (DuckDB oracle), both
-    NULL populations included. Shares ``_outer_interval_drain`` with
-    t116 — one body, parameterized by join mode."""
+    NULL populations included. The drain is ``_outer_interval_drain``,
+    parameterized by join mode."""
     return _outer_interval_drain(spark, sf_dir, "full_outer", "t122")
 
 
@@ -624,13 +623,13 @@ def t122_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def t128_join_state_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-STREAM JOIN state read back from the checkpoint
-    (VERDICT r12 #5 — the second operator class on the ``statestore``
-    surface; t123 grades a drained aggregate, this grades what a
-    symmetric hash join is STILL HOLDING): clicks join purchases
-    within a 6-hour forward window, the bounded drain finishes, and
-    the entry reads the join's ``left-keyWithIndexToValue`` store —
-    the buffered left rows a join debug session wants ("which rows is
-    the join retaining for this key, and did they ever match").
+    (the second operator class on the ``statestore`` surface after
+    aggregates: what a symmetric hash join is STILL HOLDING): clicks
+    join purchases within a 6-hour forward window, the bounded drain
+    finishes, and the entry reads the join's
+    ``left-keyWithIndexToValue`` store — the buffered left rows a join
+    debug session wants ("which rows is the join retaining for this key,
+    and did they ever match").
 
     The oracle models the PHYSICAL retention contract, probed (the
     t127 discipline), not assumed: after the drain's final no-data
@@ -713,7 +712,7 @@ def t24_streaming_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall and signature parity with the batch pipeline are pinned in
     tests/test_streaming.py.
 
-    Oracle impossibility note (r9, the t02/t03 pattern): the t14 route
+    Oracle impossibility note (the t02/t03 pattern): the usual route
     — grading the drained result with a batch entry's own SQL — needs
     the batch result to be DuckDB-derivable, and MinHash signatures
     are min() over affine permutations of ``xxhash64`` (dedup.
@@ -728,7 +727,7 @@ def t24_streaming_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datasheet_etl_spark.io import load_table
     from datasheet_etl_spark.streaming.streams import streaming_minhash_pairs
 
-    # bounded slice (like t04): the entry demonstrates cross-batch
+    # bounded slice: the entry demonstrates cross-batch
     # stateful matching, not corpus throughput — the per-row signature
     # expression is the interpreted path by design (incremental arrivals)
     docs = (
@@ -783,10 +782,10 @@ def t24_streaming_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t78_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type heavy-hitter users via a Misra-Gries summary in
-    grouped streaming state — the frequency sketch beside t55's
-    distinct sketch (KMV): state hard-capped at k=16 (item, count)
-    pairs per key forever, where exact streaming top-k state is
-    unbounded.
+    grouped streaming state — the frequency sketch beside
+    ``streams.kmv_distinct_stateful``'s distinct sketch (KMV): state
+    hard-capped at k=16 (item, count) pairs per key forever, where exact
+    streaming top-k state is unbounded.
 
     MEMBERSHIP oracle (r12, VERDICT r11 #6 — upgraded from rows-only):
     the summary's COUNTS are arrival-order-dependent and stay
@@ -902,7 +901,7 @@ def t99_streaming_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the later batch always meets the earlier one's postings). The
     DuckDB oracle re-derives all three capped posting sets and their
     three pairwise meets, islands and spans included — a fully
-    hash-graded STREAMING entry, like t13/t14/t41/t77."""
+    hash-graded STREAMING entry, like t117/t122."""
     import atexit
     import hashlib
     import os
@@ -991,8 +990,8 @@ def t99_streaming_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t143_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING write arm of the Python DataSource seam — the
-    fifth and last corner of that surface (batch read t112/t114,
-    stream read t113, batch write t115): the events stream drains
+    last corner of that surface (batch read t114, stream read t113,
+    the batch writer): the events stream drains
     through ``writeStream.format("jsonl_manifest")`` into the custom
     per-micro-batch transactional sink (``JsonLinesStreamWriter``:
     per-task uuid stagings → an atomic ``_MANIFEST_b{batchId}`` per
@@ -1007,8 +1006,8 @@ def t143_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted-failure abort paths are pinned in tests/test_pyds.py.
     Scale shape: the sink is partition-parallel (one staged file per
     task), the driver touches only commit messages, and the at-rest
-    layout is O(batches) manifests — the compaction story is t77's
-    CDC bucketed-manifest family."""
+    layout is O(batches) manifests — the compaction story is the
+    CDC bucketed-manifest family (``streams.cdc_upsert_sink``)."""
     import hashlib
     import os
 

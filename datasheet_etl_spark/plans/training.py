@@ -280,8 +280,8 @@ def _t03b_oracle_sql() -> str:
 
 @register("t03b_simhash_md5_oracle", _t03b_oracle_sql())
 def t03b_simhash_md5_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t03's SimHash machinery under a REPLAYABLE bit source (VERDICT
-    r12 #2, the t63b/t93 discipline): fingerprint bits come from each
+    """t03's SimHash machinery under a REPLAYABLE bit source (the
+    t63b md5-replay discipline): fingerprint bits come from each
     token's md5 HEX DIGITS (bit j = bit j%4 of digit j//4 — 60 bits
     keeps every value in a signed long), so DuckDB re-derives the
     ENTIRE pipeline bit-for-bit: the per-bit ±1 majority-vote
@@ -1109,7 +1109,8 @@ def t23_app_circuit_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t132_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT distinct counting via Spark's bitmap aggregates — the
-    exact counterpart of t124's HLL sketch in the same two-level
+    exact counterpart of the HLL sketch (``sketches.hll_partials``) in
+    the same two-level
     mergeable-partials shape: ``bitmap_bucket_number`` /
     ``bitmap_bit_position`` split each key into 32768-bit pages,
     per-shard ``bitmap_construct_agg`` builds page bitmaps,
@@ -1117,11 +1118,11 @@ def t132_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sum(bitmap_count)`` over a key's pages is the exact distinct
     count. The 100 TB trade this entry grades: where q24's exact
     ``count(DISTINCT)`` shuffles raw VALUES (bytes ∝ distinct values
-    per group) and t124's HLL shuffles constant-size sketches but
+    per group) and an HLL sketch shuffles constant-size sketches but
     answers approximately, the bitmap path shuffles fixed 4 KB pages —
     exact AND mergeable, the right tool when the value domain is dense
     integers (here l_orderkey: 150k keys span five pages). Incremental
-    maintenance falls out of the same algebra as t124/t87: tonight's
+    maintenance falls out of the same algebra as t87's HLL: tonight's
     shard pages OR with the stored ones. Oracle: the plain
     ``count(DISTINCT)`` it must equal bit-for-bit."""
     from datasheet_etl_spark.operators.sketches import (
@@ -1157,12 +1158,12 @@ def t132_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t135_kll_quantiles_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4.1's NATIVE Datasketches KLL quantile sketches beside
-    t88's hand-built mergeable histogram: per-shard
+    the hand-built mergeable histogram (``sketches.hist_partials``): per-shard
     ``kll_sketch_agg_double`` partials merged per key with
-    ``kll_merge_agg_double`` (the t124 two-level shape — tonight's
+    ``kll_merge_agg_double`` (the two-level shape — tonight's
     shard sketches merge with the stored ones; kilobytes move, never
     values), then p50/p75 reads off the merged sketch. Oracled by the
-    t25 exactness route: lineitems per part is ~30 at every scale
+    below-capacity exactness route: lineitems per part is ~30 at every scale
     factor (a generator ratio), far below k=200, and below k a KLL
     sketch RETAINS every item — so ``kll_sketch_get_quantile`` is the
     exact order statistic. The convention is pinned empirically
@@ -1220,7 +1221,7 @@ def t135_kll_quantiles_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t136_theta_set_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native Datasketches THETA sketches — the distinct-count family
-    member that supports set OPERATIONS: HLL (t87/t124) only unions,
+    member that supports set OPERATIONS: HLL (t87) only unions,
     bitmaps (t132) are exact but domain-dense; theta sketches
     intersect and difference, which is how a pipeline answers
     "how many suppliers appear in BOTH the returned and the
@@ -1229,7 +1230,7 @@ def t136_theta_set_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     union/intersection/difference estimates — a NULL sketch (a part
     with no rows under one flag) behaves as the empty set through all
     three operators (probed: union=|other|, intersection=0). Oracled
-    by the t25 exactness route: suppliers per part is ~30 at every
+    by the below-capacity exactness route: suppliers per part is ~30 at every
     scale factor, far below the sketch's nominal 4096 entries, and
     below nominal a theta sketch retains every hash — estimates ARE
     the exact set cardinalities, which the oracle derives from
@@ -1385,7 +1386,7 @@ def _run_sized_recursion(spark, n_seeds: int, build) -> DataFrame:
     should stay armed for everything else in the session. The guard is
     read at EXECUTION, not plan time (probed), so the walk must run
     inside the conf window — bounded collect-then-recreate (both
-    entries aggregate to dozens of rows), the t115 pattern — and the
+    entries aggregate to dozens of rows) — and the
     conf is restored after."""
     prev = spark.conf.get("spark.sql.cteRecursionRowLimit", None)
     spark.conf.set(
@@ -1446,7 +1447,7 @@ def _t138_sql(spark: SparkSession) -> DataFrame:
 def t139_approx_top_k_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native Datasketches FREQUENT-ITEMS (Spark 4.1
     ``approx_top_k_accumulate`` / ``_combine`` / ``_estimate``) — the
-    fourth member of the native-sketch family (t124 HLL, t135 KLL,
+    fourth member of the native-sketch family (t87 HLL, t135 KLL,
     t136 theta) and the native twin of t78's hand-built Misra-Gries:
     per-event-type top-4 items through the two-level mergeable shape
     every incremental pipeline runs (per-shard accumulate partials →
@@ -1519,7 +1520,7 @@ def t140_utf8_validity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     transfers, which assume valid UTF-8): classify, pass-through
     valid rows as NULL-on-error (the try_* discipline q68 grades for
     arithmetic, here for encoding), and repair by substitution.
-    Corruption is planted IN-PLAN with t110/t125's
+    Corruption is planted IN-PLAN with the
     known-decomposition discipline: docs with doc_id % 7 = 0 get one
     0x80 continuation byte appended (CAST(x'80' AS STRING) — the cast
     is non-validating), so ground truth is a pure function of doc_id
@@ -1761,7 +1762,8 @@ def t35_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t37_sequence_pack_nosplit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """No-split sequence packing: greedy next-fit into 2048-char bins in
     deterministic hash order — documents never straddle bins (the SFT
-    packing contract; t28 is the straddling pretraining form). Genuinely
+    packing contract; ``sampling.pack_sequences`` is the straddling
+    pretraining form). Genuinely
     sequential within a shard, so it runs as applyInPandas per hash
     shard; invariants (fill ≤ budget, dense bins, determinism under
     repartitioning) are pinned in tests/test_sampling.py.
@@ -1772,7 +1774,7 @@ def t37_sequence_pack_nosplit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bin, fill) threads row-to-row through the three next-fit branches
     (fits / opens next bin / oversize gets a dedicated bin), and the
     recursion depth is rows-per-shard, bounded by the 16-way hash
-    sharding (the t93/t97 md5-replay discipline applied to a FOLD, not
+    sharding (the t97 md5-replay discipline applied to a FOLD, not
     just an order)."""
     from datasheet_etl_spark.operators.sampling import pack_sequences_nosplit
 
@@ -2101,7 +2103,7 @@ def t43_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _t44_oracle_sql(iters: int = 4, damping: float = 0.85) -> str:
     """Unrolled fixed-iteration PageRank as pure ANSI SQL — the decimal
-    discipline (t59's) applied to an iterative algorithm: the per-edge
+    discipline applied to an iterative algorithm: the per-edge
     contribution rank/out_degree is a double DIVISION (identical IEEE
     result in any engine), and the per-node SUM runs over
     DECIMAL(38,28) casts, so the aggregate is exactly order-independent
@@ -2332,7 +2334,7 @@ def t48_packing_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Packing-efficiency planner: power-of-two token-length buckets
     with real vs padded token mass and the utilization ratio — the
     audit that quantifies what naive fixed-shape batching wastes and
-    sequence packing (t28/t37) recovers. One projection + one
+    sequence packing (t37) recovers. One projection + one
     bucket-cardinality aggregate; shuffle volume is ≤ 9 rows."""
     from datasheet_etl_spark.operators.sampling import packing_histogram
 
@@ -2691,7 +2693,7 @@ def t144_khop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t146_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch — the FIFTH native-sketch family member (HLL
-    t124, KLL t135, theta t136, frequent-items t139/t145): point
+    t87, KLL t135, theta t136, frequent-items t139/t145): point
     FREQUENCY estimates from a fixed d x w counter grid, the mergeable
     summary for "how often did THIS key occur" when the key domain is
     too large to count exactly. SQL ``count_min_sketch(col, eps,
@@ -2808,7 +2810,7 @@ def t148_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling hash (``operators/text.py:rolling_hash`` — acc*31 + ascii,
     mod 2^31-1, a whole-stage-codegen aggregate HOF fold): the
     fingerprint variant that distinguishes permuted documents, where
-    t11/t19's md5-of-sorted-token-set canon deliberately does not —
+    t19's md5-of-sorted-token-set canon deliberately does not —
     the two ends of the §2 fingerprinting trade. Graded over EVERY
     document (h_sum moves if ANY doc's fold drifts by one character)
     plus the per-source distinct-fingerprint count (the exact-dedup
@@ -2816,7 +2818,7 @@ def t148_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold in DuckDB (list_reduce with a prepended 0 accumulator —
     list_reduce seeds from the first element, so the prepend IS the
     Spark fold's zero init; all operands non-negative so %% == pmod),
-    making this the aggregate-HOF twin of the q50/t110
+    making this the aggregate-HOF twin of the
     known-decomposition discipline. Empty/NULL text folds to 0 on
     both sides (filtered char list is empty -> init survives).
     Scale shape: map-only per-doc fold (zero shuffle), one
@@ -2875,7 +2877,7 @@ def t150_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor, the 5 hardest different-label neighbors, flagged semi_hard
     when they land in the margin band below the anchor's best same-label
     similarity — the triplet/InfoNCE selection rule, an operator no
-    other registry row exercises (t06/t72 rank WITHOUT a label
+    other registry row exercises (t63b/t72 rank WITHOUT a label
     constraint; t63 diversifies, never mines against a positive).
 
     One map-side matmul pass over the corpus (anchors broadcast in the
@@ -2928,11 +2930,12 @@ def t152_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled multilingual resampling (alpha = 0.5, T = 2):
     per-language rates derived IN-PLAN from the corpus distribution —
     p_lang ∝ sqrt(n_lang) up-samples low-resource languages — then the
-    deterministic md5-prefix gate at the quantized rate. t29 grades the
-    gate under config rates; this grades the named data-dependent rule,
-    rate derivation included (sqrt weight + exact-decimal normalizer
-    make the thresholds bit-replayable — see temperature_mixture_stats).
-    Two tiny aggregates + one broadcast-joined corpus scan."""
+    deterministic md5-prefix gate at the quantized rate.
+    ``sampling.weighted_sample`` applies the gate under config rates;
+    this grades the named data-dependent rule, rate derivation included
+    (sqrt weight + exact-decimal normalizer make the thresholds
+    bit-replayable — see temperature_mixture_stats). Two tiny aggregates
+    + one broadcast-joined corpus scan."""
     from datasheet_etl_spark.operators.sampling import temperature_mixture_stats
 
     docs = _docs(spark, sf_dir)
@@ -2961,7 +2964,7 @@ def t154_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood near-dup blocking over document text
     prefixes: global sort on lower(substr(text,1,40)), each row paired
     with its 5 successors in the sort order, exact Levenshtein <= 5
-    verify — the skew-immune w×N blocking class beside t64's equality
+    verify — the skew-immune w×N blocking class beside equality
     blocks and t02's LSH bands. The global rank is the two-pass
     range-partition + offset form (no single-task sort; see
     global_rank); the pair set depends only on the total order, which
@@ -3032,7 +3035,8 @@ def t156_token_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     as one number per slice. Capped alphabet + tail bucket is the
     scale design (|groups| x 501 grid, constant in corpus size, and
     the distributions stay proper). Terms decimal-cast before the sum
-    (t65 discipline) so the KL replays bit-identically in DuckDB."""
+    (as in ``text.unigram_log_ppl``) so the KL replays bit-identically
+    in DuckDB."""
     from datasheet_etl_spark.operators.text import token_drift_kl
 
     docs = _docs(spark, sf_dir)

@@ -1098,11 +1098,6 @@ def kmv_distinct_stateful(
     Output (update mode): one row per key per micro-batch with the
     running ``distinct_est`` — exact below k distinct, ``(k-1)/theta``
     beyond (relative error ~1/sqrt(k-2)).
-
-    See :func:`kmv_distinct_tws` for the same operator on Spark 4's
-    typed-state ``transformWithState`` API (adds store-enforced state
-    TTL for idle keys); it needs protobuf at runtime, absent in this
-    build environment.
     """
     key_type = events.schema[key_col].dataType.simpleString()
     hashed = events.filter(F.col(value_col).isNotNull()).select(
@@ -1123,63 +1118,6 @@ def kmv_distinct_stateful(
         stateStructType="hashes array<bigint>",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def kmv_distinct_tws(
-    events: DataFrame,
-    key_col: str,
-    value_col: str,
-    k: int = 256,
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """:func:`kmv_distinct_stateful` on Spark 4's ``transformWithState``
-    API — typed ``ValueState`` plus store-enforced TTL (``ttl_ms``
-    expires idle keys without user-code bookkeeping), and requires the
-    RocksDB state-store provider (``rocksdb_state_store``).
-
-    Environment-gated the same way as the PDF/vision backends: the
-    transformWithState Python state server speaks protobuf, which this
-    build image lacks — the operator is import-guarded and its contract
-    is exercised through :func:`kmv_distinct_stateful` (identical fold
-    + estimator, pinned by the shared ``_kmv_fold``); on a cluster with
-    protobuf installed it is a drop-in swap.
-    """
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _KMVProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self.pool = handle.getValueState(
-                "kmv_pool", "hashes array<bigint>", ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = self.pool.get()
-            cur = set(prev[0]) if prev is not None else set()
-            pool, est = _kmv_fold(cur, rows, k)
-            self.pool.update((pool,))
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "distinct_est": [est],
-                    "pool_size": [len(pool)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    key_type = events.schema[key_col].dataType.simpleString()
-    hashed = events.filter(F.col(value_col).isNotNull()).select(
-        F.col(key_col), F.xxhash64(F.col(value_col)).alias("h")
-    )
-    return hashed.groupBy(key_col).transformWithStateInPandas(
-        _KMVProcessor(),
-        outputStructType=f"{key_col} {key_type}, distinct_est double, pool_size int",
-        outputMode="Update",
-        # state TTL is only legal under ProcessingTime time mode
-        # (STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL otherwise)
-        timeMode="ProcessingTime" if ttl_ms is not None else "None",
     )
 
 

@@ -47,7 +47,6 @@ COPIES = 10
 # group by contract (see the functions/aggregates.py docstring).
 ENTRIES = [
     "q11_tpch_q1",
-    "q43_star_join_revenue",
     "t01_dedup_exact",
     "t02_dedup_minhash_lsh",
     "t02b_minhash_lsh_md5_oracle",
@@ -68,7 +67,6 @@ ENTRIES = [
     "t98_incremental_substring_dedup",
     "t99_streaming_gram_index",
     "t101_excision_impact_report",
-    "t104_orc_at_rest",
     "t105_streaming_quarantine_ingest",
     "t107_frequent_ngrams_hashed",
     "q54_timezone_parity",
@@ -78,16 +76,11 @@ ENTRIES = [
     "t121b_streaming_scd2_bucketed",
     "t78_streaming_heavy_hitters",
     "q59_pagination_keyset",
-    "q60_multi_distinct_agg",
     "q61_set_ops_all",
     "t63b_mmr_pool",
     "q62_filter_clause",
-    "q63_ordered_set_aggs",
-    "q64_ignore_nulls_windows",
     "q65_hof_breadth",
-    "t126_arrow_python_udf",
     "t127_session_window_dynamic_gap",
-    "q66_sql_programmability",
     "t129_cogroup_asof",
     "q68_try_arithmetic",
     "q69_boolean_bitwise_aggs",

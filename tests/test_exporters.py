@@ -100,6 +100,23 @@ def test_batch_stats_and_report(spark, pipeline_out):
     assert "| lmr51430.pdf | verified | 0.99 |" in report
 
 
+def test_result_json_sink_roundtrip(spark, pipeline_out, tmp_path):
+    """S9: the JSON-lines sink reads back, under the CLI's pinned result
+    schema, to exactly the rows run_pipeline produced."""
+    from datasheet_etl_spark.cli import _read_result
+    from datasheet_etl_spark.pipeline import write_result_json
+
+    result, _ = pipeline_out
+    out = str(tmp_path / "result_json")
+    write_result_json(result, out)
+    back = _read_result(spark, out)
+    # the JSON reader relaxes nullability; types must match exactly
+    assert back.schema.simpleString() == result.schema.simpleString()
+    want = result.collect()
+    assert len(want) >= 1
+    assert sorted(back.collect(), key=repr) == sorted(want, key=repr)
+
+
 def test_csv_json_roundtrip_lossless(spark, tmp_path):
     """write_table/read_table: orc/csv/json round-trips reproduce the
     parquet source exactly (schema given, ISO timestamps)."""

@@ -224,7 +224,7 @@ def test_zorder_layout_bounds_both_dimensions(spark, tmp_path):
 
 
 def test_variant_at_rest_round_trip(spark, tmp_path):
-    """q38's docstring claim, proven: parse the JSON props ONCE into a
+    """Parse-once VARIANT storage, proven: parse the JSON props ONCE into a
     VARIANT column, store the variant binary in parquet, read it back,
     and run the same typed extraction + aggregate WITHOUT any parse in
     the read-side plan. The stored-and-reread aggregate must equal the

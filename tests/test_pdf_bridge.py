@@ -69,8 +69,11 @@ def test_real_backends_guarded(spark):
     if pdf_bridge.pdf_backend() == "none":
         with pytest.raises(RuntimeError, match="pdfplumber"):
             pdf_bridge.pdf_pages(binary_df)
+        with pytest.raises(RuntimeError, match="pdfplumber"):
+            pdf_bridge.pdf_words(binary_df)
     else:  # pragma: no cover - exercised on machines with the libs
         assert pdf_bridge.pdf_pages(binary_df).columns[0] == "doc"
+        assert pdf_bridge.pdf_words(binary_df).columns[0] == "doc"
     if pdf_bridge.render_backend() == "none":
         with pytest.raises(RuntimeError, match="PyMuPDF"):
             pdf_bridge.render_pages(binary_df)

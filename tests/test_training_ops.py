@@ -1933,8 +1933,7 @@ def test_keyword_extract_rational_score_and_ties(spark):
 
 
 def test_arrow_udf_null_text_matches_sql_null_semantics(spark):
-    """Review-found (r12, third pass): t126's UDF must map NULL to
-    NULL, not 0 — an all-NULL-text group grades sum=NULL in both
+    """An Arrow-batched scalar UDF must map NULL to NULL, not 0 — an all-NULL-text group grades sum=NULL in both
     engines; mapping NULL to 0 would grade 0 vs NULL."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
