@@ -15,7 +15,11 @@ hypervisor stole meanwhile (``env.cpu_s_per_entry``). That figure
 spreads far less between runs on a shared host than wall does, so it is
 the number to compare across runs (``scripts/bench_diff.py``). Entries whose
 window saw more than 0.5% steal are listed in
-``env.steal_frac_per_entry``.
+``env.steal_frac_per_entry``. ``env.jit_ms_per_entry`` holds the
+milliseconds the JVM's JIT compilers spent during each entry: an entry
+that is first to exercise a code path pays for compiling it, so a CPU
+move with a JIT move beside it is warm-up moving between entries, not
+the entry itself getting slower or faster.
 """
 
 from __future__ import annotations
@@ -32,21 +36,33 @@ METRIC = "query_inventory_wall_sec"
 STEAL_NOTE = 0.005
 
 
-def time_entry(run) -> dict:
+def jit_compile_ms(spark) -> int:
+    """Total milliseconds the driver JVM's JIT compilers have spent so far."""
+    mx = spark._jvm.java.lang.management.ManagementFactory
+    return int(mx.getCompilationMXBean().getTotalCompilationTime())
+
+
+def time_entry(run, jit_ms=None) -> dict:
     """Call ``run()`` once. Returns its result as ``rows`` with the wall,
     the process-tree CPU scaled down by the host's steal share (as
-    ``perfbench/run.py`` scales it) and that share."""
+    ``perfbench/run.py`` scales it) and that share. Given ``jit_ms``, a
+    zero-argument reading of total JIT compile milliseconds, the record
+    also carries its change across the call as ``jit_ms``."""
+    jit0 = jit_ms() if jit_ms else 0
     cpu0, stolen0, t0 = tree_cpu_s(), host_steal_busy(), time.perf_counter()
     rows = run()
     wall = time.perf_counter() - t0
     steal = steal_share(stolen0)
     cpu = (tree_cpu_s() - cpu0) * (1 - steal)
-    return {
+    rec = {
         "wall": round(wall, 3),
         "cpu_s": round(cpu, 3),
         "steal": round(steal, 3),
         "rows": rows,
     }
+    if jit_ms:
+        rec["jit_ms"] = jit_ms() - jit0
+    return rec
 
 
 def run_entries(entries: dict, timer, reset) -> tuple[dict, dict]:
@@ -59,9 +75,10 @@ def run_entries(entries: dict, timer, reset) -> tuple[dict, dict]:
     for name, run in entries.items():
         try:
             rec = records[name] = timer(run)
+            jit = f" jit={rec['jit_ms']}ms" if "jit_ms" in rec else ""
             print(
                 f"# {name}: {rec['wall']:.3f}s cpu={rec['cpu_s']:.3f}s "
-                f"steal={rec['steal']:.3f} rows={rec['rows']}",
+                f"steal={rec['steal']:.3f}{jit} rows={rec['rows']}",
                 file=sys.stderr,
             )
         except Exception as exc:  # noqa: BLE001
@@ -84,6 +101,9 @@ def vectors(
     }
     if stolen:
         env["steal_frac_per_entry"] = stolen
+    jit = {k: r["jit_ms"] for k, r in records.items() if "jit_ms" in r}
+    if jit:
+        env["jit_ms_per_entry"] = jit
     times = {
         "metric": METRIC,
         "value": total,
@@ -253,7 +273,11 @@ def main() -> int:
     }
     stolen0 = host_steal_busy()
     t_all = time.perf_counter()
-    records, errors = run_entries(entries, time_entry, lambda: reset_session(spark))
+    records, errors = run_entries(
+        entries,
+        lambda run: time_entry(run, jit_ms=lambda: jit_compile_ms(spark)),
+        lambda: reset_session(spark),
+    )
     total = round(time.perf_counter() - t_all, 3)
     steal_sec = round((host_steal_busy()[0] - stolen0[0]) / os.sysconf("SC_CLK_TCK"), 1)
     steal_frac = round(steal_share(stolen0), 3)

@@ -8,11 +8,13 @@ reference where ``str(row.get(key, ""))`` coerces missing values to ''.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from datasheet_etl_spark.functions.scalar import extract_number, normalize_text
-from datasheet_etl_spark.functions.units import normalize_unit
+from datasheet_etl_spark.functions.units import literal_map, normalize_unit
 
 NUMERIC_TOLERANCE = 0.01  # 1% relative (ref: double_verifier.py:76)
 
@@ -22,6 +24,8 @@ CRITICAL_PARAMS = [
     "vin_min", "vin_max", "vout_min", "vout_max",
     "iout_max", "power", "frequency",
 ]
+
+_CRITICAL_RE = "|".join(re.escape(c) for c in CRITICAL_PARAMS)
 
 SEVERITY_PENALTIES = {"LOW": 0.02, "MEDIUM": 0.05, "HIGH": 0.10, "CRITICAL": 0.20}
 
@@ -85,10 +89,7 @@ def pct_diff(v1: Column, v2: Column) -> Column:
 
 
 def _contains_critical(target: Column) -> Column:
-    hit: Column = F.lit(False)
-    for critical in CRITICAL_PARAMS:
-        hit = hit | F.lower(target).contains(critical)
-    return hit
+    return F.lower(target).rlike(_CRITICAL_RE)
 
 
 def severity_from_diff(field: Column, diff: Column, param_context: Column) -> Column:
@@ -123,11 +124,8 @@ def assess_severity(field: Column, v1: Column, v2: Column, param_context: Column
 def severity_penalty(severity: Column, resolved: Column) -> Column:
     """V10 penalty: severity-keyed deduction, halved when resolved
     (ref: double_verifier.py:601-630)."""
-    penalty = (
-        F.when(severity == "LOW", SEVERITY_PENALTIES["LOW"])
-        .when(severity == "MEDIUM", SEVERITY_PENALTIES["MEDIUM"])
-        .when(severity == "HIGH", SEVERITY_PENALTIES["HIGH"])
-        .when(severity == "CRITICAL", SEVERITY_PENALTIES["CRITICAL"])
-        .otherwise(F.lit(SEVERITY_PENALTIES["MEDIUM"]))
+    penalty = F.coalesce(
+        F.element_at(literal_map(SEVERITY_PENALTIES, "double"), severity),
+        F.lit(SEVERITY_PENALTIES["MEDIUM"]),
     )
     return F.when(resolved, penalty * 0.5).otherwise(penalty)

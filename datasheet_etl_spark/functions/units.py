@@ -12,6 +12,8 @@ appear in the wild; both alias to the canonical µ-form (ref survey §7.4).
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -61,15 +63,22 @@ def unit_alias_rows() -> list[tuple[str, str]]:
     return sorted(rows.items())
 
 
+def literal_map(mapping: dict, value_type: str = "string") -> Column:
+    """``mapping`` as ONE map literal: a ``from_json`` of a JSON string
+    literal, which the optimizer folds to a constant map. Building it
+    with ``create_map`` over per-entry ``lit``s costs two py4j round
+    trips per entry at every call site."""
+    return F.from_json(
+        F.lit(json.dumps(mapping, ensure_ascii=False, sort_keys=True)),
+        f"map<string,{value_type}>",
+    )
+
+
 def normalize_unit(unit: Column) -> Column:
     """Expression form: alias → canonical, unknown → trimmed input,
-    NULL/empty → ''. Uses a literal map (element_at) so it stays a pure
-    expression — fine for the ~90-entry dim."""
-    pairs: list[Column] = []
-    for alias_lower, canonical in unit_alias_rows():
-        pairs.append(F.lit(alias_lower))
-        pairs.append(F.lit(canonical))
-    lookup = F.create_map(*pairs)
+    NULL/empty → ''. One literal-map lookup (element_at) keeps it a pure
+    expression."""
+    lookup = literal_map(dict(unit_alias_rows()))
     cleaned = F.trim(F.coalesce(unit.cast("string"), F.lit("")))
     return F.when(cleaned == "", "").otherwise(
         F.coalesce(F.element_at(lookup, F.lower(cleaned)), cleaned)

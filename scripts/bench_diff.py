@@ -40,7 +40,17 @@ def _load(spec: str) -> dict:
         return json.load(fh)
 
 
-def _outliers(ratios: dict, old: dict, new: dict, top: int, what: str) -> None:
+def _jit(o_jit: dict, n_jit: dict, k: str) -> str:
+    if k not in o_jit and k not in n_jit:
+        return ""
+    return f"  jit {o_jit.get(k, '?')} → {n_jit.get(k, '?')} ms"
+
+
+def _outliers(
+    ratios: dict, old: dict, new: dict, top: int, what: str,
+    o_jit: dict | None = None, n_jit: dict | None = None,
+) -> None:
+    o_jit, n_jit = o_jit or {}, n_jit or {}
     out = sorted(ratios.items(), key=lambda kv: kv[1], reverse=True)
     grown = [(k, r) for k, r in out if r > 1.0]
     improved = [(k, r) for k, r in out if r < 1.0]
@@ -50,7 +60,7 @@ def _outliers(ratios: dict, old: dict, new: dict, top: int, what: str) -> None:
     ):
         print(title)
         for k, r in rows:
-            print(f"  {r:6.2f}x  {old[k]:7.2f}s → {new[k]:7.2f}s  {k}")
+            print(f"  {r:6.2f}x  {old[k]:7.2f}s → {new[k]:7.2f}s  {k}{_jit(o_jit, n_jit, k)}")
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -92,7 +102,10 @@ def main(argv: list[str] | None = None) -> int:
                 f"{statistics.median(ratios.values()):.3f} "
                 f"(steal-scaled process-tree CPU, every common entry)"
             )
-            _outliers(ratios, o_cpu, n_cpu, args.top, "entries by CPU")
+            _outliers(
+                ratios, o_cpu, n_cpu, args.top, "entries by CPU",
+                o_env.get("jit_ms_per_entry"), n_env.get("jit_ms_per_entry"),
+            )
     else:
         o_pol = set(o_env.get("steal_frac_per_entry", {}))
         n_pol = set(n_env.get("steal_frac_per_entry", {}))

@@ -82,3 +82,21 @@ def test_records_and_stdout_line(bench):
         "cpu_s_per_entry": {"a": 2.5, "c": 0.75},
         "steal_frac_per_entry": {"a": 0.02},
     }
+
+
+def test_time_entry_records_jit_ms_across_the_call(bench):
+    readings = iter([1_000, 1_250])
+    rec = bench.time_entry(lambda: 7, jit_ms=lambda: next(readings))
+    assert (rec["rows"], rec["jit_ms"]) == (7, 250)
+    assert "jit_ms" not in bench.time_entry(lambda: 7)
+
+
+def test_vectors_carry_jit_ms_per_entry(bench):
+    records = {
+        "a": {"wall": 1.25, "cpu_s": 2.5, "steal": 0.0, "rows": 1, "jit_ms": 4_200},
+        "c": {"wall": 0.5, "cpu_s": 0.75, "steal": 0.0, "rows": 2, "jit_ms": 0},
+    }
+    times, line = bench.vectors(2.0, 0.1, records, {}, 0.0, 0.0)
+
+    assert times["env"]["jit_ms_per_entry"] == {"a": 4_200, "c": 0}
+    assert set(line) == STDOUT_KEYS

@@ -1,6 +1,7 @@
 """``scripts/bench_diff.py`` on tiny synthetic vectors (no Spark needed):
-CPU-carrying vectors get the per-entry CPU headline, older wall-only
-vectors keep the clean-entry wall headline."""
+CPU-carrying vectors get the per-entry CPU headline with JIT ms beside
+the largest movers, older wall-only vectors keep the clean-entry wall
+headline."""
 
 from __future__ import annotations
 
@@ -66,3 +67,31 @@ def test_wall_vectors_keep_the_clean_entry_headline(bench_diff, tmp_path, capsys
     assert "clean-in-both 2 | steal-polluted 1" in out
     assert "HEADLINE median clean-entry ratio: 1.500" in out
     assert "per-entry CPU" not in out
+
+
+def test_cpu_movers_show_their_jit_ms(bench_diff, tmp_path, capsys):
+    old = _write(
+        tmp_path, "old.json", {"a": 1.0, "b": 1.0, "c": 1.0},
+        {"cpu_s_per_entry": {"a": 1.0, "b": 2.0, "c": 1.0}},
+    )
+    new = _write(
+        tmp_path, "new.json", {"a": 4.0, "b": 1.0, "c": 1.0},
+        {
+            "cpu_s_per_entry": {"a": 8.0, "b": 1.0, "c": 1.0},
+            "jit_ms_per_entry": {"a": 6000, "b": 15, "c": 20},
+        },
+    )
+    assert bench_diff.main([old, new]) == 0
+    out = capsys.readouterr().out
+    assert "8.00x     1.00s →    8.00s  a  jit ? → 6000 ms" in out
+    assert "0.50x     2.00s →    1.00s  b  jit ? → 15 ms" in out
+
+    newer = _write(
+        tmp_path, "newer.json", {"a": 1.0, "b": 1.0, "c": 1.0},
+        {
+            "cpu_s_per_entry": {"a": 1.0, "b": 1.0, "c": 1.0},
+            "jit_ms_per_entry": {"a": 40, "b": 15, "c": 20},
+        },
+    )
+    assert bench_diff.main([new, newer]) == 0
+    assert "0.12x     8.00s →    1.00s  a  jit 6000 → 40 ms" in capsys.readouterr().out

@@ -177,3 +177,31 @@ def test_plan_shape_one_join_no_generate(spark):
         counts = _final_plan_counts(df)
         assert counts["join"] <= 1 and counts["generate"] == 0, (name, counts)
         assert counts["exchange"] <= 2, (name, counts)
+
+
+# py4j round trips to build ``run_pipeline(spark)`` on the mock fixture,
+# memory-release messages left out (their number follows Python's garbage
+# collector). The build made 7,767 when this budget was set; +10% headroom.
+RUN_PIPELINE_PY4J_BUDGET = 8_550
+
+
+def test_run_pipeline_build_stays_within_its_py4j_budget(spark, monkeypatch):
+    """Building the extract DAG is Python-side py4j traffic: every
+    ``lit``, ``when`` and ``F.*`` call is a round trip to the JVM. A
+    literal dimension rebuilt per call site shows up here long before it
+    shows up in a wall time."""
+    from py4j import protocol
+    from py4j.clientserver import ClientServerConnection
+
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    run_pipeline(spark)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= RUN_PIPELINE_PY4J_BUDGET, len(calls)
