@@ -19,7 +19,10 @@ window saw more than 0.5% steal are listed in
 milliseconds the JVM's JIT compilers spent during each entry: an entry
 that is first to exercise a code path pays for compiling it, so a CPU
 move with a JIT move beside it is warm-up moving between entries, not
-the entry itself getting slower or faster.
+the entry itself getting slower or faster. ``env.cds`` records the
+session's class-data sharing decision (``use``, ``build`` or
+``off: <reason>``): a building or archive-less session loads classes
+more slowly, so compare vectors with the same state.
 """
 
 from __future__ import annotations
@@ -89,14 +92,23 @@ def run_entries(entries: dict, timer, reset) -> tuple[dict, dict]:
 
 
 def vectors(
-    total: float, sf, records: dict, errors: dict, steal_sec: float, steal_frac: float
+    total: float,
+    sf,
+    records: dict,
+    errors: dict,
+    steal_sec: float,
+    steal_frac: float,
+    cds: str | None,
 ) -> tuple[dict, dict]:
-    """The ``BENCH_TIMES.json`` document and the stdout line of one run."""
+    """The ``BENCH_TIMES.json`` document and the stdout line of one run.
+    ``cds`` is the session's class-data sharing decision
+    (``session.cds_decision()``)."""
     queries = {k: r["wall"] for k, r in records.items()}
     stolen = {k: r["steal"] for k, r in records.items() if r["steal"] > STEAL_NOTE}
     env = {
         "steal_sec": steal_sec,
         "steal_frac": steal_frac,
+        "cds": cds,
         "cpu_s_per_entry": {k: r["cpu_s"] for k, r in records.items()},
     }
     if stolen:
@@ -253,8 +265,10 @@ def warm_up(spark, sf_dir: str) -> None:
 
 
 def main() -> int:
+    from datasheet_etl_spark.session import _env_int, cds_decision, get_session
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _env_int("SPARK_GRAFT_CPUS", 32)
     # 16g is ample for sf0.1 and measurably faster than a huge heap:
     # with 48g, G1 ergonomics tax every short task (~2-3x on sub-second
     # stages, measured on the minhash pipeline)
@@ -262,7 +276,6 @@ def main() -> int:
 
     from datasheet_etl_spark.caching import reset_session
     from datasheet_etl_spark.plans import registry
-    from datasheet_etl_spark.session import get_session
 
     spark = get_session(app_name="datasheet_etl_spark_bench", shuffle_partitions=cpus)
     reg = registry()
@@ -284,7 +297,9 @@ def main() -> int:
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    times, line = vectors(total, sf_val, records, errors, steal_sec, steal_frac)
+    times, line = vectors(
+        total, sf_val, records, errors, steal_sec, steal_frac, cds_decision()
+    )
     try:
         with open(
             os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_TIMES.json"),

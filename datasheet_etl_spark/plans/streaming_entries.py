@@ -284,57 +284,6 @@ def _stage_events_sentinels(
     return _stage_synced(d, sig, build), n_real
 
 
-def _stage_events_outer(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
-    """Outer-join staging: one sentinel file with a purchase+click pair
-    for ``user_id = -1`` at +7 days (clears the 6h lookback + 1h
-    watermark; the pair self-matches and the entry filters it out)."""
-    return _stage_events_sentinels(
-        spark,
-        sf_dir,
-        "outer",
-        [[(-1, -1, "purchase", 7), (-2, -1, "click", 7)]],
-    )
-
-
-def _outer_interval_drain(
-    spark: SparkSession, sf_dir: str, how: str, tag: str
-) -> DataFrame:
-    """Drain for the outer interval-join entry (t122, full outer):
-    sentinel-staged events, watermarked purchase/click streams, one
-    stream_interval_join in ``how`` mode, availableNow into a memory
-    sink, sentinel rows filtered post-drain. The user key is COALESCED
-    across sides — identity for left-outer (left rows always carry it),
-    required for full-outer (a right-only row holds NULLs in every left
-    column including the left's copy of the join key)."""
-    src, n_real = _stage_events_outer(spark, sf_dir)
-    with _few_state_partitions(spark):
-        purchases = events_stream(
-            spark, src, max_files_per_trigger=max(1, n_real)
-        ).filter(F.col("event_type") == "purchase")
-        clicks = events_stream(
-            spark, src, max_files_per_trigger=max(1, n_real)
-        ).filter(F.col("event_type") == "click")
-        joined = stream_interval_join(
-            purchases,
-            clicks,
-            key="user_id",
-            lookback="6 hours",
-            watermark="1 hour",
-            how=how,
-        )
-        out = run_available_now(
-            joined.select(
-                F.col("event_id").alias("purchase_id"),
-                F.coalesce("user_id", "r_user_id").alias("user_id"),
-                F.col("r_event_id").alias("click_id"),
-                (F.unix_micros("ts") - F.unix_micros("r_ts")).alias("lag_us"),
-            ),
-            f"{tag}_{uuid.uuid4().hex[:8]}",
-            "append",
-        )
-    return out.filter(F.col("user_id") >= 0).orderBy("purchase_id", "click_id")
-
-
 @register("t117_stateful_timeout_sessions", ORACLES["q18_sessionize"])
 def t117_stateful_timeout_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful sessionize with EVENT-TIME TIMEOUT expiry
@@ -594,9 +543,43 @@ def t122_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFram
     One sentinel pair advances both streams' watermarks (it passes
     both event-type filters), closing every real row's interval; the
     drained result equals the batch FULL JOIN (DuckDB oracle), both
-    NULL populations included. The drain is ``_outer_interval_drain``,
-    parameterized by join mode."""
-    return _outer_interval_drain(spark, sf_dir, "full_outer", "t122")
+    NULL populations included.
+
+    Staging: one sentinel file with a purchase+click pair for
+    ``user_id = -1`` at +7 days (clears the 6h lookback + 1h watermark;
+    the pair self-matches and is filtered out after the drain)."""
+    src, n_real = _stage_events_sentinels(
+        spark,
+        sf_dir,
+        "outer",
+        [[(-1, -1, "purchase", 7), (-2, -1, "click", 7)]],
+    )
+    with _few_state_partitions(spark):
+        purchases = events_stream(
+            spark, src, max_files_per_trigger=max(1, n_real)
+        ).filter(F.col("event_type") == "purchase")
+        clicks = events_stream(
+            spark, src, max_files_per_trigger=max(1, n_real)
+        ).filter(F.col("event_type") == "click")
+        joined = stream_interval_join(
+            purchases,
+            clicks,
+            key="user_id",
+            lookback="6 hours",
+            watermark="1 hour",
+            how="full_outer",
+        )
+        out = run_available_now(
+            joined.select(
+                F.col("event_id").alias("purchase_id"),
+                F.coalesce("user_id", "r_user_id").alias("user_id"),
+                F.col("r_event_id").alias("click_id"),
+                (F.unix_micros("ts") - F.unix_micros("r_ts")).alias("lag_us"),
+            ),
+            f"t122_{uuid.uuid4().hex[:8]}",
+            "append",
+        )
+    return out.filter(F.col("user_id") >= 0).orderBy("purchase_id", "click_id")
 
 
 @register(

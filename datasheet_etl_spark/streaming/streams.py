@@ -152,10 +152,10 @@ def stream_interval_join(
     window are never emitted. Inner join (the default) has no such
     tail. For bounded replays needing full outer-row delivery, stage a
     far-future sentinel row into the FINAL micro-batch so the watermark
-    passes every real row before the drain ends — t122's
-    ``_stage_events_outer`` does exactly that (plans/streaming_entries),
-    and its DuckDB oracle pins the drained result equal to the batch
-    LEFT JOIN, NULL rows included.
+    passes every real row before the drain ends — the registry entry
+    t122 (``plans/streaming_entries``) stages one that way, and its
+    DuckDB oracle pins the drained result equal to the batch FULL JOIN,
+    NULL rows of both sides included.
     """
     lhs = left.withWatermark(ts_col, watermark)
     rhs = right.withWatermark(ts_col, watermark).select(

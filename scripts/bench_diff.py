@@ -14,7 +14,11 @@ BENCH_TIMES-shaped JSON vectors:
   the median wall ratio of the clean entries (a uniform shift =
   environment; isolated outliers = plan changes worth reading);
 - entries present in only one vector (additions/removals) are listed,
-  so wall-total deltas decompose into carried-entry drift + new work.
+  so wall-total deltas decompose into carried-entry drift + new work;
+- a warning leads when the vectors' session class-data sharing states
+  (``env.cds``) differ: an archive-less or archive-building session
+  loads classes more slowly, and that is a cache state, not a code
+  change.
 
 Usage:
     python scripts/bench_diff.py OLD.json NEW.json [--top N]
@@ -74,6 +78,12 @@ def main(argv: list[str] | None = None) -> int:
     oq, nq = old["queries"], new["queries"]
     o_env, n_env = old.get("env", {}), new.get("env", {})
 
+    o_cds, n_cds = o_env.get("cds", "not recorded"), n_env.get("cds", "not recorded")
+    if o_cds != n_cds:
+        print(
+            f"WARNING: class-data sharing differs (old {o_cds}, new {n_cds}); "
+            f"class loading moved with the cache state, not the code"
+        )
     common = sorted(set(oq) & set(nq))
     added = sorted(set(nq) - set(oq))
     removed = sorted(set(oq) - set(nq))

@@ -81,9 +81,9 @@ def main() -> int:
     from bench import time_entry
     from datasheet_etl_spark.caching import reset_session
     from datasheet_etl_spark.plans import registry
-    from datasheet_etl_spark.session import get_session
+    from datasheet_etl_spark.session import _env_int, get_session
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _env_int("SPARK_GRAFT_CPUS", 32)
     extra = dict(args.conf)
     spark = get_session(app_name="profile_entry", shuffle_partitions=cpus, extra_conf=extra)
     reg = registry()

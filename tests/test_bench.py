@@ -1,7 +1,8 @@
 """The per-entry loop and the output records of ``bench.py`` (no Spark
 needed): every entry is timed exactly once, a raising entry is recorded
 and the loop goes on, the session is reset after every entry, and the
-stdout line keeps its key set."""
+stdout line keeps its key set, and the vector records the session's
+class-data sharing decision."""
 
 from __future__ import annotations
 
@@ -69,7 +70,9 @@ def test_records_and_stdout_line(bench):
         "a": {"wall": 1.25, "cpu_s": 2.5, "steal": 0.02, "rows": 1},
         "c": {"wall": 0.5, "cpu_s": 0.75, "steal": 0.0, "rows": 2},
     }
-    times, line = bench.vectors(2.0, 0.1, records, {"b": "ValueError: boom"}, 1.5, 0.01)
+    times, line = bench.vectors(
+        2.0, 0.1, records, {"b": "ValueError: boom"}, 1.5, 0.01, "use"
+    )
 
     assert set(line) == STDOUT_KEYS
     assert line["queries"] == times["queries"] == {"a": 1.25, "c": 0.5}
@@ -79,6 +82,7 @@ def test_records_and_stdout_line(bench):
     assert times["env"] == {
         "steal_sec": 1.5,
         "steal_frac": 0.01,
+        "cds": "use",
         "cpu_s_per_entry": {"a": 2.5, "c": 0.75},
         "steal_frac_per_entry": {"a": 0.02},
     }
@@ -96,7 +100,15 @@ def test_vectors_carry_jit_ms_per_entry(bench):
         "a": {"wall": 1.25, "cpu_s": 2.5, "steal": 0.0, "rows": 1, "jit_ms": 4_200},
         "c": {"wall": 0.5, "cpu_s": 0.75, "steal": 0.0, "rows": 2, "jit_ms": 0},
     }
-    times, line = bench.vectors(2.0, 0.1, records, {}, 0.0, 0.0)
+    times, line = bench.vectors(2.0, 0.1, records, {}, 0.0, 0.0, "off: not a local master")
 
     assert times["env"]["jit_ms_per_entry"] == {"a": 4_200, "c": 0}
+    assert times["env"]["cds"] == "off: not a local master"
     assert set(line) == STDOUT_KEYS
+
+
+def test_a_non_integer_cpus_names_the_variable(bench, monkeypatch):
+    """``SPARK_GRAFT_CPUS`` is parsed before any session starts."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "four")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS must be an integer, got 'four'"):
+        bench.main()

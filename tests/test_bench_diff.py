@@ -1,7 +1,7 @@
 """``scripts/bench_diff.py`` on tiny synthetic vectors (no Spark needed):
 CPU-carrying vectors get the per-entry CPU headline with JIT ms beside
 the largest movers, older wall-only vectors keep the clean-entry wall
-headline."""
+headline, and differing class-data sharing states are warned about."""
 
 from __future__ import annotations
 
@@ -95,3 +95,19 @@ def test_cpu_movers_show_their_jit_ms(bench_diff, tmp_path, capsys):
     )
     assert bench_diff.main([new, newer]) == 0
     assert "0.12x     8.00s →    1.00s  a  jit 6000 → 40 ms" in capsys.readouterr().out
+
+
+def test_differing_cds_states_are_warned_about(bench_diff, tmp_path, capsys):
+    cpu = {"cpu_s_per_entry": {"a": 1.0}}
+    use = _write(tmp_path, "use.json", {"a": 1.0}, {**cpu, "cds": "use"})
+    use2 = _write(tmp_path, "use2.json", {"a": 1.0}, {**cpu, "cds": "use"})
+    build = _write(tmp_path, "build.json", {"a": 1.0}, {**cpu, "cds": "build"})
+    older = _write(tmp_path, "older.json", {"a": 1.0}, cpu)
+
+    assert bench_diff.main([use, use2]) == 0
+    assert "WARNING" not in capsys.readouterr().out
+    assert bench_diff.main([use, build]) == 0
+    out = capsys.readouterr().out
+    assert out.startswith("WARNING: class-data sharing differs (old use, new build)")
+    assert bench_diff.main([older, use]) == 0
+    assert "(old not recorded, new use)" in capsys.readouterr().out

@@ -1,10 +1,11 @@
-"""Argument handling and rep ordering of ``scripts/profile_entry.py``
-(no Spark needed)."""
+"""Argument handling, the ``SPARK_GRAFT_CPUS`` check and rep ordering of
+``scripts/profile_entry.py`` (no Spark needed)."""
 
 from __future__ import annotations
 
 import importlib.util
 import os
+import sys
 
 import pytest
 
@@ -60,3 +61,12 @@ def test_explain_is_built_after_rep0_executes(profile_entry, reps):
     assert log[1][0] == "explain"
     assert [e[0] for e in log if e[0] != "explain"] == [f"rep{i}" for i in range(reps)]
     assert len(builds) == reps + 1
+
+
+def test_a_non_integer_cpus_names_the_variable(profile_entry, monkeypatch):
+    """``SPARK_GRAFT_CPUS`` is parsed before any session starts."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "four")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
+    monkeypatch.setattr(sys, "argv", ["profile_entry.py", "t01"])
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS must be an integer, got 'four'"):
+        profile_entry.main()
