@@ -771,10 +771,10 @@ def cmd_cdc_diff(args, spark=None) -> int:
 
 
 def cmd_cdc_migrate(args, spark=None) -> int:
-    """One-call flat→bucketed migration of a CDC/SCD2 target (the
-    'replay into a fresh bucketed target' the sink's mode-switch
-    refusal directs the user to). Source is read-only; history is
-    preserved under original version ids unless --truncate-history."""
+    """Re-bucket a CDC/SCD2 target: copy it into a fresh target with
+    another bucket count (a target's own count is fixed, and the sink
+    refuses any other). Source is read-only; history is preserved
+    under original version ids unless --truncate-history."""
     spark = _get_spark(spark)
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import AnalysisException
@@ -813,7 +813,7 @@ def cmd_cdc_migrate(args, spark=None) -> int:
         )
     print(
         "  source left untouched — verify the new target, then retire "
-        "the flat one"
+        "the old one"
     )
     return 0
 
@@ -1184,11 +1184,11 @@ def main(argv: Sequence[str] | None = None, spark=None) -> int:
 
     p = sub.add_parser(
         "cdc-migrate",
-        help="Migrate a flat (full-snapshot) CDC/SCD2 target into the "
-        "bucketed-manifest layout (source read-only, history preserved "
+        help="Re-bucket a CDC/SCD2 target: copy it into a fresh target "
+        "with another bucket count (source read-only, history preserved "
         "under original version ids)",
     )
-    p.add_argument("source", help="flat CDC/SCD2 target directory")
+    p.add_argument("source", help="CDC/SCD2 target directory")
     p.add_argument("dest", help="fresh destination directory (must be empty)")
     p.add_argument("--num-buckets", type=int, required=True)
     p.add_argument("--keys", default="k", help="comma-separated key columns")

@@ -1288,8 +1288,11 @@ def t96_dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("doc_id")
 
 
-# the full t97 plan as oracle CTEs: counts, selection, shards, bins
-_T97_PLAN_CTES = """
+@register(
+    "t97_training_shard_plan",
+    # the full plan as CTEs (counts, selection, shards, bins), then the
+    # packed rows
+    """
     WITH d AS (
       SELECT doc_id, source, n_chars FROM documents
     ), cnt AS (
@@ -1320,13 +1323,6 @@ _T97_PLAN_CTES = """
                                 ROWS UNBOUNDED PRECEDING) - n_chars AS off
       FROM ordd
     )
-"""
-
-
-@register(
-    "t97_training_shard_plan",
-    _T97_PLAN_CTES
-    + """
     SELECT doc_id, source, shard, pos,
            CAST(off // 4096 AS BIGINT) AS bin_id,
            CAST(off AS BIGINT) AS bin_offset
@@ -1609,25 +1605,6 @@ _JSONL_INGEST_ORACLE = """
       FROM documents WHERE doc_id % 41 = 0
     ) ORDER BY kind
     """
-
-
-def _jsonl_ingest_rollup(clean: DataFrame, bad: DataFrame) -> DataFrame:
-    """The (kind, n, chars) populations t105 is graded on — defined
-    next to the oracle it must equal."""
-    per_source = clean.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("n_chars").cast("long").alias("chars"),
-    )
-    quarantined = bad.agg(F.count(F.lit(1)).cast("long").alias("n")).select(
-        F.lit("_corrupt").alias("kind"),
-        "n",
-        F.lit(None).cast("long").alias("chars"),
-    )
-    return (
-        per_source.select(F.col("source").alias("kind"), "n", "chars")
-        .unionByName(quarantined)
-        .orderBy("kind")
-    )
 
 
 def _stage_corrupted_jsonl(spark: SparkSession, sf_dir: str) -> str:
@@ -2014,8 +1991,24 @@ def t105_streaming_quarantine_ingest(
             os.path.join(work, "ckpt"),
             "doc_id bigint, source string, n_chars bigint",
         )
-        out = _jsonl_ingest_rollup(
-            spark.read.parquet(clean_p), spark.read.parquet(quar_p)
+        # the (kind, n, chars) populations the oracle grades
+        per_source = spark.read.parquet(clean_p).groupBy("source").agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("n_chars").cast("long").alias("chars"),
+        )
+        quarantined = (
+            spark.read.parquet(quar_p)
+            .agg(F.count(F.lit(1)).cast("long").alias("n"))
+            .select(
+                F.lit("_corrupt").alias("kind"),
+                "n",
+                F.lit(None).cast("long").alias("chars"),
+            )
+        )
+        out = (
+            per_source.select(F.col("source").alias("kind"), "n", "chars")
+            .unionByName(quarantined)
+            .orderBy("kind")
         )
         # the sinks are per-invocation temp dirs: materialize before
         # the cleanup below tears the files out from under the plan.

@@ -473,16 +473,16 @@ def _stage_events_seq_split(spark: SparkSession, sf_dir: str) -> str:
 def t121b_streaming_scd2_bucketed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Streaming Type-2 SCD through the BUCKETED manifest
-    storage mode (VERDICT r11 #4): ``scd2_upsert_sink(num_buckets=8)``
-    puts the history on the cdc sink's partition-scoped layout —
-    per micro-batch, only the buckets the batch's keys hash into are
-    read and rewritten (O(touched buckets), not O(history); untouched
-    buckets' dirs are re-pointed by the manifest, never re-written —
-    pinned in tests/test_streaming.py). The SAME DuckDB lead-window
-    oracle grades this entry (incremental, bucketed) and, in pytest,
-    the batch history derivation: one contract, two execution shapes —
-    the storage mode must be invisible in the result."""
+    """Streaming Type-2 SCD over 8 buckets:
+    ``scd2_upsert_sink(num_buckets=8)`` puts the history on the cdc
+    sink's partition-scoped layout — per micro-batch, only the buckets
+    the batch's keys hash into are read and rewritten (O(touched
+    buckets), not O(history); untouched buckets' dirs are re-pointed by
+    the manifest, never re-written — pinned in tests/test_streaming.py).
+    The SAME DuckDB lead-window oracle grades this entry (incremental,
+    bucketed) and, in pytest, the batch history derivation: one
+    contract, two execution shapes — the bucket count must be
+    invisible in the result."""
     import hashlib
     import os
 

@@ -260,9 +260,9 @@ def t121b_marginal(spark):
     batch cost is O(touched buckets), and bucket SIZE is an operator
     choice — num_buckets scales with the table (8 at sf0.1, 80 at the
     x10 staging, holding ~constant rows per bucket), so a marginal
-    batch touching ONE key must cost ~flat across a 10x history. The
-    flat mode pays O(history) on the same marginal batch — that
-    contrast is the whole point of the layout. Backlog build is
+    batch touching ONE key must cost ~flat across a 10x history. One
+    bucket pays O(history) on the same marginal batch — that contrast
+    is the whole point of the layout. Backlog build is
     untimed; two identical single-key marginal batches run timed (the
     second shakes JIT)."""
     import shutil as _shutil

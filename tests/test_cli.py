@@ -393,7 +393,7 @@ def test_cli_cdc_diff(spark, tmp_path, capsys):
     versions exit 2 with the read_cdc_snapshot wording."""
     from datasheet_etl_spark.cli import main
     from datasheet_etl_spark.streaming.streams import (
-        _committed_versions,
+        _committed_manifest_versions,
         cdc_upsert_sink,
     )
 
@@ -413,7 +413,7 @@ def test_cli_cdc_diff(spark, tmp_path, capsys):
     )
     cdc_upsert_sink(stream, target, str(tmp_path / "ck"), keys=["k"],
                     seq_col="seq")
-    v0 = _committed_versions(spark, target)[0]
+    v0 = _committed_manifest_versions(spark, target)[0]
     out = str(tmp_path / "diff")
     rc = main(
         ["cdc-diff", target, "--from-version", v0, "--keys", "k",
@@ -545,20 +545,20 @@ def test_cli_audit_legacy_signature_still_refuses(spark, tmp_path, capsys):
 
 
 def test_cli_cdc_migrate(spark, tmp_path, capsys):
-    """cdc-migrate e2e: migrates a flat CDC target into a fresh
-    bucketed one (snapshot + version parity checked through the
-    readers), reports truncation when asked, and exits 2 with the
-    refusal wording on a non-empty destination."""
+    """cdc-migrate e2e: re-buckets a target built by the default
+    one-bucket sink into a fresh 4-bucket one (snapshot + version
+    parity checked through the readers), reports truncation when
+    asked, and exits 2 with the refusal wording on a non-empty
+    destination."""
     from datasheet_etl_spark.cli import main
     from datasheet_etl_spark.streaming.streams import (
         _committed_manifest_versions,
-        _committed_versions,
         cdc_upsert_sink,
         read_cdc_snapshot,
     )
 
     schema = "k long, seq long, op string, v string"
-    src, flat = str(tmp_path / "src"), str(tmp_path / "flat")
+    src, source = str(tmp_path / "src"), str(tmp_path / "source")
     spark.createDataFrame(
         [(1, 1, "I", "a"), (2, 1, "I", "b")], schema
     ).coalesce(1).write.parquet(src)
@@ -571,14 +571,14 @@ def test_cli_cdc_migrate(spark, tmp_path, capsys):
         .format("parquet")
         .load(src)
     )
-    cdc_upsert_sink(stream, flat, str(tmp_path / "ck"), keys=["k"],
+    cdc_upsert_sink(stream, source, str(tmp_path / "ck"), keys=["k"],
                     seq_col="seq")
-    versions = _committed_versions(spark, flat)
+    versions = _committed_manifest_versions(spark, source)
     assert len(versions) == 2
 
     dest = str(tmp_path / "bucketed")
     rc = main(
-        ["cdc-migrate", flat, dest, "--num-buckets", "4", "--keys", "k"],
+        ["cdc-migrate", source, dest, "--num-buckets", "4", "--keys", "k"],
         spark=spark,
     )
     assert rc == 0
@@ -591,12 +591,12 @@ def test_cli_cdc_migrate(spark, tmp_path, capsys):
         for r in read_cdc_snapshot(spark, dest).collect()
     ) == sorted(
         (r["k"], r["seq"], r["v"])
-        for r in read_cdc_snapshot(spark, flat).collect()
+        for r in read_cdc_snapshot(spark, source).collect()
     )
 
     # non-empty destination refused through the exit-2 contract
     rc = main(
-        ["cdc-migrate", flat, dest, "--num-buckets", "4", "--keys", "k"],
+        ["cdc-migrate", source, dest, "--num-buckets", "4", "--keys", "k"],
         spark=spark,
     )
     assert rc == 2
@@ -605,7 +605,7 @@ def test_cli_cdc_migrate(spark, tmp_path, capsys):
     # explicit truncation reported
     dest2 = str(tmp_path / "bucketed2")
     rc = main(
-        ["cdc-migrate", flat, dest2, "--num-buckets", "4", "--keys", "k",
+        ["cdc-migrate", source, dest2, "--num-buckets", "4", "--keys", "k",
          "--truncate-history"],
         spark=spark,
     )

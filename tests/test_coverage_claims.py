@@ -4,7 +4,8 @@ Every backticked ``module.name`` must resolve to an attribute of an
 importable engine module, and every cited registry id (``q07``,
 ``t18``, ``Q28`` …) must name a registered entry. A row that cites a
 retired entry or a deleted function fails here, and so does a row whose
-function nothing calls. Beyond the tables: every public library function
+function nothing calls, or whose cited ``tests/test_*.py`` files never
+name its function. Beyond the tables: every public library function
 must have a caller, and no code may name a retired entry.
 """
 
@@ -24,6 +25,7 @@ COVERAGE = Path(__file__).resolve().parents[1] / "COVERAGE.md"
 _PACKAGES = ("", "functions.")
 _DOTTED = re.compile(r"^([a-z_]+(?:/[a-z_]+)*)\.([A-Za-z_]\w*)")
 _ENTRY_ID = re.compile(r"\b[qQtT]\d{2,3}[a-z]?\b")
+_TEST_FILE = re.compile(r"(?<![\w/])(?:tests/)?(test_\w+\.py)\b")
 
 
 def _rows() -> list[str]:
@@ -37,14 +39,18 @@ def _rows() -> list[str]:
     ]
 
 
+def _row_claims(line: str) -> list[tuple[str, str]]:
+    """The backticked ``module.name`` citations of one table row."""
+    out = []
+    for tick in re.findall(r"`([^`]+)`", line):
+        m = _DOTTED.match(tick)
+        if m and m.group(2) != "py":
+            out.append((m.group(1), m.group(2)))
+    return out
+
+
 def _dotted_claims() -> list[tuple[str, str]]:
-    out = set()
-    for line in _rows():
-        for tick in re.findall(r"`([^`]+)`", line):
-            m = _DOTTED.match(tick)
-            if m and m.group(2) != "py":
-                out.add((m.group(1), m.group(2)))
-    return sorted(out)
+    return sorted({c for line in _rows() for c in _row_claims(line)})
 
 
 def _resolve(module: str, name: str) -> bool:
@@ -175,6 +181,29 @@ def test_cited_functions_are_reached():
     or a test, so the row's "verified by" has something to verify."""
     unreached = [f"{m}.{n}" for m, n in _dotted_claims() if not _is_referenced(n)]
     assert not unreached, f"COVERAGE cites functions nothing calls: {unreached}"
+
+
+def test_cited_tests_name_the_cited_functions():
+    """A row that cites ``tests/test_*.py`` files says those tests verify
+    its backticked functions, so each function must appear in the code
+    (comments and docstrings blanked) of one of the row's test files."""
+    checked, missing = 0, []
+    for line in _rows():
+        files = [_REPO / "tests" / f for f in _TEST_FILE.findall(line)]
+        if not files:
+            continue
+        for module, name in _row_claims(line):
+            checked += 1
+            use = re.compile(rf"\b{re.escape(name)}\b")
+            if not any(
+                f in _callers() and use.search("\n".join(_callers()[f][0]))
+                for f in files
+            ):
+                missing.append(f"{module}.{name} not in {[f.name for f in files]}")
+    assert checked > 40, "no row cites both a test file and a function"
+    assert not missing, "COVERAGE rows cite tests that never name:\n" + "\n".join(
+        missing
+    )
 
 
 def test_public_library_functions_are_reached():

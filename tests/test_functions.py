@@ -20,15 +20,19 @@ from datasheet_etl_spark.functions import (
     extract_number,
     has_standard_headers,
     infer_category,
+    is_category_header,
     manufacturer_from_mpn_prefix,
     mpn_from_filename,
     normalize_text,
     normalize_unit,
     numbers_match,
+    severity_penalty,
+    slugify,
     text_match,
     units_match,
     values_match,
 )
+from datasheet_etl_spark.functions.units import UNIT_ALIASES
 
 NUMERIC_CASES = [
     ("3.3", "3.3", True),      # exact
@@ -104,6 +108,54 @@ def test_normalize_unit_fallback(spark):
     assert _eval(spark, normalize_unit(F.lit("ohms"))) == "Ω"
     assert _eval(spark, normalize_unit(F.lit("weird"))) == "weird"  # passthrough
     assert _eval(spark, normalize_unit(F.lit(None))) == ""
+
+
+def test_normalize_unit_covers_every_alias(spark):
+    """Every canonical unit in UNIT_ALIASES and each of its aliases, as
+    written there, normalizes to that canonical unit (no alias shadows
+    another's lowercase form)."""
+    pairs = [
+        (raw, canonical)
+        for canonical, aliases in UNIT_ALIASES.items()
+        for raw in (canonical, *aliases)
+    ]
+    got = spark.createDataFrame(pairs, "raw string, want string").select(
+        "raw", "want", normalize_unit(F.col("raw")).alias("got")
+    )
+    assert [tuple(r) for r in got.filter("got != want").collect()] == []
+
+
+def test_is_category_header_and_slugify(spark):
+    cases = {
+        "Electrical Characteristics": True,   # known section name
+        "Recommended Operating Conditions": True,
+        "VIN": True,                          # alpha ratio 1.0 > 0.8
+        "3.3V max": False,                    # alpha ratio 0.5
+        "4.2": False,
+        "": False,
+        None: False,
+    }
+    df = spark.createDataFrame([(k,) for k in cases], "t string")
+    got = {
+        r["t"]: r["h"]
+        for r in df.select("t", is_category_header(F.col("t")).alias("h")).collect()
+    }
+    assert got == cases
+    assert _eval(spark, slugify(F.lit("Input Voltage Range"))) == "input_voltage_range"
+
+
+def test_severity_penalty(spark):
+    df = spark.createDataFrame(
+        [("CRITICAL", False), ("CRITICAL", True), ("LOW", False), ("ODD", False)],
+        "sev string, resolved boolean",
+    )
+    got = [
+        round(r["p"], 6)
+        for r in df.select(severity_penalty(F.col("sev"), F.col("resolved")).alias("p"))
+        .collect()
+    ]
+    # halved when resolved; an unknown severity costs MEDIUM's 0.05
+    assert got == [0.2, 0.1, 0.02, 0.05]
 
 
 def test_canonical_header(spark):

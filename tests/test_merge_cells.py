@@ -10,6 +10,7 @@ from datasheet_etl_spark.merge_cells import (
     cells_from_raw,
     detect_merges,
     enhance_tables,
+    resolve_rows,
 )
 
 # The reference docstring's canonical two-row-header example:
@@ -67,6 +68,13 @@ def test_header_resolution_spreads_category(spark):
 
 
 def test_row_resolution_spreads_content(spark):
+    cells = cells_from_raw(_tables(spark, RAW_CATEGORY))
+    values = {
+        (r["row_idx"], r["col_idx"]): r["value"]
+        for r in resolve_rows(cells, detect_merges(cells)).collect()
+    }
+    assert {values[(1, c)] for c in range(4)} == {"Electrical Characteristics"}
+    assert values[(2, 0)] == "VIN"
     res = enhance_tables(_tables(spark, RAW_CATEGORY))
     rows = {r["row_idx"]: r["row_map"] for r in res.resolved_rows.collect()}
     # the category row: all spanned cells take the merge content

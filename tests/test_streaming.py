@@ -651,11 +651,13 @@ def test_cdc_upsert_sink_matches_batch_apply_and_survives_replay(spark, tmp_path
     """Streaming MERGE: draining a changelog in two batches produces
     exactly the batch apply_changes result; a stale (lower-seq) change
     arriving in a LATER batch cannot overwrite; wiping the checkpoint
-    and replaying the whole changelog leaves the snapshot unchanged."""
+    and replaying the whole changelog leaves the snapshot unchanged and
+    commits no new manifest (every replayed change is stale)."""
     import shutil
 
     from datasheet_etl_spark.operators.relational import apply_changes
     from datasheet_etl_spark.streaming.streams import (
+        _committed_manifest_versions,
         cdc_upsert_sink,
         read_cdc_snapshot,
     )
@@ -704,14 +706,16 @@ def test_cdc_upsert_sink_matches_batch_apply_and_survives_replay(spark, tmp_path
     assert 5 not in got2  # deleted key not resurrected by the stale update
 
     # checkpoint lost -> full replay must be a no-op on the snapshot
+    committed = _committed_manifest_versions(spark, target)
     shutil.rmtree(ckpt)
     got3 = drain()
     assert got3 == got2
+    assert _committed_manifest_versions(spark, target) == committed
 
 
 def test_cdc_snapshot_survives_pointer_loss(spark, tmp_path):
     """A lost/stale _LATEST pointer must NOT read as 'empty table':
-    readers fall back to the newest COMMITTED version dir, and the next
+    readers fall back to the newest COMMITTED manifest, and the next
     batch merges onto it — pointer loss can never silently discard the
     accumulated snapshot."""
     import os
@@ -736,7 +740,7 @@ def test_cdc_snapshot_survives_pointer_loss(spark, tmp_path):
     drain()
     os.remove(os.path.join(target, "_LATEST"))
     got = read_cdc_snapshot(spark, target)
-    assert got is not None and got.count() == 2  # recovered from v* dirs
+    assert got is not None and got.count() == 2  # recovered from manifests
 
     # next batch merges onto the recovered base, not an empty one
     spark.createDataFrame([(3, 2, "I", "c")], schema).coalesce(1).write.parquet(
@@ -809,8 +813,8 @@ def test_cdc_bucketed_sink_rewrites_only_touched_partitions(spark, tmp_path):
     ways: (a) the committed manifest re-points untouched buckets at the
     PREVIOUS version's dirs, (b) those dirs' data files are byte-for-
     byte identical after the second batch, (c) the final snapshot
-    matches the full-rewrite mode's result exactly. A checkpoint-lost
-    replay (all changes stale) commits NO new version."""
+    matches the one-bucket (whole-table rewrite) result exactly. A
+    checkpoint-lost replay (all changes stale) commits NO new version."""
     import glob
     import hashlib
     import json
@@ -845,7 +849,7 @@ def test_cdc_bucketed_sink_rewrites_only_touched_partitions(spark, tmp_path):
         stream = spark.readStream.schema(schema).format("parquet").load(src)
         cdc_upsert_sink(
             stream, target, ckpt, keys=["k"], seq_col="seq",
-            num_buckets=N_BUCKETS if bucketed else None,
+            num_buckets=N_BUCKETS if bucketed else 1,
         )
 
     src = str(tmp_path / "src")
@@ -887,7 +891,7 @@ def test_cdc_bucketed_sink_rewrites_only_touched_partitions(spark, tmp_path):
 
     got = {r["k"]: (r["seq"], r["v"])
            for r in read_cdc_snapshot(spark, target).collect()}
-    # full-rewrite mode over the same changelog as the oracle
+    # one bucket (whole-table rewrite) over the same changelog as the oracle
     target_f, ckpt_f = str(tmp_path / "tf"), str(tmp_path / "cf")
     drain(src, target_f, ckpt_f, bucketed=False)
     want = {r["k"]: (r["seq"], r["v"])
@@ -911,7 +915,7 @@ def test_cdc_bucketed_sink_rewrites_only_touched_partitions(spark, tmp_path):
 
 
 def test_compact_cdc_target_drops_only_expired_tombstones(spark, tmp_path):
-    """Tombstone compaction (full-rewrite layout): tombstones below the
+    """Tombstone compaction (one bucket): tombstones below the
     replay horizon are dropped, tombstones at/above it survive — and
     the surviving tombstone still rejects an in-horizon stale change
     after compaction. Live rows are untouched."""
@@ -1050,42 +1054,84 @@ def test_drop_duplicates_within_watermark_state_bounds(spark, tmp_path):
 
 
 def test_cdc_sink_layout_mode_mismatch_raises(spark, tmp_path):
-    """Running the sink in the WRONG layout mode against an existing
-    target must raise, not silently lose data: a bucketed sink on a
-    full-snapshot target would see an empty base (orphaning the whole
-    table); a flat sink on a bucketed target would commit a version no
-    manifest references (invisible to readers)."""
+    """A target the sink cannot extend must raise, not silently lose
+    data: (a) a directory in the retired full-snapshot layout (a
+    ``v<n>/`` parquet dir with ``_SUCCESS`` and a ``_LATEST`` pointer,
+    no manifests) would otherwise be merged onto as an empty table,
+    orphaning every row — the reader finds no committed manifest and
+    returns None, and the sink refuses and commits nothing; (b) a
+    4-bucket target driven with 8 buckets would move keys between
+    buckets. Both are refused before the stream starts (a plain
+    ValueError, not a failed query), so no new input is needed."""
     import pytest as _pytest
 
-    from datasheet_etl_spark.streaming.streams import cdc_upsert_sink
+    from datasheet_etl_spark.streaming.streams import (
+        cdc_upsert_sink,
+        read_cdc_snapshot,
+    )
 
     schema = "k long, seq long, op string, v string"
     src = str(tmp_path / "src")
     spark.createDataFrame([(1, 1, "I", "a")], schema).coalesce(1).write.parquet(src)
 
-    def drain(target, ckpt, num_buckets):
+    def drain(target, ckpt, **kw):
         stream = spark.readStream.schema(schema).format("parquet").load(src)
-        cdc_upsert_sink(
-            stream, target, ckpt, keys=["k"], seq_col="seq",
-            num_buckets=num_buckets,
-        )
+        cdc_upsert_sink(stream, target, ckpt, keys=["k"], seq_col="seq", **kw)
 
     flat = str(tmp_path / "flat")
-    drain(flat, str(tmp_path / "c1"), None)
-    with _pytest.raises(Exception, match="full-snapshot CDC target"):
-        drain(flat, str(tmp_path / "c2"), 4)
+    spark.createDataFrame(
+        [(1, 1, "a", False)], "k long, seq long, v string, _deleted boolean"
+    ).coalesce(1).write.parquet(os.path.join(flat, "v0000000000"))
+    with open(os.path.join(flat, "_LATEST"), "w") as f:
+        f.write("v0000000000")
+    assert os.path.exists(os.path.join(flat, "v0000000000", "_SUCCESS"))
+    assert read_cdc_snapshot(spark, flat) is None
+    with _pytest.raises(ValueError, match="full-snapshot CDC versions"):
+        drain(flat, str(tmp_path / "c1"))
+    assert not os.path.exists(os.path.join(flat, "manifests"))
 
     bucketed = str(tmp_path / "bucketed")
-    drain(bucketed, str(tmp_path / "c3"), 4)
-    with _pytest.raises(Exception, match="bucketed CDC target"):
-        drain(bucketed, str(tmp_path / "c4"), None)
+    drain(bucketed, str(tmp_path / "c3"), num_buckets=4)
+    with _pytest.raises(ValueError, match="num_buckets=4, sink configured with 8"):
+        drain(bucketed, str(tmp_path / "c3"), num_buckets=8)
+
+
+@pytest.mark.parametrize("num_buckets", [0, -1, None])
+@pytest.mark.parametrize("sink", ["cdc", "scd2"])
+def test_upsert_sinks_refuse_bad_num_buckets_before_start(
+    spark, tmp_path, sink, num_buckets
+):
+    """A bucket count below 1 (or None) is refused with a ValueError
+    naming the value before the stream starts: no _SINK_INIT marker,
+    no checkpoint."""
+    from datasheet_etl_spark.streaming.streams import (
+        cdc_upsert_sink,
+        scd2_upsert_sink,
+    )
+
+    schema = "k long, seq long, op string, v string"
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1, 1, "I", "a")], schema).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(schema).format("parquet").load(src)
+    target, ckpt = str(tmp_path / "target"), str(tmp_path / "ckpt")
+    with pytest.raises(ValueError, match=f"got {num_buckets!r}"):
+        if sink == "cdc":
+            cdc_upsert_sink(
+                stream, target, ckpt, ["k"], "seq", num_buckets=num_buckets
+            )
+        else:
+            scd2_upsert_sink(
+                stream, target, ckpt, ["k"], "seq", ["v"],
+                num_buckets=num_buckets,
+            )
+    assert not os.path.exists(os.path.join(target, "_SINK_INIT"))
+    assert not os.path.exists(ckpt)
 
 
 def test_cdc_bucketed_full_compaction_reads_empty_not_none(spark, tmp_path):
     """Compacting away EVERY row of a bucketed target (all keys deleted,
     all tombstones expired) must leave a readable EMPTY table with its
-    schema — the same signal the full-snapshot layout gives — not None
-    ('table never created')."""
+    schema — not None ('table never created')."""
     from datasheet_etl_spark.streaming.streams import (
         cdc_upsert_sink,
         compact_cdc_target,
@@ -1112,8 +1158,8 @@ def test_cdc_bucketed_full_compaction_reads_empty_not_none(spark, tmp_path):
 
 
 def test_gc_cdc_target_plain_keeps_snapshot(spark, tmp_path):
-    """GC on the full-snapshot layout: superseded version dirs are
-    deleted, the kept version still reads identically."""
+    """GC on a one-bucket target: superseded manifests and version dirs
+    are deleted, the kept version still reads identically."""
     import glob
     import os
 
@@ -1147,7 +1193,10 @@ def test_gc_cdc_target_plain_keeps_snapshot(spark, tmp_path):
     assert len(glob.glob(os.path.join(target, "v*"))) == 3
     before = {r["k"]: r["v"] for r in read_cdc_snapshot(spark, target).collect()}
 
-    assert gc_cdc_target(spark, target, keep_versions=1) == 2
+    # 4 = the two dropped manifests + their two data dirs: with one
+    # bucket every batch rewrote the whole table, so the kept manifest
+    # references no older dir
+    assert gc_cdc_target(spark, target, keep_versions=1) == 4
     assert len(glob.glob(os.path.join(target, "v*"))) == 1
     after = {r["k"]: r["v"] for r in read_cdc_snapshot(spark, target).collect()}
     assert after == before == {1: "a2", 2: "b"}
@@ -1217,20 +1266,19 @@ def test_gc_cdc_target_bucketed_respects_manifest_reachability(spark, tmp_path):
 
 def test_cdc_time_travel_read(spark, tmp_path):
     """Version-pinned reads: a committed version stays readable (and
-    identical) after later commits, for BOTH layouts; a GC'd or
-    never-committed version raises rather than returning None."""
+    identical) after later commits, with one bucket and with four; a
+    GC'd or never-committed version raises rather than returning None."""
     import pytest as _pytest
 
     from datasheet_etl_spark.streaming.streams import (
         _committed_manifest_versions,
-        _committed_versions,
         cdc_upsert_sink,
         gc_cdc_target,
         read_cdc_snapshot,
     )
 
     schema = "k long, seq long, op string, v string"
-    for mode, buckets in (("flat", None), ("bucketed", 4)):
+    for mode, buckets in (("one", 1), ("bucketed", 4)):
         src = str(tmp_path / f"src_{mode}")
         target = str(tmp_path / f"target_{mode}")
         spark.createDataFrame([(1, 1, "I", "old")], schema).coalesce(
@@ -1249,11 +1297,7 @@ def test_cdc_time_travel_read(spark, tmp_path):
             stream, target, str(tmp_path / f"ck_{mode}"), keys=["k"],
             seq_col="seq", num_buckets=buckets,
         )
-        committed = (
-            _committed_manifest_versions(spark, target)
-            if buckets
-            else _committed_versions(spark, target)
-        )
+        committed = _committed_manifest_versions(spark, target)
         v_old, v_new = committed[0], committed[-1]
         assert read_cdc_snapshot(spark, target, version=v_old).first()["v"] == "old"
         assert read_cdc_snapshot(spark, target, version=v_new).first()["v"] == "new"
@@ -1435,21 +1479,17 @@ def test_streaming_maintained_histogram_matches_batch(spark, tmp_path):
 
 
 def test_cdc_bucketed_first_batch_crash_recovers(spark, tmp_path):
-    """The bucketed sink's crash window (ADVICE r7): the partitioned
-    parquet write drops ``v*/_SUCCESS`` BEFORE the manifest commit, so
-    a crash in between leaves committed-LOOKING version dirs full of
+    """The sink's first-batch crash window: the partitioned parquet
+    write drops ``v*/_SUCCESS`` BEFORE the manifest commit, so a crash
+    in between leaves committed-LOOKING version dirs full of
     ``_bucket=*`` partial merge state and no manifests dir. Pinned:
-    (a) restarting the bucketed sink recovers — the orphaned dirs are
-    discarded and the checkpoint replays the batch to a correct
-    snapshot; (b) the flat sink on that state raises an ACCURATE error
-    (the old message told the operator to run without num_buckets,
-    which would have adopted the partial state as the base snapshot);
-    (c) the reader refuses it too."""
+    (a) restarting the sink recovers — the orphaned dirs are discarded
+    and the checkpoint replays the batch to a correct snapshot; (b) the
+    reader finds no committed manifest and reads no table, never the
+    partial state."""
     import glob
     import os
     import shutil
-
-    import pytest as _pytest
 
     from datasheet_etl_spark.streaming.streams import (
         cdc_upsert_sink,
@@ -1485,14 +1525,10 @@ def test_cdc_bucketed_first_batch_crash_recovers(spark, tmp_path):
         glob.glob(os.path.join(d, "_bucket=*")) for d in orphan_dirs
     )
 
-    # (b) flat sink: accurate refusal, NOT 'run without num_buckets'
-    with _pytest.raises(Exception, match="uncommitted bucketed"):
-        drain(str(tmp_path / "ckpt_flat"), None)
-    # (c) reader refuses the partial state
-    with _pytest.raises(Exception, match="uncommitted bucketed"):
-        read_cdc_snapshot(spark, target)
+    # (b) the reader never surfaces the partial state
+    assert read_cdc_snapshot(spark, target) is None
 
-    # (a) bucketed restart: orphan discarded, batch replayed, correct
+    # (a) restart: orphan discarded, batch replayed, correct
     drain(ckpt, 4)
     got = {r["k"]: r["v"] for r in read_cdc_snapshot(spark, target).collect()}
     assert got == {k: f"v{k}" for k in range(8)}
@@ -2055,7 +2091,7 @@ def test_cdc_version_diff(spark, tmp_path):
     import pytest as _pytest
 
     from datasheet_etl_spark.streaming.streams import (
-        _committed_versions,
+        _committed_manifest_versions,
         cdc_upsert_sink,
         cdc_version_diff,
     )
@@ -2079,7 +2115,7 @@ def test_cdc_version_diff(spark, tmp_path):
     )
     cdc_upsert_sink(stream, target, str(tmp_path / "ck"), keys=["k"],
                     seq_col="seq")
-    committed = _committed_versions(spark, target)
+    committed = _committed_manifest_versions(spark, target)
     assert len(committed) >= 2
     v_old = committed[0]
     got = {
@@ -2101,7 +2137,7 @@ def test_cdc_version_diff(spark, tmp_path):
     # touch-update (same value, new seq): the persisted watermark
     # column alone moves; ignore_cols=['seq'] must report unchanged,
     # while the raw fingerprint (review-found r11) reports changed
-    v_mid = _committed_versions(spark, target)[-1]
+    v_mid = _committed_manifest_versions(spark, target)[-1]
     spark.createDataFrame([(1, 3, "U", "keep")], schema).coalesce(
         1
     ).write.parquet(src, mode="append")
@@ -2137,7 +2173,7 @@ def test_cdc_version_diff_null_and_map_fingerprints(spark, tmp_path):
     by building two committed versions that differ ONLY in null-ness,
     and a map payload rewritten in reversed entry order."""
     from datasheet_etl_spark.streaming.streams import (
-        _committed_versions,
+        _committed_manifest_versions,
         cdc_upsert_sink,
         cdc_version_diff,
     )
@@ -2165,7 +2201,7 @@ def test_cdc_version_diff_null_and_map_fingerprints(spark, tmp_path):
     )
     cdc_upsert_sink(stream, target, str(tmp_path / "ck"), keys=["k"],
                     seq_col="seq")
-    committed = _committed_versions(spark, target)
+    committed = _committed_manifest_versions(spark, target)
     got = {
         r["_key"]: r["status"]
         for r in cdc_version_diff(
@@ -2196,7 +2232,7 @@ def test_cdc_version_diff_null_and_map_fingerprints(spark, tmp_path):
     )
     cdc_upsert_sink(m_stream, m_target, str(tmp_path / "m_ck"),
                     keys=["k"], seq_col="seq")
-    m_committed = _committed_versions(spark, m_target)
+    m_committed = _committed_manifest_versions(spark, m_target)
     m_got = {
         r["_key"]: r["status"]
         for r in cdc_version_diff(
@@ -2664,21 +2700,22 @@ def test_sentinel_staging_isolates_batches_for_multipart_sources(
     }
 
 
-@pytest.mark.parametrize("num_buckets", [None, 4], ids=["flat", "bucketed"])
-def test_scd2_sink_history_lifecycle(spark, tmp_path, num_buckets):
-    """scd2_upsert_sink mechanics on a planted frame, in BOTH storage
-    modes (flat snapshot / bucketed manifests — the lifecycle contract
-    is storage-independent): (a) upserts open intervals and close
-    predecessors, deletes close WITHOUT opening; (b) a later batch
-    extends history incrementally and the stale guard rejects changes
-    at/below a key's high-water mark — including a change that would
-    interleave into delete-closed history; (c) replaying the whole
-    changelog against the populated target is idempotent — flat mode
-    commits a new identical version, bucketed mode commits NOTHING
-    (an all-stale batch cannot change any bucket)."""
+@pytest.mark.parametrize(
+    "sink_kw", [{}, {"num_buckets": 4}], ids=["flat", "bucketed"]
+)
+def test_scd2_sink_history_lifecycle(spark, tmp_path, sink_kw):
+    """scd2_upsert_sink mechanics on a planted frame, with the default
+    one bucket (the whole history rewritten per batch) and with four
+    (the lifecycle contract does not depend on the bucket count):
+    (a) upserts open intervals and close predecessors, deletes close
+    WITHOUT opening; (b) a later batch extends history incrementally
+    and the stale guard rejects changes at/below a key's high-water
+    mark — including a change that would interleave into delete-closed
+    history; (c) replaying the whole changelog against the populated
+    target is idempotent and commits NOTHING (an all-stale batch
+    cannot change any bucket)."""
     from datasheet_etl_spark.streaming.streams import (
         _committed_manifest_versions,
-        _committed_versions,
         read_scd2_snapshot,
         scd2_upsert_sink,
     )
@@ -2687,8 +2724,6 @@ def test_scd2_sink_history_lifecycle(spark, tmp_path, num_buckets):
     target = str(tmp_path / "target")
 
     def versions():
-        if num_buckets is None:
-            return _committed_versions(spark, target)
         return _committed_manifest_versions(spark, target)
 
     def drain(rows, ckpt):
@@ -2708,7 +2743,7 @@ def test_scd2_sink_history_lifecycle(spark, tmp_path, num_buckets):
             ["user_id"],
             "event_id",
             ["value"],
-            num_buckets=num_buckets,
+            **sink_kw,
         )
 
     def snapshot(tombstones=False):
@@ -2749,15 +2784,11 @@ def test_scd2_sink_history_lifecycle(spark, tmp_path, num_buckets):
     before = snapshot()
 
     # (c) full-changelog replay: all stale, snapshot unchanged — the
-    # crash-replay contract. Flat mode commits a new identical
-    # version; bucketed mode commits nothing (no bucket can change)
+    # crash-replay contract — and no version committed
     n_versions = len(versions())
     drain(batch1 + [(1, 7, 12.0, "U")], "replay")
     assert snapshot() == before
-    if num_buckets is None:
-        assert len(versions()) == n_versions + 1
-    else:
-        assert len(versions()) == n_versions
+    assert len(versions()) == n_versions
 
     # (d) review-found hole, now closed: a delete that closes NO
     # interval (key 2's open interval closed by D@9, then D@11 is a
@@ -3049,37 +3080,6 @@ def test_state_store_reader_time_travel_and_metadata(spark, tmp_path):
     ], changes
 
 
-def test_scd2_flat_refuses_bucketed_target(spark, tmp_path):
-    """Review-found (r12): a flat-mode scd2 run against a BUCKETED
-    target must refuse — the flat version carries no manifest, so
-    readers would resolve the old manifest and the commit would be
-    silently invisible while the checkpoint marks the batch done."""
-    import pytest as _pytest
-
-    from datasheet_etl_spark.streaming.streams import scd2_upsert_sink
-
-    schema = "user_id bigint, event_id bigint, value double, op string"
-    target = str(tmp_path / "target")
-
-    def drain(rows, ckpt, nb):
-        src = str(tmp_path / f"src_{ckpt}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(src)
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .format("parquet").load(src)
-        )
-        scd2_upsert_sink(
-            stream, target, str(tmp_path / f"ck_{ckpt}"),
-            ["user_id"], "event_id", ["value"], num_buckets=nb,
-        )
-
-    drain([(1, 1, 10.0, "U")], "b1", 4)
-    with _pytest.raises(Exception, match="bucketed SCD2 target"):
-        drain([(1, 2, 11.0, "U")], "b2", None)
-
-
 def test_scd2_sink_accepts_map_payloads(spark, tmp_path):
     """Review-found (r12): the SCD2 sink's same-seq collapse duplicated
     apply_changes' tiebreak WITHOUT the map canonicalization, so map
@@ -3131,7 +3131,7 @@ def test_cdc_version_diff_nested_map_canonicalized(spark, tmp_path):
     physical entry order — a reordered-but-equal nested map reported
     'changed'. The canonicalization now recurses."""
     from datasheet_etl_spark.streaming.streams import (
-        _committed_versions,
+        _committed_manifest_versions,
         cdc_upsert_sink,
         cdc_version_diff,
     )
@@ -3154,7 +3154,7 @@ def test_cdc_version_diff_nested_map_canonicalized(spark, tmp_path):
     )
     cdc_upsert_sink(stream, target, str(tmp_path / "ck"), keys=["k"],
                     seq_col="seq")
-    v0 = _committed_versions(spark, target)[0]
+    v0 = _committed_manifest_versions(spark, target)[0]
     got = {
         r["_key"]: r["status"]
         for r in cdc_version_diff(
@@ -3379,21 +3379,21 @@ def test_session_window_dynamic_gap_semantics(spark):
 
 
 def test_migrate_cdc_target_preserves_history_and_stale_guard(spark, tmp_path):
-    """migrate_cdc_target (VERDICT r12 #3) on a flat CDC target built
-    over three drains: (a) the migrated bucketed snapshot equals the
-    flat one row-for-row; (b) EVERY source version id time-travels to
-    identical rows in the destination (1:1 version parity, including
-    tombstone watermarks); (c) untouched buckets re-point at existing
-    immutable dirs across migrated versions (delta storage, not
-    re-copies); (d) stale-guard continuity — a bucketed sink resumed
-    on the migrated target drops a stale change and applies a fresh
-    one; (e) refusals: non-empty destination, already-bucketed
-    source; (f) preserve_history=False truncates explicitly."""
+    """migrate_cdc_target re-buckets a CDC target built by the default
+    one-bucket sink over three drains into 4 buckets: (a) the copy's
+    snapshot equals the source's row-for-row; (b) EVERY source version
+    id time-travels to identical rows in the copy (1:1 version parity,
+    including tombstone watermarks); (c) unchanged buckets re-point at
+    existing immutable dirs across copied versions (delta storage, not
+    re-copies); (d) stale-guard continuity — a 4-bucket sink resumed on
+    the copy drops a stale change and applies a fresh one; (e) the
+    4-bucket copy re-buckets again to 8 with the same parity, and a
+    non-empty destination is refused; (f) preserve_history=False
+    truncates explicitly."""
     import pytest as _pytest
 
     from datasheet_etl_spark.streaming.streams import (
         _committed_manifest_versions,
-        _committed_versions,
         _read_manifest,
         cdc_upsert_sink,
         migrate_cdc_target,
@@ -3402,8 +3402,8 @@ def test_migrate_cdc_target_preserves_history_and_stale_guard(spark, tmp_path):
 
     schema = "k long, seq long, op string, v string"
     src = str(tmp_path / "changes_src")
-    flat = str(tmp_path / "flat_target")
-    ckpt = str(tmp_path / "flat_ckpt")
+    source = str(tmp_path / "source_target")
+    ckpt = str(tmp_path / "source_ckpt")
 
     def drain(rows, mode):
         spark.createDataFrame(rows, schema).coalesce(1).write.mode(
@@ -3414,14 +3414,14 @@ def test_migrate_cdc_target_preserves_history_and_stale_guard(spark, tmp_path):
             .format("parquet")
             .load(src)
         )
-        cdc_upsert_sink(stream, flat, ckpt, keys=["k"], seq_col="seq")
+        cdc_upsert_sink(stream, source, ckpt, keys=["k"], seq_col="seq")
 
-    # three drains -> three committed flat versions; keys 1..8 spread
-    # over 4 buckets; k=5 ends deleted (tombstone watermark seq 9)
+    # three drains -> three committed versions; keys 1..8 spread over
+    # 4 buckets in the copy; k=5 ends deleted (tombstone watermark seq 9)
     drain([(k, 1, "I", f"a{k}") for k in range(1, 9)], "overwrite")
     drain([(1, 2, "U", "b1"), (2, 3, "U", "b2")], "append")
     drain([(5, 9, "D", None), (3, 4, "U", "b3")], "append")
-    src_versions = _committed_versions(spark, flat)
+    src_versions = _committed_manifest_versions(spark, source)
     assert len(src_versions) == 3
 
     def rows(df):
@@ -3429,30 +3429,28 @@ def test_migrate_cdc_target_preserves_history_and_stale_guard(spark, tmp_path):
             (r["k"], r["seq"], r["v"]) for r in df.collect()
         )
 
+    def assert_parity(a, b, versions):
+        for tomb in (False, True):
+            assert rows(
+                read_cdc_snapshot(spark, a, include_tombstones=tomb)
+            ) == rows(read_cdc_snapshot(spark, b, include_tombstones=tomb))
+        assert _committed_manifest_versions(spark, a) == versions
+        for v in versions:
+            assert rows(
+                read_cdc_snapshot(spark, a, include_tombstones=True, version=v)
+            ) == rows(
+                read_cdc_snapshot(spark, b, include_tombstones=True, version=v)
+            )
+
     dest = str(tmp_path / "bucketed_target")
     summary = migrate_cdc_target(
-        spark, flat, dest, num_buckets=4, keys=["k"]
+        spark, source, dest, num_buckets=4, keys=["k"]
     )
     assert summary["migrated_versions"] == src_versions
     assert summary["truncated_versions"] == []
 
-    # (a) current snapshot identical (with and without tombstones)
-    for tomb in (False, True):
-        assert rows(
-            read_cdc_snapshot(spark, dest, include_tombstones=tomb)
-        ) == rows(read_cdc_snapshot(spark, flat, include_tombstones=tomb))
-    # (b) per-version time travel identical under the ORIGINAL ids
-    assert _committed_manifest_versions(spark, dest) == src_versions
-    for v in src_versions:
-        assert rows(
-            read_cdc_snapshot(
-                spark, dest, include_tombstones=True, version=v
-            )
-        ) == rows(
-            read_cdc_snapshot(
-                spark, flat, include_tombstones=True, version=v
-            )
-        )
+    # (a) + (b) current snapshot and every version identical
+    assert_parity(dest, source, src_versions)
     # (c) delta storage: v2 only touched the buckets of k=1 and k=2 —
     # every other bucket's manifest entry still points at a v1 dir
     m1 = _read_manifest(spark, dest, src_versions[0])["buckets"]
@@ -3463,9 +3461,9 @@ def test_migrate_cdc_target_preserves_history_and_stale_guard(spark, tmp_path):
     assert 0 < len(changed) < 4  # some but not all buckets rewritten
     assert any(m2[b] == m1[b] for b in m1)  # re-pointed, not copied
 
-    # (d) stale-guard continuity on the migrated target: k=2's stored
-    # seq is 3 — a seq-2 change must lose; k=5 is tombstoned at 9 — a
-    # seq-8 update must not resurrect it; a fresh seq-10 insert lands
+    # (d) stale-guard continuity on the copy: k=2's stored seq is 3 — a
+    # seq-2 change must lose; k=5 is tombstoned at 9 — a seq-8 update
+    # must not resurrect it; a fresh seq-10 insert lands
     src2 = str(tmp_path / "changes_src2")
     spark.createDataFrame(
         [(2, 2, "U", "STALE"), (5, 8, "U", "ZOMBIE"), (9, 10, "I", "new9")],
@@ -3489,36 +3487,39 @@ def test_migrate_cdc_target_preserves_history_and_stale_guard(spark, tmp_path):
     assert 5 not in got  # tombstone watermark survived migration
     assert got[9] == (10, "new9")  # fresh change applied
 
-    # (e) refusals
+    # (e) 4 -> 8 buckets: same parity over the copy's whole history
+    dest8 = str(tmp_path / "target8")
+    dest_versions = _committed_manifest_versions(spark, dest)
+    summary8 = migrate_cdc_target(spark, dest, dest8, num_buckets=8, keys=["k"])
+    assert summary8["migrated_versions"] == dest_versions
+    assert _read_manifest(spark, dest8, dest_versions[-1])["num_buckets"] == 8
+    assert_parity(dest8, dest, dest_versions)
     with _pytest.raises(ValueError, match="not empty"):
-        migrate_cdc_target(spark, flat, dest, num_buckets=4, keys=["k"])
-    with _pytest.raises(ValueError, match="already a bucketed"):
-        migrate_cdc_target(
-            spark, dest, str(tmp_path / "x"), num_buckets=8, keys=["k"]
-        )
+        migrate_cdc_target(spark, source, dest, num_buckets=4, keys=["k"])
 
     # (f) explicit truncation: only the latest version carries over
     dest2 = str(tmp_path / "truncated_target")
     summary2 = migrate_cdc_target(
-        spark, flat, dest2, num_buckets=4, keys=["k"],
+        spark, source, dest2, num_buckets=4, keys=["k"],
         preserve_history=False,
     )
     assert summary2["migrated_versions"] == [src_versions[-1]]
     assert summary2["truncated_versions"] == src_versions[:-1]
     assert rows(read_cdc_snapshot(spark, dest2)) == rows(
-        read_cdc_snapshot(spark, flat)
+        read_cdc_snapshot(spark, source)
     )
     with _pytest.raises(ValueError, match="not committed"):
         read_cdc_snapshot(spark, dest2, version=src_versions[0])
 
 
 def test_migrate_scd2_target_history_and_as_of(spark, tmp_path):
-    """migrate_cdc_target works VERBATIM on a flat SCD2 target (the
-    layouts are one discipline; SCD2's multi-row-per-key history is
-    exactly why the migration diffs per-BUCKET fingerprints, not
-    per-key): migrated history equals flat history, scd2_as_of rewinds
-    identically, and the bucketed SCD2 sink extends the migrated
-    history incrementally with the stale guard intact."""
+    """migrate_cdc_target works VERBATIM on an SCD2 target built by the
+    default one-bucket sink (both sinks share one layout; SCD2's
+    multi-row-per-key history is exactly why the migration diffs
+    per-BUCKET fingerprints, not per-key): the 4-bucket copy's history
+    equals the source's, scd2_as_of rewinds identically, and a 4-bucket
+    SCD2 sink extends the copied history incrementally with the stale
+    guard intact."""
     from datasheet_etl_spark.streaming.streams import (
         migrate_cdc_target,
         read_scd2_snapshot,
@@ -3527,9 +3528,9 @@ def test_migrate_scd2_target_history_and_as_of(spark, tmp_path):
     )
 
     schema = "user_id bigint, event_id bigint, value double, op string"
-    flat = str(tmp_path / "scd2_flat")
+    source = str(tmp_path / "scd2_source")
 
-    def drain(rows, tag, target, num_buckets=None):
+    def drain(rows, tag, target, num_buckets=1):
         src = str(tmp_path / f"src_{tag}")
         spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
         stream = (
@@ -3551,9 +3552,9 @@ def test_migrate_scd2_target_history_and_as_of(spark, tmp_path):
         [(1, 1, 10.0, "U"), (1, 3, 11.0, "U"), (2, 2, 20.0, "U"),
          (3, 1, 30.0, "U"), (4, 1, 40.0, "U")],
         "b1",
-        flat,
+        source,
     )
-    drain([(1, 5, None, "D"), (2, 6, 21.0, "U")], "b2", flat)
+    drain([(1, 5, None, "D"), (2, 6, 21.0, "U")], "b2", source)
 
     def hist(target, seq=None):
         snap = read_scd2_snapshot(spark, target)
@@ -3566,10 +3567,10 @@ def test_migrate_scd2_target_history_and_as_of(spark, tmp_path):
         )
 
     dest = str(tmp_path / "scd2_bucketed")
-    migrate_cdc_target(spark, flat, dest, num_buckets=4, keys=["user_id"])
-    assert hist(dest) == hist(flat)
+    migrate_cdc_target(spark, source, dest, num_buckets=4, keys=["user_id"])
+    assert hist(dest) == hist(source)
     for seq in (1, 2, 4, 6):
-        assert hist(dest, seq) == hist(flat, seq)
+        assert hist(dest, seq) == hist(source, seq)
 
     # incremental extension on the migrated target: stale event_id 4
     # for user 1 (delete-closed at 5) must be rejected; fresh 7 lands

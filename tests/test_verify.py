@@ -15,7 +15,12 @@ from datasheet_etl_spark.pipeline import (
     mock_vision_tables,
     run_pipeline,
 )
-from datasheet_etl_spark.verify import verify
+from datasheet_etl_spark.verify import (
+    smart_resolution,
+    verifier_stats,
+    verify,
+    verify_tables,
+)
 
 GOLDEN_PARAMS = {
     "input_voltage_range_min": 4.2,
@@ -127,6 +132,30 @@ def test_zip_truncation(spark):
     vr = verify(vision, rule)
     fields = [c["field"] for c in vr.conflicts.collect()]
     assert all(not f.startswith("row[3]") and not f.startswith("row[4]") for f in fields)
+
+
+def test_smart_resolution_and_verifier_stats(spark):
+    """The smart arbiter lets the rule side win only unit conflicts;
+    verify_tables keeps one row per document; the golden pair's stats
+    are one verified document with its one conflict resolved."""
+    df = spark.createDataFrame([("unit",), ("value",), ("table_id",)], "t string")
+    got = {
+        r["t"]: r["res"]
+        for r in df.select("t", smart_resolution(F.col("t")).alias("res")).collect()
+    }
+    assert got == {"unit": "rule_wins", "value": "vision_wins", "table_id": "vision_wins"}
+    vision, rule = mock_vision_tables(spark), mock_rule_tables(spark)
+    assert verify_tables(vision, rule).count() == 1
+    vr = verify(vision, rule)
+    stats = verifier_stats(vr.verdicts, vr.conflicts).collect()[0].asDict()
+    assert stats == {
+        "total_verifications": 1,
+        "verified_count": 1,
+        "conflict_count": 0,
+        "needs_review_count": 0,
+        "total_conflicts_found": 1,
+        "conflicts_resolved": 1,
+    }
 
 
 def _collect_rows(df):
