@@ -143,14 +143,8 @@ def vectors(
     return times, line
 
 
-def warm_up(spark, sf_dir: str) -> None:
-    """Pay the session's one-time costs before the timed loop."""
-    from datasheet_etl_spark.io import load_table
-
-    # session/JIT/page-cache warmup so the first timed queries measure
-    # steady-state query speed, not JVM startup + cold parquet footers
-    for warm in ("region", "lineitem", "orders", "documents", "embeddings", "events"):
-        load_table(spark, sf_dir, warm).count()
+def _warm_datasource_and_streaming(spark) -> None:
+    """Run each Python DataSource and streaming seam once on synthetic rows."""
     # Python-seam + streaming machinery warm: the FIRST use of each
     # Python execution seam in a JVM pays one-time infrastructure —
     # spawning/importing the DataSource plan+read worker processes
@@ -221,6 +215,25 @@ def warm_up(spark, sf_dir: str) -> None:
         spark.catalog.dropTempView("_bench_warm_state")
     finally:
         shutil.rmtree(_warm_dir, ignore_errors=True)
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Pay the session's one-time costs before the timed loop."""
+    from datasheet_etl_spark.io import load_table
+
+    # session/JIT/page-cache warmup so the first timed queries measure
+    # steady-state query speed, not JVM startup + cold parquet footers
+    for warm in ("region", "lineitem", "orders", "documents", "embeddings", "events"):
+        load_table(spark, sf_dir, warm).count()
+    # A failed warm costs one noisy first entry per seam, not the whole run.
+    try:
+        _warm_datasource_and_streaming(spark)
+    except Exception as exc:  # noqa: BLE001
+        print(
+            f"# DataSource/streaming seam warm failed ({type(exc).__name__}: {exc}),"
+            " continuing",
+            file=sys.stderr,
+        )
     # Python UDTF seam warm: the FIRST UDTF execution in a JVM pays
     # one-time infrastructure — the analyze-time Python runner (polymorphic
     # UDTFs resolve their schema in a separate Python process at plan

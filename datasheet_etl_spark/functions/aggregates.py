@@ -14,14 +14,23 @@ holistic aggregates (exact medians, order statistics) where no
 decomposition exists; for anything decomposable (sums, moments,
 sketches) use built-in expressions or a mergeable-partials shape
 (`operators.relational.partial_rollup`) instead — they combine
-map-side and never materialize a group on one executor.
+map-side and never materialize a group on one executor. ``dsum`` is
+the decomposable sum the query inventory and the streaming operators
+share.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import Column
+from pyspark.sql import functions as F
 from pyspark.sql.functions import PandasUDFType, pandas_udf
+
+
+def dsum(col: Column, scale: int = 2) -> Column:
+    """Order-independent (exact) sum of a double column via decimal."""
+    return F.sum(col.cast(f"decimal(18,{scale})")).cast("double")
+
 
 # name → (fn, return_type DDL string); mirrors verify.COMPARATORS /
 # verify.ARBITERS (U1/U2). The pandas_udf object is built lazily on

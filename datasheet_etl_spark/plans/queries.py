@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datasheet_etl_spark.functions import (
@@ -37,6 +37,7 @@ from datasheet_etl_spark.functions import (
     severity_penalty,
     tokens,
 )
+from datasheet_etl_spark.functions.aggregates import dsum
 from datasheet_etl_spark.io import load_table
 from datasheet_etl_spark.operators.relational import (
     dynamic_pivot,
@@ -60,11 +61,6 @@ def register(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-def dsum(col: Column, scale: int = 2) -> Column:
-    """Order-independent (exact) sum of a double column via decimal."""
-    return F.sum(col.cast(f"decimal(18,{scale})")).cast("double")
 
 
 def sql_dsum(expr: str, scale: int = 2) -> str:

@@ -21,8 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datasheet_etl_spark.functions.aggregates import dsum
 from datasheet_etl_spark.io import load_table
-from datasheet_etl_spark.plans.queries import dsum, register, sql_dsum
+from datasheet_etl_spark.plans.queries import register, sql_dsum
 
 
 @register(

@@ -17,7 +17,7 @@ import shutil
 import tempfile
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datasheet_etl_spark.plans.queries import ORACLES, register
@@ -744,75 +744,6 @@ def t24_streaming_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "t78_streaming_heavy_hitters",
-    """
-    WITH d AS (
-      SELECT event_type,
-             CASE WHEN event_id % 3 <> 0 THEN user_id % 4
-                  ELSE user_id END AS item
-      FROM events
-    ), c AS (
-      SELECT event_type, item, count(*) AS cnt
-      FROM d GROUP BY event_type, item
-    ), t AS (
-      SELECT event_type, count(*) AS total FROM d GROUP BY event_type
-    )
-    SELECT c.event_type AS event_type, CAST(c.item AS BIGINT) AS item
-    FROM c JOIN t ON c.event_type = t.event_type
-    WHERE c.cnt > t.total / 17.0
-    ORDER BY c.event_type, item
-    """,
-)
-def t78_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type heavy-hitter users via a Misra-Gries summary in
-    grouped streaming state — the frequency sketch beside
-    ``streams.kmv_distinct_stateful``'s distinct sketch (KMV): state
-    hard-capped at k=16 (item, count) pairs per key forever, where exact
-    streaming top-k state is unbounded.
-
-    MEMBERSHIP oracle (r12, VERDICT r11 #6 — upgraded from rows-only):
-    the summary's COUNTS are arrival-order-dependent and stay
-    rows-only territory, but MG's guarantee is order-free — any item
-    with true frequency > n/(k+1) is present with
-    ``est_count > true − n/(k+1)``. The stream deterministically skews
-    users (event_id % 3 ≠ 0 → user_id % 4), so four users each hold
-    ~1/6 of every type's events: 1/6 > 1/17 with the undercount bound
-    still leaving est > n·(1/6 − 1/17) ≈ n/9.3 > n/17 — a 2×
-    GENERATOR-RATIO margin, not a data-size accident — while tail
-    users (true ≪ n/17, est ≤ true) can never cross the emission bar.
-    So ``est_count > n_seen/(k+1)`` emits EXACTLY the exact-count
-    heavy set at every scale, and DuckDB grades the membership.
-    Full-summary mechanics (counts, noise floor, the guarantee on
-    adversarial folds) stay pinned in tests/test_streaming.py."""
-    from datasheet_etl_spark.streaming.streams import heavy_hitters_stateful
-
-    src = _stage_events(sf_dir)
-    with _few_state_partitions(spark):
-        stream = events_stream(spark, src).withColumn(
-            "item",
-            F.when(
-                F.col("event_id") % 3 != 0, F.col("user_id") % 4
-            ).otherwise(F.col("user_id")),
-        )
-        name = f"t78_{uuid.uuid4().hex[:8]}"
-        out = run_available_now(
-            heavy_hitters_stateful(stream, "event_type", "item", k=16),
-            name,
-            "update",
-        )
-    # final summary per key = the emission at that key's max n_seen;
-    # provable-membership filter: est ≤ true, so est > n/(k+1) ⇒ heavy
-    w = Window.partitionBy("event_type")
-    return (
-        out.withColumn("_mx", F.max("n_seen").over(w))
-        .filter(F.col("n_seen") == F.col("_mx"))
-        .filter(F.col("est_count") > F.col("n_seen") / 17.0)
-        .select("event_type", F.col("item").cast("long").alias("item"))
-        .orderBy("event_type", "item")
-    )
-
-
-@register(
     "t99_streaming_gram_index",
     """
     WITH t AS (
@@ -1062,12 +993,10 @@ def t143_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t145_streaming_native_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t78's heavy-hitter workload through a NATIVE streaming sketch
-    aggregate — and a strict certification upgrade over t78's own
-    grade: Misra-Gries counts are arrival-order-dependent (t78 is
-    membership-oracled only), but a frequent-items sketch below map
-    capacity never evicts, so its counts are EXACT regardless of
-    arrival order or batch boundaries — which makes the STREAMING
+    """Per-event-type heavy hitters through a NATIVE streaming sketch
+    aggregate: a frequent-items sketch below map capacity never
+    evicts, so its counts are EXACT regardless of arrival order or
+    batch boundaries — which makes the STREAMING
     drain's final state fully value-oracled against the batch truth
     (t139's oracle verbatim; same below-capacity + selection-margin
     argument). What this entry grades that t139 cannot: the sketch

@@ -1157,8 +1157,8 @@ def t132_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t135_kll_quantiles_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4.1's NATIVE Datasketches KLL quantile sketches beside
-    the hand-built mergeable histogram (``sketches.hist_partials``): per-shard
+    """Spark 4.1's NATIVE Datasketches KLL quantile sketches, the
+    engine's mergeable quantile sketch: per-shard
     ``kll_sketch_agg_double`` partials merged per key with
     ``kll_merge_agg_double`` (the two-level shape — tonight's
     shard sketches merge with the stored ones; kilobytes move, never
@@ -1448,7 +1448,7 @@ def t139_approx_top_k_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native Datasketches FREQUENT-ITEMS (Spark 4.1
     ``approx_top_k_accumulate`` / ``_combine`` / ``_estimate``) — the
     fourth member of the native-sketch family (t87 HLL, t135 KLL,
-    t136 theta) and the native twin of t78's hand-built Misra-Gries:
+    t136 theta) and the engine's heavy-hitter sketch:
     per-event-type top-4 items through the two-level mergeable shape
     every incremental pipeline runs (per-shard accumulate partials →
     per-key combine → estimate; tonight's shard sketches combine with
@@ -1459,15 +1459,16 @@ def t139_approx_top_k_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ 4 + n_users (≈1.5k at sf0.1), far under the explicit
     maxItemsTracked = 8192, and a frequent-items sketch below map
     capacity never evicts, so every count is exact; (2) top-4
-    SELECTION is safe on t78's generator-ratio margin — the four
-    planted heavy items each hold ~1/6 of a type's events while every
-    tail user holds ≪ 1/17, so no tie at the selection boundary can
+    SELECTION is safe on a generator-ratio margin — the item expression
+    maps two of every three events to user_id % 4, so the four planted
+    heavy items each hold ~1/6 of a type's events while a tail user
+    holds only its own events (≪ 1/6), a ratio fixed by the generator
+    rather than by the data size, so no tie at the selection boundary can
     flip membership between engines (counts within the top-4 CAN tie;
     output is therefore ordered by item, never by rank). The oracle
     re-derives the same top-4 from exact GROUP BY counts. Beyond
     capacity the estimates carry documented error — q24b's
-    approximate-by-definition territory, pinned in
-    tests/test_sketches.py."""
+    approximate-by-definition territory."""
     e = load_table(spark, sf_dir, "events")
     d = e.select(
         "event_type",

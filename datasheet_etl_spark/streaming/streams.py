@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from datasheet_etl_spark.plans.queries import dsum
+from datasheet_etl_spark.functions.aggregates import dsum
 
 # ---------------------------------------------------------------------------
 # source
@@ -264,7 +264,7 @@ def _session_segments(chunks: list, last_ts, gap_seconds: float):
 
     All Arrow chunks are materialized and concatenated BEFORE the sort:
     chunk-spanning keys have no cross-chunk order guarantee, so a
-    per-chunk sort would mis-fold (review-found). Per-segment sums run
+    per-chunk sort would mis-fold. Per-segment sums run
     ``np.add.reduceat`` over the event_id-sorted rows — the same
     sequential left-to-right accumulation the per-row fold performed.
     Rows are event_id-sorted, so each segment's first/last event are
@@ -273,8 +273,8 @@ def _session_segments(chunks: list, last_ts, gap_seconds: float):
     against lag(ts) in event_id order, so the next batch's first gap
     test must see the previous batch's final event's ts — identical
     only when ts is monotone in event_id, which the fold must not
-    assume (r15 verdict watch item; pinned by the non-monotone-ts
-    property test in tests/test_streaming.py).
+    assume (pinned by the non-monotone-ts property test in
+    tests/test_streaming.py).
     """
     ids = np.concatenate([c["event_id"].to_numpy() for c in chunks])
     vals = np.concatenate(
@@ -454,7 +454,7 @@ def sessionize_timeout(events: DataFrame, gap_seconds: float = 1800.0) -> DataFr
     matches batch ``sessionize`` (q18's SQL) on an in-order bounded
     replay — t117's DuckDB oracle grades exactly that equality.
 
-    Production caveat (review-found): ``state.remove()`` at timeout
+    Production caveat: ``state.remove()`` at timeout
     also discards the per-key session COUNTER, so a key that returns
     after going quiet numbers its next session 1 again. That is the
     deliberate price of bounded state — keeping counters for every
@@ -1053,72 +1053,6 @@ def incremental_curation_pipeline(
     )
     query.awaitTermination()
     return query
-
-
-# ---------------------------------------------------------------------------
-# streaming per-key KMV distinct sketch
-# ---------------------------------------------------------------------------
-
-
-def _kmv_fold(cur: set, pdfs, k: int):
-    """Fold incoming hash batches into a k-min pool; return (pool,
-    estimate). Exact while the pool is under k (the pool IS the
-    distinct hash set); theta-estimated past it — the same estimator as
-    ``operators.sketches`` (``(k-1)/theta`` with the signed 64-bit hash
-    mapped onto [0,1)), so batch and streaming distinct counts agree."""
-    for pdf in pdfs:
-        cur.update(int(h) for h in pdf["h"].dropna())
-    pool = sorted(cur)[:k]
-    if len(pool) < k:
-        est = float(len(pool))
-    else:
-        theta = (pool[-1] + 2**63) / 2**64
-        est = (k - 1) / theta
-    return pool, est
-
-
-def kmv_distinct_stateful(
-    events: DataFrame,
-    key_col: str,
-    value_col: str,
-    k: int = 256,
-) -> DataFrame:
-    """Streaming per-key approximate distinct count via a KMV sketch
-    held in grouped state (``applyInPandasWithState``).
-
-    State is O(k × 8 bytes) per key FOREVER, by construction — the
-    sketch never grows past k hashes no matter how many events a key
-    sees, which is the whole point at 100 TB: exact per-key streaming
-    distinct state is unbounded (it must remember every value), the
-    sketch is a fixed-size register. Hashing happens IN-PLAN
-    (``xxhash64`` before the stateful op), so the Python worker only
-    ever sees 8-byte hashes, never values. Folding a replayed row is
-    idempotent (set union), so retries/replays cannot skew the pool.
-
-    Output (update mode): one row per key per micro-batch with the
-    running ``distinct_est`` — exact below k distinct, ``(k-1)/theta``
-    beyond (relative error ~1/sqrt(k-2)).
-    """
-    key_type = events.schema[key_col].dataType.simpleString()
-    hashed = events.filter(F.col(value_col).isNotNull()).select(
-        F.col(key_col), F.xxhash64(F.col(value_col)).alias("h")
-    )
-
-    def fn(key, pdfs, state):
-        cur = set(state.get[0]) if state.exists else set()
-        pool, est = _kmv_fold(cur, pdfs, k)
-        state.update((pool,))
-        yield pd.DataFrame(
-            {key_col: [key[0]], "distinct_est": [est], "pool_size": [len(pool)]}
-        )
-
-    return hashed.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=f"{key_col} {key_type}, distinct_est double, pool_size int",
-        stateStructType="hashes array<bigint>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -1811,9 +1745,9 @@ def scd2_upsert_sink(
       closed intervals carry the closing change's seq in ``valid_to``,
       and a delete that closes nothing (double delete, delete of a
       closed key) leaves a zero-width ``_tombstone`` watermark row so
-      its sequence still gates (review-found: without it, a later
-      out-of-order change could interleave into delete-closed
-      history). Changes at/below the mark are dropped; like the cdc
+      its sequence still gates (without it, a later out-of-order
+      change could interleave into delete-closed history). Changes
+      at/below the mark are dropped; like the cdc
       sink, the ordered-feed contract is per key ACROSS batches, and
       stale stragglers are rejected, never spliced.
     - **touched-keys rebuild**: untouched keys' rows pass through
@@ -1859,8 +1793,8 @@ def scd2_upsert_sink(
         # same-seq duplicate collapse, deterministic — apply_changes'
         # total order (delete-wins, then op, then payload) through the
         # SHARED payload_tiebreak, so map payloads work here exactly
-        # like they do in the CDC sink (review-found r12: a local copy
-        # of the tiebreak had missed the map canonicalization)
+        # like they do in the CDC sink (one tiebreak definition, so
+        # the map canonicalization cannot diverge between sinks)
         from datasheet_etl_spark.operators.relational import payload_tiebreak
 
         changes = batch_df.select(*kl, *pcols, F.col(seq_col), F.col(op_col))
@@ -2045,94 +1979,6 @@ def compact_cdc_target(
         or hit_df.drop("_bucket").schema.json(),
     )
     return n
-
-
-def _mg_fold(items: list, counts: list, pdfs, k: int):
-    """Fold incoming value batches into a Misra-Gries summary of at
-    most ``k`` counters; returns (items, counts, n_seen_delta).
-
-    The classic guarantee: after n rows, every value with true
-    frequency > n/(k+1) is IN the summary, and each stored count
-    undercounts its true frequency by at most n/(k+1). A miss with a
-    full summary decrements ALL counters (O(k)); zeroed counters free
-    their slots."""
-    cur = dict(zip(items, counts))
-    seen = 0
-    for pdf in pdfs:
-        for v in pdf["_v"].dropna():
-            v = str(v)
-            seen += 1
-            if v in cur:
-                cur[v] += 1
-            elif len(cur) < k:
-                cur[v] = 1
-            else:
-                for key in list(cur):
-                    cur[key] -= 1
-                    if cur[key] == 0:
-                        del cur[key]
-    out = sorted(cur.items())
-    return [i for i, _ in out], [c for _, c in out], seen
-
-
-def heavy_hitters_stateful(
-    events: DataFrame,
-    key_col: str,
-    value_col: str,
-    k: int = 16,
-) -> DataFrame:
-    """Streaming per-key heavy hitters (Misra-Gries) in grouped state —
-    the frequency-sketch sibling of :func:`kmv_distinct_stateful`
-    (distinct counts) : "which values dominate each key's stream",
-    with state hard-capped at ``k`` (item, count) pairs per key FOREVER
-    — an exact streaming top-k would need a counter per distinct
-    value, i.e. unbounded state.
-
-    Guarantee (pinned in tests/test_streaming.py): any value with true
-    frequency > n/(k+1) of a key's n rows is present in that key's
-    final summary, with estimated count within n/(k+1) below truth —
-    the audit-grade "nothing big can hide" property; small values may
-    appear or vanish, which is the accepted noise floor. Folding is
-    sequential per key (classic MG), so the summary is deterministic
-    given the per-key arrival order; cross-batch order follows
-    micro-batch sequence.
-
-    Output (update mode): one row per (key, item) per micro-batch with
-    the running estimate plus ``n_seen`` — monotone per key, so the
-    final summary after a bounded drain is the rows with each key's
-    max ``n_seen``."""
-    key_type = events.schema[key_col].dataType.simpleString()
-    src = events.select(
-        F.col(key_col), F.col(value_col).cast("string").alias("_v")
-    )
-
-    def fn(key, pdfs, state):
-        if state.exists:
-            items, counts, n0 = state.get
-            items, counts = list(items), list(counts)
-        else:
-            items, counts, n0 = [], [], 0
-        items, counts, delta = _mg_fold(items, counts, pdfs, k)
-        n = n0 + delta
-        state.update((items, counts, n))
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]] * len(items),
-                "item": items,
-                "est_count": counts,
-                "n_seen": [n] * len(items),
-            }
-        )
-
-    return src.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=(
-            f"{key_col} {key_type}, item string, est_count long, n_seen long"
-        ),
-        stateStructType="items array<string>, counts array<long>, n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def gc_cdc_target(
@@ -2484,8 +2330,7 @@ def cdc_version_diff(
             raise ValueError(f"{target_dir} has no committed version")
         payload = [c for c in snap.columns if c not in skip]
         # the shared canonical row fingerprint (_canonical_row_fp):
-        # key-sorted map entries at every nesting level (review-found
-        # r12: the original fix handled only top-level map columns),
+        # key-sorted map entries at every nesting level,
         # ignoreNullFields=false so {a: null, b: 1} cannot collide
         # with {b: 1}
         fp = _canonical_row_fp(snap, payload)
@@ -2506,9 +2351,9 @@ def cdc_version_diff(
 
 def _canonical_row_fp(df: DataFrame, cols: Sequence[str]):
     """THE row-content fingerprint expression every version/migration
-    diff in this module must share (single definition on purpose —
-    the r12 review caught a divergence bug in exactly this
-    discipline): maps canonicalized to key-sorted entries at every
+    diff in this module must share (single definition on purpose, so
+    version diffs and migration checks cannot fingerprint the same row
+    differently): maps canonicalized to key-sorted entries at every
     nesting level, ``ignoreNullFields=false`` so a NULL field stays
     distinct from an ABSENT one, one md5 per row."""
     from datasheet_etl_spark.operators.relational import canonicalize_maps

@@ -74,7 +74,6 @@ ENTRIES = [
     "t119_stream_join_then_agg",
     "t122_streaming_full_outer_join",
     "t121b_streaming_scd2_bucketed",
-    "t78_streaming_heavy_hitters",
     "q59_pagination_keyset",
     "q61_set_ops_all",
     "t63b_mmr_pool",

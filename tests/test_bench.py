@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import importlib.util
 import os
+from types import SimpleNamespace
 
 import pytest
 
@@ -112,3 +113,49 @@ def test_a_non_integer_cpus_names_the_variable(bench, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "four")
     with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS must be an integer, got 'four'"):
         bench.main()
+
+
+class _Rows:
+    def count(self):
+        return 0
+
+
+class _FailingReadSession:
+    """Just enough of a SparkSession for ``warm_up``: DataSource
+    registration works, every DataSource read raises, and UDTF
+    registrations are recorded."""
+
+    def __init__(self):
+        self.udtfs = []
+        self.dataSource = SimpleNamespace(register=lambda cls: None)
+        self.udtf = SimpleNamespace(register=lambda name, f: self.udtfs.append(name))
+        self.catalog = SimpleNamespace(dropTempView=lambda name: True)
+
+    @property
+    def read(self):
+        raise RuntimeError("synth read failed")
+
+    def range(self, *args):
+        return SimpleNamespace(createOrReplaceTempView=lambda name: None)
+
+    def sql(self, query):
+        return _Rows()
+
+
+def test_warm_up_contains_a_failing_datasource_warm(bench, monkeypatch, capsys):
+    """A failing DataSource/streaming seam warm is logged as one
+    stderr line and skipped: ``warm_up`` returns and the UDTF warm
+    still runs."""
+    import datasheet_etl_spark.io as io
+
+    monkeypatch.setattr(io, "load_table", lambda spark, sf_dir, name: _Rows())
+    spark = _FailingReadSession()
+
+    bench.warm_up(spark, "unused")
+
+    err = capsys.readouterr().err.splitlines()
+    assert err == [
+        "# DataSource/streaming seam warm failed"
+        " (RuntimeError: synth read failed), continuing"
+    ]
+    assert spark.udtfs == ["_bench_warm_udtf", "_bench_warm_udtf_arrow"]

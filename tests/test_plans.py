@@ -1364,10 +1364,11 @@ def test_t139_below_capacity_counts_are_exact(spark):
 
 
 def test_t139_top4_selection_margin(spark):
-    """The selection-boundary margin (t78's generator-ratio argument):
+    """The selection-boundary margin (a generator-ratio argument):
     per type, the 4th item's count must clear the 5th by a real gap
-    — the planted heavy items each hold ~n/6 while tail users hold
-    ≪ n/17 — so top-4 membership cannot flip between engines."""
+    — two of every three events map to user_id % 4, so the planted
+    heavy items each hold ~n/6 while a tail user holds only its own
+    events — so top-4 membership cannot flip between engines."""
     from pyspark.sql import functions as F
 
     from datasheet_etl_spark.io import load_table

@@ -1,249 +1,91 @@
-"""KMV distinct sketch: accuracy, mergeability, exact-small-domain."""
+"""Spark's native sketch families: mergeability, exact regimes, NULLs."""
 
 from __future__ import annotations
 
+from functools import reduce
+
+import pytest
 from pyspark.sql import functions as F
 
+from datasheet_etl_spark.operators.sketches import (
+    hll_estimate,
+    hll_merge,
+    hll_partials,
+)
 from tests.conftest import SF_SMOKE
 
 
-def test_kmv_estimate_within_error_bound(spark):
-    from datasheet_etl_spark.io import load_table
-    from datasheet_etl_spark.operators.sketches import kmv_distinct
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    exact = li.select("l_orderkey").distinct().count()
-    est = kmv_distinct(li, "l_orderkey", k=256)
-    # KMV std error ≈ 1/sqrt(k−2) ≈ 6.3%; allow 3σ
-    assert abs(est - exact) / exact < 0.19, (est, exact)
+def _theta_partials(df, keys, col):
+    return df.groupBy(*keys).agg(F.expr(f"theta_sketch_agg({col})").alias("sk"))
 
 
-def test_kmv_small_domain_is_exact(spark):
-    from datasheet_etl_spark.io import load_table
-    from datasheet_etl_spark.operators.sketches import kmv_distinct
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    exact = li.select("l_linenumber").distinct().count()  # 7 values
-    assert kmv_distinct(li, "l_linenumber", k=256) == float(exact)
+def _theta_merge(*partials, keys):
+    u = reduce(lambda a, b: a.unionByName(b), partials)
+    return u.groupBy(*keys).agg(F.expr("theta_union_agg(sk)").alias("sk"))
 
 
-def test_kmv_sketches_merge_exactly(spark):
-    """sketch(A ∪ B) == merge(sketch(A), sketch(B)) — bit-exact, the
-    property HLL registers give only approximately."""
-    from datasheet_etl_spark.io import load_table
-    from datasheet_etl_spark.operators.sketches import kmv_merge, kmv_sketch
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    a = li.filter(F.col("l_orderkey") % 2 == 0)
-    b = li.filter(F.col("l_orderkey") % 2 == 1)
-    merged = kmv_merge(
-        kmv_sketch(a, "l_orderkey", 128), kmv_sketch(b, "l_orderkey", 128), k=128
+def _theta_estimate(sketches):
+    return sketches.select(
+        *[c for c in sketches.columns if c != "sk"],
+        F.expr("theta_sketch_estimate(sk)").alias("n_distinct"),
     )
-    whole = kmv_sketch(li, "l_orderkey", 128)
-    assert [r["h"] for r in merged.collect()] == [r["h"] for r in whole.collect()]
 
 
-def test_kmv_excludes_nulls_like_count_distinct(spark):
-    """COUNT(DISTINCT) semantics: NULL is not a distinct value."""
-    from datasheet_etl_spark.operators.sketches import kmv_distinct
-
-    df = spark.createDataFrame(
-        [(x,) for x in ["a", "b", "c", None, None, "a"]], "v string"
-    )
-    assert kmv_distinct(df, "v", k=64) == 3.0
-
-
-def test_kmv_set_estimates_small_domain_exact(spark):
-    """Below k the sketches are exact samples (theta=1), so the theta
-    set algebra must reproduce exact set cardinalities."""
-    from datasheet_etl_spark.operators.sketches import kmv_set_estimates, kmv_sketch
-
-    a = spark.range(0, 100).selectExpr("id as v")        # {0..99}
-    b = spark.range(60, 140).selectExpr("id as v")       # {60..139}
-    est = kmv_set_estimates(kmv_sketch(a, "v", 256), kmv_sketch(b, "v", 256), k=256)
-    assert est["theta"] == 1.0
-    assert est["union"] == 140.0
-    assert est["intersection"] == 40.0
-    assert est["difference_a_minus_b"] == 60.0
-    assert est["difference_b_minus_a"] == 40.0
-    assert abs(est["jaccard"] - 40.0 / 140.0) < 1e-12
+# (partials, merge, estimate, relative error bound vs count(DISTINCT));
+# a bound of None means the estimate must EQUAL the exact count: below
+# its nominal entries (4096 at the default lgNomEntries=12) a theta
+# sketch retains every hash, while HLL stays approximate (lg_k=12 →
+# ~1.6% rse, allow 3σ)
+FAMILIES = {
+    "hll": (hll_partials, hll_merge, hll_estimate, 0.05),
+    "theta": (_theta_partials, _theta_merge, _theta_estimate, None),
+}
 
 
-def test_kmv_set_estimates_error_bound(spark):
-    """Large overlapping ranges: every estimate within KMV 3σ (≈19% at
-    k=256) of truth."""
-    from datasheet_etl_spark.operators.sketches import kmv_set_estimates, kmv_sketch
-
-    a = spark.range(0, 60_000).selectExpr("id as v")
-    b = spark.range(30_000, 90_000).selectExpr("id as v")
-    est = kmv_set_estimates(kmv_sketch(a, "v", 256), kmv_sketch(b, "v", 256), k=256)
-    truth = {
-        "union": 90_000,
-        "intersection": 30_000,
-        "difference_a_minus_b": 30_000,
-        "difference_b_minus_a": 30_000,
-    }
-    for key, exact in truth.items():
-        assert abs(est[key] - exact) / exact < 0.25, (key, est[key], exact)
-    assert abs(est["jaccard"] - 30_000 / 90_000) < 0.08
-
-
-def test_hll_merge_equals_one_pass_and_tracks_exact(spark):
-    """The t87 contract: unioning independently-built shard sketches
-    yields EXACTLY the one-pass sketch's estimate for every key, in
-    any merge order; estimates track exact distincts within the HLL
-    error bound (lg_k=12 → ~1.6% rse, allow 3σ)."""
+@pytest.mark.parametrize("family", sorted(FAMILIES))
+def test_hll_merge_equals_one_pass_and_tracks_exact(spark, family):
+    """The mergeable-partials contract (t87 for HLL, t136's theta
+    family): unioning independently-built shard sketches yields
+    EXACTLY the one-pass sketch's estimate for every key, in any merge
+    order; NULL values count as no value (adding NULL rows leaves every
+    estimate unchanged); estimates track exact distincts — within the
+    HLL error bound, or bit-for-bit for theta below nominal entries."""
     from datasheet_etl_spark.io import load_table
-    from datasheet_etl_spark.operators.sketches import (
-        hll_estimate,
-        hll_merge,
-        hll_partials,
-    )
+
+    partials, merge, estimate, rel_err = FAMILIES[family]
+
+    def estimates(sketches):
+        return {r["event_type"]: r["n_distinct"] for r in estimate(sketches).collect()}
 
     e = load_table(spark, SF_SMOKE, "events").select(
         "event_type", "user_id", "event_id"
     )
     shards = [
-        hll_partials(e.filter(F.col("event_id") % 3 == i), ["event_type"], "user_id")
+        partials(e.filter(F.col("event_id") % 3 == i), ["event_type"], "user_id")
         for i in range(3)
     ]
-    one_pass = {
-        r["event_type"]: r["n_distinct"]
-        for r in hll_estimate(hll_partials(e, ["event_type"], "user_id")).collect()
-    }
-    merged = {
-        r["event_type"]: r["n_distinct"]
-        for r in hll_estimate(hll_merge(*shards, keys=["event_type"])).collect()
-    }
+    one_pass = estimates(partials(e, ["event_type"], "user_id"))
+    merged = estimates(merge(*shards, keys=["event_type"]))
     # reversed merge order must agree too (associativity/commutativity)
-    merged_rev = {
-        r["event_type"]: r["n_distinct"]
-        for r in hll_estimate(
-            hll_merge(*reversed(shards), keys=["event_type"])
-        ).collect()
-    }
+    merged_rev = estimates(merge(*reversed(shards), keys=["event_type"]))
     assert merged == one_pass == merged_rev
+    with_nulls = e.unionByName(
+        e.select(
+            "event_type", F.lit(None).cast("long").alias("user_id"), "event_id"
+        )
+    )
+    assert estimates(partials(with_nulls, ["event_type"], "user_id")) == one_pass
     exact = {
         r["event_type"]: r["n"]
-        for r in e.groupBy("event_type")
+        for r in with_nulls.groupBy("event_type")
         .agg(F.countDistinct("user_id").alias("n"))
         .collect()
     }
     for k, est in merged.items():
-        assert abs(est - exact[k]) / exact[k] < 0.05, (k, est, exact[k])
-
-
-def test_hist_merge_equals_one_pass_any_order(spark):
-    """merge(shards) == one-pass histogram EXACTLY, for a 3-way split
-    and both merge orders — bin counts are additive integers, so
-    unlike HLL the equality is bit-exact, not register-state-exact."""
-    from datasheet_etl_spark.io import load_table
-    from datasheet_etl_spark.operators.sketches import (
-        hist_frame,
-        hist_merge,
-        hist_partials,
-    )
-
-    e = load_table(spark, SF_SMOKE, "events")
-    lo, hi = hist_frame(e, "value")
-    shards = [
-        hist_partials(
-            e.filter(F.col("event_id") % 3 == r), ["event_type"], "value", lo, hi
-        )
-        for r in range(3)
-    ]
-    one_pass = hist_partials(e, ["event_type"], "value", lo, hi)
-
-    def rows(df):
-        return sorted(
-            (r["event_type"], r["bin"], r["n"]) for r in df.collect()
-        )
-
-    expected = rows(one_pass)
-    assert rows(hist_merge(*shards, keys=["event_type"])) == expected
-    assert rows(hist_merge(*reversed(shards), keys=["event_type"])) == expected
-
-
-def test_hist_quantiles_match_order_statistic_bin(spark):
-    """The estimator's EXACT contract, valid for any distribution
-    (dense or gapped): for each (key, q) the estimate is the lower
-    edge of the bin holding the ceil(q·n)-th order statistic — checked
-    against a Python model binning the collected raw values with the
-    identical frame arithmetic."""
-    import math
-
-    from datasheet_etl_spark.io import load_table
-    from datasheet_etl_spark.operators.sketches import (
-        hist_frame,
-        hist_partials,
-        hist_quantiles,
-    )
-
-    e = load_table(spark, SF_SMOKE, "events")
-    lo, hi = hist_frame(e, "value")
-    bins = 64
-    width = (hi - lo) / bins
-    hist = hist_partials(e, ["event_type"], "value", lo, hi, bins)
-    est = {
-        (r["event_type"], r["q"]): r["est"]
-        for r in hist_quantiles(
-            hist, ["event_type"], [0.5, 0.9, 0.99], lo, hi, bins
-        ).collect()
-    }
-    by_key: dict[str, list[float]] = {}
-    for r in e.select("event_type", "value").collect():
-        by_key.setdefault(r["event_type"], []).append(r["value"])
-
-    def model(vals, q):
-        k = max(1, math.ceil(q * len(vals)))
-        x = sorted(vals)[k - 1]
-        b = min(int(math.floor((x - lo) / width)), bins - 1)
-        return lo + b * width
-
-    assert est, "no estimates produced"
-    for (key, q), v in est.items():
-        assert abs(v - model(by_key[key], q)) < 1e-9, (key, q, v)
-
-
-def test_hist_degenerate_frame_single_bin(spark):
-    """All-equal values: no zero-width division; everything in bin 0
-    and every quantile is the (single) value."""
-    from datasheet_etl_spark.operators.sketches import (
-        hist_partials,
-        hist_quantiles,
-    )
-
-    df = spark.createDataFrame([(1, 7.0)] * 5, "k int, v double")
-    hist = hist_partials(df, ["k"], "v", 7.0, 7.0)
-    rows = hist.collect()
-    assert [(r["bin"], r["n"]) for r in rows] == [(0, 5)]
-    qs = hist_quantiles(hist, ["k"], [0.5, 0.99], 7.0, 7.0).collect()
-    assert all(r["est"] == 7.0 for r in qs)
-
-
-def test_kmv_grouped_exact_below_k_and_estimator_beyond(spark):
-    """The grouped KMV behind t25: a group whose distinct count is
-    below k reports it EXACTLY (the regime t25's oracle grades); a
-    group beyond k falls to the (k-1)/max(h) estimator and must land
-    within the family's relative error bound; NULLs are excluded like
-    count(DISTINCT)."""
-    from pyspark.sql import functions as F
-
-    from datasheet_etl_spark.operators.sketches import kmv_grouped_estimate
-
-    small = [("small", f"v{i}") for i in range(40)] * 3  # 40 distinct
-    big = [("big", f"w{i}") for i in range(5000)]  # 5000 >> k=64
-    nulls = [("small", None)] * 5
-    df = spark.createDataFrame(small + big + nulls, "k string, v string")
-    est = {
-        r["k"]: r["distinct_est"]
-        for r in kmv_grouped_estimate(df, ["k"], "v", k=64).collect()
-    }
-    assert est["small"] == 40.0
-    assert abs(est["big"] - 5000) / 5000 < 3 / (64**0.5)  # ~0.375
-    # all-NULL group contributes no pool at all
-    only_null = spark.createDataFrame([("x", None)], "k string, v string")
-    assert kmv_grouped_estimate(only_null, ["k"], "v", k=64).count() == 0
+        if rel_err is None:
+            assert exact[k] < 4096 and est == exact[k], (k, est, exact[k])
+        else:
+            assert abs(est - exact[k]) / exact[k] < rel_err, (k, est, exact[k])
 
 
 def test_native_hll_beyond_exact_regime(spark):

@@ -11,7 +11,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from datasheet_etl_spark.plans.queries import dsum
+from datasheet_etl_spark.functions.aggregates import dsum
 from tests.conftest import SF_SMOKE
 
 
@@ -38,6 +38,31 @@ def staged_events(spark, tmp_path):
 
 def _rows(df, *cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def test_importing_streams_loads_no_registry():
+    """The streaming library sits below the registry: importing it
+    loads no ``datasheet_etl_spark.plans`` module (and so registers no
+    entry)."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "import datasheet_etl_spark.streaming.streams\n"
+        "print('\\n'.join(m for m in sys.modules"
+        " if m.startswith('datasheet_etl_spark.plans')))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        check=True,
+        timeout=120,
+    )
+    assert out.stdout.split() == []
 
 
 def test_tumbling_stream_matches_batch(spark, events_dir):
@@ -612,41 +637,6 @@ def test_curation_dedup_within_watermark_bounds_state(spark, tmp_path):
     assert results["bounded"] == {1, 2, 3, 4}
 
 
-def test_kmv_distinct_exact_below_k_and_estimates_beyond(spark, tmp_path):
-    """t55's sketch: exact distinct while the pool is under k; beyond k
-    the theta estimator stays within ~4/sqrt(k) relative error; state
-    (pool) never exceeds k hashes. Cross-batch folding is exercised by
-    two staged files read one per trigger."""
-    import pandas as pd
-
-    from datasheet_etl_spark.streaming.streams import (
-        kmv_distinct_stateful,
-        run_available_now,
-    )
-
-    src = str(tmp_path / "src")
-    # key 1: 3000 distinct values (>> k=64); key 2: 10 distinct
-    rows1 = [(1, f"v{i}") for i in range(1500)] + [(2, f"w{i % 10}") for i in range(50)]
-    rows2 = [(1, f"v{i}") for i in range(1500, 3000)]
-    spark.createDataFrame(rows1, "user_id long, props string").coalesce(1).write.parquet(src)
-    spark.createDataFrame(rows2, "user_id long, props string").coalesce(1).write.parquet(
-        src, mode="append"
-    )
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    out = run_available_now(
-        kmv_distinct_stateful(stream, "user_id", "props", k=64), "t_kmv", "update"
-    ).toPandas()
-    final = out.sort_values("distinct_est").groupby("user_id").last()
-    assert final.loc[2, "distinct_est"] == 10.0  # exact below k
-    assert final.loc[2, "pool_size"] == 10
-    assert final.loc[1, "pool_size"] == 64  # capped at k
-    rel_err = abs(final.loc[1, "distinct_est"] - 3000) / 3000
-    assert rel_err < 0.5, rel_err  # 4/sqrt(62) ~ 0.5 at k=64
-
-
 def test_cdc_upsert_sink_matches_batch_apply_and_survives_replay(spark, tmp_path):
     """Streaming MERGE: draining a changelog in two batches produces
     exactly the batch apply_changes result; a stale (lower-seq) change
@@ -749,62 +739,6 @@ def test_cdc_snapshot_survives_pointer_loss(spark, tmp_path):
     drain()
     rows = {r["k"]: r["v"] for r in read_cdc_snapshot(spark, target).collect()}
     assert rows == {1: "a", 2: "b", 3: "c"}
-
-
-def test_heavy_hitters_misra_gries_guarantee(spark, tmp_path):
-    """MG contract across micro-batches: a planted value holding >50%
-    of a key's rows (k=4 ⇒ threshold n/5) must be in the final
-    summary with est within n/(k+1) of truth; per-key state never
-    exceeds k items; a key whose values are all unique reports only
-    noise-floor counts."""
-    from datasheet_etl_spark.streaming.streams import heavy_hitters_stateful
-
-    rows = []
-    # key 'a': 120 of 200 rows are 'HOT' (60%), rest spread over 40 values
-    rows += [(i, "a", "HOT") for i in range(120)]
-    rows += [(1000 + i, "a", f"cold{i % 40}") for i in range(80)]
-    # key 'b': 90 unique values — nothing can dominate
-    rows += [(2000 + i, "b", f"u{i}") for i in range(90)]
-    df = spark.createDataFrame(rows, "event_id long, k string, v string")
-    src = str(tmp_path / "src")
-    # two files -> two micro-batches (state must carry the summary over)
-    df.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-    df.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
-        src, mode="append"
-    )
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(src)
-    )
-    from datasheet_etl_spark.streaming.streams import run_available_now
-
-    out = run_available_now(
-        heavy_hitters_stateful(stream, "k", "v", k=4), "t_mg", "update"
-    ).collect()
-    # final summary per key = rows at that key's max n_seen
-    final = {}
-    for r in out:
-        if r["k"] not in final or r["n_seen"] > final[r["k"]][0]:
-            final[r["k"]] = (r["n_seen"], {})
-        if r["n_seen"] == final[r["k"]][0]:
-            final[r["k"]][1][r["item"]] = r["est_count"]
-
-    n_a, summary_a = final["a"]
-    assert n_a == 200
-    bound = n_a / 5  # n/(k+1)
-    assert "HOT" in summary_a, summary_a
-    assert 120 - bound <= summary_a["HOT"] <= 120
-    assert len(summary_a) <= 4
-    # key 'b' may legitimately end with an EMPTY summary (unique values
-    # keep cancelling each other) — the contract is only that nothing
-    # exceeds the noise floor
-    if "b" in final:
-        n_b, summary_b = final["b"]
-        assert len(summary_b) <= 4
-        assert all(c <= n_b / 5 + 1 for c in summary_b.values())
 
 
 def test_cdc_bucketed_sink_rewrites_only_touched_partitions(spark, tmp_path):
@@ -1432,18 +1366,13 @@ def test_cdc_sink_empty_bootstrap_restart_not_refused(spark, tmp_path):
 
 
 def test_streaming_maintained_histogram_matches_batch(spark, tmp_path):
-    """Composition: the t88 histogram maintains INCREMENTALLY from a
-    stream — the frame is fixed up front (the design tradeoff that
-    makes bins additive), the streaming agg counts (key, bin) in
-    update mode, and materialized_agg_sink keeps the partial table at
-    rest. After draining, the materialized bin counts equal the batch
-    hist_partials of the same data exactly."""
+    """Composition: an equi-width histogram maintains INCREMENTALLY
+    from a stream — the frame is fixed up front (what makes bin counts
+    additive), the streaming agg counts (key, bin) in update mode over
+    two partition columns, and materialized_agg_sink keeps the partial
+    table at rest. After draining, the materialized bin counts equal
+    the batch (key, bin) counts of the same data exactly."""
     from datasheet_etl_spark.io import load_table
-    from datasheet_etl_spark.operators.sketches import (
-        hist_bin,
-        hist_frame,
-        hist_partials,
-    )
     from datasheet_etl_spark.streaming.streams import materialized_agg_sink
 
     src = str(tmp_path / "hist_src")
@@ -1453,29 +1382,35 @@ def test_streaming_maintained_histogram_matches_batch(spark, tmp_path):
     e = load_table(spark, "/root/testdata/sf0.001", "events").select(
         "event_id", "event_type", "value"
     )
-    lo, hi = hist_frame(e, "value")
+    lo, hi = e.agg(F.min("value"), F.max("value")).first()
+    bins = 64
+
+    def binned(df):
+        # the top edge (value == hi) folds into the last bin
+        b = F.floor((F.col("value") - F.lit(lo)) / F.lit((hi - lo) / bins))
+        return (
+            df.filter(F.col("value").isNotNull())
+            .groupBy("event_type", F.least(b, F.lit(bins - 1)).alias("bin"))
+            .agg(F.count("*").cast("long").alias("n"))
+        )
+
     e.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
     e.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
         src, mode="append"
     )
 
     stream = spark.readStream.schema(e.schema).format("parquet").load(src)
-    agg = (
-        stream.filter(F.col("value").isNotNull())
-        .groupBy("event_type", hist_bin("value", lo, hi, 64).alias("bin"))
-        .agg(F.count("*").cast("long").alias("n"))
+    materialized_agg_sink(
+        binned(stream), target, ckpt, partition_cols=["event_type", "bin"]
     )
-    materialized_agg_sink(agg, target, ckpt, partition_cols=["event_type", "bin"])
 
     got = {
         (r["event_type"], r["bin"]): r["n"]
         for r in spark.read.parquet(target).collect()
     }
-    want = {
-        (r["event_type"], r["bin"]): r["n"]
-        for r in hist_partials(e, ["event_type"], "value", lo, hi).collect()
-    }
+    want = {(r["event_type"], r["bin"]): r["n"] for r in binned(e).collect()}
     assert got == want
+    assert len(want) > len({k for k, _ in want}), "expected several bins per key"
 
 
 def test_cdc_bucketed_first_batch_crash_recovers(spark, tmp_path):
