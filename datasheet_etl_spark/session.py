@@ -59,6 +59,18 @@ One place to encode the execution-model decisions that matter at scale:
   launch did. To opt out, pass ``spark.driver.defaultJavaOptions`` in
   ``extra_conf`` (``LOCAL_JIT_POLICY`` keeps the JIT policy alone), or
   delete the cache directory to rebuild.
+- Local masters also get ``WORKER_DAEMON`` as ``spark.python.daemon.module``
+  when the worker interpreter (``$PYSPARK_PYTHON``, else ``python3``) run
+  in the current directory can import it; one probe per interpreter,
+  directory and ``PYTHONPATH`` checks that. Spark puts its source-only
+  ``pyspark.zip`` and the ``spark-core`` jar on the workers' path, so each
+  daemon compiles the pyspark modules it imports and each task's
+  ``importlib.invalidate_caches()`` re-reads the zips. When the zip holds
+  the same pyspark release as the installed package, the module drops
+  Spark's zip and jars from the path before it starts ``pyspark.daemon``,
+  and the daemon and its workers import pyspark's bytecode (see
+  ``worker_daemon``). Pass ``spark.python.daemon.module=pyspark.daemon``
+  in ``extra_conf`` to run the stock daemon.
 
 Local mode is a single JVM; ``spark.driver.memory`` is the only memory
 knob. On a real cluster the same builder is used with master/memory
@@ -69,6 +81,7 @@ from __future__ import annotations
 
 import atexit
 import fcntl
+import functools
 import hashlib
 import os
 import shutil
@@ -95,6 +108,8 @@ LOCAL_JIT_POLICY = (
 
 
 JAVA_OPTS = "spark.driver.defaultJavaOptions"
+DAEMON_MODULE = "spark.python.daemon.module"
+WORKER_DAEMON = "datasheet_etl_spark.worker_daemon"
 # warnings and errors to stderr, CDS's own (one line per class a
 # building JVM skips) off; the JDK default sends them to stdout
 CDS_LOGGING = "-Xlog:disable -Xlog:all=warning,cds*=off:stderr"
@@ -332,6 +347,24 @@ def _is_local(master: str) -> bool:
     return master == "local" or master.startswith("local[")
 
 
+@functools.cache
+def _worker_imports(module: str, python: str, cwd: str, pythonpath: str | None) -> bool:
+    """Whether ``python`` started in ``cwd`` with ``PYTHONPATH`` set to
+    ``pythonpath`` (as the JVM starts its Python workers) finds ``module``."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    if pythonpath is not None:
+        env["PYTHONPATH"] = pythonpath
+    code = f"import importlib.util, sys; sys.exit(importlib.util.find_spec({module!r}) is None)"
+    try:
+        probe = subprocess.run(
+            [python, "-c", code], cwd=cwd, env=env, timeout=60,
+            stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+        )
+    except (OSError, subprocess.TimeoutExpired):
+        return False
+    return probe.returncode == 0
+
+
 def _env_int(name: str, default: int) -> int:
     raw = os.environ.get(name)
     if raw is None:
@@ -369,6 +402,11 @@ def session_conf(
     }
     if _is_local(master):
         conf[JAVA_OPTS] = LOCAL_JIT_POLICY
+        python = os.environ.get("PYSPARK_PYTHON", "python3")
+        if DAEMON_MODULE not in (extra_conf or {}) and _worker_imports(
+            WORKER_DAEMON, python, os.getcwd(), os.environ.get("PYTHONPATH")
+        ):
+            conf[DAEMON_MODULE] = WORKER_DAEMON
     conf.update(extra_conf or {})
     return conf
 

@@ -1,5 +1,6 @@
 """``session.get_session``: bad env knobs fail with the variable's name,
-the cold-start JIT policy reaches local masters only, and the class-data
+the cold-start JIT policy and the worker daemon reach local masters only
+(the daemon only when the worker interpreter can import it), and the class-data
 sharing (CDS) decision is made on a fake Spark and JDK tree (no JVM
 needed, except for the last test, which reads the shared test session's
 JVM)."""
@@ -15,8 +16,10 @@ import pytest
 
 from datasheet_etl_spark import session
 from datasheet_etl_spark.session import (
+    DAEMON_MODULE,
     JAVA_OPTS,
     LOCAL_JIT_POLICY,
+    WORKER_DAEMON,
     cds_decision,
     cds_key,
     finish_cds_build,
@@ -40,12 +43,47 @@ def test_local_masters_get_the_jit_policy(master):
     assert session_conf(master, 4, "1g")[JAVA_OPTS] == LOCAL_JIT_POLICY
 
 
+@pytest.mark.parametrize("master", ["local", "local[4]", "local[*]", "local[2,3]"])
+def test_local_masters_get_the_worker_daemon(master, monkeypatch):
+    probes = []
+    monkeypatch.setattr(session, "_worker_imports", lambda *a: probes.append(a) or True)
+    monkeypatch.setenv("PYSPARK_PYTHON", "/x/python")
+    assert session_conf(master, 4, "1g")[DAEMON_MODULE] == WORKER_DAEMON
+    assert probes == [(WORKER_DAEMON, "/x/python", os.getcwd(), os.environ.get("PYTHONPATH"))]
+
+
+def test_a_failing_import_probe_leaves_the_daemon_unset(monkeypatch):
+    monkeypatch.setattr(session, "_worker_imports", lambda *a: False)
+    conf = session_conf("local[4]", 4, "1g")
+    assert DAEMON_MODULE not in conf
+    assert conf[JAVA_OPTS] == LOCAL_JIT_POLICY
+
+
+def test_a_callers_daemon_module_wins_without_a_probe(monkeypatch):
+    monkeypatch.setattr(session, "_worker_imports", lambda *a: pytest.fail("probed"))
+    conf = session_conf("local[4]", 4, "1g", {DAEMON_MODULE: "pyspark.daemon"})
+    assert conf[DAEMON_MODULE] == "pyspark.daemon"
+
+
+def test_the_import_probe_runs_where_the_workers_start(tmp_path):
+    """The probe is a real interpreter in the given directory: the
+    repository's checkout finds the daemon module, another directory does
+    not, unless its ``PYTHONPATH`` names the checkout."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = session._worker_imports.__wrapped__
+    assert probe(WORKER_DAEMON, sys.executable, root, None) is True
+    assert probe(WORKER_DAEMON, sys.executable, str(tmp_path), None) is False
+    assert probe(WORKER_DAEMON, sys.executable, str(tmp_path), root) is True
+    assert probe(WORKER_DAEMON, str(tmp_path / "no-python"), root, None) is False
+
+
 @pytest.mark.parametrize(
     "master", ["spark://host:7077", "yarn", "k8s://https://host:6443", "local-cluster[2,1,1024]"]
 )
 def test_cluster_masters_get_no_jvm_flags(master):
     conf = session_conf(master, 4, "1g")
     assert not [k for k in conf if "JavaOptions" in k]
+    assert DAEMON_MODULE not in conf
     assert conf["spark.sql.shuffle.partitions"] == "4"
 
 
